@@ -17,6 +17,27 @@ object Bench {
       case c => c.toString
     }
 
+  /** Length bound of the last stdout line: a tail reader keeps ~2000
+    * chars, so a longer line arrives cut and does not parse.
+    */
+  private[graft] val lastLineMax = 1900
+
+  /** The last stdout line: the total, per-query mins under short keys
+    * (`shortQs`, a JSON object) and the failed query names. A run whose
+    * line would exceed [[lastLineMax]] (many long-named failures) prints
+    * the totals-only form instead: no `queries` map, `failed` as a count.
+    */
+  private[graft] def lastLine(total: Double, nQueries: Int, shortQs: String,
+      failed: Seq[String], retimed: Int, sfDir: String): String = {
+    def line(queries: String, failedJson: String): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQueries,""" +
+        s"""$queries"failed":$failedJson,"retimed_n":$retimed,"sf":"${jesc(sfDir)}",""" +
+        """"keys":"target/bench_keys.json"}"""
+    val full = line(s""""queries":$shortQs,""",
+      failed.map(n => "\"" + jesc(n) + "\"").mkString("[", ",", "]"))
+    if (full.length <= lastLineMax) full else line("", failed.size.toString)
+  }
+
   /** One timed execution: wall (or the failure class), whether a
     * fit/append/memo-build counter moved (cold), and the pass's summed
     * executorCpuTime — the steal-proof work ledger (r15, verdict r14 #1:
@@ -60,36 +81,16 @@ object Bench {
     // across runs, so a recorded min is usually a pure WARM serve — a
     // fit-path regression would be invisible unless the artifact says
     // which timings paid a fit/encode (ADVICE r7). Any counter movement
-    // during a query marks that pass "cold". r9: the sum covers EVERY
-    // persisted-artifact family — ANN (ivf/pq/lsh/ivfpq), LEX postings,
-    // text signatures, BPE vocabulary + merge-table training, and CC
-    // component labels — BENCH_r08's cold map was empty while
-    // q_split_assign p1 paid a 7.6 s CC fit and q_bpe_train p1 a 4.1 s
-    // vocabulary build, exactly the blind spot this closes. r10: the
-    // pair-graph families (EP embed pairs, NP ngram pairs, MP/SP bucket
-    // collisions, EC semantic labels) joined the sum — the first r10
-    // 100× run left q_dedup_simhash's 48 s SP-fit pass unflagged
-    // because the tp/ec counters were missing from the old sum.
-    def fitCount(): Long = {
-      import graft.operators.AnnIndex._
-      ivfFits.get + pqFits.get + lshEncodes.get +
-        ivfAppends.get + pqAppends.get + lshAppends.get +
-        ivfpqEncodes.get + ivfpqAppends.get +
-        lexEncodes.get + lexAppends.get +
-        sigEncodes.get + sigAppends.get +
-        vocabEncodes.get + vocabAppends.get +
-        ccEncodes.get + ccAppends.get +
-        epEncodes.get + epAppends.get +
-        npEncodes.get + npAppends.get +
-        ecEncodes.get + ecAppends.get + tpEncodes.get + tpAppends.get +
-        thmEncodes.get + thmAppends.get + ehmEncodes.get + ehmAppends.get +
-        knEncodes.get + knAppends.get + klEncodes.get + // r16: KNN graph
+    // during a query marks that pass "cold". The sum covers EVERY
+    // persisted-artifact family's fit and append counters (one list,
+    // AnnIndex.families — a hand-listed sum once missed the tp/ec
+    // counters and left a 48 s SP fit unflagged) plus tokenizer training
+    // and session memo builds.
+    def fitCount(): Long =
+      graft.operators.AnnIndex.counters.map(_.get).sum +
         graft.operators.Bpe.bpeTrains.get +
         graft.operators.Unigram.unigramTrains.get +
-        graft.operators.SessionMemo.totalBuilds() // r12: every session-
-      // lifetime memo build (found-on-try provenance + the doc↔th /
-      // vec↔eh member mappings) — the one pass paying a build is flagged
-    }
+        graft.operators.SessionMemo.totalBuilds()
     // cpuSec attribution window per timing: drain the listener bus, reset
     // the ledger, run, drain again (TaskLedger's waitUntilEmpty barrier —
     // ms-scale in local mode, so ~250 drains price nothing against a
@@ -416,7 +417,7 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_keys.json"),
       results.map { case (k, _) => "\"" + key(k) + "\":\"" + k + "\"" }
         .mkString("{", ",", "}\n").getBytes("UTF-8"))
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries":$shortQs,"failed":$fs,"retimed_n":${suspects.size},"sf":"$sfDir","keys":"target/bench_keys.json"}""")
+    println(lastLine(total, results.size, shortQs, failed, suspects.size, sfDir))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

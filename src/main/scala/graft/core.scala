@@ -57,8 +57,11 @@ object GraftSession {
       // a child process — the default RawLocalFileSystem shells out to
       // `chmod` on every create() when the native hadoop lib is absent,
       // and the driver's sandbox cannot spawn processes (the VERIFY_r16
-      // tests_ok=false failure). See [[NoForkFs]].
+      // tests_ok=false failure). See [[NoForkFs]]. Both Hadoop APIs:
+      // FileSystem, and FileContext (streaming checkpoints).
       .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NoForkLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -240,10 +240,16 @@ case class UnigramScore(child: Expression,
 
 /** Compiled Bpe.applyMerges: symbol array → symbol array after every
   * merge in rank order (lefts/rights are rank-sorted by the caller).
+  * The merge lists are `Seq` params so equal expressions compare equal
+  * (Catalyst canonicalization, `semanticEquals`); the kernel's arrays are
+  * built once per instance.
   */
-case class BpeMerges(child: Expression, lefts: Array[String],
-    rights: Array[String])
+case class BpeMerges(child: Expression, lefts: Seq[String],
+    rights: Seq[String])
     extends UnaryExpression {
+
+  @transient private lazy val leftArr: Array[String] = lefts.toArray
+  @transient private lazy val rightArr: Array[String] = rights.toArray
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "graft_bpe_merges"
@@ -255,11 +261,11 @@ case class BpeMerges(child: Expression, lefts: Array[String],
   }
 
   override def nullSafeEval(syms: Any): Any =
-    TokenizerKernels.applyMerges(syms.asInstanceOf[ArrayData], lefts, rights)
+    TokenizerKernels.applyMerges(syms.asInstanceOf[ArrayData], leftArr, rightArr)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("bpeLefts", lefts, "java.lang.String[]")
-    val rRef = ctx.addReferenceObj("bpeRights", rights, "java.lang.String[]")
+    val lRef = ctx.addReferenceObj("bpeLefts", leftArr, "java.lang.String[]")
+    val rRef = ctx.addReferenceObj("bpeRights", rightArr, "java.lang.String[]")
     defineCodeGen(ctx, ev, syms =>
       s"graft.expressions.TokenizerKernels.applyMerges($syms, $lRef, $rRef)")
   }
@@ -280,7 +286,7 @@ object TokenizerExpressions {
       ColumnBridge.expression(w), TokenizerKernels.buildModel(lp)))
 
   /** Column API: compiled BPE merge fold (merges already rank-sorted). */
-  def bpeMerges(syms: Column, lefts: Array[String], rights: Array[String]): Column =
+  def bpeMerges(syms: Column, lefts: Seq[String], rights: Seq[String]): Column =
     ColumnBridge.column(BpeMerges(
       ColumnBridge.expression(syms), lefts, rights))
 }

@@ -1,135 +1,209 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 
-/** Persisted fit artifacts for the ANN family — the production half of the
-  * fit/serve split. The in-JVM memos (Similarity.codebookRows / pqCodebook)
-  * die with the session, which at 100 TB means every new session re-runs
-  * Lloyd AND re-encodes the corpus — a full corpus pass. This object
-  * materializes the fitted index as parquet keyed by the table's physical
-  * fingerprint, the MLlib save/load shape:
+/** Persisted fit artifacts — the production half of the fit/serve split.
+  * In-JVM memos die with the session, which at 100 TB means every new
+  * session re-runs each fit AND re-encodes the corpus — a full corpus
+  * pass. Every family here materializes its fitted structure as parquet
+  * keyed by the source table's physical fingerprint (the MLlib save/load
+  * shape), one version dir per (table, content) state:
   *
   * {{{
   * <root>/<md5 of table path>/<fingerprintHex>_<rowcount>/
-  *   ivf_codebook/   (c_id, cv, cnrm)            ≤1024 rows
-  *   ivf2_cells/     (eh, v, nrm, cluster=…)     distinct vectors, BY cell
-  *   pq_codebook/    (dim, cents)                1 row, m·ksub·dsub doubles
-  *   pq2_codes/      (eh, code, nrm)             distinct, 24 B/vector live
-  *   lsh2_sigs/      (eh, band_idx, code)        capped banded signatures
-  *   lsh2_ehs/       (eh)                        known-content registry
-  *   _GRAFT_FILES                                table file inventory
-  *   _GRAFT_META_{IVF2,PQ2,LSH2,IPQ2}            base pointer, n_fit, params
-  *   _GRAFT_OK_{IVF2,PQ2,LSH2,IPQ2}              completion markers
+  *   <artifact dirs>          per family, see the table below
+  *   _GRAFT_FILES             table file inventory: (path, length, mtime)
+  *   _GRAFT_META_<marker>     base=<sibling dir | ->, n_fit=…, params=…
+  *   _GRAFT_OK_<marker>       completion marker
   * }}}
   *
-  * '''r12: rows are keyed by `eh` (the 128-bit vector content hash), one
-  * row per DISTINCT vector''' — the EP/textSigs asymmetry applied to the
-  * ANN family: a k×-duplicated corpus stores, scans and scores 1/k of the
-  * rows, and survivors expand to member vec_ids through the session
-  * [[Members.eh]] mapping at serve (vec_id-keyed layouts IVF/PQ/LSH/IVFPQ
-  * are retired). Codebooks still FIT from the full table (bit-identical
-  * training to r11); only the encoded artifact collapses to distinct.
+  * '''One lifecycle.''' Every family runs the same five steps, written
+  * once below; a family supplies only its encode, its append math and
+  * its serve projection.
+  *  1. '''resolve''' ([[resolve]]) — (row count, fingerprint) → version
+  *     dir. The fingerprint folds path+length+mtime of every physical
+  *     file ([[Similarity.tableFingerprint]]), so a rewritten table
+  *     resolves to a DIFFERENT dir and refits: nothing keyed by the old
+  *     content is ever served for the new.
+  *  2. '''append-or-fit''' ([[ensure]]) — unless the marker is present,
+  *     find the newest usable base: a complete sibling whose recorded
+  *     file inventory is a SUBSET of the current one (a pure file-level
+  *     append; a derived family follows its parent's lineage pointer
+  *     instead). The family's append encodes ONLY the delta files under
+  *     the base's frozen parameters — or returns None (a cap crossing in
+  *     CC/MP2/SP2/NP2) and the full fit runs. Drift families refit once
+  *     (n − n_fit)/n exceeds [[refitFraction]]: frozen codebooks and
+  *     geometry mis-fit a grown corpus; n_fit — the corpus size at the
+  *     last TRUE fit — rides the meta through every append.
+  *  3. '''publish''' ([[publish]]) — file list, meta (a chained family's
+  *     `base` names the append base: serve reads the chain union, so the
+  *     corpus-sized base artifacts are never rewritten), marker, then
+  *     prune the sibling versions no family's chain reaches. A crash
+  *     mid-write leaves no marker, so the next call redoes the step.
+  *  4. '''serve/validate''' ([[chainRead]], [[validate]]) — the chain
+  *     union, checked once per session per version against the meta's
+  *     exact row/token total: a marker is a promise, not proof.
+  *  5. '''compact''' ([[compact]]) — past its chain bound a chained
+  *     family merges its segments into one self-contained version
+  *     (crash-safe swap), then sweeps superseded versions.
   *
-  * Layout choices are the serve-path point, not storage bookkeeping:
-  *  - `ivf2_cells` is hive-partitioned by cluster id, so a probe of
-  *    nprobe·|queries| cells becomes a PARTITION-PRUNED scan — the serve
-  *    read touches nprobe/k of the corpus instead of all of it (the
-  *    directory layout IS the inverted file).
-  *  - `pq2_codes` carries only (eh, packed 64-bit code, norm): the ADC
-  *    scan streams 24 B/vector — the ~21× cut vs raw vectors survives
-  *    session restarts instead of being recomputed into it each time.
+  * Live families (e = embeddings.parquet, d = documents.parquet):
+  * {{{
+  * marker       table  artifacts                         chained  drift  bound
+  * IVF2         e      ivf_codebook, ivf2_cells          yes      yes    -
+  * PQ2          e      pq_codebook, pq2_codes            yes      yes    -
+  * LSH2         e      lsh2_sigs, lsh2_ehs               no       yes    -
+  * IPQ2         e      ivfpq2_codes (+ both codebooks)   yes      yes    -
+  * LXT          d      lex_tf, lex_dl                    yes      no     corpusMaxChain
+  * THM          d      thm_docs                          yes      no     corpusMaxChain
+  * EHM          e      ehm_vecs                          no       no     -
+  * NG MH SH WC  d      <marker>_sigs                     yes      no     sigMaxChain
+  *  WN LP DS BIN
+  * BPE          d      bpe_wf                            no       no     -
+  * CC           d      cc_labels                         no       no     -
+  * EP           e      ep_reps, ep_sigs, ep_pairs        no       yes    -
+  * EC (of EP)   e      ec_labels                         derived  no     -
+  * KN           e      kn_pairs, kn_ehs, kn_sigs         no       yes    -
+  * KL (of KN)   e      kn_labels                         derived  no     -
+  * MP2 SP2      d      <m>_pairs, <m>_bsz, <m>_ths       no       no     -
+  * NP2          d      np_pairs, np_cnt, np_kept         no       no     -
+  * }}}
+  * IVF2/PQ2/IPQ2 chains collapse on the drift refit; between refits their
+  * hive-partitioned segments cannot be merged cheaply, so they carry no
+  * bound. LSH2 serves unvalidated (its sig table is re-capped whole).
   *
-  * '''Incremental maintenance (r8).''' An ingest batch appends parquet
-  * files to the embeddings table; without append support the new
-  * fingerprint forces a full refit + re-encode — the exact full-corpus
-  * pass the index exists to avoid, in the steady state
-  * (q_dedup_incremental's batch ≪ corpus shape) where it hurts most. The
-  * append path detects a pure FILE-LEVEL APPEND (the base version's file
-  * inventory, stored in `_GRAFT_FILES` as (path, length, mtime) triples,
-  * is a subset of the current table's), then:
-  *  - encodes ONLY the new files' vectors with the base version's FROZEN
-  *    codebooks/parameters (no Lloyd, no corpus re-encode — the counters
-  *    prove it),
-  *  - IVF/PQ: writes the delta artifact into the new version dir and
-  *    CHAINS to the base via the meta's base pointer — serve reads the
-  *    chain union (filter/partition pruning pushes through the union), so
-  *    the corpus-sized base artifacts are never rewritten;
-  *  - LSH: re-caps base ∪ delta and rewrites `lsh2_sigs` whole — the
-  *    bucket cap is defined over the union, and the sig table (24 B/row
-  *    of live columns) is orders cheaper to rewrite than the hyperplane
-  *    encode it replaces; params (bits/bands/radius) stay frozen at their
-  *    fit-time solve so base and delta signatures stay comparable.
+  * '''Rows are keyed by content''' (r12): `eh` (the 128-bit vector hash,
+  * [[ehCol]]) or `th` (md5 of the text), one row per DISTINCT vector or
+  * text — a k×-duplicated corpus stores, scans and scores 1/k of the rows,
+  * and survivors expand to member ids through the session mappings at
+  * serve. Codebooks still FIT from the full table. Layout is the serve-
+  * path point: `ivf2_cells` is hive-partitioned by cluster (a probe is a
+  * partition-pruned scan — the directory layout IS the inverted file),
+  * `pq2_codes` streams 24 B/vector, `lex_tf` is partitioned by term slot.
   *
-  * '''Drift policy''': frozen codebooks mis-center as appended mass grows,
-  * so when (n_total − n_fit)/n_total exceeds [[refitFraction]] the append
-  * path refuses and a full refit runs (collapsing the chain). n_fit — the
-  * corpus size at the last TRUE fit — rides the meta through every append.
-  *
-  * Correctness of staleness: the version directory name embeds
-  * [[Similarity.tableFingerprint]] (path+length+mtime of every physical
-  * file) and the row count — a rewritten table resolves to a DIFFERENT
-  * directory and refits (append only engages when old files are
-  * byte-level untouched); stale versions outside the live chain are
-  * pruned at write time. A crash mid-write leaves no completion marker,
-  * so the next call refits/re-appends and overwrites. Loading requires
-  * the marker PLUS a once-per-session artifact sanity check
-  * ([[validate]]): the root defaults to a per-user directory (a shared
-  * world-writable /tmp root on a multi-tenant host would let another
-  * user pre-create a marker-complete poisoned version, and /tmp cleaners
-  * can delete files between plan build and execution), and the serve
-  * readers verify schema + expected row count against the version key
-  * before the first serve, failing loud rather than silently serving a
-  * truncated or foreign artifact.
+  * The root defaults to a per-user directory: a shared world-writable
+  * /tmp root on a multi-tenant host would let another user pre-create a
+  * marker-complete poisoned version, and /tmp cleaners can delete files
+  * between plan build and execution — both caught by [[validate]].
   */
 object AnnIndex {
 
-  /** Lloyd-fit / signature-encode counters (IVF / PQ / LSH) — incremented
-    * ONLY when a real fit or full corpus encode runs, so specs can prove a
-    * load path retrained nothing. The append counters increment when a
-    * batch-only delta encode runs (and the fit counters then don't).
+  /** Fit / append counters — incremented ONLY when a real fit (or full
+    * corpus encode) or a delta-only append runs, so specs can prove a
+    * load path retrained nothing. IVF/PQ fits are counted where Lloyd
+    * actually runs (Similarity's codebook memo).
     */
-  private[graft] val ivfFits = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val pqFits = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val lshEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ivfAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val pqAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val lshAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ivfpqEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ivfpqAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val lexEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val lexAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val sigEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val sigAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val vocabEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val vocabAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ccEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ccAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val epEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val epAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val npEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val npAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ecEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ecAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val tpEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val tpAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val thmEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val thmAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ehmEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val ehmAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val knEncodes = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val knAppends = new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] val klEncodes = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val ivfFits = new AtomicLong(0)
+  private[graft] val pqFits = new AtomicLong(0)
+  private[graft] val lshEncodes = new AtomicLong(0)
+  private[graft] val ivfAppends = new AtomicLong(0)
+  private[graft] val pqAppends = new AtomicLong(0)
+  private[graft] val lshAppends = new AtomicLong(0)
+  private[graft] val ivfpqEncodes = new AtomicLong(0)
+  private[graft] val ivfpqAppends = new AtomicLong(0)
+  private[graft] val lexEncodes = new AtomicLong(0)
+  private[graft] val lexAppends = new AtomicLong(0)
+  private[graft] val sigEncodes = new AtomicLong(0)
+  private[graft] val sigAppends = new AtomicLong(0)
+  private[graft] val vocabEncodes = new AtomicLong(0)
+  private[graft] val vocabAppends = new AtomicLong(0)
+  private[graft] val ccEncodes = new AtomicLong(0)
+  private[graft] val ccAppends = new AtomicLong(0)
+  private[graft] val epEncodes = new AtomicLong(0)
+  private[graft] val epAppends = new AtomicLong(0)
+  private[graft] val npEncodes = new AtomicLong(0)
+  private[graft] val npAppends = new AtomicLong(0)
+  private[graft] val ecEncodes = new AtomicLong(0)
+  private[graft] val ecAppends = new AtomicLong(0)
+  private[graft] val tpEncodes = new AtomicLong(0)
+  private[graft] val tpAppends = new AtomicLong(0)
+  private[graft] val thmEncodes = new AtomicLong(0)
+  private[graft] val thmAppends = new AtomicLong(0)
+  private[graft] val ehmEncodes = new AtomicLong(0)
+  private[graft] val ehmAppends = new AtomicLong(0)
+  private[graft] val knEncodes = new AtomicLong(0)
+  private[graft] val knAppends = new AtomicLong(0)
+  private[graft] val klEncodes = new AtomicLong(0)
+  private val klAppends = new AtomicLong(0) // KL never appends (see knLabels)
 
   /** Append-drift threshold: chain-append while rows encoded with frozen
     * codebooks are ≤ this fraction of the corpus; past it, refit.
     */
   private[graft] val refitFraction = 0.3
 
+  /** Serve-side segment bound for the th-keyed signature chains: a serve
+    * reading more than this many segments compacts first, so the chain
+    * never decays past (threshold) segments no matter how many appends
+    * arrive between full rebuilds. 2 = the compacted tip plus at most
+    * one fresh delta segment. Signature tables are distinct-content-
+    * sized, so the merge rewrite is cheap.
+    */
+  private[graft] val sigMaxChain = 2
+
+  /** Serve-side segment bound for the CORPUS-classed chains (THM id-hash
+    * rows, LXT postings): compaction rewrites corpus-scale artifacts, so
+    * the cadence is one merge per this many appends — segment decay stays
+    * bounded without re-paying the per-append rewrite the chain avoids.
+    */
+  private[graft] val corpusMaxChain = 8
+
+  /** One persisted family's lifecycle descriptor: completion-marker name,
+    * source table (file name under the corpus dir), fit and append
+    * counters, whether an append CHAINS to its base (else each version is
+    * self-contained), whether append drift forces a refit, the serve-side
+    * chain bound (0 = none), and whether the family is DERIVED — versioned
+    * with its parent family's artifact in the same dir (no file inventory
+    * or prune of its own; its base is the version its parent's lineage
+    * pointer `_GRAFT_<marker>_BASE` names). `countsFits` is false where the
+    * fit's own codebook memo counts true fits (IVF2/PQ2).
+    */
+  private[graft] final case class Family(marker: String, table: String,
+      fits: AtomicLong, appends: AtomicLong, chained: Boolean = false,
+      drift: Boolean = false, maxChain: Int = 0, derived: Boolean = false,
+      countsFits: Boolean = true)
+
+  private val emb = "embeddings.parquet"
+  private val docs = "documents.parquet"
+  private[graft] val IVF2 = Family("IVF2", emb, ivfFits, ivfAppends,
+    chained = true, drift = true, countsFits = false)
+  private[graft] val PQ2 = Family("PQ2", emb, pqFits, pqAppends,
+    chained = true, drift = true, countsFits = false)
+  private[graft] val LSH2 = Family("LSH2", emb, lshEncodes, lshAppends, drift = true)
+  private[graft] val IPQ2 = Family("IPQ2", emb, ivfpqEncodes, ivfpqAppends,
+    chained = true, drift = true)
+  private[graft] val LXT = Family("LXT", docs, lexEncodes, lexAppends,
+    chained = true, maxChain = corpusMaxChain)
+  private[graft] val THM = Family("THM", docs, thmEncodes, thmAppends,
+    chained = true, maxChain = corpusMaxChain)
+  private[graft] val EHM = Family("EHM", emb, ehmEncodes, ehmAppends)
+  private[graft] def sigFamily(marker: String): Family =
+    Family(marker, docs, sigEncodes, sigAppends, chained = true, maxChain = sigMaxChain)
+  private[graft] val BPE = Family("BPE", docs, vocabEncodes, vocabAppends)
+  private[graft] val CC = Family("CC", docs, ccEncodes, ccAppends)
+  private[graft] val EP = Family("EP", emb, epEncodes, epAppends, drift = true)
+  private[graft] val EC = Family("EC", emb, ecEncodes, ecAppends, derived = true)
+  private[graft] val KN = Family("KN", emb, knEncodes, knAppends, drift = true)
+  private[graft] val KL = Family("KL", emb, klEncodes, klAppends, derived = true)
+  private[graft] val MP2 = Family("MP2", docs, tpEncodes, tpAppends)
+  private[graft] val SP2 = Family("SP2", docs, tpEncodes, tpAppends)
+  private[graft] val NP2 = Family("NP2", docs, npEncodes, npAppends)
+
+  /** Every live family (the textSigs markers its callers use included). */
+  private[graft] val families: Seq[Family] =
+    Seq(IVF2, PQ2, LSH2, IPQ2, LXT, THM, EHM) ++
+      Seq("NG", "MH", "SH", "WC", "WN", "LP", "DS", "BIN").map(sigFamily) ++
+      Seq(BPE, CC, EP, EC, KN, KL, MP2, SP2, NP2)
+
+  /** Every fit and append counter, each once (families share some). */
+  private[graft] def counters: Seq[AtomicLong] =
+    families.flatMap(f => Seq(f.fits, f.appends)).distinct
+
   /** Index root. A real deployment points this at a DFS path; the default
-    * keeps local runs self-contained and PER-USER — a shared /tmp root on
-    * a multi-tenant host is writable by anyone (see scaladoc).
+    * keeps local runs self-contained and PER-USER (see the object doc).
     */
   private[graft] def root(s: SparkSession): String =
     s.conf.get("graft.ann.indexRoot",
@@ -141,18 +215,17 @@ object AnnIndex {
 
   /** The version directory for one (table, content) state. */
   private[graft] def versionDir(s: SparkSession, d: String, n: Long, fp: Long): String =
-    versionDirFor(s, s"$d/embeddings.parquet", n, fp)
+    versionDirFor(s, s"$d/$emb", n, fp)
 
   private[graft] def versionDirFor(s: SparkSession, table: String, n: Long,
       fp: Long): String =
     s"${root(s)}/${md5hex(table)}/${java.lang.Long.toHexString(fp)}_$n"
 
   private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
   private def exists(s: SparkSession, path: String): Boolean =
-    fs(s, path).exists(new org.apache.hadoop.fs.Path(path))
+    fs(s, path).exists(new Path(path))
 
   /** Local (schemeless or file:) marker/metadata writes go through
     * java.nio (r17, verdict r16 next-round #1): the Hadoop local
@@ -180,7 +253,7 @@ object AnnIndex {
         java.nio.file.Files.deleteIfExists(crc)
         java.nio.file.Files.write(p, content.getBytes("UTF-8"))
       case None =>
-        val out = fs(s, path).create(new org.apache.hadoop.fs.Path(path), true)
+        val out = fs(s, path).create(new Path(path), true)
         out.write(content.getBytes("UTF-8")); out.close()
     }
 
@@ -203,16 +276,29 @@ object AnnIndex {
   private def readText(s: SparkSession, path: String): Option[String] =
     if (!exists(s, path)) None
     else {
-      val in = fs(s, path).open(new org.apache.hadoop.fs.Path(path))
+      val in = fs(s, path).open(new Path(path))
       try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     }
+
+  /** An artifact reader; an explicit DDL `schema` pins column types (and
+    * skips footer inference) where the family's read always has.
+    */
+  private def load(s: SparkSession, path: String, schema: String = ""): DataFrame =
+    if (schema.isEmpty) s.read.parquet(path) else s.read.schema(schema).parquet(path)
+
+  /** Overwrite `path` with `df` and count what landed (a meta total). */
+  private def saveCount(s: SparkSession, df: DataFrame, path: String,
+      schema: String = ""): Long = {
+    df.write.mode("overwrite").parquet(path)
+    load(s, path, schema).count()
+  }
 
   /** Physical file inventory of the table — the append detector's unit.
     * Same (path, length, mtime) triples [[Similarity.tableFingerprint]]
     * folds, kept unfolded so set-subset (pure append) is decidable.
     */
   private def physFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     val it = f.listFiles(p, true)
@@ -240,80 +326,95 @@ object AnnIndex {
         (p, l.toLong, m.toLong)
       })
 
-  /** Per-family version metadata: the append-chain base pointer (sibling
-    * dir name, "-" when the artifact is complete in this dir), the corpus
-    * size at the last true fit, and frozen solve parameters (LSH).
+  /** Per-family version metadata: the corpus size at the last true fit,
+    * the frozen parameters / exact totals, and the append-chain base
+    * (sibling dir name; None when the artifact is complete in this dir).
     */
-  private def writeMeta(s: SparkSession, vd: String, fam: String,
-      base: Option[String], nFit: Long, params: String = ""): Unit =
-    writeText(s, s"$vd/_GRAFT_META_$fam",
-      s"base=${base.getOrElse("-")}\nn_fit=$nFit\nparams=$params")
+  private final case class Meta(nFit: Long, params: String,
+      base: Option[String] = None) {
+    def total: Long = params.toLong
+    def ps: Array[String] = params.split(",")
+  }
 
-  private def readMeta(s: SparkSession, vd: String,
-      fam: String): Option[(Option[String], Long, String)] =
+  private def writeMeta(s: SparkSession, vd: String, fam: String, m: Meta): Unit =
+    writeText(s, s"$vd/_GRAFT_META_$fam",
+      s"base=${m.base.getOrElse("-")}\nn_fit=${m.nFit}\nparams=${m.params}")
+
+  private def readMeta(s: SparkSession, vd: String, fam: String): Option[Meta] =
     readText(s, s"$vd/_GRAFT_META_$fam").map { t =>
       val kv = t.split("\n").map(_.split("=", 2)).collect {
         case Array(k, v) => k -> v
       }.toMap
-      (Some(kv("base")).filter(_ != "-"), kv("n_fit").toLong,
-        kv.getOrElse("params", ""))
+      Meta(kv("n_fit").toLong, kv.getOrElse("params", ""),
+        Some(kv("base")).filter(_ != "-"))
     }
 
   /** Resolve `fam`'s artifact chain starting at `vd`: the dirs whose
     * artifacts union into the full corpus view (tip first).
     */
   private def chainDirs(s: SparkSession, vd: String, fam: String): Seq[String] = {
-    val parent = new org.apache.hadoop.fs.Path(vd).getParent.toUri.getPath
+    val parent = new Path(vd).getParent.toUri.getPath
     Iterator.iterate(Option(vd)) {
-      case Some(cur) => readMeta(s, cur, fam).flatMap(_._1).map(b => s"$parent/$b")
+      case Some(cur) => readMeta(s, cur, fam).flatMap(_.base).map(b => s"$parent/$b")
       case None => None
     }.takeWhile(_.isDefined).flatten.toSeq
   }
 
+  private def unionOf(s: SparkSession, dirs: Seq[String], art: String,
+      schema: String = ""): DataFrame =
+    dirs.map(c => load(s, s"$c/$art", schema)).reduce(_ unionByName _)
+
+  /** Serve read: `art` as the union over `fam`'s chain from `vd`. */
+  private def chainRead(s: SparkSession, vd: String, fam: String, art: String,
+      schema: String = ""): DataFrame =
+    unionOf(s, chainDirs(s, vd, fam), art, schema)
+
+  /** An append base: the base version dir, the delta (appended) file
+    * paths, and the base's meta (n_fit, frozen params).
+    */
+  private final case class Base(dir: String, delta: Seq[String], meta: Meta) {
+    def name: String = new Path(dir).getName
+  }
+
   /** Newest usable append base for `fam`: a complete sibling version whose
     * recorded file inventory is a SUBSET of the current one (pure file
-    * append — any modified/removed file disqualifies). Returns
-    * (base dir, delta file paths, n_fit, frozen params).
+    * append — any modified/removed file disqualifies).
     */
   private def appendBase(s: SparkSession, vd: String, fam: String,
-      curFiles: Seq[(String, Long, Long)]): Option[(String, Seq[String], Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(vd)
-    val parent = p.getParent
+      curFiles: Seq[(String, Long, Long)]): Option[Base] = {
+    val p = new Path(vd)
     val f = fs(s, vd)
-    if (!f.exists(parent)) return None
+    if (!f.exists(p.getParent)) return None
     val cur = curFiles.toSet
-    f.listStatus(parent).toSeq
+    f.listStatus(p.getParent).toSeq
       .filter(st => st.isDirectory && st.getPath.getName != p.getName)
       .map(_.getPath.toUri.getPath)
       .filter(b => exists(s, s"$b/_GRAFT_OK_$fam"))
       .flatMap { b =>
         for {
           files <- readFileList(s, b)
-          (_, nFit, params) <- readMeta(s, b, fam)
+          meta <- readMeta(s, b, fam)
           if files.toSet.subsetOf(cur)
           delta = curFiles.filterNot(files.toSet).map(_._1)
           if delta.nonEmpty
-        } yield (b, delta, nFit, params, files.size)
+        } yield (Base(b, delta, meta), files.size)
       }
-      .sortBy(-_._5) // deepest inventory = newest chain tip
-      .headOption.map { case (b, delta, nFit, params, _) => (b, delta, nFit, params) }
+      .sortBy(-_._2) // deepest inventory = newest chain tip
+      .headOption.map(_._1)
   }
 
-  /** Delete sibling versions of `vd` not reachable from any family's
-    * chain — a full refit collapses the chain, an append keeps its bases.
-    * The family set is derived from the `_GRAFT_OK_*` completion markers
-    * actually on disk (never a hard-coded list). For a family COMPLETE
-    * in `vd` the live set is its chain from `vd`; for a family NOT YET
-    * rebuilt/appended into `vd` (r11, the ADVICE orphaning fix: EP — a
-    * chainless family — completing first after a corpus append used to
-    * anchor only {vd}, and the prune deleted the prior version still
-    * holding IVF/PQ/LSH's chain segments, silently forcing full Lloyd
-    * refits) every sibling where the family IS complete is kept, plus
-    * each such sibling's own chain — so a prune triggered by ANY family
-    * can't orphan another's, in any completion order. Those stale
-    * siblings die on the family's next full refit into a new version
-    * (chain = {new vd}), which is when pruning them becomes safe.
+  /** A derived family's base: the sibling its parent's lineage pointer
+    * (`_GRAFT_<fam>_BASE`, written by the parent's append) names, when
+    * `fam` is complete there.
     */
+  private def lineageBase(s: SparkSession, vd: String, fam: String): Option[Base] =
+    for {
+      name <- readText(s, s"$vd/_GRAFT_${fam}_BASE").map(_.trim)
+      dir = s"${new Path(vd).getParent.toUri.getPath}/$name"
+      if exists(s, s"$dir/_GRAFT_OK_$fam")
+      meta <- readMeta(s, dir, fam)
+    } yield Base(dir, Nil, meta)
+
   // retired layouts (markers a PREVIOUS release wrote, no longer
   // served): without the exemption the keep-forever rule for
   // not-yet-rebuilt families would preserve their corpus-sized
@@ -329,119 +430,68 @@ object AnnIndex {
     // append deltas, the NP2 device)
     "MP", "SP")
 
-  private def pruneSiblings(s: SparkSession, vd: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(vd)
-    val parent = p.getParent
-    val f = fs(s, vd)
-    if (!f.exists(parent)) return
-    val sibs = f.listStatus(parent).toSeq.filter(_.isDirectory)
-      .map(_.getPath.toUri.getPath)
-    val fams = sibs.flatMap(b => f.listStatus(new org.apache.hadoop.fs.Path(b))
-        .toSeq.map(_.getPath.getName).filter(_.startsWith("_GRAFT_OK_"))
-        .map(_.stripPrefix("_GRAFT_OK_"))).distinct
-      .filterNot(retiredFams)
-    val keep = fams.flatMap { fam =>
-      if (exists(s, s"$vd/_GRAFT_OK_$fam")) chainDirs(s, vd, fam)
-      else sibs.filter(b => exists(s, s"$b/_GRAFT_OK_$fam"))
-        .flatMap(b => chainDirs(s, b, fam))
-    }.map(new org.apache.hadoop.fs.Path(_).getName).toSet + p.getName
-    f.listStatus(parent).foreach { st =>
-      if (!keep(st.getPath.getName)) f.delete(st.getPath, true)
-    }
-  }
-
-  /** GC sweep over a table's version dirs (r14, verdict r13 #7) — the
-    * MAINTENANCE-cadence complement to [[pruneSiblings]]'s build-time
-    * prune. Prune's keep-forever rule preserves EVERY sibling where a
-    * family not yet rebuilt in `vd` is complete — correct at build time
-    * (any completion order must not orphan another family's chain, the
-    * r11 hazard) but it accumulates: once a family lags a few content
-    * versions, each of its old complete dirs is pinned by every later
-    * prune even though only the NEWEST of them can ever serve again.
-    * The sweep keeps, per (non-retired) family:
-    *  - complete in the CURRENT content's `vd` → that chain (a live
-    *    chain dir is never deleted — spec-pinned), else
-    *  - the deepest-inventory sibling whose recorded file inventory is
-    *    still a SUBSET of the current table files (the one usable
-    *    append base, same selection rule as [[appendBase]]) plus its
-    *    chain; a dir whose inventory no longer subsets the table (the
-    *    table was rewritten) can never serve again and is dead weight.
-    * Deleting an in-principle-usable older base only costs a refit,
-    * never correctness: every serve path revalidates (fp, n) and
-    * rebuilds from the table on a miss. Returns the deleted-dir count.
-    * Disk bound after a sweep: ≤ one version chain per family per table.
+  /** Delete sibling versions of `vd` no family's chain reaches. The family
+    * set is derived from the `_GRAFT_OK_*` markers actually on disk (never
+    * a hard-coded list). For a family COMPLETE in `vd` the live set is its
+    * chain from `vd`. For a family not complete in `vd`:
+    *  - build-time prune (`cur` = None, after every publish): every
+    *    sibling where the family IS complete is kept, plus each one's
+    *    chain — so a prune triggered by ANY family can't orphan another's,
+    *    in any completion order (r11: EP completing first after a corpus
+    *    append used to delete the version holding IVF/PQ/LSH's chain
+    *    segments, silently forcing full Lloyd refits);
+    *  - maintenance sweep (`cur` = the table's current files, r14): only
+    *    the deepest-inventory sibling whose inventory still SUBSETS the
+    *    table (the one usable append base, [[appendBase]]'s rule) plus its
+    *    chain — the build-time rule accumulates every lagging family's old
+    *    versions, of which only the newest can ever serve again. Deleting
+    *    an in-principle-usable older base only costs a refit, never
+    *    correctness. Disk bound after a sweep: ≤ one chain per family.
+    * Returns the deleted-entry count.
     */
-  private[graft] def sweepVersions(s: SparkSession, tablePath: String): Int = {
-    if (!exists(s, tablePath)) return 0
-    val cnt = tableCount(s, tablePath) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, tablePath)
-    sweepAt(s, tablePath, versionDirFor(s, tablePath, math.max(cnt, 1L), fp))
-  }
-
-  private def sweepAt(s: SparkSession, tablePath: String, vd: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(vd)
+  private def prune(s: SparkSession, vd: String,
+      cur: Option[Set[(String, Long, Long)]]): Int = {
+    val p = new Path(vd)
     val parent = p.getParent
     val f = fs(s, vd)
     if (!f.exists(parent)) return 0
-    val cur = physFiles(s, tablePath).toSet
     val sibs = f.listStatus(parent).toSeq.filter(_.isDirectory)
       .map(_.getPath.toUri.getPath)
-    val fams = sibs.flatMap(b => f.listStatus(new org.apache.hadoop.fs.Path(b))
+    val fams = sibs.flatMap(b => f.listStatus(new Path(b))
         .toSeq.map(_.getPath.getName).filter(_.startsWith("_GRAFT_OK_"))
         .map(_.stripPrefix("_GRAFT_OK_"))).distinct
       .filterNot(retiredFams)
     val keep = fams.flatMap { fam =>
+      def done = sibs.filter(b => exists(s, s"$b/_GRAFT_OK_$fam"))
       if (exists(s, s"$vd/_GRAFT_OK_$fam")) chainDirs(s, vd, fam)
-      else sibs.filter(b => exists(s, s"$b/_GRAFT_OK_$fam"))
-        .flatMap(b => readFileList(s, b).map(fl => (b, fl)))
-        .filter { case (_, fl) => fl.toSet.subsetOf(cur) }
-        .sortBy { case (b, fl) => (-fl.size, b) }
-        .headOption.toSeq
-        .flatMap { case (b, _) => chainDirs(s, b, fam) }
-    }.map(new org.apache.hadoop.fs.Path(_).getName).toSet + p.getName
+      else cur match {
+        case None => done.flatMap(b => chainDirs(s, b, fam))
+        case Some(files) => done
+          .flatMap(b => readFileList(s, b).map(fl => (b, fl)))
+          .filter { case (_, fl) => fl.toSet.subsetOf(files) }
+          .sortBy { case (b, fl) => (-fl.size, b) }
+          .headOption.toSeq
+          .flatMap { case (b, _) => chainDirs(s, b, fam) }
+      }
+    }.map(new Path(_).getName).toSet + p.getName
     var n = 0
     f.listStatus(parent).foreach { st =>
-      if (st.isDirectory && !keep(st.getPath.getName)) {
+      if ((cur.isEmpty || st.isDirectory) && !keep(st.getPath.getName)) {
         f.delete(st.getPath, true); n += 1
       }
     }
     n
   }
 
-  /** The delta rows, read from ONLY the appended files, projected exactly
-    * as Similarity.vecsRaw projects the full table.
+  private def sweepAt(s: SparkSession, v: Version): Int =
+    prune(s, v.vd, Some(physFiles(s, v.table).toSet))
+
+  /** GC sweep over a table's version dirs (r14, verdict r13 #7) — the
+    * maintenance-cadence complement to the build-time prune (see
+    * [[prune]]). Returns the deleted-dir count.
     */
-  private def deltaVecs(s: SparkSession, paths: Seq[String]): DataFrame =
-    s.read.parquet(paths: _*)
-      .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Vectors.norm(col("v")))
-
-  /** The delta's DISTINCT vectors, eh-keyed — the encode unit of every
-    * r12 vector index family (a batch re-shipping known content adds no
-    * rows once the caller anti-joins the chain's eh registry).
-    */
-  private def deltaReps(s: SparkSession, paths: Seq[String]): DataFrame =
-    deltaVecs(s, paths)
-      .withColumn("eh", ehCol(col("v")))
-      .groupBy("eh", "v").agg(min("nrm").as("nrm"))
-      .select("eh", "v", "nrm")
-
-  private[graft] def loadIvfCodebook(s: SparkSession, vd: String,
-      okFam: String = "IVF2"): Option[Array[(Long, Seq[Double], Double)]] =
-    if (exists(s, s"$vd/_GRAFT_OK_$okFam"))
-      Some(s.read.parquet(s"$vd/ivf_codebook")
-        .collect().map(r => (r.getAs[Long]("c_id"),
-          r.getAs[scala.collection.Seq[Double]]("cv").toSeq,
-          r.getAs[Double]("cnrm"))))
-    else None
-
-  private[graft] def loadPqCodebook(s: SparkSession, vd: String,
-      okFam: String = "PQ2"): Option[(Array[Double], Int)] =
-    if (exists(s, s"$vd/_GRAFT_OK_$okFam")) {
-      val r = s.read.parquet(s"$vd/pq_codebook").head()
-      Some((r.getAs[scala.collection.Seq[Double]]("cents").toArray,
-        r.getAs[Int]("dim")))
-    } else None
+  private[graft] def sweepVersions(s: SparkSession, tablePath: String): Int =
+    if (!exists(s, tablePath)) 0 else sweepAt(s, resolve(s, tablePath))
 
   /** Once-per-session artifact sanity check before the first serve of a
     * version (ADVICE r7): a marker is a promise, not proof — a /tmp
@@ -449,8 +499,7 @@ object AnnIndex {
     * leave a complete-looking version whose corpus artifact is truncated
     * or foreign. Schema mismatches already fail loud (explicit read
     * schemas); row count is the silent failure mode, so compare the
-    * artifact's count against the version key's count and refuse to
-    * serve on mismatch.
+    * artifact's count against the meta's and refuse to serve on mismatch.
     */
   private val validatedVersions =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -473,14 +522,10 @@ object AnnIndex {
   /** Session memo of source-table row counts, keyed by (path, physical
     * fingerprint) — r16. Every artifact serve needs the table count to
     * resolve its version dir, which cost one count JOB per family per
-    * query execution (2-6 jobs on the composed queries, pure fixed
-    * latency at dev scale and a per-serve footer scan at 100 TB). Within
-    * a session the count can only change when the file inventory does,
-    * and the (path, length, mtime) fingerprint is exactly the staleness
-    * authority every other memo in the engine already trusts
-    * (SessionMemo / bloomCache / appendBase): an in-session append or
-    * rewrite changes the fingerprint and re-counts, so serve-side
-    * staleness behavior is unchanged.
+    * query execution. Within a session the count can only change when the
+    * file inventory does, and the (path, length, mtime) fingerprint is
+    * exactly the staleness authority every other memo trusts: an
+    * in-session append or rewrite changes the fingerprint and re-counts.
     */
   private val tableCounts =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
@@ -490,158 +535,280 @@ object AnnIndex {
       (path, Similarity.tableFingerprint(s, path)),
       _ => s.read.parquet(path).count()).longValue
 
+  /** One resolved (table, content) state: source row count, fingerprint
+    * and version dir. `v(art)` is an artifact path inside the version.
+    */
+  private final case class Version(table: String, cnt: Long, fp: Long, vd: String) {
+    def n: Long = math.max(cnt, 1L)
+    def apply(art: String): String = s"$vd/$art"
+    def ok(fam: Family): String = s"$vd/_GRAFT_OK_${fam.marker}"
+  }
+
+  /** Lifecycle step 1 — the count → fingerprint → version-dir preamble. */
+  private def resolve(s: SparkSession, table: String): Version = {
+    val cnt = tableCount(s, table) // session-memoized (fp-keyed)
+    val fp = Similarity.tableFingerprint(s, table)
+    Version(table, cnt, fp, versionDirFor(s, table, math.max(cnt, 1L), fp))
+  }
+
+  private def resolve(s: SparkSession, d: String, fam: Family): Version =
+    resolve(s, s"$d/${fam.table}")
+
+  private def metaOf(s: SparkSession, v: Version, fam: Family): Meta =
+    readMeta(s, v.vd, fam.marker).get
+
+  /** Lifecycle step 2 — bring `fam` current in `v`. Unless its marker is
+    * present: find the append base (file-subset sibling, or the lineage
+    * pointer for a derived family) whose meta has params and, for a drift
+    * family, whose n_fit is within [[refitFraction]] of the corpus; ask
+    * the family's `append` for a plan (None = refuse, e.g. a cap crossing)
+    * and run it; otherwise run `fit`. The matching counter is bumped
+    * before the work runs, then the result is published.
+    */
+  private def ensure(s: SparkSession, fam: Family, v: Version)(
+      append: Base => Option[() => Meta], fit: () => Meta): Unit =
+    if (!exists(s, v.ok(fam))) {
+      val cur = if (fam.derived) None else Some(physFiles(s, v.table))
+      val meta = cur.fold(lineageBase(s, v.vd, fam.marker))(
+          appendBase(s, v.vd, fam.marker, _))
+        .filter(b => b.meta.params.nonEmpty && (!fam.drift ||
+          (v.cnt - b.meta.nFit).toDouble / v.n <= refitFraction))
+        .flatMap(b => append(b).map { run =>
+          fam.appends.incrementAndGet()
+          val m = run()
+          if (fam.chained) m.copy(base = Some(b.name)) else m
+        })
+        .getOrElse {
+          if (fam.countsFits) fam.fits.incrementAndGet()
+          fit()
+        }
+      publish(s, fam, v, cur, meta)
+    }
+
+  /** Lifecycle step 3 — file inventory, meta, marker (last: a crash before
+    * it leaves the version unmarked and redone), then the build-time prune.
+    * Derived families and compaction pass no `files`: their version's
+    * inventory exists already and nothing new can be orphaned.
+    */
+  private def publish(s: SparkSession, fam: Family, v: Version,
+      files: Option[Seq[(String, Long, Long)]], meta: Meta): Unit = {
+    files.foreach(writeFileList(s, v.vd, _))
+    writeMeta(s, v.vd, fam.marker, meta)
+    touch(s, v.ok(fam))
+    if (files.isDefined) prune(s, v.vd, None)
+  }
+
+  /** Lifecycle step 4 for row-total families: `art`'s chain union,
+    * validated once per session against the meta total.
+    */
+  private def serve(s: SparkSession, fam: Family, v: Version, art: String,
+      schema: String = ""): DataFrame = {
+    val df = chainRead(s, v.vd, fam.marker, art, schema)
+    validate(v.vd, fam.marker, metaOf(s, v, fam).total, df.count())
+    df
+  }
+
+  /** Lifecycle step 5 — the one crash-safe chain compaction. Each
+    * artifact's merge (given the chain dirs and meta) is written ASIDE
+    * first (the merge plan reads the very paths it replaces); the marker
+    * comes OFF across the delete+rename window (ADVICE r15: a crash leaves
+    * an unmarked version the next serve rebuilds, never a marked one
+    * missing an artifact); the meta is re-published self-contained with
+    * its totals conserved, marker back on; superseded versions are swept
+    * (compaction IS the maintenance cadence); the next serve re-proves
+    * the totals. A session memo may hold a chain READER over the swept
+    * segments (same fingerprint, different layout — the one staleness the
+    * fingerprint cannot see), so the dataset's memos are evicted. Returns
+    * false (no-op) on an incomplete or unchained artifact.
+    */
+  private def compact(s: SparkSession, d: String, fam: Family, v: Version,
+      arts: (String, (Seq[String], Meta) => DataFrameWriter[Row])*): Boolean = {
+    val chain = if (exists(s, v.ok(fam))) chainDirs(s, v.vd, fam.marker) else Nil
+    if (chain.size <= 1) return false
+    val meta = metaOf(s, v, fam)
+    arts.foreach { case (art, merge) => merge(chain, meta).parquet(v(s"${art}_c")) }
+    val f = fs(s, v.vd)
+    f.delete(new Path(v.ok(fam)), false)
+    arts.foreach { case (art, _) =>
+      f.delete(new Path(v(art)), true)
+      if (!f.rename(new Path(v(s"${art}_c")), new Path(v(art))))
+        throw new IllegalStateException(s"compact ${fam.marker}: rename of $art failed")
+    }
+    publish(s, fam, v, None, meta.copy(base = None))
+    sweepAt(s, v)
+    validatedVersions.remove(s"${v.vd}#${fam.marker}")
+    SessionMemo.evictDataset(d)
+    true
+  }
+
+  /** Compaction for families whose segments hold DISJOINT key sets (the
+    * signature chains, THM): the merge is a plain union rewrite — no
+    * re-encode, no corpus pass — sized by the meta's exact row total.
+    */
+  private def compactUnion(s: SparkSession, d: String, fam: Family, v: Version,
+      art: String): Boolean =
+    compact(s, d, fam, v, art -> ((chain, m) =>
+      boundFiles(unionOf(s, chain, art), math.max(1L, m.total)).write.mode("overwrite")))
+
+  /** Compact past the family's chain bound. */
+  private def bound(s: SparkSession, fam: Family, v: Version)(run: => Unit): Unit =
+    if (fam.maxChain > 0 && chainDirs(s, v.vd, fam.marker).size > fam.maxChain) run
+
+  /** Spec hook: the current segment-chain length of a documents-table
+    * family (1 = self-contained).
+    */
+  private[graft] def sigChainLen(s: SparkSession, d: String, fam: String): Int =
+    chainDirs(s, resolve(s, s"$d/$docs").vd, fam).size
+
+  /** The delta rows, read from ONLY the appended files, projected exactly
+    * as Similarity.vecsRaw projects the full table.
+    */
+  private def deltaVecs(s: SparkSession, paths: Seq[String]): DataFrame =
+    s.read.parquet(paths: _*)
+      .select(col("vec_id"), Vectors.toDouble(col("embedding")).as("v"))
+      .withColumn("nrm", Vectors.norm(col("v")))
+
+  /** The delta's DISTINCT vectors, eh-keyed — the encode unit of every
+    * r12 vector index family (a batch re-shipping known content adds no
+    * rows once the caller anti-joins the chain's eh registry).
+    */
+  private def deltaReps(s: SparkSession, paths: Seq[String]): DataFrame =
+    deltaVecs(s, paths)
+      .withColumn("eh", ehCol(col("v")))
+      .groupBy("eh", "v").agg(min("nrm").as("nrm"))
+      .select("eh", "v", "nrm")
+
+  private type Codebook = Array[(Long, Seq[Double], Double)]
+
+  // explicit schemas pin `cluster` LongType against hive partition-column
+  // INFERENCE (which types small ids int, so an isin filter would cast the
+  // attribute and block partition pruning), and read an all-known append's
+  // ZERO-row partitioned dir, which has no footers to infer from
+  private val cellsDdl = "eh string, v array<double>, nrm double, cluster bigint"
+  private val codesDdl = "eh string, code bigint, nrm double"
+  private val ipqCodesDdl = "eh string, code bigint, nrm double, cluster bigint"
+
+  private[graft] def loadIvfCodebook(s: SparkSession, vd: String,
+      okFam: String = "IVF2"): Option[Codebook] =
+    if (exists(s, s"$vd/_GRAFT_OK_$okFam"))
+      Some(s.read.parquet(s"$vd/ivf_codebook")
+        .collect().map(r => (r.getAs[Long]("c_id"),
+          r.getAs[scala.collection.Seq[Double]]("cv").toSeq,
+          r.getAs[Double]("cnrm"))))
+    else None
+
+  private[graft] def loadPqCodebook(s: SparkSession, vd: String,
+      okFam: String = "PQ2"): Option[(Array[Double], Int)] =
+    if (exists(s, s"$vd/_GRAFT_OK_$okFam")) {
+      val r = s.read.parquet(s"$vd/pq_codebook").head()
+      Some((r.getAs[scala.collection.Seq[Double]]("cents").toArray,
+        r.getAs[Int]("dim")))
+    } else None
+
+  // the (tiny) codebooks are copied into every appended tip so codebook
+  // loads stay chain-free
+  private def putIvfCodebook(s: SparkSession, v: Version, cb: Codebook): Unit =
+    s.createDataFrame(cb.toIndexedSeq).toDF("c_id", "cv", "cnrm")
+      .coalesce(1).write.mode("overwrite").parquet(v("ivf_codebook"))
+
+  private def putPqCodebook(s: SparkSession, v: Version, cents: Array[Double],
+      dim: Int): Unit =
+    s.createDataFrame(Seq((dim, cents.toSeq))).toDF("dim", "cents")
+      .coalesce(1).write.mode("overwrite").parquet(v("pq_codebook"))
+
+  private def nearest(cb: Codebook) =
+    Vectors.nearestCentroid(col("v"), cb.map(_._1), cb.flatMap(_._2), cb.map(_._3))
+
+  private def pqCode(cents: Array[Double]) =
+    Vectors.pqEncode(col("v"), cents, Similarity.pqM, Similarity.pqKsub).as("code")
+
+  /** Hash-repartition on cluster so each cell lands as one file in its own
+    * hive partition directory (the inverted-file layout).
+    */
+  private def writeCells(df: DataFrame, path: String): Unit =
+    df.repartition(col("cluster"))
+      .write.mode("overwrite").partitionBy("cluster").parquet(path)
+
   /** Ensure the IVF index (codebook + cell-partitioned corpus) is
     * persisted for `d`'s embeddings table — fitting at most once per
     * table content, encoding only appended files on a pure append — and
     * return (driver codebook rows, cells reader). The cells reader is the
     * chain union of plain parquet scans; a `cluster` filter
-    * partition-prunes each chain segment.
+    * partition-prunes each chain segment. Meta params: the distinct-row
+    * total.
     */
   private[graft] def ivf(s: SparkSession, d: String,
-      e: DataFrame): (Array[(Long, Seq[Double], Double)], DataFrame) = {
-    val cnt = tableCount(s, s"$d/embeddings.parquet") // r16: e is the full-table projection
-    val n = math.max(cnt, 1L)
-    val fp = Similarity.tableFingerprint(s, s"$d/embeddings.parquet")
-    val vd = versionDir(s, d, n, fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_IVF2")) {
-      val cur = physFiles(s, s"$d/embeddings.parquet")
-      appendBase(s, vd, "IVF2", cur) match {
-        case Some((base, delta, nFit, params))
-            if params.nonEmpty && (n - nFit).toDouble / n <= refitFraction =>
-          ivfAppends.incrementAndGet()
-          val cb = loadIvfCodebook(s, base, "IVF2").get
-          // copy the (tiny) codebook so codebook loads are chain-free
-          s.createDataFrame(cb.toIndexedSeq).toDF("c_id", "cv", "cnrm")
-            .coalesce(1).write.mode("overwrite").parquet(s"$vd/ivf_codebook")
-          // only genuinely-NEW distinct vectors encode (the textSigs
-          // device): known ehs come from the chain's own cells — one row
-          // per distinct vector, a reliable registry
-          val known = chainDirs(s, base, "IVF2")
-            .map(c => s.read.schema(
-                "eh string, v array<double>, nrm double, cluster long")
-              .parquet(s"$c/ivf2_cells").select("eh"))
-            .reduce(_ unionByName _)
-          deltaReps(s, delta).join(known, Seq("eh"), "left_anti")
-            .withColumn("cluster",
-              Vectors.nearestCentroid(col("v"), cb.map(_._1), cb.flatMap(_._2),
-                cb.map(_._3)))
-            .repartition(col("cluster"))
-            .write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$vd/ivf2_cells")
-          // explicit schema: an all-known batch writes ZERO rows, and an
-          // empty partitioned dir has no footers to infer from
-          val nNew = s.read.schema(
-              "eh string, v array<double>, nrm double, cluster long")
-            .parquet(s"$vd/ivf2_cells").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "IVF2",
-            Some(new org.apache.hadoop.fs.Path(base).getName), nFit,
-            (params.toLong + nNew).toString)
-          touch(s, s"$vd/_GRAFT_OK_IVF2")
-          pruneSiblings(s, vd)
-        case _ =>
-          val cb = Similarity.codebookRowsAt(s, d, e, n, fp) // Lloyd fit
-          s.createDataFrame(cb.toIndexedSeq).toDF("c_id", "cv", "cnrm")
-            .coalesce(1).write.mode("overwrite").parquet(s"$vd/ivf_codebook")
-          // one narrow NearestCentroid pass over the DISTINCT vectors
-          // (r12: cells are eh-keyed — a k×-duplicated corpus stores and
-          // scans 1/k of the rows; members expand at serve);
-          // hash-repartition on cluster so each cell lands as one file in
-          // its own hive partition directory (the inverted-file layout)
-          Members.eh(s, d)._2.select("eh", "v", "nrm")
-            .withColumn("cluster",
-              Vectors.nearestCentroid(col("v"), cb.map(_._1), cb.flatMap(_._2),
-                cb.map(_._3)))
-            .repartition(col("cluster"))
-            .write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$vd/ivf2_cells")
-          val nRows = s.read.parquet(s"$vd/ivf2_cells").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "IVF2", None, n, nRows.toString)
-          touch(s, s"$vd/_GRAFT_OK_IVF2")
-          pruneSiblings(s, vd)
-      }
-    }
-    // explicit schema: hive partition-column INFERENCE would type `cluster`
-    // int when ids are small, and an isin filter would then cast the
-    // attribute (blocking partition pruning); a user schema pins LongType
-    // so the probe filter prunes directories as-is
-    import org.apache.spark.sql.types._
-    val cellsSchema = StructType(Seq(
-      StructField("eh", StringType), StructField("v", ArrayType(DoubleType)),
-      StructField("nrm", DoubleType), StructField("cluster", LongType)))
-    val cells = chainDirs(s, vd, "IVF2")
-      .map(cd => s.read.schema(cellsSchema).parquet(s"$cd/ivf2_cells"))
-      .reduce(_ unionByName _)
-    val (_, _, params) = readMeta(s, vd, "IVF2").get
-    validate(vd, "IVF2", params.toLong, cells.count())
-    (Similarity.codebookRowsAt(s, d, e, n, fp), cells)
+      e: DataFrame): (Codebook, DataFrame) = {
+    val v = resolve(s, d, IVF2) // e is the full-table projection
+    ensure(s, IVF2, v)(
+      append = b => Some { () =>
+        val cb = loadIvfCodebook(s, b.dir, "IVF2").get
+        putIvfCodebook(s, v, cb)
+        // only genuinely-NEW distinct vectors encode (the textSigs
+        // device): known ehs come from the chain's own cells — one row
+        // per distinct vector, a reliable registry
+        val known = chainRead(s, b.dir, "IVF2", "ivf2_cells", cellsDdl).select("eh")
+        writeCells(deltaReps(s, b.delta).join(known, Seq("eh"), "left_anti")
+          .withColumn("cluster", nearest(cb)), v("ivf2_cells"))
+        val nNew = load(s, v("ivf2_cells"), cellsDdl).count()
+        Meta(b.meta.nFit, (b.meta.total + nNew).toString)
+      },
+      fit = () => {
+        val cb = Similarity.codebookRowsAt(s, d, e, v.n, v.fp) // Lloyd fit
+        putIvfCodebook(s, v, cb)
+        // one narrow NearestCentroid pass over the DISTINCT vectors
+        // (r12: cells are eh-keyed; members expand at serve)
+        writeCells(Members.eh(s, d)._2.select("eh", "v", "nrm")
+          .withColumn("cluster", nearest(cb)), v("ivf2_cells"))
+        Meta(v.n, s.read.parquet(v("ivf2_cells")).count().toString)
+      })
+    val cells = serve(s, IVF2, v, "ivf2_cells", cellsDdl)
+    (Similarity.codebookRowsAt(s, d, e, v.n, v.fp), cells)
   }
 
   /** Ensure the PQ index (flat codebook + packed codes) is persisted and
     * return (flat centroids, dim, codes reader). `codes` is the 24 B/vector
-    * serve corpus: (vec_id, packed 64-bit code, norm) — the chain union on
-    * an appended table.
+    * serve corpus: (eh, packed 64-bit code, norm) — the chain union on an
+    * appended table.
     */
   private[graft] def pq(s: SparkSession, d: String,
       e: DataFrame): (Array[Double], Int, DataFrame) = {
-    val cnt = tableCount(s, s"$d/embeddings.parquet") // r16: e is the full-table projection
-    val n = math.max(cnt, 1L)
-    val fp = Similarity.tableFingerprint(s, s"$d/embeddings.parquet")
-    val vd = versionDir(s, d, n, fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_PQ2")) {
-      val cur = physFiles(s, s"$d/embeddings.parquet")
-      appendBase(s, vd, "PQ2", cur) match {
-        case Some((base, delta, nFit, params))
-            if params.nonEmpty && (n - nFit).toDouble / n <= refitFraction =>
-          pqAppends.incrementAndGet()
-          val (cents, dim) = loadPqCodebook(s, base, "PQ2").get
-          s.createDataFrame(Seq((dim, cents.toSeq))).toDF("dim", "cents")
-            .coalesce(1).write.mode("overwrite").parquet(s"$vd/pq_codebook")
-          val known = chainDirs(s, base, "PQ2")
-            .map(c => s.read.schema("eh string, code bigint, nrm double")
-              .parquet(s"$c/pq2_codes").select("eh"))
-            .reduce(_ unionByName _)
-          deltaReps(s, delta).join(known, Seq("eh"), "left_anti")
-            .select(col("eh"),
-              Vectors.pqEncode(col("v"), cents, Similarity.pqM, Similarity.pqKsub)
-                .as("code"),
-              col("nrm"))
-            .write.mode("overwrite").parquet(s"$vd/pq2_codes")
-          val nNew = s.read.schema("eh string, code bigint, nrm double")
-            .parquet(s"$vd/pq2_codes").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "PQ2",
-            Some(new org.apache.hadoop.fs.Path(base).getName), nFit,
-            (params.toLong + nNew).toString)
-          touch(s, s"$vd/_GRAFT_OK_PQ2")
-          pruneSiblings(s, vd)
-        case _ =>
-          val (cents, dim) = Similarity.pqCodebookAt(s, d, e, n, fp) // fit
-          s.createDataFrame(Seq((dim, cents.toSeq))).toDF("dim", "cents")
-            .coalesce(1).write.mode("overwrite").parquet(s"$vd/pq_codebook")
-          // r12: one code row per DISTINCT vector (eh-keyed)
-          Members.eh(s, d)._2.select("eh", "v", "nrm")
-            .select(col("eh"),
-              Vectors.pqEncode(col("v"), cents, Similarity.pqM, Similarity.pqKsub)
-                .as("code"),
-              col("nrm"))
-            .write.mode("overwrite").parquet(s"$vd/pq2_codes")
-          val nRows = s.read.parquet(s"$vd/pq2_codes").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "PQ2", None, n, nRows.toString)
-          touch(s, s"$vd/_GRAFT_OK_PQ2")
-          pruneSiblings(s, vd)
-      }
-    }
-    val (cents, dim) = Similarity.pqCodebookAt(s, d, e, n, fp)
-    val codes = chainDirs(s, vd, "PQ2")
-      .map(cd => s.read.schema("eh string, code bigint, nrm double")
-        .parquet(s"$cd/pq2_codes"))
-      .reduce(_ unionByName _)
-    val (_, _, params) = readMeta(s, vd, "PQ2").get
-    validate(vd, "PQ2", params.toLong, codes.count())
-    (cents, dim, codes)
+    val v = resolve(s, d, PQ2) // e is the full-table projection
+    ensure(s, PQ2, v)(
+      append = b => Some { () =>
+        val (cents, dim) = loadPqCodebook(s, b.dir, "PQ2").get
+        putPqCodebook(s, v, cents, dim)
+        val known = chainRead(s, b.dir, "PQ2", "pq2_codes", codesDdl).select("eh")
+        val nNew = saveCount(s, deltaReps(s, b.delta).join(known, Seq("eh"), "left_anti")
+          .select(col("eh"), pqCode(cents), col("nrm")), v("pq2_codes"), codesDdl)
+        Meta(b.meta.nFit, (b.meta.total + nNew).toString)
+      },
+      fit = () => {
+        val (cents, dim) = Similarity.pqCodebookAt(s, d, e, v.n, v.fp) // fit
+        putPqCodebook(s, v, cents, dim)
+        // r12: one code row per DISTINCT vector (eh-keyed)
+        Meta(v.n, saveCount(s, Members.eh(s, d)._2.select("eh", "v", "nrm")
+          .select(col("eh"), pqCode(cents), col("nrm")), v("pq2_codes")).toString)
+      })
+    val (cents, dim) = Similarity.pqCodebookAt(s, d, e, v.n, v.fp)
+    (cents, dim, serve(s, PQ2, v, "pq2_codes", codesDdl))
+  }
+
+  private val sigDdl = "eh string, band_idx int, code bigint"
+
+  /** Banded hyperplane signatures (eh, band_idx, code) of `reps`' vectors. */
+  private def bandSigs(reps: DataFrame, seed: Long, bands: Int, bits: Int): DataFrame =
+    reps.select(col("eh"),
+      posexplode(Vectors.hyperplaneBands(col("v"), seed, bands, bits))
+        .as(Seq("band_idx", "code")))
+
+  private def capBuckets(sigs: DataFrame): DataFrame =
+    Dedup.capBuckets(sigs, Seq("band_idx", "code"), 256)
+
+  /** Cap bucket occupancy (≤256 distinct vectors), write, read back. */
+  private def capSigs(s: SparkSession, sigs: DataFrame, path: String): DataFrame = {
+    capBuckets(sigs).write.mode("overwrite").parquet(path)
+    load(s, path, sigDdl)
   }
 
   /** Ensure the LSH banded-signature table is persisted and return
@@ -649,70 +816,47 @@ object AnnIndex {
     * model — the "fit" is the corpus ENCODE (one hyperplane-kernel pass
     * over every vector, a full corpus scan at 100 TB), which is exactly
     * what persisting avoids re-running per session. The stored table is
-    * the already skew-capped (vec_id, band_idx, code) rows — 24 B/row of
-    * live columns, the signature analogue of the PQ code table; the cap
-    * is part of the index (a hot bucket is hot for every future query).
-    * Parameters (bits/bands/radius) are solved at FIT time and FROZEN in
-    * the meta: an append must encode its delta with the base's geometry
-    * (signatures under different bit counts don't share a bucket space),
-    * and the serve side must probe with the same — re-solving from the
-    * grown n would silently desynchronize them. On append the sig table
-    * is re-capped over base ∪ delta and rewritten whole: cheap relative
-    * to the encode (24 B/row), and cap semantics stay union-global.
+    * the already skew-capped (eh, band_idx, code) rows — the cap is part
+    * of the index (a hot bucket is hot for every future query), counting
+    * DISTINCT vectors (r12). Parameters (bits/bands/radius) are solved at
+    * FIT time and FROZEN in the meta: an append must encode its delta with
+    * the base's geometry (signatures under different bit counts don't
+    * share a bucket space), and the serve side must probe with the same.
+    * On append the sig table is re-capped over base ∪ delta and rewritten
+    * whole (self-contained): cheap relative to the encode, and cap
+    * semantics stay union-global. `lsh2_ehs` is the exact known-content
+    * registry for the append anti-join (a vector whose rows were all
+    * capped out is known but absent from the sig table).
     */
   private[graft] def lsh(s: SparkSession, d: String,
       e: DataFrame): (Int, Int, Int, DataFrame) = {
-    val nRaw = tableCount(s, s"$d/embeddings.parquet") // r16: e is the full-table projection
-    val fp = Similarity.tableFingerprint(s, s"$d/embeddings.parquet")
-    val vd = versionDir(s, d, math.max(nRaw, 1L), fp)
-    // r12: signatures are eh-keyed — one row per (DISTINCT vector, band),
-    // and the ≤256 bucket cap counts distinct vectors (a k×-duplicated
-    // corpus no longer exhausts a bucket's budget with copies of one
-    // point). `lsh2_ehs` is the exact known-content registry for the
-    // anti-join on append: the capped sig table itself can't serve as one
-    // (a vector whose rows were all capped out is known but absent).
-    def encode(df: DataFrame, bands: Int, bits: Int): DataFrame = df
-      .withColumn("sig",
-        Vectors.hyperplaneBands(col("v"), Similarity.annLshSeed, bands, bits))
-      .select(col("eh"), posexplode(col("sig")).as(Seq("band_idx", "code")))
-    if (!exists(s, s"$vd/_GRAFT_OK_LSH2")) {
-      val cur = physFiles(s, s"$d/embeddings.parquet")
-      appendBase(s, vd, "LSH2", cur) match {
-        case Some((base, delta, nFit, params))
-            if params.nonEmpty && (nRaw - nFit).toDouble / nRaw <= refitFraction =>
-          lshAppends.incrementAndGet()
-          val Array(bits, bands, radius) = params.split(",").map(_.toInt)
-          val known = s.read.parquet(s"$base/lsh2_ehs")
-          val fresh = deltaReps(s, delta).join(known, Seq("eh"), "left_anti")
-          val union = s.read.parquet(s"$base/lsh2_sigs")
-            .unionByName(encode(fresh, bands, bits))
-          Dedup.capBuckets(union, Seq("band_idx", "code"), 256)
-            .write.mode("overwrite").parquet(s"$vd/lsh2_sigs")
-          known.unionByName(fresh.select("eh"))
-            .write.mode("overwrite").parquet(s"$vd/lsh2_ehs")
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "LSH2", None, nFit, s"$bits,$bands,$radius")
-          touch(s, s"$vd/_GRAFT_OK_LSH2")
-          pruneSiblings(s, vd)
-        case _ =>
-          val (bits, bands, radius) = Similarity.annLshParams(math.max(nRaw, 2L))
-          lshEncodes.incrementAndGet()
-          val reps = Members.eh(s, d)._2.select("eh", "v", "nrm")
-          Dedup.capBuckets(encode(reps, bands, bits), Seq("band_idx", "code"), 256)
-            .write.mode("overwrite").parquet(s"$vd/lsh2_sigs")
-          reps.select("eh").write.mode("overwrite").parquet(s"$vd/lsh2_ehs")
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "LSH2", None, nRaw, s"$bits,$bands,$radius")
-          touch(s, s"$vd/_GRAFT_OK_LSH2")
-          pruneSiblings(s, vd)
-      }
+    val v = resolve(s, d, LSH2) // e is the full-table projection
+    def encode(df: DataFrame, bands: Int, bits: Int): DataFrame =
+      bandSigs(df, Similarity.annLshSeed, bands, bits)
+    ensure(s, LSH2, v)(
+      append = b => Some { () =>
+        val Array(bits, bands, radius) = b.meta.ps.map(_.toInt)
+        val known = s.read.parquet(s"${b.dir}/lsh2_ehs")
+        val fresh = deltaReps(s, b.delta).join(known, Seq("eh"), "left_anti")
+        capBuckets(s.read.parquet(s"${b.dir}/lsh2_sigs").unionByName(encode(fresh, bands, bits)))
+          .write.mode("overwrite").parquet(v("lsh2_sigs"))
+        known.unionByName(fresh.select("eh"))
+          .write.mode("overwrite").parquet(v("lsh2_ehs"))
+        Meta(b.meta.nFit, s"$bits,$bands,$radius")
+      },
+      fit = () => {
+        val (bits, bands, radius) = Similarity.annLshParams(math.max(v.cnt, 2L))
+        val reps = Members.eh(s, d)._2.select("eh", "v", "nrm")
+        capBuckets(encode(reps, bands, bits)).write.mode("overwrite").parquet(v("lsh2_sigs"))
+        reps.select("eh").write.mode("overwrite").parquet(v("lsh2_ehs"))
+        Meta(v.cnt, s"$bits,$bands,$radius")
+      })
+    val (bits, bands, radius) = readMeta(s, v.vd, "LSH2") match {
+      case Some(m) if m.params.nonEmpty =>
+        val Array(b, ba, r) = m.ps.map(_.toInt); (b, ba, r)
+      case _ => Similarity.annLshParams(math.max(v.cnt, 2L)) // pre-meta version
     }
-    val (bits, bands, radius) = readMeta(s, vd, "LSH2") match {
-      case Some((_, _, params)) if params.nonEmpty =>
-        val Array(b, ba, r) = params.split(",").map(_.toInt); (b, ba, r)
-      case _ => Similarity.annLshParams(math.max(nRaw, 2L)) // pre-meta version
-    }
-    (bits, bands, radius, s.read.parquet(s"$vd/lsh2_sigs"))
+    (bits, bands, radius, s.read.parquet(v("lsh2_sigs")))
   }
 
   /** Ensure the IVF-PQ index — PQ codes laid out IN the inverted file —
@@ -721,112 +865,52 @@ object AnnIndex {
     * (FAISS `IVFx,PQy`): IVF alone prunes the read to ~nprobe/k of the
     * corpus but still streams RAW vectors inside probed cells; PQ alone
     * streams 24 B/vector codes but must scan the WHOLE corpus. Here the
-    * artifact is `ivfpq_codes/` = (vec_id, packed 64-bit code, nrm)
+    * artifact is `ivfpq2_codes/` = (eh, packed 64-bit code, nrm)
     * hive-partitioned by coarse cell: a serve touches nprobe/k of the
-    * corpus AND reads 24 B/vector inside it — both cuts compound
-    * (~k/nprobe × ~21× less bytes than a brute scan).
+    * corpus AND reads 24 B/vector inside it — both cuts compound.
     *
     * Codes quantize the RAW vector against the SAME PQ codebook as
     * q_ann_pq (not the residual v − centroid): residual-PQ buys recall at
-    * equal code size but needs per-cell LUTs (m·ksub adds per (query,
-    * cell) instead of per query) and a second codebook family; with the
-    * exact-cosine rescore of the ADC top-[[Similarity.pqRescore]]
-    * downstream, the measured recall already clears the family floor, so
-    * the shared-codebook form is the better scale trade here and the
-    * codebook artifacts stay byte-identical across the PQ and IVFPQ
-    * families (both derive from the same memoized fits).
-    *
-    * Same append/chain/validate discipline as the other families: a pure
-    * file-append delta-encodes ONLY the new vectors with frozen coarse +
-    * PQ codebooks (both copied tiny into the tip so codebook loads stay
-    * chain-free), serve reads the chain union (cluster filters
-    * partition-prune every segment), drift past [[refitFraction]]
-    * refits.
+    * equal code size but needs per-cell LUTs and a second codebook
+    * family; with the exact-cosine rescore of the ADC
+    * top-[[Similarity.pqRescore]] downstream, the measured recall already
+    * clears the family floor, and the codebook artifacts stay
+    * byte-identical across the PQ and IVFPQ families (both derive from the
+    * same memoized fits). Append/chain/drift as IVF2, with both frozen
+    * codebooks copied into the tip.
     */
   private[graft] def ivfpq(s: SparkSession, d: String,
-      e: DataFrame): (Array[(Long, Seq[Double], Double)], Array[Double], DataFrame) = {
-    val cnt = tableCount(s, s"$d/embeddings.parquet") // r16: e is the full-table projection
-    val n = math.max(cnt, 1L)
-    val fp = Similarity.tableFingerprint(s, s"$d/embeddings.parquet")
-    val vd = versionDir(s, d, n, fp)
-    def encodeCodes(df: DataFrame, cb: Array[(Long, Seq[Double], Double)],
-        cents: Array[Double]): DataFrame = df
-      .withColumn("cluster",
-        Vectors.nearestCentroid(col("v"), cb.map(_._1), cb.flatMap(_._2),
-          cb.map(_._3)))
-      .select(col("eh"),
-        Vectors.pqEncode(col("v"), cents, Similarity.pqM, Similarity.pqKsub)
-          .as("code"),
-        col("nrm"), col("cluster"))
-    def writeCodebooks(cb: Array[(Long, Seq[Double], Double)],
-        cents: Array[Double], dim: Int): Unit = {
+      e: DataFrame): (Codebook, Array[Double], DataFrame) = {
+    val v = resolve(s, d, IPQ2) // e is the full-table projection
+    def encode(df: DataFrame, cb: Codebook, cents: Array[Double]): Unit =
+      writeCells(df.withColumn("cluster", nearest(cb))
+        .select(col("eh"), pqCode(cents), col("nrm"), col("cluster")), v("ivfpq2_codes"))
+    def putCodebooks(cb: Codebook, cents: Array[Double], dim: Int): Unit = {
       // the IVF/PQ families may already have written identical artifacts
       // into this version dir (same memoized fits) — don't rewrite under
       // a sibling family's completion marker
-      if (!exists(s, s"$vd/ivf_codebook"))
-        s.createDataFrame(cb.toIndexedSeq).toDF("c_id", "cv", "cnrm")
-          .coalesce(1).write.mode("overwrite").parquet(s"$vd/ivf_codebook")
-      if (!exists(s, s"$vd/pq_codebook"))
-        s.createDataFrame(Seq((dim, cents.toSeq))).toDF("dim", "cents")
-          .coalesce(1).write.mode("overwrite").parquet(s"$vd/pq_codebook")
+      if (!exists(s, v("ivf_codebook"))) putIvfCodebook(s, v, cb)
+      if (!exists(s, v("pq_codebook"))) putPqCodebook(s, v, cents, dim)
     }
-    if (!exists(s, s"$vd/_GRAFT_OK_IPQ2")) {
-      val cur = physFiles(s, s"$d/embeddings.parquet")
-      appendBase(s, vd, "IPQ2", cur) match {
-        case Some((base, delta, nFit, params))
-            if params.nonEmpty && (n - nFit).toDouble / n <= refitFraction =>
-          ivfpqAppends.incrementAndGet()
-          val cb = loadIvfCodebook(s, base, "IPQ2").get
-          val (cents, dim) = loadPqCodebook(s, base, "IPQ2").get
-          writeCodebooks(cb, cents, dim)
-          val known = chainDirs(s, base, "IPQ2")
-            .map(c => s.read.schema(
-                "eh string, code bigint, nrm double, cluster long")
-              .parquet(s"$c/ivfpq2_codes").select("eh"))
-            .reduce(_ unionByName _)
-          encodeCodes(deltaReps(s, delta).join(known, Seq("eh"), "left_anti"),
-              cb, cents)
-            .repartition(col("cluster"))
-            .write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$vd/ivfpq2_codes")
-          val nNew = s.read.schema(
-              "eh string, code bigint, nrm double, cluster long")
-            .parquet(s"$vd/ivfpq2_codes").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "IPQ2",
-            Some(new org.apache.hadoop.fs.Path(base).getName), nFit,
-            (params.toLong + nNew).toString)
-          touch(s, s"$vd/_GRAFT_OK_IPQ2")
-          pruneSiblings(s, vd)
-        case _ =>
-          ivfpqEncodes.incrementAndGet()
-          val cb = Similarity.codebookRowsAt(s, d, e, n, fp) // Lloyd (memoized)
-          val (cents, dim) = Similarity.pqCodebookAt(s, d, e, n, fp)
-          writeCodebooks(cb, cents, dim)
-          encodeCodes(Members.eh(s, d)._2.select("eh", "v", "nrm"), cb, cents)
-            .repartition(col("cluster"))
-            .write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$vd/ivfpq2_codes")
-          val nRows = s.read.parquet(s"$vd/ivfpq2_codes").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "IPQ2", None, n, nRows.toString)
-          touch(s, s"$vd/_GRAFT_OK_IPQ2")
-          pruneSiblings(s, vd)
-      }
-    }
-    // explicit schema pins `cluster` LongType against hive partition-column
-    // inference (same defense as the IVF cells reader — an int-inferred
-    // partition column casts the attribute and blocks pruning)
-    import org.apache.spark.sql.types._
-    val codesSchema = StructType(Seq(
-      StructField("eh", StringType), StructField("code", LongType),
-      StructField("nrm", DoubleType), StructField("cluster", LongType)))
-    val codes = chainDirs(s, vd, "IPQ2")
-      .map(cd => s.read.schema(codesSchema).parquet(s"$cd/ivfpq2_codes"))
-      .reduce(_ unionByName _)
-    val (_, _, params) = readMeta(s, vd, "IPQ2").get
-    validate(vd, "IPQ2", params.toLong, codes.count())
-    (loadIvfCodebook(s, vd, "IPQ2").get, loadPqCodebook(s, vd, "IPQ2").get._1, codes)
+    ensure(s, IPQ2, v)(
+      append = b => Some { () =>
+        val cb = loadIvfCodebook(s, b.dir, "IPQ2").get
+        val (cents, dim) = loadPqCodebook(s, b.dir, "IPQ2").get
+        putCodebooks(cb, cents, dim)
+        val known = chainRead(s, b.dir, "IPQ2", "ivfpq2_codes", ipqCodesDdl).select("eh")
+        encode(deltaReps(s, b.delta).join(known, Seq("eh"), "left_anti"), cb, cents)
+        val nNew = load(s, v("ivfpq2_codes"), ipqCodesDdl).count()
+        Meta(b.meta.nFit, (b.meta.total + nNew).toString)
+      },
+      fit = () => {
+        val cb = Similarity.codebookRowsAt(s, d, e, v.n, v.fp) // Lloyd (memoized)
+        val (cents, dim) = Similarity.pqCodebookAt(s, d, e, v.n, v.fp)
+        putCodebooks(cb, cents, dim)
+        encode(Members.eh(s, d)._2.select("eh", "v", "nrm"), cb, cents)
+        Meta(v.n, s.read.parquet(v("ivfpq2_codes")).count().toString)
+      })
+    val codes = serve(s, IPQ2, v, "ivfpq2_codes", ipqCodesDdl)
+    (loadIvfCodebook(s, v.vd, "IPQ2").get, loadPqCodebook(s, v.vd, "IPQ2").get._1, codes)
   }
 
   /** Postings slot fan-out: the term space hashes into this many hive
@@ -850,9 +934,14 @@ object AnnIndex {
       .groupBy("th", "term").agg(count(lit(1)).cast("long").as("tf"))
       .withColumn("tslot", pmod(xxhash64(col("term")), lit(lexSlots)))
 
-  private def lexDistinct(df: DataFrame): DataFrame =
+  /** (th, text) per DISTINCT text — the encode unit of the th-keyed
+    * families.
+    */
+  private def distinctTexts(df: DataFrame): DataFrame =
     df.select(md5(col("text")).as("th"), col("text"))
       .groupBy("th").agg(min("text").as("text"))
+
+  private val lexTfDdl = "th string, term string, tf bigint, tslot bigint"
 
   /** Ensure the lexical (BM25) inverted index for `d`'s documents table
     * is persisted, and return (tf postings reader, dl reader, nDocs).
@@ -864,188 +953,120 @@ object AnnIndex {
     * Document frequencies and the corpus token total are member-weighted
     * quantities (they change when a duplicate of KNOWN content arrives,
     * which adds no artifact rows), so they are derived at serve from the
-    * cheap per-run doc↔th mapping — distinct-content-sized joins, the
-    * textSigs discipline. A new session LOADS instead of re-tokenizing —
-    * the per-session saved pass is the full text scan + tokenize + tf
-    * shuffle, the operator's entire corpus-sized cost, and since r11 that
-    * pass itself is paid once per DISTINCT text, not per document.
+    * cheap per-run doc↔th mapping. A new session LOADS instead of
+    * re-tokenizing — the saved pass is the full text scan + tokenize + tf
+    * shuffle, the operator's entire corpus-sized cost.
     *
     * Append discipline: novel-content rows are DISJOINT from the chain's
     * (anti-joined on th), so a pure file append writes only genuinely-new
     * texts' tf/dl partitions and the chained index is row-identical to a
     * fresh build (spec-proven; Lucene segment merging re-expressed over
-    * parquet, with the th key making the merge a plain union). No
-    * frozen-codebook approximation ⇒ no drift threshold, appends
-    * compound forever (compactLex bounds the segment count).
+    * parquet). No frozen-codebook approximation ⇒ no drift threshold;
+    * [[compactLex]] bounds the segment count at [[corpusMaxChain]] — a
+    * merged rewrite is real work here, so it amortizes over that many
+    * micro-batch appends instead of firing every other one.
     */
   private[graft] def lex(s: SparkSession,
       d: String): (DataFrame, DataFrame, Long) = {
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    def dlOf(tf: DataFrame): DataFrame =
+    val v = resolve(s, d, LXT)
+    def tokens(df: DataFrame): Long = df.agg(coalesce(sum("dl"), lit(0L))).head().getLong(0)
+    def build(texts: DataFrame): Long = { // returns the written token mass
+      val tf = lexTf(texts)
+      tf.write.partitionBy("tslot").mode("overwrite").parquet(v("lex_tf"))
       tf.groupBy("th").agg(sum("tf").cast("long").as("dl"))
-    if (!exists(s, s"$vd/_GRAFT_OK_LXT")) {
-      val cur = physFiles(s, table)
-      appendBase(s, vd, "LXT", cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          lexAppends.incrementAndGet()
-          val known = chainDirs(s, base, "LXT")
-            .map(c => s.read.parquet(s"$c/lex_dl").select("th"))
-            .reduce(_ unionByName _)
-          val fresh = lexDistinct(s.read.parquet(delta: _*).select("text"))
-            .join(known, Seq("th"), "left_anti")
-          val dtf = lexTf(fresh)
-          dtf.write.partitionBy("tslot").mode("overwrite").parquet(s"$vd/lex_tf")
-          dlOf(dtf).write.mode("overwrite").parquet(s"$vd/lex_dl")
-          val deltaToks = s.read.parquet(s"$vd/lex_dl")
-            .agg(coalesce(sum("dl"), lit(0L))).head().getLong(0)
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "LXT",
-            Some(new org.apache.hadoop.fs.Path(base).getName), cnt,
-            (params.toLong + deltaToks).toString)
-          touch(s, s"$vd/_GRAFT_OK_LXT")
-          pruneSiblings(s, vd)
-        case _ =>
-          lexEncodes.incrementAndGet()
-          val tf = lexTf(lexDistinct(s.read.parquet(table).select("text")))
-          tf.write.partitionBy("tslot").mode("overwrite").parquet(s"$vd/lex_tf")
-          dlOf(tf).write.mode("overwrite").parquet(s"$vd/lex_dl")
-          val toks = s.read.parquet(s"$vd/lex_dl")
-            .agg(coalesce(sum("dl"), lit(0L))).head().getLong(0)
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "LXT", None, cnt, toks.toString)
-          touch(s, s"$vd/_GRAFT_OK_LXT")
-          pruneSiblings(s, vd)
-      }
+        .write.mode("overwrite").parquet(v("lex_dl"))
+      tokens(s.read.parquet(v("lex_dl")))
     }
-    // r15: automatic compaction cadence (verdict r14 #8 extended to the
-    // corpus-classed chains). LXT segments are distinct-content × terms —
-    // a merged rewrite is real work, so the threshold is deeper than the
-    // signature families' sigMaxChain=2: the rewrite amortizes over
-    // corpusMaxChain micro-batch appends instead of firing every other
-    // one, and a serve still never unions an unbounded segment list.
-    if (chainDirs(s, vd, "LXT").size > corpusMaxChain) compactLex(s, d)
-    // explicit schema pins tslot LongType against hive partition-column
-    // inference (the IVF cells defense: an int-inferred partition column
-    // wraps the attribute in a cast and blocks partition pruning)
-    import org.apache.spark.sql.types._
-    val tfSchema = StructType(Seq(
-      StructField("th", StringType), StructField("term", StringType),
-      StructField("tf", LongType), StructField("tslot", LongType)))
-    val chain = chainDirs(s, vd, "LXT")
-    val tf = chain.map(c => s.read.schema(tfSchema).parquet(s"$c/lex_tf"))
-      .reduce(_ unionByName _)
-    val dl = chain.map(c => s.read.parquet(s"$c/lex_dl"))
-      .reduce(_ unionByName _)
-    val (_, _, params) = readMeta(s, vd, "LXT").get
-    val tot = params.toLong
+    ensure(s, LXT, v)(
+      append = b => Some { () =>
+        val known = chainRead(s, b.dir, "LXT", "lex_dl").select("th")
+        val fresh = distinctTexts(s.read.parquet(b.delta: _*).select("text"))
+          .join(known, Seq("th"), "left_anti")
+        Meta(v.cnt, (b.meta.total + build(fresh)).toString)
+      },
+      fit = () => Meta(v.cnt,
+        build(distinctTexts(s.read.parquet(v.table).select("text"))).toString))
+    bound(s, LXT, v)(compactLex(s, d))
+    val tf = chainRead(s, v.vd, "LXT", "lex_tf", lexTfDdl)
+    val dl = chainRead(s, v.vd, "LXT", "lex_dl")
     // truncation guard: the postings' exact token mass must equal the
     // meta total (a /tmp cleaner eating a slot partition is otherwise a
     // silent ranking corruption, not an error)
-    validate(vd, "LXT", tot,
+    validate(v.vd, "LXT", metaOf(s, v, LXT).total,
       tf.agg(coalesce(sum("tf"), lit(0L))).head().getLong(0))
-    (tf, dl, cnt)
+    (tf, dl, v.cnt)
+  }
+
+  /** Collapse the LXT append chain into one self-contained version — the
+    * MERGE step of the Lucene-segment analogy, without which every append
+    * adds a segment and the postings read unions N segment scans (the
+    * classic small-file decay). Counts are exactly mergeable, so this is
+    * a pure parquet job with NO tokenize pass: union every segment's
+    * tf/dl and re-aggregate (segments hold DISJOINT th sets, so the
+    * groupBy is defense in depth against a hand-edited segment), swapped
+    * in by [[compact]]. Bit-identical to a fresh build (spec-proven); the
+    * conserved token total is re-proven on the next serve. The documents-
+    * keyed THM chain spans the SAME version dirs, so it collapses in the
+    * same tick (else its chain would keep the LXT bases alive). Returns
+    * false (no-op) on an unchained index.
+    */
+  private[graft] def compactLex(s: SparkSession, d: String): Boolean = {
+    val v = resolve(s, d, LXT)
+    if (!exists(s, v.ok(LXT))) lex(s, d) // ensure the tip exists
+    compact(s, d, LXT, v,
+      "lex_tf" -> ((chain, _) => unionOf(s, chain, "lex_tf", lexTfDdl)
+        .groupBy("th", "term", "tslot").agg(sum("tf").cast("long").as("tf"))
+        .select("th", "term", "tf", "tslot")
+        .write.partitionBy("tslot").mode("overwrite")),
+      "lex_dl" -> ((chain, _) => unionOf(s, chain, "lex_dl")
+        .groupBy("th").agg(sum("dl").cast("long").as("dl"))
+        .write.mode("overwrite"))) && {
+      compactUnion(s, d, THM, resolve(s, d, THM), "thm_docs"); true
+    }
   }
 
   /** Shared builder for the ID-KEYED hash-mapping families (THM/EHM —
     * r13, verdict r12 #5): the corpus hash pass behind the session
-    * members memo, promoted to the persisted-artifact discipline every
-    * other pure-function-of-content derivation already follows. Before
-    * this, Members.th/eh lived only as session persists, so every NEW
-    * session re-paid the full corpus md5 pass once and a corpus-sized
-    * frame occupied executor storage for the session's life; now the
-    * mapping is a fingerprint-keyed parquet family and SessionMemo keeps
-    * only the (unpersisted) handle.
+    * members memo, as a persisted artifact. Before this, Members.th/eh
+    * lived only as session persists, so every NEW session re-paid the
+    * full corpus md5 pass; now the mapping is a fingerprint-keyed parquet
+    * family and SessionMemo keeps only the (unpersisted) handle.
     *
     * Unlike the th-keyed signature families, rows are keyed by the
     * APPEND-STABLE ids (doc_id / vec_id): a pure file append adds rows
     * and never rewrites one, so the delta encode is exactly the appended
     * files' rows — no anti-join against the chain, no drift policy.
     *
-    * Layout per family: THM (text corpora — the true 100 TB table)
-    * chains like LEX (a merged corpus-sized rewrite per micro-batch
-    * append is the cost the chain avoids; [[compactIdHash]] collapses
-    * segment decay on the compactLex maintenance cadence). EHM writes
-    * SELF-CONTAINED versions (the ep_reps posture — the embeddings
-    * mapping is in the same size class EP already rewrites per append,
-    * and a chain here would pin old version dirs through the vector
-    * families' drift-refit collapse). Loud row-total truncation
-    * validation against the meta either way.
+    * THM (text corpora — the true 100 TB table) chains like LXT and
+    * compacts at [[corpusMaxChain]] (the merged rewrite is corpus-sized,
+    * the per-append cost the chain avoids). EHM writes SELF-CONTAINED
+    * versions (the ep_reps posture — the embeddings mapping is in the
+    * size class EP already rewrites per append, and a chain here would
+    * pin old version dirs through the vector families' drift-refit
+    * collapse). Loud row-total truncation validation either way.
     */
-  private def idHashFamily(s: SparkSession, d: String, fam: String,
-      tableName: String, art: String, chained: Boolean,
+  private def idHashFamily(s: SparkSession, d: String, fam: Family, art: String,
       encode: Seq[String] => DataFrame): DataFrame = {
-    val table = s"$d/$tableName"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_$fam")) {
-      val cur = physFiles(s, table)
-      appendBase(s, vd, fam, cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          (if (fam == "THM") thmAppends else ehmAppends).incrementAndGet()
-          if (chained) {
-            // the delta segment is sized by the DELTA's own rows (one
-            // output row per appended id), never the full-table cnt —
-            // cnt-sizing wrote ~cnt/1M near-empty files for a small
-            // append onto a large base, reintroducing the per-serve
-            // tiny-file scan tax on every chained read (ADVICE r13).
-            // The count is a metadata-cheap scan of the delta files
-            // only, once per append.
-            val dRows = s.read.parquet(delta: _*).count()
-            boundFiles(encode(delta), math.max(1L, dRows))
-              .write.mode("overwrite").parquet(s"$vd/$art")
-            val nNew = s.read.parquet(s"$vd/$art").count()
-            writeFileList(s, vd, cur)
-            writeMeta(s, vd, fam,
-              Some(new org.apache.hadoop.fs.Path(base).getName), cnt,
-              (params.toLong + nNew).toString)
-          } else {
-            // self-contained: base rows carry verbatim (ids are
-            // append-stable), only the delta's rows are ENCODED
-            boundFiles(
-                s.read.parquet(s"$base/$art").unionByName(encode(delta)), cnt)
-              .write.mode("overwrite").parquet(s"$vd/$art")
-            val n = s.read.parquet(s"$vd/$art").count()
-            writeFileList(s, vd, cur)
-            writeMeta(s, vd, fam, None, cnt, n.toString)
-          }
-          touch(s, s"$vd/_GRAFT_OK_$fam")
-          pruneSiblings(s, vd)
-        case _ =>
-          (if (fam == "THM") thmEncodes else ehmEncodes).incrementAndGet()
-          boundFiles(encode(Seq(table)), cnt)
-            .write.mode("overwrite").parquet(s"$vd/$art")
-          val n = s.read.parquet(s"$vd/$art").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, fam, None, cnt, n.toString)
-          touch(s, s"$vd/_GRAFT_OK_$fam")
-          pruneSiblings(s, vd)
-      }
-    }
-    // r15: automatic compaction cadence for the chained id-hash family
-    // (THM — verdict r14 #8 extended): the merged rewrite is CORPUS-sized
-    // (one row per id), exactly the per-append cost the chain exists to
-    // avoid, so it amortizes over corpusMaxChain appends rather than
-    // firing every other one like the distinct-content-sized signature
-    // chains do at sigMaxChain.
-    if (chained && chainDirs(s, vd, fam).size > corpusMaxChain)
-      compactIdHash(s, d, fam, tableName, art)
-    val rows = chainDirs(s, vd, fam).map(c => s.read.parquet(s"$c/$art"))
-      .reduce(_ unionByName _)
-    val (_, _, params) = readMeta(s, vd, fam).get
-    validate(vd, fam, params.toLong, rows.count())
-    rows
+    val v = resolve(s, d, fam)
+    def put(df: DataFrame, rows: Long): Long = saveCount(s, boundFiles(df, rows), v(art))
+    ensure(s, fam, v)(
+      append = b => Some { () =>
+        if (fam.chained) {
+          // the delta segment is sized by the DELTA's own rows (one
+          // output row per appended id), never the full-table cnt —
+          // cnt-sizing wrote ~cnt/1M near-empty files for a small append
+          // onto a large base (ADVICE r13); a metadata-cheap count of the
+          // delta files only, once per append
+          val dRows = s.read.parquet(b.delta: _*).count()
+          Meta(v.cnt, (b.meta.total + put(encode(b.delta), math.max(1L, dRows))).toString)
+        } else // base rows carry verbatim (ids are append-stable)
+          Meta(v.cnt, put(s.read.parquet(s"${b.dir}/$art")
+            .unionByName(encode(b.delta)), v.cnt).toString)
+      },
+      fit = () => Meta(v.cnt, put(encode(Seq(v.table)), v.cnt).toString))
+    bound(s, fam, v)(compactUnion(s, d, fam, v, art))
+    serve(s, fam, v, art)
   }
-
-  /** Serve-side segment bound for the CORPUS-classed chains (THM id-hash
-    * rows, LXT postings): compaction rewrites corpus-scale artifacts, so
-    * the cadence is one merge per this many appends — segment decay stays
-    * bounded without re-paying the per-append rewrite the chain avoids.
-    */
-  private[graft] val corpusMaxChain = 8
 
   /** Persisted (doc_id, th, nth, lang, source) member mapping — family
     * THM, the one narrow corpus text scan the whole text-serving surface
@@ -1057,8 +1078,7 @@ object AnnIndex {
     * gate-pinned contract), nth = md5(normalized text).
     */
   private[graft] def docHashes(s: SparkSession, d: String): DataFrame =
-    idHashFamily(s, d, "THM", "documents.parquet", "thm_docs",
-      chained = true, { paths =>
+    idHashFamily(s, d, THM, "thm_docs", { paths =>
       val df = s.read.parquet(paths: _*)
       val opt = Seq("lang", "source").map(c =>
         if (df.columns.contains(c)) col(c)
@@ -1081,8 +1101,7 @@ object AnnIndex {
     * a 128-bit collision of distinct vectors still cannot merge them.
     */
   private[graft] def vecHashes(s: SparkSession, d: String): DataFrame =
-    idHashFamily(s, d, "EHM", "embeddings.parquet", "ehm_vecs",
-      chained = false, { paths =>
+    idHashFamily(s, d, EHM, "ehm_vecs", { paths =>
       s.read.parquet(paths: _*)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"),
@@ -1090,273 +1109,114 @@ object AnnIndex {
     })
 
   /** Persisted text-signature tables — the fit/serve split extended to
-    * the TEXT near-dup family (q_dedup_minhash / q_dedup_simhash), whose
-    * signature stage (shingle explode → 16 seeded minhash aggregations,
-    * or token explode → 64 bit-sums) is THE corpus-pass cost of those
-    * operators, re-run every session before this table existed.
+    * the TEXT near-dup family (q_dedup_minhash / q_dedup_simhash and the
+    * other th-keyed encodes), whose signature stage (shingle explode → 16
+    * seeded minhash aggregations, or token explode → 64 bit-sums) is THE
+    * corpus-pass cost of those operators.
     *
-    * The key design choice: signatures are keyed by the DISTINCT TEXT's
-    * 128-bit hash `th` (collapseExact's group key), NOT by doc id. A
-    * signature is a pure function of the text, so a th-keyed artifact is
-    * append-stable under both new documents and new duplicates of known
-    * texts (the latter add NO rows — the artifact grows with distinct
-    * content, not corpus size, exactly the boilerplate-heavy web-corpus
-    * asymmetry collapseExact exploits). Serve-side each run re-derives
-    * the cheap doc↔th mapping (the exact-dedup pass it needs anyway) and
+    * Signatures are keyed by the DISTINCT TEXT's 128-bit hash `th`
+    * (collapseExact's group key), NOT by doc id: a signature is a pure
+    * function of the text, so a th-keyed artifact is append-stable under
+    * both new documents and new duplicates of known texts (the latter add
+    * NO rows — the artifact grows with distinct content, not corpus
+    * size). Serve-side each run re-derives the cheap doc↔th mapping and
     * joins the persisted signatures back by th.
     *
-    * Same version/marker/validation discipline as LEX; appends are
-    * exactly mergeable IN KIND (the delta encodes only genuinely-new
-    * distinct texts — anti-joined against the chain's th set — so the
-    * chained table is row-identical to a fresh build), no drift policy,
-    * truncation fails loud against the meta's row total.
+    * Appends are exactly mergeable IN KIND (the delta encodes only
+    * genuinely-new distinct texts — anti-joined against the chain's th
+    * set — so the chained table is row-identical to a fresh build), no
+    * drift policy. r15 (verdict r14 #8): a serve reading more than
+    * [[sigMaxChain]] segments compacts first — the pair-graph builders
+    * (NP2/MP2/SP2) read these chains on EVERY rebuild/append, and a long
+    * run of small appends otherwise costs N listings + N small-file scans
+    * per serve.
     */
-  private[graft] def textSigs(s: SparkSession, d: String, fam: String,
+  private[graft] def textSigs(s: SparkSession, d: String, marker: String,
       encode: DataFrame => DataFrame): DataFrame = {
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val art = s"${fam.toLowerCase}_sigs"
-    def distinctTexts(df: DataFrame): DataFrame =
-      df.select(md5(col("text")).as("th"), col("text"))
-        .groupBy("th").agg(min("text").as("text"))
-    if (!exists(s, s"$vd/_GRAFT_OK_$fam")) {
-      val cur = physFiles(s, table)
-      appendBase(s, vd, fam, cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          sigAppends.incrementAndGet()
-          // the chain's known distinct texts add no rows — only
-          // genuinely-new content is encoded (short texts that encode to
-          // no signature are harmlessly re-attempted: still no row)
-          val known = chainDirs(s, base, fam)
-            .map(c => s.read.parquet(s"$c/$art").select("th"))
-            .reduce(_ unionByName _)
-            .distinct() // NG stores multiple rows per th
-          val fresh = distinctTexts(s.read.parquet(delta: _*).select("text"))
-            .join(known, Seq("th"), "left_anti")
-          encode(fresh).write.mode("overwrite").parquet(s"$vd/$art")
-          val nNew = s.read.parquet(s"$vd/$art").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, fam,
-            Some(new org.apache.hadoop.fs.Path(base).getName), cnt,
-            (params.toLong + nNew).toString)
-          touch(s, s"$vd/_GRAFT_OK_$fam")
-          pruneSiblings(s, vd)
-        case _ =>
-          sigEncodes.incrementAndGet()
-          encode(distinctTexts(s.read.parquet(table).select("text")))
-            .write.mode("overwrite").parquet(s"$vd/$art")
-          val n = s.read.parquet(s"$vd/$art").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, fam, None, cnt, n.toString)
-          touch(s, s"$vd/_GRAFT_OK_$fam")
-          pruneSiblings(s, vd)
-      }
-    }
-    // r15 (verdict r14 #8): threshold-triggered chain compaction. A long
-    // run of small appends accumulated one segment per append until the
-    // next full rebuild — N partition listings + N small-file scans per
-    // serve (the decay compactLex bounds for LXT), and the pair-graph
-    // builders (NP2/MP2/SP2) read these chains on EVERY rebuild/append.
-    // Signature tables are DISTINCT-CONTENT-sized, so the merge rewrite
-    // is cheap; the threshold keeps every serve at ≤ sigMaxChain
-    // segments (a 10-append chain compacts on its first over-threshold
-    // serve — which is the append itself, since appends serve).
-    if (chainDirs(s, vd, fam).size > sigMaxChain) compactSigs(s, d, fam)
-    val sigs = chainDirs(s, vd, fam)
-      .map(c => s.read.parquet(s"$c/$art")).reduce(_ unionByName _)
-    val (_, _, params) = readMeta(s, vd, fam).get
-    validate(vd, fam, params.toLong, sigs.count())
-    sigs
-  }
-
-  /** Serve-side segment bound for the th-keyed signature chains: a serve
-    * reading more than this many segments compacts first, so the chain
-    * never decays past (threshold) segments no matter how many appends
-    * arrive between full rebuilds. 2 = the compacted tip plus at most
-    * one fresh delta segment.
-    */
-  private[graft] val sigMaxChain = 2
-
-  /** Spec hook: the current segment-chain length of a th-keyed signature
-    * family (1 = self-contained).
-    */
-  private[graft] def sigChainLen(s: SparkSession, d: String, fam: String): Int = {
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    chainDirs(s, versionDirFor(s, table, math.max(cnt, 1L), fp), fam).size
-  }
-
-  /** Collapse a th-keyed signature family's append chain (NG/MH/SH/WC —
-    * see [[textSigs]]) into one self-contained version: segments hold
-    * DISJOINT distinct-text sets (appends anti-join the chain's th
-    * registry), so the merge is a plain union rewrite — no re-encode, no
-    * corpus pass, output sized by the meta's exact row total. Write-aside
-    * + rename (the merge plan reads the very paths it replaces), meta
-    * cleared to self-contained, row total conserved and re-proven on the
-    * next serve (the compactLex posture), superseded versions swept.
-    * Returns false (no-op) on an unchained artifact. Triggered
-    * automatically by [[textSigs]] past [[sigMaxChain]] (verdict r14 #8);
-    * also callable as a maintenance hook like [[compactLex]].
-    */
-  private[graft] def compactSigs(s: SparkSession, d: String, fam: String): Boolean = {
-    val table = s"$d/documents.parquet"
-    if (!exists(s, table)) return false
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_$fam")) return false
-    val art = s"${fam.toLowerCase}_sigs"
-    val chain = chainDirs(s, vd, fam)
-    if (chain.size <= 1) return false
-    val (_, nFit, params) = readMeta(s, vd, fam).get
-    boundFiles(
-        chain.map(c => s.read.parquet(s"$c/$art")).reduce(_ unionByName _),
-        math.max(1L, params.toLong))
-      .write.mode("overwrite").parquet(s"$vd/${art}_c")
-    val f = fs(s, vd)
-    // crash-safe swap (ADVICE r15): the completion marker comes OFF
-    // before the delete+rename window and back on only after the meta is
-    // self-contained — a crash mid-swap leaves an unmarked version, which
-    // the next serve REBUILDS, instead of a marked version with a missing
-    // artifact dir that fails every serve until manually deleted
-    f.delete(new org.apache.hadoop.fs.Path(s"$vd/_GRAFT_OK_$fam"), false)
-    f.delete(new org.apache.hadoop.fs.Path(s"$vd/$art"), true)
-    if (!f.rename(new org.apache.hadoop.fs.Path(s"$vd/${art}_c"),
-        new org.apache.hadoop.fs.Path(s"$vd/$art")))
-      throw new IllegalStateException(s"compactSigs: rename of $art failed")
-    writeMeta(s, vd, fam, None, nFit, params) // self-contained: no base
-    touch(s, s"$vd/_GRAFT_OK_$fam")
-    sweepAt(s, table, vd) // maintenance cadence — see compactLex
-    validatedVersions.remove(s"$vd#$fam")
-    // a session memo may hold a chain READER over the just-pruned
-    // segment files (same table fingerprint, different artifact layout —
-    // the one staleness the fingerprint check cannot see)
-    SessionMemo.evictDataset(d)
-    true
+    val fam = sigFamily(marker)
+    val v = resolve(s, d, fam)
+    val art = s"${marker.toLowerCase}_sigs"
+    ensure(s, fam, v)(
+      append = b => Some { () =>
+        // the chain's known distinct texts add no rows — only
+        // genuinely-new content is encoded (short texts that encode to
+        // no signature are harmlessly re-attempted: still no row)
+        val known = chainRead(s, b.dir, marker, art).select("th")
+          .distinct() // NG stores multiple rows per th
+        val fresh = distinctTexts(s.read.parquet(b.delta: _*).select("text"))
+          .join(known, Seq("th"), "left_anti")
+        Meta(v.cnt, (b.meta.total + saveCount(s, encode(fresh), v(art))).toString)
+      },
+      fit = () => Meta(v.cnt, saveCount(s,
+        encode(distinctTexts(s.read.parquet(v.table).select("text"))), v(art)).toString))
+    bound(s, fam, v)(compactUnion(s, d, fam, v, art))
+    serve(s, fam, v, art)
   }
 
   /** Persisted BPE vocabulary (`bpe_wf`: word → exact corpus frequency) —
     * the fit/serve split extended to tokenizer training, whose corpus
     * pass is the word-count groupBy (the merge rounds themselves are
     * vocabulary-sized, see operators.Bpe). Word counts are EXACTLY
-    * mergeable (the LEX df argument), so a pure file append tokenizes
-    * ONLY the delta and sums it into the base vocabulary.
-    *
-    * Deliberately NO chain: unlike LEX postings (corpus-sized, where a
-    * merged rewrite per append is the cost the chain avoids), the
-    * vocabulary is Heaps-bounded — a full merged rewrite per append is
-    * CHEAP, keeps the serve single-segment, and makes every version
-    * self-contained (base pointer always "-"; the stale base version is
-    * still pruned lazily via the keep-list like any collapsed chain).
-    * Merges retrain from the merged counts per content version —
-    * vocabulary-sized work, deterministic, so the post-append merge
-    * table is bit-identical to one trained from scratch (spec-proven).
-    * Truncation fails loud against the meta's exact token total.
+    * mergeable, so a pure file append tokenizes ONLY the delta and sums it
+    * into the base vocabulary. Deliberately NO chain: the vocabulary is
+    * Heaps-bounded, so a full merged rewrite per append is CHEAP and
+    * keeps the serve single-segment. Merges retrain from the merged counts
+    * per content version — vocabulary-sized work, deterministic, so the
+    * post-append merge table is bit-identical to one trained from scratch
+    * (spec-proven). Truncation fails loud against the meta's token total.
     */
   private[graft] def bpeVocab(s: SparkSession, d: String): (DataFrame, Long) = {
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_BPE")) {
-      val cur = physFiles(s, table)
-      appendBase(s, vd, "BPE", cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          vocabAppends.incrementAndGet()
-          val dwf = Bpe.wordFreqOf(s.read.parquet(delta: _*).select("text"))
-          val deltaToks = dwf.agg(coalesce(sum("freq"), lit(0L))).head().getLong(0)
-          s.read.parquet(s"$base/bpe_wf").unionByName(dwf)
-            .groupBy("w").agg(sum("freq").cast("long").as("freq"))
-            .write.mode("overwrite").parquet(s"$vd/bpe_wf")
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "BPE", None, cnt,
-            (params.toLong + deltaToks).toString)
-          touch(s, s"$vd/_GRAFT_OK_BPE")
-          pruneSiblings(s, vd)
-        case _ =>
-          vocabEncodes.incrementAndGet()
-          val wf = Bpe.wordFreqOf(s.read.parquet(table).select("text"))
-          wf.write.mode("overwrite").parquet(s"$vd/bpe_wf")
-          val toks = s.read.parquet(s"$vd/bpe_wf")
-            .agg(coalesce(sum("freq"), lit(0L))).head().getLong(0)
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "BPE", None, cnt, toks.toString)
-          touch(s, s"$vd/_GRAFT_OK_BPE")
-          pruneSiblings(s, vd)
-      }
-    }
-    val wf = s.read.parquet(s"$vd/bpe_wf")
-    val (_, _, params) = readMeta(s, vd, "BPE").get
-    val tot = params.toLong
-    validate(vd, "BPE", tot,
-      wf.agg(coalesce(sum("freq"), lit(0L))).head().getLong(0))
+    val v = resolve(s, d, BPE)
+    def tokens(df: DataFrame): Long = df.agg(coalesce(sum("freq"), lit(0L))).head().getLong(0)
+    ensure(s, BPE, v)(
+      append = b => Some { () =>
+        val dwf = Bpe.wordFreqOf(s.read.parquet(b.delta: _*).select("text"))
+        val deltaToks = tokens(dwf)
+        s.read.parquet(s"${b.dir}/bpe_wf").unionByName(dwf)
+          .groupBy("w").agg(sum("freq").cast("long").as("freq"))
+          .write.mode("overwrite").parquet(v("bpe_wf"))
+        Meta(v.cnt, (b.meta.total + deltaToks).toString)
+      },
+      fit = () => {
+        Bpe.wordFreqOf(s.read.parquet(v.table).select("text"))
+          .write.mode("overwrite").parquet(v("bpe_wf"))
+        Meta(v.cnt, tokens(s.read.parquet(v("bpe_wf"))).toString)
+      })
+    val wf = s.read.parquet(v("bpe_wf"))
+    val tot = metaOf(s, v, BPE).total
+    validate(v.vd, "BPE", tot, tokens(wf))
     (wf, tot)
   }
 
   /** Persisted near-dup cluster labels (`cc_labels`: normalized-text hash
-    * → component key) — the fit/serve split extended to the LAST
-    * recompute-heavy family: connected components. Before this, every
-    * q_dedup_clusters / q_split_assign run re-derived the pair graph and
-    * re-ran O(log diameter) label-propagation rounds over the whole
-    * distinct-text node set; at 100 TB with daily ingest that is a full
-    * component recomputation per batch for a structure that mostly does
-    * not change.
+    * → component key) — the fit/serve split extended to connected
+    * components: before this, every q_dedup_clusters / q_split_assign run
+    * re-derived the pair graph and re-ran O(log diameter) propagation
+    * rounds over the whole distinct-text node set.
     *
     * The component key is the component's MIN NORMALIZED-TEXT HASH — a
     * pure function of the component's CONTENT (doc ids stay out of the
-    * artifact: an append can lower a component's min doc id, which would
-    * invalidate id-based labels even when the structure is unchanged).
-    * Doc-level cluster ids derive at serve: min doc id per component,
-    * component-count-sized aggregation over the distinct-text frame.
+    * artifact: an append can lower a component's min doc id). Doc-level
+    * cluster ids derive at serve.
     *
-    * Append discipline (the caller's `tryDelta` implements the graph
-    * math; this function owns versioning): a pure file append can only
-    * ADD edges incident to genuinely-new texts — old↔old pairs depend
-    * only on old texts' shingles and the df cap, so they are immutable
-    * UNLESS an append pushes a shingle's document frequency across the
-    * cap (which rewrites old nsh counts and can delete old edges):
-    * `tryDelta` detects any old-df≤cap→new-df>cap crossing and returns
-    * None, forcing a full refit — monotone growth appends, monotone-
-    * violating growth refits (the drift-refit posture). The merged
-    * labels table is distinct-text-sized, so each append writes a
-    * SELF-CONTAINED version (the vocab argument — no chain). Validation:
-    * the label row count must equal the version key's recorded count.
+    * Append (the caller's `tryDelta` implements the graph math): a pure
+    * file append can only ADD edges incident to genuinely-new texts,
+    * UNLESS it pushes a shingle's document frequency across the cap (which
+    * rewrites old nsh counts and can delete old edges) — `tryDelta`
+    * detects any such crossing and returns None, forcing a full refit.
+    * The labels table is distinct-text-sized, so each version is
+    * self-contained. Validation: label rows vs the meta's count.
     */
   private[graft] def ccIndex(s: SparkSession, d: String,
       full: () => DataFrame,
       tryDelta: (Seq[String], DataFrame) => Option[DataFrame]): DataFrame = {
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_CC")) {
-      val cur = physFiles(s, table)
-      def writeLabels(labels: DataFrame): Unit = {
-        labels.write.mode("overwrite").parquet(s"$vd/cc_labels")
-        val n = s.read.parquet(s"$vd/cc_labels").count()
-        writeFileList(s, vd, cur)
-        writeMeta(s, vd, "CC", None, cnt, n.toString)
-        touch(s, s"$vd/_GRAFT_OK_CC")
-        pruneSiblings(s, vd)
-      }
-      val viaAppend = appendBase(s, vd, "CC", cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          tryDelta(delta, s.read.parquet(s"$base/cc_labels")) match {
-            case Some(labels) =>
-              ccAppends.incrementAndGet(); writeLabels(labels); true
-            case None => false
-          }
-        case _ => false
-      }
-      if (!viaAppend) { ccEncodes.incrementAndGet(); writeLabels(full()) }
-    }
-    val labels = s.read.parquet(s"$vd/cc_labels")
-    val (_, _, params) = readMeta(s, vd, "CC").get
-    validate(vd, "CC", params.toLong, labels.count())
-    labels
+    val v = resolve(s, d, CC)
+    def put(labels: DataFrame): Meta = Meta(v.cnt, saveCount(s, labels, v("cc_labels")).toString)
+    ensure(s, CC, v)(
+      append = b => tryDelta(b.delta, s.read.parquet(s"${b.dir}/cc_labels"))
+        .map(labels => () => put(labels)),
+      fit = () => put(full()))
+    serve(s, CC, v, "cc_labels")
   }
 
   /** 128-bit content key for a distinct VECTOR — the embedding twin of
@@ -1455,245 +1315,208 @@ object AnnIndex {
     }
   }
 
-  /** Persisted embedding near-dup PAIR graph (family EP) — the fit/serve
-    * split extended to the LAST per-session corpus-pass family: before
-    * this, every q_dedup_embed / q_dedup_semantic run re-ran the whole
-    * candidate machinery (hyperplane encode of every distinct vector,
-    * split-ball bucket self-join, distinct, exact rescore) — at sf0.1 the
-    * two most expensive queries in the bench, and at 100 TB a full corpus
-    * pass per session for a structure that only changes on ingest.
-    *
-    * Artifacts (all DISTINCT-CONTENT-sized — the textSigs growth
-    * argument: duplicates of a known vector add zero rows):
-    *  - `ep_reps`  (eh, v, nrm): the distinct-vector table, keyed by the
-    *    128-bit [[ehCol]] content key (doc/vec ids stay OUT of the
-    *    artifact — an append can lower a group's min vec_id with no
-    *    structural change; serve re-derives the cheap id↔eh mapping);
-    *  - `ep_sigs`  (eh, band_idx, code): the capped banded hyperplane
-    *    signatures under the FIT-TIME geometry;
-    *  - `ep_pairs` (eh_a < eh_b, cosine): the exact-rescored qualifying
-    *    pairs — the operator's whole output structure, id-free.
-    *
-    * Geometry (bits/bands/radius, solved by [[Similarity.lshParams]] at
-    * the dedup design point from the DISTINCT count) is FROZEN in the
-    * meta: an append encodes its delta under the stored solve (signatures
-    * under different bit counts don't share a bucket space). No chain —
-    * every append writes self-contained merged artifacts (the vocab/CC
-    * argument: distinct-content-sized tables are cheap to rewrite).
-    *
-    * Append = new distinct vectors only (anti-joined against `ep_reps`):
-    * frozen-geometry encode of the delta, re-cap over base ∪ delta, then
-    * candidates TOUCHING a new vector via one-sided full-radius probe of
-    * the new side against the union's exact codes — the same hamming ball
-    * as the fresh build's split-ball join restricted to pairs with ≥1 new
-    * endpoint — and exact rescore. Old↔old pairs carry over verbatim:
-    * they depend only on old signatures and the bucket caps, so the
-    * append differs from a fresh build ONLY where a delta row re-fills a
-    * bucket the base had capped out (the LSH-family re-cap posture) — and
-    * since every emitted pair is exact-cosine-verified, the artifact can
-    * never hold a FALSE pair; divergence is bounded to candidate recall,
-    * the family's declared approximation axis. Drift past
-    * [[refitFraction]] (frozen geometry mis-sized for the grown corpus)
-    * refits. Validation: `ep_reps` row count vs the meta's recorded
-    * distinct count, failing loud on truncation.
-    *
-    * Returns the (eh_a, eh_b, cosine) pair reader plus the exact
-    * persisted pair row count (the expansion-side broadcast-guard
-    * bound); the serve side joins members through its own per-run
-    * id↔eh mapping.
+  private val repDdl = "eh string, v array<double>, nrm double"
+  private val epPairDdl = "eh_a string, eh_b string, cosine double"
+  private val labDdl = "eh string, ck string"
+
+  /** Exact rescore of candidate pairs (eh_a, eh_b) against `reps`,
+    * keeping cosine ≥ τ: every emitted pair is verified, so a pair graph
+    * can never hold a FALSE pair — the divergence axis is candidate recall.
     */
+  private def rescore(cand: DataFrame, reps: DataFrame): DataFrame =
+    cand
+      .join(reps.select(col("eh").as("eh_a"), col("v").as("va"),
+        col("nrm").as("na")), "eh_a")
+      .join(reps.select(col("eh").as("eh_b"), col("v").as("vb"),
+        col("nrm").as("nb")), "eh_b")
+      .select(col("eh_a"), col("eh_b"),
+        (Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+      .where(col("cosine") >= Similarity.dedupTau)
+
+  /** Fresh-build candidates: the split-ball self-join (see
+    * Similarity.splitProbeMasks) — each side probes the full radius
+    * restricted to its own half of the bit positions; the popcount-sum
+    * predicate restores exactly the hamming-≤radius candidate set.
+    * Merge-hinted: Catalyst's size estimate CANNOT see the explode
+    * multiplier (Generate keeps the child scan's sizeInBytes), so a 26 MB
+    * ep_sigs scan estimate hid 10.5M×29 = 303M runtime rows behind a
+    * below-threshold BroadcastExchange — a 2.3 GB driver collect that
+    * killed the EP fit at 200k distinct vectors (r15). Both sides are
+    * corpus-sized signature expansions — a shuffled sort-merge at every
+    * scale by construction.
+    */
+  private def splitBall(capped: DataFrame, bits: Int, radius: Int): DataFrame = {
+    def expand(df: DataFrame, masks: Array[Long]): DataFrame =
+      df.withColumn("mask", explode(lit(masks)))
+        .select(col("eh"), col("band_idx"),
+          col("code").bitwiseXOR(col("mask")).as("code"),
+          expr("bit_count(mask)").as("mbits"))
+    val (lowMasks, highMasks) = Similarity.splitProbeMasks(bits, radius)
+    expand(capped, lowMasks).as("a").hint("merge")
+      .join(expand(capped, highMasks).as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.code") === col("b.code") &&
+          col("a.mbits") + col("b.mbits") <= radius &&
+          col("a.eh") < col("b.eh"))
+      .select(col("a.eh").as("eh_a"), col("b.eh").as("eh_b"))
+      .distinct()
+  }
+
+  /** Append candidates touching a NEW vector: the fresh side probes its
+    * full hamming-≤radius ball against the union's EXACT codes — for pairs
+    * with ≥1 new endpoint the same candidate set as the fresh build's
+    * split-ball join, with the ball multiplier riding only the
+    * batch-sized side. Merge-hinted like [[splitBall]]: the probed side
+    * is runtime rows behind a Generate the estimator can't see, and a
+    * drift-bound append (≤30% of the corpus) is still corpus-class.
+    */
+  private def probeFresh(capped: DataFrame, fresh: DataFrame, bits: Int,
+      radius: Int): DataFrame = {
+    val probed = capped.join(fresh.select("eh"), Seq("eh"), "left_semi")
+      .withColumn("mask", explode(lit(Similarity.probeMasks(bits, radius))))
+      .select(col("eh").as("eh_n"), col("band_idx"),
+        col("code").bitwiseXOR(col("mask")).as("code"))
+    capped.hint("merge").join(probed, Seq("band_idx", "code"))
+      .where(col("eh") =!= col("eh_n"))
+      .select(least(col("eh"), col("eh_n")).as("eh_a"),
+        greatest(col("eh"), col("eh_n")).as("eh_b"))
+      .distinct()
+  }
+
+  /** Component content keys (eh → ck = the component's min eh) over a
+    * pair graph with endpoint columns `ea`/`eb`, by pointer-jumping
+    * propagation ([[Dedup.connectedComponents]]). The propagation's
+    * convergence check needs numeric labels, so min vec ids serve as
+    * transient surrogates — never stored: labels stay ID-FREE. The key is
+    * one map-side-combined groupBy + equi-join back, never a
+    * per-component collect.
+    */
+  private def componentKeys(s: SparkSession, table: String, nodes: DataFrame,
+      pairs: DataFrame, ea: String, eb: String): DataFrame = {
+    val m = s.read.parquet(table)
+      .select(col("vec_id"), ehCol(Vectors.toDouble(col("embedding"))).as("eh"))
+      .groupBy("eh").agg(min("vec_id").as("nid"))
+    val ns = nodes.join(m, "eh")
+    val edges = pairs
+      .join(m.select(col("eh").as(ea), col("nid").as("a")), ea)
+      .join(m.select(col("eh").as(eb), col("nid").as("b")), eb)
+      .select("a", "b")
+    val labeled = ns.join(Dedup.connectedComponents(
+      ns.select(col("nid").as("id")), edges), col("nid") === col("id"))
+    labeled
+      .join(labeled.groupBy("label").agg(min("eh").as("ck")), "label")
+      .select(col("eh"), col("ck"))
+  }
+
   /** Session-scoped refusal memo (r16): a refused EP fit re-ran the whole
     * signature encode (a corpus pass) on every retry just to re-reach the
-    * same guard throw — three registered queries × two bench passes paid
-    * it on the renumbered 100× corpus. Keyed by (version dir, budget) so
-    * a deliberately raised budget re-attempts the fit.
+    * same guard throw. Keyed by (version dir, budget) so a deliberately
+    * raised budget re-attempts the fit.
     */
   private val epRefused =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** Persisted embedding near-dup PAIR graph (family EP): before this,
+    * every q_dedup_embed / q_dedup_semantic run re-ran the whole candidate
+    * machinery (hyperplane encode of every distinct vector, split-ball
+    * bucket self-join, exact rescore) — a full corpus pass per session for
+    * a structure that only changes on ingest.
+    *
+    * Artifacts (DISTINCT-CONTENT-sized and ID-FREE — an append can lower
+    * a group's min vec_id with no structural change; serve re-derives the
+    * cheap id↔eh mapping): `ep_reps` (eh, v, nrm), `ep_sigs` (eh,
+    * band_idx, code — capped banded signatures under the FIT-TIME
+    * geometry), `ep_pairs` (eh_a < eh_b, cosine). Geometry (solved by
+    * [[Similarity.lshParams]] at the dedup design point from the DISTINCT
+    * count) is FROZEN in the meta; every version is self-contained.
+    *
+    * Append = new distinct vectors only (anti-joined against `ep_reps`):
+    * frozen-geometry encode, re-cap over base ∪ delta, [[probeFresh]]
+    * candidates, exact rescore. Old↔old pairs carry over verbatim, so the
+    * append differs from a fresh build ONLY where a delta row re-fills a
+    * bucket the base had capped out — candidate recall, never a false
+    * pair. Drift past [[refitFraction]] refits. The append also persists
+    * its NEW pairs (`ep_delta`, cumulative since the last EC-labeled
+    * version) and the EC lineage pointer (`_GRAFT_EC_BASE`) so
+    * [[ecLabels]] can union-find only the delta. Meta params:
+    * bits,bands,radius,nReps,nPairs; `ep_reps` is validated loud.
+    *
+    * Returns the (eh_a, eh_b, cosine) pair reader plus the exact
+    * persisted pair row count (the expansion-side broadcast-guard bound).
+    */
   private[graft] def embedPairs(s: SparkSession, d: String): (DataFrame, Long) = {
-    import org.apache.spark.sql.types._
-    val table = s"$d/embeddings.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val refuseKey = s"$vd#${s.conf.get("graft.expand.maxRows", "100000000")}"
+    val v = resolve(s, d, EP)
+    val refuseKey = s"${v.vd}#${s.conf.get("graft.expand.maxRows", "100000000")}"
     Option(epRefused.get(refuseKey))
       .foreach(msg => throw new graft.QuadraticRefusal(msg))
-    val repSchema = StructType(Seq(StructField("eh", StringType),
-      StructField("v", ArrayType(DoubleType)), StructField("nrm", DoubleType)))
-    val sigSchema = StructType(Seq(StructField("eh", StringType),
-      StructField("band_idx", IntegerType), StructField("code", LongType)))
-    val pairSchema = StructType(Seq(StructField("eh_a", StringType),
-      StructField("eh_b", StringType), StructField("cosine", DoubleType)))
     def distinctReps(df: DataFrame): DataFrame =
       df.withColumn("eh", ehCol(col("v")))
         .groupBy("eh").agg(min("v").as("v"), min("nrm").as("nrm"))
-    def encodeSigs(reps: DataFrame, bands: Int, bits: Int): DataFrame =
-      reps.select(col("eh"),
-        posexplode(Vectors.hyperplaneBands(col("v"), 42L, bands, bits))
-          .as(Seq("band_idx", "code")))
-    def rescore(cand: DataFrame, reps: DataFrame): DataFrame =
-      cand
-        .join(reps.select(col("eh").as("eh_a"), col("v").as("va"),
-          col("nrm").as("na")), "eh_a")
-        .join(reps.select(col("eh").as("eh_b"), col("v").as("vb"),
-          col("nrm").as("nb")), "eh_b")
-        .select(col("eh_a"), col("eh_b"),
-          (Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
-        .where(col("cosine") >= Similarity.dedupTau)
-    if (!exists(s, s"$vd/_GRAFT_OK_EP")) try {
-      val cur = physFiles(s, table)
-      val viaAppend = appendBase(s, vd, "EP", cur) match {
-        case Some((base, delta, nFit, params))
-            if params.nonEmpty &&
-              (cnt - nFit).toDouble / math.max(cnt, 1L) <= refitFraction =>
-          epAppends.incrementAndGet()
-          val ps = params.split(",")
-          val (bits, bands, radius) = (ps(0).toInt, ps(1).toInt, ps(2).toInt)
-          val baseReps = s.read.schema(repSchema).parquet(s"$base/ep_reps")
-          val fresh = distinctReps(deltaVecs(s, delta))
-            .join(baseReps.select("eh"), Seq("eh"), "left_anti")
-          val unionSigs = s.read.schema(sigSchema).parquet(s"$base/ep_sigs")
-            .unionByName(encodeSigs(fresh, bands, bits))
-          Dedup.capBuckets(unionSigs, Seq("band_idx", "code"), 256)
-            .write.mode("overwrite").parquet(s"$vd/ep_sigs")
-          val capped = s.read.schema(sigSchema).parquet(s"$vd/ep_sigs")
-          // append-path estimate: only pairs with ≥1 NEW endpoint join
-          // (ADVICE r15 — the full-pair bound refused delta-sized appends)
-          epCandidateGuard(s, capped, Some(fresh),
-            ps(3).toLong, Similarity.dedupTau, bands)
-          // candidates touching a NEW vector: the new side probes its
-          // full hamming-≤radius ball against the union's EXACT codes —
-          // for pairs with ≥1 new endpoint this is the same candidate set
-          // as the fresh build's split-ball join, and the ball multiplier
-          // rides only the batch-sized side
-          val probed = capped.join(fresh.select("eh"), Seq("eh"), "left_semi")
-            .withColumn("mask", explode(lit(Similarity.probeMasks(bits, radius))))
-            .select(col("eh").as("eh_n"), col("band_idx"),
-              col("code").bitwiseXOR(col("mask")).as("code"))
-          // merge-hinted like the fresh build's split-ball join: the
-          // probed side is (batch distinct × bands × full-ball masks)
-          // runtime rows behind a Generate the estimator can't see — a
-          // drift-bound append (≤30% of the corpus) is still corpus-class
-          val cand = capped.hint("merge").join(probed, Seq("band_idx", "code"))
-            .where(col("eh") =!= col("eh_n"))
-            .select(least(col("eh"), col("eh_n")).as("eh_a"),
-              greatest(col("eh"), col("eh_n")).as("eh_b"))
-            .distinct()
-          val allReps = baseReps.unionByName(fresh)
-          // r13 (incremental EC): persist the append's NEW pairs and the
-          // EC lineage pointer so ecLabels can union-find only the delta.
-          // EP appends only ever ADD pairs (base pairs carry verbatim),
-          // so components only merge — the reduced-graph premise. The
-          // delta is CUMULATIVE across appends that happened since the
-          // last EC build (the base's un-labeled delta rides along and
-          // the pointer stays on the last EC-labeled version), so one hop
-          // always suffices and sibling pruning cannot break the chain.
-          val newPairs = rescore(cand, allReps)
-          val ecBase: Option[String] =
-            if (exists(s, s"$base/_GRAFT_OK_EC"))
-              Some(new org.apache.hadoop.fs.Path(base).getName)
-            else if (exists(s, s"$base/ep_delta"))
-              readText(s, s"$base/_GRAFT_EC_BASE")
-            else None
-          ecBase match {
-            case Some(bn) =>
-              val carried =
-                if (exists(s, s"$base/_GRAFT_OK_EC")) newPairs
-                else s.read.schema(pairSchema).parquet(s"$base/ep_delta")
-                  .unionByName(newPairs)
-              carried.write.mode("overwrite").parquet(s"$vd/ep_delta")
-              writeText(s, s"$vd/_GRAFT_EC_BASE", bn)
-            case None => ()
-          }
-          s.read.schema(pairSchema).parquet(s"$base/ep_pairs")
-            .unionByName(
-              if (ecBase.isDefined && exists(s, s"$base/_GRAFT_OK_EC"))
-                // read the delta back so ep_pairs and ep_delta hold the
-                // byte-identical rows (one rescore execution, not two)
-                s.read.schema(pairSchema).parquet(s"$vd/ep_delta")
-              else newPairs)
-            .write.mode("overwrite").parquet(s"$vd/ep_pairs")
-          allReps.write.mode("overwrite").parquet(s"$vd/ep_reps")
-          val nReps = s.read.schema(repSchema).parquet(s"$vd/ep_reps").count()
-          val nPairs = s.read.schema(pairSchema).parquet(s"$vd/ep_pairs").count()
-          writeFileList(s, vd, cur)
-          writeMeta(s, vd, "EP", None, nFit,
-            s"$bits,$bands,$radius,$nReps,$nPairs")
-          touch(s, s"$vd/_GRAFT_OK_EP")
-          pruneSiblings(s, vd)
-          true
-        case _ => false
-      }
-      if (!viaAppend) {
-        epEncodes.incrementAndGet()
-        distinctReps(deltaVecs(s, Seq(table)))
-          .write.mode("overwrite").parquet(s"$vd/ep_reps")
-        val reps = s.read.schema(repSchema).parquet(s"$vd/ep_reps")
-        val nDist = reps.count()
+    try ensure(s, EP, v)(
+      append = b => Some { () =>
+        val ps = b.meta.ps
+        val (bits, bands, radius) = (ps(0).toInt, ps(1).toInt, ps(2).toInt)
+        val baseReps = load(s, s"${b.dir}/ep_reps", repDdl)
+        val fresh = distinctReps(deltaVecs(s, b.delta))
+          .join(baseReps.select("eh"), Seq("eh"), "left_anti")
+        val capped = capSigs(s, load(s, s"${b.dir}/ep_sigs", sigDdl)
+          .unionByName(bandSigs(fresh, 42L, bands, bits)), v("ep_sigs"))
+        // append-path estimate: only pairs with ≥1 NEW endpoint join
+        // (ADVICE r15 — the full-pair bound refused delta-sized appends)
+        epCandidateGuard(s, capped, Some(fresh), ps(3).toLong, Similarity.dedupTau, bands)
+        val allReps = baseReps.unionByName(fresh)
+        val newPairs = rescore(probeFresh(capped, fresh, bits, radius), allReps)
+        // EP appends only ever ADD pairs, so components only merge — the
+        // EC reduced-graph premise. The delta is CUMULATIVE since the last
+        // EC build (the base's un-labeled delta rides along and the
+        // pointer stays on the last EC-labeled version), so one hop always
+        // suffices and sibling pruning cannot break the chain.
+        val labeled = exists(s, s"${b.dir}/_GRAFT_OK_EC")
+        val ecBase =
+          if (labeled) Some(b.name)
+          else if (exists(s, s"${b.dir}/ep_delta")) readText(s, s"${b.dir}/_GRAFT_EC_BASE")
+          else None
+        ecBase.foreach { bn =>
+          (if (labeled) newPairs
+            else load(s, s"${b.dir}/ep_delta", epPairDdl).unionByName(newPairs))
+            .write.mode("overwrite").parquet(v("ep_delta"))
+          writeText(s, v("_GRAFT_EC_BASE"), bn)
+        }
+        load(s, s"${b.dir}/ep_pairs", epPairDdl)
+          .unionByName(
+            if (ecBase.isDefined && labeled)
+              // read the delta back so ep_pairs and ep_delta hold the
+              // byte-identical rows (one rescore execution, not two)
+              load(s, v("ep_delta"), epPairDdl)
+            else newPairs)
+          .write.mode("overwrite").parquet(v("ep_pairs"))
+        val nReps = saveCount(s, allReps, v("ep_reps"), repDdl)
+        val nPairs = load(s, v("ep_pairs"), epPairDdl).count()
+        Meta(b.meta.nFit, s"$bits,$bands,$radius,$nReps,$nPairs")
+      },
+      fit = () => {
+        val nDist = saveCount(s, distinctReps(deltaVecs(s, Seq(v.table))),
+          v("ep_reps"), repDdl)
+        val reps = load(s, v("ep_reps"), repDdl)
         val (bits, bands, radius) = Similarity.lshParams(
           math.max(nDist, 2L), Similarity.dedupTau, 0.02, 96)
-        Dedup.capBuckets(encodeSigs(reps, bands, bits), Seq("band_idx", "code"), 256)
-          .write.mode("overwrite").parquet(s"$vd/ep_sigs")
-        val capped = s.read.schema(sigSchema).parquet(s"$vd/ep_sigs")
+        val capped = capSigs(s, bandSigs(reps, 42L, bands, bits), v("ep_sigs"))
         epCandidateGuard(s, capped, None, nDist, Similarity.dedupTau, bands)
-        // split-ball self-join (see Similarity.splitProbeMasks): each side
-        // probes the full radius restricted to its own half of the bit
-        // positions; the popcount-sum predicate restores exactly the
-        // hamming-≤radius candidate set
-        def expand(df: DataFrame, masks: Array[Long]): DataFrame =
-          df.withColumn("mask", explode(lit(masks)))
-            .select(col("eh"), col("band_idx"),
-              col("code").bitwiseXOR(col("mask")).as("code"),
-              expr("bit_count(mask)").as("mbits"))
-        val (lowMasks, highMasks) = Similarity.splitProbeMasks(bits, radius)
-        // merge-hinted: Catalyst's size estimate CANNOT see the explode
-        // multiplier (Generate keeps the child scan's sizeInBytes), so a
-        // 26 MB ep_sigs scan estimate hid 10.5M×29 = 303M runtime rows
-        // behind a below-threshold BroadcastExchange — a 2.3 GB driver
-        // collect that killed the fit at 200k distinct vectors (r15,
-        // found by the renumbered 100× corpus; the duplicated corpus's
-        // 2k distinct vectors made the same broadcast harmlessly tiny).
-        // Both sides are corpus-sized signature expansions — the join is
-        // a shuffled sort-merge at every scale by construction.
-        val cand = expand(capped, lowMasks).as("a").hint("merge")
-          .join(expand(capped, highMasks).as("b"),
-            col("a.band_idx") === col("b.band_idx") &&
-              col("a.code") === col("b.code") &&
-              col("a.mbits") + col("b.mbits") <= radius &&
-              col("a.eh") < col("b.eh"))
-          .select(col("a.eh").as("eh_a"), col("b.eh").as("eh_b"))
-          .distinct()
-        rescore(cand, reps).write.mode("overwrite").parquet(s"$vd/ep_pairs")
-        val nPairs = s.read.schema(pairSchema).parquet(s"$vd/ep_pairs").count()
-        writeFileList(s, vd, cur)
-        writeMeta(s, vd, "EP", None, math.max(cnt, 1L),
-          s"$bits,$bands,$radius,$nDist,$nPairs")
-        touch(s, s"$vd/_GRAFT_OK_EP")
-        pruneSiblings(s, vd)
-      }
-    } catch {
+        val nPairs = saveCount(s, rescore(splitBall(capped, bits, radius), reps),
+          v("ep_pairs"), epPairDdl)
+        Meta(v.n, s"$bits,$bands,$radius,$nDist,$nPairs")
+      })
+    catch {
       case e: graft.QuadraticRefusal =>
         epRefused.put(refuseKey, e.getMessage); throw e
     }
-    val (base0, nFit0, params) = readMeta(s, vd, "EP").get
-    validate(vd, "EP", params.split(",")(3).toLong,
-      s.read.schema(repSchema).parquet(s"$vd/ep_reps").count())
+    val ps = metaOf(s, v, EP).ps
+    validate(v.vd, "EP", ps(3).toLong, load(s, v("ep_reps"), repDdl).count())
     // r13: the pair row total rides the meta so expansion consumers can
-    // size their broadcast guard without a per-serve count() job. An
-    // artifact written before the 5th params element existed upgrades in
-    // place: one count, then the rewritten meta serves every later
-    // session (the marker and validated fields are untouched).
-    val ps = params.split(",")
-    val nPairs =
-      if (ps.length >= 5) ps(4).toLong
-      else {
-        val n = s.read.schema(pairSchema).parquet(s"$vd/ep_pairs").count()
-        writeMeta(s, vd, "EP", base0, nFit0, s"$params,$n")
-        n
-      }
-    (s.read.schema(pairSchema).parquet(s"$vd/ep_pairs"), nPairs)
+    // size their broadcast guard without a per-serve count() job (an
+    // artifact older than the 5th params element pays the count)
+    val pairs = load(s, v("ep_pairs"), epPairDdl)
+    (pairs, ps.lift(4).fold(pairs.count())(_.toLong))
   }
 
   /** Read-only peek at the EP distinct-vector table: Some(ep_reps —
@@ -1701,77 +1524,45 @@ object AnnIndex {
     * current corpus version; never builds. For consumers whose direct
     * plan is cheaper on a cold corpus than an EP fit (q_ann_topk's
     * zero-shuffle broadcast brute scan): they serve rep-level only when
-    * the dedup family has already paid the encode — the realistic
-    * production state, and pass 2 of every bench — and fall back to the
+    * the dedup family has already paid the encode, and fall back to the
     * direct plan otherwise, bit-identical either way.
     */
   private[graft] def epRepsIfReady(s: SparkSession, d: String): Option[DataFrame] = {
-    import org.apache.spark.sql.types._
-    val table = s"$d/embeddings.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_EP")) None
+    val v = resolve(s, d, EP)
+    if (!exists(s, v.ok(EP))) None
     else {
-      val repSchema = StructType(Seq(StructField("eh", StringType),
-        StructField("v", ArrayType(DoubleType)), StructField("nrm", DoubleType)))
-      val reps = s.read.schema(repSchema).parquet(s"$vd/ep_reps")
-      val (_, _, params) = readMeta(s, vd, "EP").get
-      validate(vd, "EP", params.split(",")(3).toLong, reps.count())
+      val reps = load(s, v("ep_reps"), repDdl)
+      validate(v.vd, "EP", metaOf(s, v, EP).ps(3).toLong, reps.count())
       Some(reps)
     }
   }
 
-  /** Persisted semantic component labels (family EC) — the propagation
-    * layer over [[embedPairs]]: q_dedup_semantic's connected components
-    * (pointer-jumping min-label propagation, O(log diameter) rounds) ran
-    * per session over the distinct-vector pair graph even once the pairs
-    * themselves were persisted — at sf0.1 the propagation IS that
-    * query's remaining cost. Labels are a pure function of the pair
-    * graph, so they version WITH the EP artifact: one `ec_labels` table
-    * (eh → ck, where ck = the component's min content key) per corpus
-    * version, ID-FREE like every text/vector artifact (vec ids are used
-    * only as transient numeric surrogates during the build — the
-    * propagation's labelSum convergence check needs numeric labels — and
-    * never stored). Serve re-derives the cheap id↔eh mapping, resolves
-    * each component's min member vec_id with ONE map-side-combined
-    * groupBy over the component key, and joins back — so the served
-    * cluster ids are exactly the direct propagation's min-member labels.
+  /** Persisted semantic component labels (family EC, derived from EP) —
+    * q_dedup_semantic's connected components ran per session over the
+    * distinct-vector pair graph even once the pairs were persisted. Labels
+    * are a pure function of the pair graph, so they version WITH the EP
+    * artifact: one `ec_labels` table (eh → ck, the component's min content
+    * key, [[componentKeys]]) per corpus version. Serve re-derives the cheap
+    * id↔eh mapping and resolves each component's min member vec_id — so
+    * the served cluster ids are exactly the direct propagation's labels.
     *
-    * Append path (r13, verdict r12 #6 — the last non-incremental family
-    * closed): EP appends only ADD pairs (the base's ep_pairs rows carry
-    * verbatim into the new version), so components only MERGE along
-    * new-pair bridges, never split — the exact premise of the text CC
-    * family's reduced-graph union-find (Dedup.ccTryDelta), ported here.
-    * The EP append persists its new pairs (`ep_delta`, cumulative since
-    * the last EC-labeled version) and a lineage pointer
-    * (`_GRAFT_EC_BASE`); the EC build maps each delta endpoint to its
-    * base component key (fresh ehs key as themselves), collects the
-    * REDUCED edge set (≤ delta-sized after mapping, driver-capped like
-    * the CC device — a backfill-sized batch refits), union-finds with
-    * min-key roots, and relabels the base table with one broadcast join.
-    * The merged key min(old keys ∪ fresh ehs) equals the from-scratch
-    * min member eh because each old key already IS its component's min —
-    * so the appended labels are row-identical to a full rebuild
-    * (spec-pinned on merge/bridge/fresh-singleton scenarios).
+    * Append (r13, verdict r12 #6): EP appends only ADD pairs, so
+    * components only MERGE along new-pair bridges, never split — the text
+    * CC family's reduced-graph union-find (Dedup.ccTryDelta), ported. The
+    * base is the version EP's lineage pointer names; each `ep_delta`
+    * endpoint maps to its base component key (fresh ehs key as
+    * themselves), the REDUCED edge set (≤ delta-sized, driver-capped — a
+    * backfill-sized batch refits) is union-found with min-key roots, and
+    * the base table relabels with one broadcast join. Each old key already
+    * IS its component's min, so the appended labels are row-identical to a
+    * full rebuild (spec-pinned on merge/bridge/fresh-singleton scenarios).
     */
   private[graft] def ecLabels(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val (pairs, _) = embedPairs(s, d) // EP current for this corpus version
-    val table = s"$d/embeddings.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val labSchema = StructType(Seq(StructField("eh", StringType),
-      StructField("ck", StringType)))
-    val pairSchema = StructType(Seq(StructField("eh_a", StringType),
-      StructField("eh_b", StringType), StructField("cosine", DoubleType)))
-    val repSchema = StructType(Seq(StructField("eh", StringType),
-      StructField("v", ArrayType(DoubleType)), StructField("nrm", DoubleType)))
+    val v = resolve(s, d, EC)
     def ecTryDelta(baseDir: String): Option[DataFrame] = {
-      val baseLab = s.read.schema(labSchema).parquet(s"$baseDir/ec_labels")
-      val delta = s.read.schema(pairSchema).parquet(s"$vd/ep_delta")
-      val keyed = delta
+      val baseLab = load(s, s"$baseDir/ec_labels", labDdl)
+      val keyed = load(s, v("ep_delta"), epPairDdl)
         .join(baseLab.select(col("eh").as("eh_a"), col("ck").as("ck_a")),
           Seq("eh_a"), "left")
         .join(baseLab.select(col("eh").as("eh_b"), col("ck").as("ck_b")),
@@ -1795,9 +1586,9 @@ object AnnIndex {
       }
       val relabel = reduced.iterator
         .flatMap(r => Seq(r.getString(0), r.getString(1))).toSet.toSeq
-        .map((k: String) => (k, find(k))).filter { case (k, v) => k != v }
-      val allEh = s.read.schema(repSchema).parquet(s"$vd/ep_reps").select("eh")
-      val base0 = allEh.join(baseLab, Seq("eh"), "left")
+        .map((k: String) => (k, find(k))).filter { case (k, r) => k != r }
+      val base0 = load(s, v("ep_reps"), repDdl).select("eh")
+        .join(baseLab, Seq("eh"), "left")
         .select(col("eh"), coalesce(col("ck"), col("eh")).as("key0"))
       import s.implicits._
       Some(
@@ -1806,49 +1597,15 @@ object AnnIndex {
           .join(broadcast(relabel.toDF("key0", "ck2")), Seq("key0"), "left")
           .select(col("eh"), coalesce(col("ck2"), col("key0")).as("ck")))
     }
-    if (!exists(s, s"$vd/_GRAFT_OK_EC")) {
-      def writeLabels(lab: DataFrame): Unit = {
-        lab.write.mode("overwrite").parquet(s"$vd/ec_labels")
-        val n = s.read.schema(labSchema).parquet(s"$vd/ec_labels").count()
-        writeMeta(s, vd, "EC", None, cnt, n.toString)
-        touch(s, s"$vd/_GRAFT_OK_EC")
-      }
-      val viaDelta = (for {
-        baseName <- readText(s, s"$vd/_GRAFT_EC_BASE").map(_.trim)
-        parent = new org.apache.hadoop.fs.Path(vd).getParent.toUri.getPath
-        baseDir = s"$parent/$baseName"
-        if exists(s, s"$baseDir/_GRAFT_OK_EC") && exists(s, s"$vd/ep_delta")
-        labels <- ecTryDelta(baseDir)
-      } yield labels) match {
-        case Some(labels) =>
-          ecAppends.incrementAndGet(); writeLabels(labels); true
-        case None => false
-      }
-      if (!viaDelta) {
-        ecEncodes.incrementAndGet()
-        val m = s.read.parquet(table)
-          .select(col("vec_id"),
-            ehCol(Vectors.toDouble(col("embedding"))).as("eh"))
-          .groupBy("eh").agg(min("vec_id").as("nid"))
-        val nodes = s.read.schema(repSchema).parquet(s"$vd/ep_reps")
-          .select("eh").join(m, "eh")
-        val edges = pairs
-          .join(m.select(col("eh").as("eh_a"), col("nid").as("a")), "eh_a")
-          .join(m.select(col("eh").as("eh_b"), col("nid").as("b")), "eh_b")
-          .select("a", "b")
-        val labeled = nodes.join(Dedup.connectedComponents(
-          nodes.select(col("nid").as("id")), edges), col("nid") === col("id"))
-        // component content key = min eh per label — map-side-combined
-        // groupBy + equi-join back, never a per-component collect
-        writeLabels(labeled
-          .join(labeled.groupBy("label").agg(min("eh").as("ck")), "label")
-          .select(col("eh"), col("ck")))
-      }
-    }
-    val (_, _, params) = readMeta(s, vd, "EC").get
-    validate(vd, "EC", params.toLong,
-      s.read.schema(labSchema).parquet(s"$vd/ec_labels").count())
-    s.read.schema(labSchema).parquet(s"$vd/ec_labels")
+    def put(lab: DataFrame): Meta =
+      Meta(v.cnt, saveCount(s, lab, v("ec_labels"), labDdl).toString)
+    ensure(s, EC, v)(
+      append = b =>
+        if (!exists(s, v("ep_delta"))) None
+        else ecTryDelta(b.dir).map(lab => () => put(lab)),
+      fit = () => put(componentKeys(s, v.table,
+        load(s, v("ep_reps"), repDdl).select("eh"), pairs, "eh_a", "eh_b")))
+    serve(s, EC, v, "ec_labels", labDdl)
   }
 
   /** Degree cap of the persisted k-NN embed-pair graph: per distinct
@@ -1968,35 +1725,14 @@ object AnnIndex {
     * first serve.
     */
   private[graft] def knnPairs(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val table = s"$d/embeddings.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val pairSchema = StructType(Seq(StructField("eh_q", StringType),
-      StructField("eh_n", StringType), StructField("cosine", DoubleType),
-      StructField("rn", IntegerType)))
-    val sigSchema = StructType(Seq(StructField("eh", StringType),
-      StructField("band_idx", IntegerType), StructField("code", LongType)))
-    def encodeSigs(reps: DataFrame, bands: Int, bits: Int): DataFrame =
-      reps.select(col("eh"),
-        posexplode(Vectors.hyperplaneBands(col("v"), knSeed, bands, bits))
-          .as(Seq("band_idx", "code")))
+    val v = resolve(s, d, KN)
+    val pairDdl = "eh_q string, eh_n string, cosine double, rn int"
     // exact rescore + τ filter against the session rep frame, then BOTH
     // orientations (the artifact is the directed rank-ordered graph);
     // dot(a,b) and dot(b,a) sum the same products in the same index
     // order, so the two orientations carry the bit-identical cosine
     def directedScored(cand: DataFrame): DataFrame = {
-      val reps = Members.eh(s, d)._2.select("eh", "v", "nrm")
-      val scored = cand
-        .join(reps.select(col("eh").as("eh_a"), col("v").as("va"),
-          col("nrm").as("na")), "eh_a")
-        .join(reps.select(col("eh").as("eh_b"), col("v").as("vb"),
-          col("nrm").as("nb")), "eh_b")
-        .select(col("eh_a"), col("eh_b"),
-          (Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb")))
-            .as("cosine"))
-        .where(col("cosine") >= Similarity.dedupTau)
+      val scored = rescore(cand, Members.eh(s, d)._2.select("eh", "v", "nrm"))
       scored.select(col("eh_a").as("eh_q"), col("eh_b").as("eh_n"), col("cosine"))
         .unionByName(scored.select(col("eh_b").as("eh_q"),
           col("eh_a").as("eh_n"), col("cosine")))
@@ -2004,8 +1740,7 @@ object AnnIndex {
     // ivf-mode candidate scorer: probe cells → streamed equi-join →
     // exact cosine → τ filter, emitted DIRECTED (the query side is the
     // probing side)
-    def cellScore(q: DataFrame, c: DataFrame,
-        cb: Array[(Long, Seq[Double], Double)]): DataFrame =
+    def cellScore(q: DataFrame, c: DataFrame, cb: Codebook): DataFrame =
       q.select(col("eh").as("eh_q"), col("v").as("qv"),
           col("nrm").as("qnrm"),
           explode(Vectors.nearestCentroids(col("v"), cb.map(_._1),
@@ -2039,216 +1774,121 @@ object AnnIndex {
       val self = bsz.agg(coalesce(sum(col("k")), lit(0L))).head().getLong(0)
       (total - self) / 2
     }
-    if (!exists(s, s"$vd/_GRAFT_OK_KN")) {
-      val cur = physFiles(s, table)
-      def finish(mode: String, bits: Int, bands: Int, radius: Int): Unit = {
-        val nReps = s.read.schema("eh string").parquet(s"$vd/kn_ehs").count()
-        val nPairs = s.read.schema(pairSchema).parquet(s"$vd/kn_pairs").count()
-        writeFileList(s, vd, cur)
-        writeMeta(s, vd, "KN", None, math.max(cnt, 1L),
-          s"$mode,$bits,$bands,$radius,$nReps,$nPairs")
-      }
-      appendBase(s, vd, "KN", cur) match {
-        case Some((base, delta, nFit, params))
-            if params.nonEmpty &&
-              (cnt - nFit).toDouble / math.max(cnt, 1L) <= refitFraction =>
-          knAppends.incrementAndGet()
-          val ps = params.split(",")
-          val (mode, bits, bands, radius) =
-            (ps(0), ps(1).toInt, ps(2).toInt, ps(3).toInt)
-          val baseEhs = s.read.schema("eh string").parquet(s"$base/kn_ehs")
-          val newEdges = if (mode == "lsh") {
-            val fresh = deltaReps(s, delta).join(baseEhs, Seq("eh"), "left_anti")
-            val unionSigs = s.read.schema(sigSchema).parquet(s"$base/kn_sigs")
-              .unionByName(encodeSigs(fresh, bands, bits))
-            Dedup.capBuckets(unionSigs, Seq("band_idx", "code"), 256)
-              .write.mode("overwrite").parquet(s"$vd/kn_sigs")
-            val capped = s.read.schema(sigSchema).parquet(s"$vd/kn_sigs")
-            // candidates touching a NEW vector: one-sided full-radius
-            // ball probe of the fresh side against the union's exact
-            // codes (the EP append device — same ≥1-new-endpoint set as
-            // the fresh build's split-ball join)
-            val probed = capped.join(fresh.select("eh"), Seq("eh"), "left_semi")
-              .withColumn("mask",
-                explode(lit(Similarity.probeMasks(bits, radius))))
-              .select(col("eh").as("eh_n"), col("band_idx"),
-                col("code").bitwiseXOR(col("mask")).as("code"))
-            val cand = capped.hint("merge").join(probed, Seq("band_idx", "code"))
-              .where(col("eh") =!= col("eh_n"))
-              .select(least(col("eh"), col("eh_n")).as("eh_a"),
-                greatest(col("eh"), col("eh_n")).as("eh_b"))
-              .distinct()
-            directedScored(cand)
-          } else {
-            val (cb, cells) = ivf(s, d, deltaVecs(s, Seq(table)))
-            val freshCells = cells.join(baseEhs, Seq("eh"), "left_anti")
-            val oldCells = cells.join(baseEhs, Seq("eh"), "left_semi")
-            cellScore(freshCells.select("eh", "v", "nrm"), cells, cb)
-              .unionByName(cellScore(oldCells.select("eh", "v", "nrm"),
-                freshCells, cb))
-          }
-          val merged =
-            s.read.schema(pairSchema).parquet(s"$base/kn_pairs").drop("rn")
-              .unionByName(newEdges)
-          topK(merged).write.mode("overwrite").parquet(s"$vd/kn_pairs")
-          Members.eh(s, d)._2.select("eh")
-            .write.mode("overwrite").parquet(s"$vd/kn_ehs")
-          finish(mode, bits, bands, radius)
-        case _ =>
-          knEncodes.incrementAndGet()
-          val reps = Members.eh(s, d)._2.select("eh", "v", "nrm")
-          val nDist = Members.ehDistinct(s, d)
-          val (bits, bands, radius) = Similarity.lshParams(
-            math.max(nDist, 2L), Similarity.dedupTau, knMiss, 96)
-          Dedup.capBuckets(encodeSigs(reps, bands, bits),
-              Seq("band_idx", "code"), 256)
-            .write.mode("overwrite").parquet(s"$vd/kn_sigs")
-          val capped = s.read.schema(sigSchema).parquet(s"$vd/kn_sigs")
-          val est = ballEstimate(capped, bits, radius)
-          val mode = if (est <= knCandBudget(s)) "lsh" else "ivf"
-          if (mode == "lsh") {
-            // split-ball self-join (see Similarity.splitProbeMasks);
-            // merge-hinted — both sides are corpus-sized sig expansions
-            // behind a Generate the estimator can't size (the EP
-            // broadcast misestimate class)
-            def expand(df: DataFrame, masks: Array[Long]): DataFrame =
-              df.withColumn("mask", explode(lit(masks)))
-                .select(col("eh"), col("band_idx"),
-                  col("code").bitwiseXOR(col("mask")).as("code"),
-                  expr("bit_count(mask)").as("mbits"))
-            val (lowMasks, highMasks) = Similarity.splitProbeMasks(bits, radius)
-            val cand = expand(capped, lowMasks).as("a").hint("merge")
-              .join(expand(capped, highMasks).as("b"),
-                col("a.band_idx") === col("b.band_idx") &&
-                  col("a.code") === col("b.code") &&
-                  col("a.mbits") + col("b.mbits") <= radius &&
-                  col("a.eh") < col("b.eh"))
-              .select(col("a.eh").as("eh_a"), col("b.eh").as("eh_b"))
-              .distinct()
-            topK(directedScored(cand))
-              .write.mode("overwrite").parquet(s"$vd/kn_pairs")
-          } else {
-            // dense regime: the measured ball estimate says the solved
-            // path would rescore at the qualifying-pair volume — serve
-            // the top-k contract by IVF-cell locality instead (the
-            // density comes from clustering, which is exactly what the
-            // cells capture); recall is measured per corpus, not solved
-            System.err.println(s"[graft] KN fit: ball-matched candidate " +
-              s"estimate $est exceeds graft.knn.candBudget=" +
-              s"${knCandBudget(s)} — building in ivf locality mode")
-            fs(s, vd).delete(
-              new org.apache.hadoop.fs.Path(s"$vd/kn_sigs"), true)
-            val (cb, cells) = ivf(s, d, deltaVecs(s, Seq(table)))
-            topK(cellScore(reps, cells, cb))
-              .write.mode("overwrite").parquet(s"$vd/kn_pairs")
-          }
-          reps.select("eh").write.mode("overwrite").parquet(s"$vd/kn_ehs")
-          finish(mode, bits, bands, radius)
-      }
-      touch(s, s"$vd/_GRAFT_OK_KN")
-      pruneSiblings(s, vd)
+    def finish(mode: String, bits: Int, bands: Int, radius: Int): Meta = {
+      val nReps = load(s, v("kn_ehs"), "eh string").count()
+      val nPairs = load(s, v("kn_pairs"), pairDdl).count()
+      Meta(v.n, s"$mode,$bits,$bands,$radius,$nReps,$nPairs")
     }
-    val (_, _, params) = readMeta(s, vd, "KN").get
-    validate(vd, "KN", params.split(",")(5).toLong,
-      s.read.schema(pairSchema).parquet(s"$vd/kn_pairs").count())
-    s.read.schema(pairSchema).parquet(s"$vd/kn_pairs")
+    ensure(s, KN, v)(
+      append = b => Some { () =>
+        val ps = b.meta.ps
+        val (mode, bits, bands, radius) = (ps(0), ps(1).toInt, ps(2).toInt, ps(3).toInt)
+        val baseEhs = load(s, s"${b.dir}/kn_ehs", "eh string")
+        val newEdges = if (mode == "lsh") {
+          val fresh = deltaReps(s, b.delta).join(baseEhs, Seq("eh"), "left_anti")
+          val capped = capSigs(s, load(s, s"${b.dir}/kn_sigs", sigDdl)
+            .unionByName(bandSigs(fresh, knSeed, bands, bits)), v("kn_sigs"))
+          directedScored(probeFresh(capped, fresh, bits, radius))
+        } else {
+          val (cb, cells) = ivf(s, d, deltaVecs(s, Seq(v.table)))
+          val freshCells = cells.join(baseEhs, Seq("eh"), "left_anti")
+          val oldCells = cells.join(baseEhs, Seq("eh"), "left_semi")
+          cellScore(freshCells.select("eh", "v", "nrm"), cells, cb)
+            .unionByName(cellScore(oldCells.select("eh", "v", "nrm"),
+              freshCells, cb))
+        }
+        topK(load(s, s"${b.dir}/kn_pairs", pairDdl).drop("rn").unionByName(newEdges))
+          .write.mode("overwrite").parquet(v("kn_pairs"))
+        Members.eh(s, d)._2.select("eh")
+          .write.mode("overwrite").parquet(v("kn_ehs"))
+        finish(mode, bits, bands, radius)
+      },
+      fit = () => {
+        val reps = Members.eh(s, d)._2.select("eh", "v", "nrm")
+        val nDist = Members.ehDistinct(s, d)
+        val (bits, bands, radius) = Similarity.lshParams(
+          math.max(nDist, 2L), Similarity.dedupTau, knMiss, 96)
+        val capped = capSigs(s, bandSigs(reps, knSeed, bands, bits), v("kn_sigs"))
+        val est = ballEstimate(capped, bits, radius)
+        val mode = if (est <= knCandBudget(s)) "lsh" else "ivf"
+        if (mode == "lsh")
+          topK(directedScored(splitBall(capped, bits, radius)))
+            .write.mode("overwrite").parquet(v("kn_pairs"))
+        else {
+          // dense regime: the measured ball estimate says the solved
+          // path would rescore at the qualifying-pair volume — serve
+          // the top-k contract by IVF-cell locality instead (the
+          // density comes from clustering, which is exactly what the
+          // cells capture); recall is measured per corpus, not solved
+          System.err.println(s"[graft] KN fit: ball-matched candidate " +
+            s"estimate $est exceeds graft.knn.candBudget=" +
+            s"${knCandBudget(s)} — building in ivf locality mode")
+          fs(s, v.vd).delete(new Path(v("kn_sigs")), true)
+          val (cb, cells) = ivf(s, d, deltaVecs(s, Seq(v.table)))
+          topK(cellScore(reps, cells, cb))
+            .write.mode("overwrite").parquet(v("kn_pairs"))
+        }
+        reps.select("eh").write.mode("overwrite").parquet(v("kn_ehs"))
+        finish(mode, bits, bands, radius)
+      })
+    val pairs = load(s, v("kn_pairs"), pairDdl)
+    validate(v.vd, "KN", metaOf(s, v, KN).ps(5).toLong, pairs.count())
+    pairs
   }
 
-  /** Persisted component labels over the k-NN pair graph (family KL) —
-    * [[ecLabels]]'s shape for the degree-capped graph: one `kn_labels`
-    * table (eh → ck = the component's min content key) per corpus
-    * version, built lazily on the first semantic serve that needs it.
-    * Unlike EC there is NO incremental append: a KN append can DISPLACE
-    * old edges past the degree cap (edges are not add-only), and dropped
-    * edges can SPLIT components — the EC merge premise fails — so labels
-    * rebuild per version. CC over a degree-≤[[knK]] graph is ≤ knK·n
-    * edges: linear work per round, O(log diameter) rounds
-    * ([[Dedup.connectedComponents]]).
+  /** Persisted component labels over the k-NN pair graph (family KL,
+    * derived from KN) — [[ecLabels]]'s shape for the degree-capped graph:
+    * one `kn_labels` table (eh → ck = the component's min content key)
+    * per corpus version, built lazily on the first semantic serve that
+    * needs it. Unlike EC there is NO incremental append: a KN append can
+    * DISPLACE old edges past the degree cap (edges are not add-only), and
+    * dropped edges can SPLIT components — the EC merge premise fails — so
+    * labels rebuild per version (KN writes no lineage pointer). CC over a
+    * degree-≤[[knK]] graph is ≤ knK·n edges: linear work per round,
+    * O(log diameter) rounds.
     */
   private[graft] def knLabels(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val pairs = knnPairs(s, d) // KN current for this corpus version
-    val table = s"$d/embeddings.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val labSchema = StructType(Seq(StructField("eh", StringType),
-      StructField("ck", StringType)))
-    if (!exists(s, s"$vd/_GRAFT_OK_KL")) {
-      klEncodes.incrementAndGet()
-      // numeric surrogates for the propagation (the ecLabels device):
-      // never stored — labels stay id-free
-      val m = s.read.parquet(table)
-        .select(col("vec_id"),
-          ehCol(Vectors.toDouble(col("embedding"))).as("eh"))
-        .groupBy("eh").agg(min("vec_id").as("nid"))
-      val nodes = s.read.schema("eh string").parquet(s"$vd/kn_ehs").join(m, "eh")
-      val edges = pairs
-        .join(m.select(col("eh").as("eh_q"), col("nid").as("a")), "eh_q")
-        .join(m.select(col("eh").as("eh_n"), col("nid").as("b")), "eh_n")
-        .select("a", "b")
-      val labeled = nodes.join(Dedup.connectedComponents(
-        nodes.select(col("nid").as("id")), edges), col("nid") === col("id"))
-      labeled
-        .join(labeled.groupBy("label").agg(min("eh").as("ck")), "label")
-        .select(col("eh"), col("ck"))
-        .write.mode("overwrite").parquet(s"$vd/kn_labels")
-      val n = s.read.schema(labSchema).parquet(s"$vd/kn_labels").count()
-      writeMeta(s, vd, "KL", None, cnt, n.toString)
-      touch(s, s"$vd/_GRAFT_OK_KL")
-    }
-    val (_, _, params) = readMeta(s, vd, "KL").get
-    validate(vd, "KL", params.toLong,
-      s.read.schema(labSchema).parquet(s"$vd/kn_labels").count())
-    s.read.schema(labSchema).parquet(s"$vd/kn_labels")
+    val v = resolve(s, d, KL)
+    ensure(s, KL, v)(append = _ => None, fit = () => Meta(v.cnt, saveCount(s,
+      componentKeys(s, v.table, load(s, v("kn_ehs"), "eh string"), pairs, "eh_q", "eh_n"),
+      v("kn_labels"), labDdl).toString))
+    serve(s, KL, v, "kn_labels", labDdl)
   }
 
-  /** Persisted bucket-collision pair graphs (families MP = MinHash band
-    * collisions, SP = SimHash chunk collisions) — the NP device for the
-    * two banded approximate families, completing "every near-dup
-    * family's candidate stage is a persisted artifact": the signature
-    * encodes were saved late-r8 (textSigs), but each session still re-ran
-    * the capped bucket SELF-JOIN. Both families share one shape — bucket
-    * rows (th, k1, k2) from the persisted signatures, a ≤64
-    * distinct-texts-per-bucket cap, a bucket-collision self-join, and a
-    * family payload (band-match count / hamming) — so one builder
-    * persists either graph.
+  /** Persisted bucket-collision pair graphs (families MP2 = MinHash band
+    * collisions, SP2 = SimHash chunk collisions) — the NP device for the
+    * two banded approximate families: the signature encodes are saved
+    * ([[textSigs]]), and this saves the capped bucket SELF-JOIN each
+    * session used to re-run. Both share one shape — bucket rows (th, k1,
+    * k2) from the persisted signatures, a ≤64 distinct-texts-per-bucket
+    * cap, a bucket-collision self-join, and a family payload (band-match
+    * count / hamming) — so one builder persists either graph.
     *
     * Artifacts (distinct-content-sized, ID-FREE, th-keyed like NP2):
     * `{mp2,sp2}_pairs` (th_a, th_b, payload), `{mp2,sp2}_bsz` (k1, k2,
     * bsz — the FULL bucket-size table, kept AND capped rows), and
-    * `{mp2,sp2}_ths` (the known-content registry).
-    * Bucket membership counts DISTINCT texts and texts are only ever
-    * added, so bucket size is monotone: a bucket capped at fit stays
-    * capped, and the single hazard is a fit-kept bucket crossing 64 —
-    * r12 (NP2's device ported): detected by merging the BATCH's delta
-    * counts into the persisted `_bsz` table, never by re-aggregating the
-    * full signature table; fresh texts resolve against `_ths` instead of
-    * a corpus member scan. With no crossing, old texts' kept bucket rows
-    * are untouched: old↔old pairs carry over verbatim and the delta PAIR
-    * output is (fresh×old)+(fresh×fresh) collision joins sized by the
-    * batch (the old side join-pruned to fresh-touched buckets).
-    * Payload exactness: the callback sees ALL
-    * collision rows for a pair (a new pair's collisions all involve ≥1
-    * fresh row), so per-pair aggregates (bands_matching) and
-    * signature-derived values (hamming) are identical to a fresh build.
-    * Self-contained rewrite per version; loud truncation validation.
+    * `{mp2,sp2}_ths` (the known-content registry). Bucket membership
+    * counts DISTINCT texts and texts are only ever added, so bucket size is
+    * monotone: a bucket capped at fit stays capped, and the single hazard
+    * is a fit-kept bucket crossing 64 — detected by merging the BATCH's
+    * delta counts into the persisted `_bsz` table (a crossing refuses the
+    * append; the fit runs). With no crossing, old↔old pairs carry over
+    * verbatim and the delta PAIR output is (fresh×old)+(fresh×fresh)
+    * collision joins sized by the batch (the old side join-pruned to
+    * fresh-touched buckets). The payload callback sees ALL collision rows
+    * for a pair (a new pair's collisions all involve ≥1 fresh row), so
+    * payloads are identical to a fresh build. Self-contained rewrite per
+    * version; loud truncation validation.
     */
-  private def bucketPairGraph(s: SparkSession, d: String, fam: String,
-      payloadCols: Seq[org.apache.spark.sql.types.StructField],
+  private def bucketPairGraph(s: SparkSession, d: String, fam: Family,
+      payloadDdl: String,
       bucketRows: () => DataFrame,
       payload: DataFrame => DataFrame): (DataFrame, Long) = {
-    import org.apache.spark.sql.types._
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val lc = fam.toLowerCase
-    val pairSchema = StructType(
-      Seq(StructField("th_a", StringType), StructField("th_b", StringType)) ++
-        payloadCols)
-    val bszSchema = StructType(Seq(StructField("k1", IntegerType),
-      StructField("k2", LongType), StructField("bsz", LongType)))
+    val v = resolve(s, d, fam)
+    val lc = fam.marker.toLowerCase
+    val pairDdl = s"th_a string, th_b string, $payloadDdl"
+    val bszDdl = "k1 int, k2 bigint, bsz bigint"
     def bszOf(b: DataFrame): DataFrame =
       b.groupBy("k1", "k2").agg(count(lit(1)).as("bsz"))
     def collide(a: DataFrame, b: DataFrame, ordered: Boolean): DataFrame =
@@ -2262,103 +1902,77 @@ object AnnIndex {
           col("a.k1") === col("b.k1") && col("a.k2") === col("b.k2"))
           .select(least(col("a.th"), col("b.th")).as("th_a"),
             greatest(col("a.th"), col("b.th")).as("th_b"))
-    def writeAll(pairs: DataFrame, bsz: DataFrame, ths: DataFrame,
-        cur: Seq[(String, Long, Long)]): Unit = {
+    def writeAll(pairs: DataFrame, bsz: DataFrame, ths: DataFrame): Meta = {
       // side tables are DISTINCT-TEXT-bounded (ths = the content
       // registry, bsz ≤ bands × distinct texts) — sizing them by the
       // corpus cnt wrote mostly-empty files on any duplication-heavy
       // corpus (ADVICE r13); the memoized exact distinct count prices
       // no extra job here (every MP/SP consumer builds it anyway)
       val thN = Members.thDistinct(s, d)
-      boundFiles(pairs, cnt).write.mode("overwrite").parquet(s"$vd/${lc}_pairs")
-      boundFiles(bsz, thN * 16).write.mode("overwrite").parquet(s"$vd/${lc}_bsz")
-      boundFiles(ths, thN).write.mode("overwrite").parquet(s"$vd/${lc}_ths")
-      val nP = s.read.schema(pairSchema).parquet(s"$vd/${lc}_pairs").count()
-      writeFileList(s, vd, cur)
-      writeMeta(s, vd, fam, None, cnt, nP.toString)
-      touch(s, s"$vd/_GRAFT_OK_$fam")
-      pruneSiblings(s, vd)
+      boundFiles(pairs, v.cnt).write.mode("overwrite").parquet(v(s"${lc}_pairs"))
+      boundFiles(bsz, thN * 16).write.mode("overwrite").parquet(v(s"${lc}_bsz"))
+      boundFiles(ths, thN).write.mode("overwrite").parquet(v(s"${lc}_ths"))
+      Meta(v.cnt, load(s, v(s"${lc}_pairs"), pairDdl).count().toString)
     }
-    if (!exists(s, s"$vd/_GRAFT_OK_$fam")) {
-      val cur = physFiles(s, table)
-      val viaAppend = appendBase(s, vd, fam, cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          // r12 (NP2's device ported — the last full-table aggregate on
-          // an append path): bucket sizes update by merging the BATCH's
-          // delta counts into the persisted full bucket-size table, and
-          // fresh texts resolve against the persisted th registry — no
-          // corpus member scan, no bucket groupBy over the full
-          // signature table. The remaining non-batch-sized work is the
-          // semi/anti-join-pruned signature reads feeding the fresh rows
-          // and the fresh-bucket old rows — distinct-content-sized, the
-          // artifact's own floor (the NP2 posture).
-          val baseThs = s.read.parquet(s"$base/${lc}_ths")
-          val freshTh = s.read.parquet(delta: _*)
-            .select(md5(col("text")).as("th")).distinct()
-            .join(baseThs, Seq("th"), "left_anti")
-          val freshRows = bucketRows().join(freshTh, Seq("th"), "left_semi")
-          val deltaBsz = bszOf(freshRows)
-            .withColumnRenamed("bsz", "dbsz")
-          val baseBsz = s.read.schema(bszSchema).parquet(s"$base/${lc}_bsz")
-          // crossing = a fit-KEPT bucket (base bsz ≤ 64) whose merged
-          // size exceeds the cap — old pairs would be invalid, refit
-          val crossed = baseBsz.join(deltaBsz, Seq("k1", "k2"))
-            .where(col("bsz") <= 64 && col("bsz") + col("dbsz") > 64)
-            .limit(1).count() > 0
-          if (crossed) false
-          else {
-            tpAppends.incrementAndGet()
-            val mergedBsz = baseBsz.join(deltaBsz, Seq("k1", "k2"), "full_outer")
-              .select(col("k1"), col("k2"),
-                (coalesce(col("bsz"), lit(0L)) + coalesce(col("dbsz"), lit(0L)))
-                  .as("bsz"))
-            val keptNow = mergedBsz.where(col("bsz") <= 64).select("k1", "k2")
-            val fresh = freshRows.join(keptNow, Seq("k1", "k2"), "left_semi")
-            // old rows matter only inside buckets a fresh row touches —
-            // the signature read is join-pruned to those buckets
-            val freshBuckets = fresh.select("k1", "k2").distinct()
-            val old = bucketRows().join(freshTh, Seq("th"), "left_anti")
-              .join(freshBuckets, Seq("k1", "k2"), "left_semi")
-            val newPairs = payload(
-              collide(fresh, old, ordered = false)
-                .unionByName(collide(fresh, fresh, ordered = true)))
-            writeAll(
-              s.read.schema(pairSchema).parquet(s"$base/${lc}_pairs")
-                .unionByName(newPairs),
-              mergedBsz,
-              baseThs.unionByName(freshTh),
-              cur)
-            true
-          }
-        case _ => false
-      }
-      if (!viaAppend) {
-        tpEncodes.incrementAndGet()
+    ensure(s, fam, v)(
+      append = b => {
+        // r12 (NP2's device ported): bucket sizes update by merging the
+        // BATCH's delta counts into the persisted full bucket-size table,
+        // and fresh texts resolve against the persisted th registry — no
+        // corpus member scan, no bucket groupBy over the full signature
+        // table
+        val baseThs = s.read.parquet(s"${b.dir}/${lc}_ths")
+        val freshTh = s.read.parquet(b.delta: _*)
+          .select(md5(col("text")).as("th")).distinct()
+          .join(baseThs, Seq("th"), "left_anti")
+        val freshRows = bucketRows().join(freshTh, Seq("th"), "left_semi")
+        val deltaBsz = bszOf(freshRows).withColumnRenamed("bsz", "dbsz")
+        val baseBsz = load(s, s"${b.dir}/${lc}_bsz", bszDdl)
+        // crossing = a fit-KEPT bucket (base bsz ≤ 64) whose merged
+        // size exceeds the cap — old pairs would be invalid, refit
+        val crossed = baseBsz.join(deltaBsz, Seq("k1", "k2"))
+          .where(col("bsz") <= 64 && col("bsz") + col("dbsz") > 64)
+          .limit(1).count() > 0
+        if (crossed) None
+        else Some { () =>
+          val mergedBsz = baseBsz.join(deltaBsz, Seq("k1", "k2"), "full_outer")
+            .select(col("k1"), col("k2"),
+              (coalesce(col("bsz"), lit(0L)) + coalesce(col("dbsz"), lit(0L)))
+                .as("bsz"))
+          val keptNow = mergedBsz.where(col("bsz") <= 64).select("k1", "k2")
+          val fresh = freshRows.join(keptNow, Seq("k1", "k2"), "left_semi")
+          // old rows matter only inside buckets a fresh row touches —
+          // the signature read is join-pruned to those buckets
+          val freshBuckets = fresh.select("k1", "k2").distinct()
+          val old = bucketRows().join(freshTh, Seq("th"), "left_anti")
+            .join(freshBuckets, Seq("k1", "k2"), "left_semi")
+          val newPairs = payload(
+            collide(fresh, old, ordered = false)
+              .unionByName(collide(fresh, fresh, ordered = true)))
+          writeAll(load(s, s"${b.dir}/${lc}_pairs", pairDdl).unionByName(newPairs),
+            mergedBsz, baseThs.unionByName(freshTh))
+        }
+      },
+      fit = () => {
         val rows = bucketRows()
         val bsz = bszOf(rows)
         val kept = bsz.where(col("bsz") <= 64).select("k1", "k2")
         val capped = rows.join(kept, Seq("k1", "k2"), "left_semi")
         writeAll(payload(collide(capped, capped, ordered = true)), bsz,
-          rows.select("th").distinct(), cur)
-      }
-    }
-    val (_, _, params) = readMeta(s, vd, fam).get
-    validate(vd, fam, params.toLong,
-      s.read.schema(pairSchema).parquet(s"$vd/${lc}_pairs").count())
+          rows.select("th").distinct())
+      })
     // the meta's validated row total rides along as the serve-side
     // broadcast-guard bound (r13): consumers expanding these pairs used
     // to price a count() job per serve just to decide broadcast-vs-SMJ
-    (s.read.schema(pairSchema).parquet(s"$vd/${lc}_pairs"), params.toLong)
+    (serve(s, fam, v, s"${lc}_pairs", pairDdl), metaOf(s, v, fam).total)
   }
 
-  /** MinHash band-collision pairs (family MP): payload = bands_matching.
+  /** MinHash band-collision pairs (family MP2): payload = bands_matching.
     * Returns (pair reader, exact persisted pair row count — the
     * expansion-side broadcast-guard bound).
     */
-  private[graft] def mhPairs(s: SparkSession, d: String): (DataFrame, Long) = {
-    import org.apache.spark.sql.types._
-    bucketPairGraph(s, d, "MP2",
-      Seq(StructField("bands_matching", LongType)),
+  private[graft] def mhPairs(s: SparkSession, d: String): (DataFrame, Long) =
+    bucketPairGraph(s, d, MP2, "bands_matching bigint",
       bucketRows = () => textSigs(s, d, "MH", Dedup.mhEncode)
         .select(col("th"), posexplode(array(
           (0 until 4).map(b => xxhash64(col(s"h${4 * b}"), col(s"h${4 * b + 1}"),
@@ -2366,16 +1980,13 @@ object AnnIndex {
           .as(Seq("k1", "k2"))),
       payload = c => c.groupBy("th_a", "th_b")
         .agg(count(lit(1)).as("bands_matching")))
-  }
 
-  /** SimHash chunk-collision pairs (family SP): payload = hamming.
+  /** SimHash chunk-collision pairs (family SP2): payload = hamming.
     * Returns (pair reader, exact persisted pair row count).
     */
   private[graft] def shPairs(s: SparkSession, d: String): (DataFrame, Long) = {
-    import org.apache.spark.sql.types._
     def sigs = textSigs(s, d, "SH", Dedup.shEncode)
-    bucketPairGraph(s, d, "SP2",
-      Seq(StructField("hamming", LongType)),
+    bucketPairGraph(s, d, SP2, "hamming bigint",
       bucketRows = () => sigs
         .select(col("th"), col("simhash"), posexplode(array(
           (0 until 8).map(c => shiftright(col("simhash"), 8 * c)
@@ -2389,81 +2000,49 @@ object AnnIndex {
           bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("hamming")))
   }
 
-  /** Persisted ngram near-dup PAIR graph (family NP) — the EP discipline
-    * extended to the TEXT leg, and the artifact behind the most expensive
-    * remaining per-session corpus pass: before this, every
-    * q_dedup_ngram / q_dedup_ngram_rep run (and every CC full build)
-    * re-ran the df-capped inverted-index SELF-JOIN over the persisted
-    * shingle rows — the candidate join is the whole cost; the shingle
-    * encode was already saved (family NG) but the pair graph was not.
+  /** Persisted ngram near-dup PAIR graph (family NP2) — the EP discipline
+    * extended to the TEXT leg: before this, every q_dedup_ngram /
+    * q_dedup_ngram_rep run (and every CC full build) re-ran the df-capped
+    * inverted-index SELF-JOIN over the persisted shingle rows (family NG).
     *
-    * Artifacts (all DISTINCT-CONTENT-sized and ID-FREE — keyed by
-    * md5(text) `th`, the text twin of EP's eh: an append lowering a
-    * group's min doc_id changes nothing; serve re-derives the cheap
-    * doc↔th mapping per run):
-    *  - `np_pairs` (th_a, th_b, inter, uni): rep-level pairs surviving
-    *    the doc-weighted df≤128 cap and inter≥3 — the operator's whole
-    *    output structure, th_a < th_b.
-    *  - `np_cnt` (th, nsh): kept-shingle count per distinct text (the
-    *    within-group pair emitters and `uni` recompute need it).
-    *  - `np_kept` (hs, df): since r11 the FULL shingle-df table — kept
-    *    AND dropped rows (family NP2; the r10 kept-only layout is
-    *    retired — storing only kept rows would let a dropped shingle
-    *    whose batch-delta df alone is under the cap RESURRECT on an
-    *    incremental append). It is both the exactness detector and the
-    *    incremental base: an append merges batch-sized Δdf
-    *    contributions into it instead of re-deriving df from a
-    *    corpus-sized member scan.
+    * Artifacts (DISTINCT-CONTENT-sized and ID-FREE, keyed by md5(text)
+    * `th`): `np_pairs` (th_a < th_b, inter, uni) — rep-level pairs
+    * surviving the doc-weighted df≤128 cap and inter≥3; `np_cnt` (th,
+    * nsh) — kept-shingle count per distinct text; `np_kept` (hs, df) —
+    * since r11 the FULL shingle-df table, kept AND dropped rows (storing
+    * only kept rows would let a dropped shingle whose batch-delta df alone
+    * is under the cap RESURRECT on an append). It is both the exactness
+    * detector and the incremental base.
     *
-    * Unlike EP (whose divergence axis is candidate recall), the ngram
-    * operator is EXACT and hash-gated, so the append path must be exact
-    * or refuse. Exactness argument: df counts MEMBER DOCS (Σ group
-    * sizes), and group sizes only grow, so df is MONOTONE — a shingle
-    * dropped at fit (df>128) stays dropped forever, and a new shingle
-    * lives only in new texts. The single hazard is a fit-time KEPT
-    * shingle whose union df crosses 128: that invalidates old pairs and
-    * old nsh, so the append detects any `np_kept` row with current
-    * df>128 and REFITS (the CC df-cap-crossing posture). With no
-    * crossing, old texts' kept sets are untouched: old↔old pairs carry
-    * over verbatim, and the delta PAIR work is (fresh × all) + (fresh ×
-    * fresh) joins whose output is sized by the batch. r11 (ADVICE): the
-    * crossing detector no longer re-derives df from a corpus-sized
-    * member scan — the delta docs' (th, Δgsz) counts (batch-sized: a
-    * duplicate of KNOWN content shifts df too) join the NG signature
-    * rows once and merge into the persisted full df table; old distinct
-    * texts come from the base np_cnt (a text absent from it has no kept
-    * shingles, so mislabeling it fresh contributes zero rows — the
-    * harmless-by-vacuity argument). The remaining non-batch-sized work
-    * per append is the NG reads feeding Δdf and the pair joins —
-    * distinct-content-sized, the artifact's own floor. Each
-    * version rewrites self-contained (the EP/vocab argument:
-    * distinct-content-sized tables rewrite cheaply; no chain).
-    * Validation: pair and cnt row counts vs the meta, failing loud.
+    * The ngram operator is EXACT and hash-gated, so the append must be
+    * exact or refuse. df counts MEMBER DOCS and group sizes only grow, so
+    * df is MONOTONE — a shingle dropped at fit stays dropped, and a new
+    * shingle lives only in new texts. The single hazard is a fit-KEPT
+    * shingle whose union df crosses 128 (it invalidates old pairs and old
+    * nsh): the append detects it by merging the delta docs' batch-sized
+    * (th, Δgsz) counts into the persisted df table, and refuses (the fit
+    * runs). With no crossing, old↔old pairs carry over verbatim, and the
+    * delta PAIR work is (fresh × old) + (fresh × fresh) joins sized by the
+    * batch; old distinct texts come from the base np_cnt (a text absent
+    * from it has no kept shingles, so mislabeling it fresh contributes
+    * zero rows — harmless by vacuity). Each version rewrites
+    * self-contained. Validation: pair and cnt row counts vs the meta.
     *
     * Returns (np_pairs reader, np_cnt reader, exact persisted pair row
     * count — the expansion-side broadcast-guard bound — and the exact
     * distinct-text count, the guard bound for the cnt/idx join sides).
     */
   private[graft] def ngPairs(s: SparkSession, d: String): (DataFrame, DataFrame, Long, Long) = {
-    import org.apache.spark.sql.types._
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    val pairSchema = StructType(Seq(StructField("th_a", StringType),
-      StructField("th_b", StringType), StructField("inter", LongType),
-      StructField("uni", LongType)))
-    val cntSchema = StructType(Seq(StructField("th", StringType),
-      StructField("nsh", LongType)))
-    val keptSchema = StructType(Seq(StructField("hs", LongType),
-      StructField("df", LongType)))
+    val v = resolve(s, d, NP2)
+    val pairDdl = "th_a string, th_b string, inter bigint, uni bigint"
+    val cntDdl = "th string, nsh bigint"
+    val keptDdl = "hs bigint, df bigint"
     def thCounts(paths: Seq[String]): DataFrame =
       s.read.parquet(paths: _*).select(md5(col("text")).as("th"))
         .groupBy("th").agg(count(lit(1)).cast("long").as("gsz"))
     // (kept shingle rows per text, FULL df table) for a given (th, gsz)
     // group table — the df cap is doc-weighted, groupBy + semi join back
-    // (the capBuckets device, never a window over hs); df keeps dropped
-    // rows too (r11) so appends can merge deltas instead of recomputing
+    // (the capBuckets device, never a window over hs)
     def keptShingles(groups: DataFrame): (DataFrame, DataFrame) = {
       val hs = groups.join(textSigs(s, d, "NG", Dedup.ngEncode), "th")
         .select(col("th"), col("hs"), col("gsz"))
@@ -2489,201 +2068,65 @@ object AnnIndex {
           (col("na") + col("nb") - col("inter")).as("uni"))
         .where(col("inter") >= 3L)
     }
-    def writeAll(pairs: DataFrame, cnts: DataFrame, dfAll: DataFrame,
-        cur: Seq[(String, Long, Long)]): Unit = {
+    def writeAll(pairs: DataFrame, cnts: DataFrame, dfAll: DataFrame): Meta = {
       // pairs ≈ O(cnt) under the df cap; np_cnt and np_kept are
-      // DISTINCT-TEXT-bounded (≤1 row per distinct text / ~tens of kept
-      // shingles per distinct text) — cnt-sizing them wrote mostly-empty
-      // files on a duplication-heavy corpus (ADVICE r13); the memoized
+      // DISTINCT-TEXT-bounded — cnt-sizing them wrote mostly-empty files
+      // on a duplication-heavy corpus (ADVICE r13); the memoized
       // distinct count prices no extra job
       val thN = Members.thDistinct(s, d)
-      boundFiles(pairs, cnt).write.mode("overwrite").parquet(s"$vd/np_pairs")
-      boundFiles(cnts, thN).write.mode("overwrite").parquet(s"$vd/np_cnt")
-      boundFiles(dfAll, thN * 32).write.mode("overwrite").parquet(s"$vd/np_kept")
-      val nP = s.read.schema(pairSchema).parquet(s"$vd/np_pairs").count()
-      val nC = s.read.schema(cntSchema).parquet(s"$vd/np_cnt").count()
-      writeFileList(s, vd, cur)
-      writeMeta(s, vd, "NP2", None, cnt, s"$nP,$nC")
-      touch(s, s"$vd/_GRAFT_OK_NP2")
-      pruneSiblings(s, vd)
+      boundFiles(pairs, v.cnt).write.mode("overwrite").parquet(v("np_pairs"))
+      boundFiles(cnts, thN).write.mode("overwrite").parquet(v("np_cnt"))
+      boundFiles(dfAll, thN * 32).write.mode("overwrite").parquet(v("np_kept"))
+      val nP = load(s, v("np_pairs"), pairDdl).count()
+      val nC = load(s, v("np_cnt"), cntDdl).count()
+      Meta(v.cnt, s"$nP,$nC")
     }
-    if (!exists(s, s"$vd/_GRAFT_OK_NP2")) {
-      val cur = physFiles(s, table)
-      val viaAppend = appendBase(s, vd, "NP2", cur) match {
-        case Some((base, delta, _, params)) if params.nonEmpty =>
-          // batch-sized member deltas: every delta doc shifts its text's
-          // gsz — novel content AND duplicates of known content alike
-          val deltaTh = thCounts(delta)
-          val sigsNG = textSigs(s, d, "NG", Dedup.ngEncode)
-          val deltaDf = sigsNG.join(deltaTh, "th")
-            .groupBy("hs").agg(sum("gsz").cast("long").as("ddf"))
-          val baseDf = s.read.schema(keptSchema).parquet(s"$base/np_kept")
-          val updated = baseDf.join(deltaDf, Seq("hs"), "full_outer")
-            .select(col("hs"),
-              (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L)))
-                .as("df"))
-          // exactness detector: a fit-KEPT shingle crossing the cap
-          // invalidates old pairs and old nsh — refit (dropped shingles
-          // stay dropped: df is monotone, and they ARE in baseDf)
-          val crossed = baseDf.where(col("df") <= 128L).select("hs")
-            .join(updated.where(col("df") > 128L), Seq("hs"), "left_semi")
-            .limit(1).count() > 0
-          if (crossed) false
-          else {
-            npAppends.incrementAndGet()
-            val cntBase = s.read.schema(cntSchema).parquet(s"$base/np_cnt")
-            // a delta text absent from the base np_cnt is fresh; an OLD
-            // text with no kept shingles is mislabeled fresh but
-            // contributes zero kept rows — harmless by vacuity
-            val freshTh = deltaTh.select("th")
-              .join(cntBase.select("th"), Seq("th"), "left_anti")
-            val keptNow = updated.where(col("df") <= 128L)
-            val shKept = sigsNG.join(keptNow.select("hs"), Seq("hs"), "left_semi")
-              .select("th", "hs")
-            val shFresh = shKept.join(freshTh, Seq("th"), "left_semi")
-            val shOld = shKept.join(freshTh, Seq("th"), "left_anti")
-            val cntFresh = shFresh.groupBy("th")
-              .agg(count(lit(1)).cast("long").as("nsh"))
-            val cntAll = cntBase.unionByName(cntFresh)
-            val newPairs = pairsOf(shFresh, shOld, cntAll, ordered = false)
-              .unionByName(pairsOf(shFresh, shFresh, cntAll, ordered = true))
-            writeAll(
-              s.read.schema(pairSchema).parquet(s"$base/np_pairs")
-                .unionByName(newPairs),
-              cntAll, updated, cur)
-            true
-          }
-        case _ => false
-      }
-      if (!viaAppend) {
-        npEncodes.incrementAndGet()
-        val (sh, dfAll) = keptShingles(thCounts(Seq(table)))
+    ensure(s, NP2, v)(
+      append = b => {
+        // batch-sized member deltas: every delta doc shifts its text's
+        // gsz — novel content AND duplicates of known content alike
+        val deltaTh = thCounts(b.delta)
+        val sigsNG = textSigs(s, d, "NG", Dedup.ngEncode)
+        val deltaDf = sigsNG.join(deltaTh, "th")
+          .groupBy("hs").agg(sum("gsz").cast("long").as("ddf"))
+        val baseDf = load(s, s"${b.dir}/np_kept", keptDdl)
+        val updated = baseDf.join(deltaDf, Seq("hs"), "full_outer")
+          .select(col("hs"),
+            (coalesce(col("df"), lit(0L)) + coalesce(col("ddf"), lit(0L)))
+              .as("df"))
+        // exactness detector: a fit-KEPT shingle crossing the cap
+        // invalidates old pairs and old nsh — refit (dropped shingles
+        // stay dropped: df is monotone, and they ARE in baseDf)
+        val crossed = baseDf.where(col("df") <= 128L).select("hs")
+          .join(updated.where(col("df") > 128L), Seq("hs"), "left_semi")
+          .limit(1).count() > 0
+        if (crossed) None
+        else Some { () =>
+          val cntBase = load(s, s"${b.dir}/np_cnt", cntDdl)
+          val freshTh = deltaTh.select("th")
+            .join(cntBase.select("th"), Seq("th"), "left_anti")
+          val keptNow = updated.where(col("df") <= 128L)
+          val shKept = sigsNG.join(keptNow.select("hs"), Seq("hs"), "left_semi")
+            .select("th", "hs")
+          val shFresh = shKept.join(freshTh, Seq("th"), "left_semi")
+          val shOld = shKept.join(freshTh, Seq("th"), "left_anti")
+          val cntFresh = shFresh.groupBy("th")
+            .agg(count(lit(1)).cast("long").as("nsh"))
+          val cntAll = cntBase.unionByName(cntFresh)
+          val newPairs = pairsOf(shFresh, shOld, cntAll, ordered = false)
+            .unionByName(pairsOf(shFresh, shFresh, cntAll, ordered = true))
+          writeAll(load(s, s"${b.dir}/np_pairs", pairDdl).unionByName(newPairs),
+            cntAll, updated)
+        }
+      },
+      fit = () => {
+        val (sh, dfAll) = keptShingles(thCounts(Seq(v.table)))
         val cnts = sh.groupBy("th").agg(count(lit(1)).cast("long").as("nsh"))
-        writeAll(pairsOf(sh, sh, cnts, ordered = true), cnts, dfAll,
-          physFiles(s, table))
-      }
-    }
-    val (_, _, params) = readMeta(s, vd, "NP2").get
-    val Array(nP, nC) = params.split(",").map(_.toLong)
-    validate(vd, "NP2", nP,
-      s.read.schema(pairSchema).parquet(s"$vd/np_pairs").count())
-    validate(vd, "NP2C", nC,
-      s.read.schema(cntSchema).parquet(s"$vd/np_cnt").count())
-    (s.read.schema(pairSchema).parquet(s"$vd/np_pairs"),
-      s.read.schema(cntSchema).parquet(s"$vd/np_cnt"), nP, nC)
-  }
-
-  /** Collapse a LEX append chain into one self-contained version — the
-    * MERGE step of the Lucene-segment analogy, without which "appends
-    * compound forever" is a slow leak: every append adds a chain segment,
-    * so the serve-side postings read unions N segment scans (N partition
-    * listings, N small files per slot directory — the classic small-file
-    * decay) and the base version dirs can never be pruned. Counts are
-    * exactly mergeable, so compaction is a pure parquet job with NO
-    * tokenize pass: union every segment's tf/dl, re-aggregate (a doc
-    * whose text arrived across segments merges to the fresh-build row),
-    * swap the merged artifacts into the tip (write-aside + rename — the
-    * merge plan reads the very paths it replaces, an in-place overwrite
-    * would consume its own output), clear the base pointer, prune the
-    * now-unreferenced bases. Bit-identical to a fresh build by the same
-    * exact-mergeability argument as the append (spec-proven); the meta's
-    * exact token total is conserved and the swap forces re-validation
-    * against it, so a botched merge refuses to serve rather than rank
-    * wrong. Returns false (no-op) on an unchained index.
-    *
-    * The ANN families need no analogue: their chains are collapsed by the
-    * [[refitFraction]] drift refit, and BETWEEN refits their segments
-    * cannot be merged losslessly-cheaply anyway (cell/code artifacts are
-    * hive-partitioned corpus rewrites, the cost the chain exists to
-    * avoid). LEX has no drift trigger — compaction is its only collapse.
-    */
-  private[graft] def compactLex(s: SparkSession, d: String): Boolean = {
-    val table = s"$d/documents.parquet"
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_LXT")) lex(s, d) // ensure the tip exists
-    val chain = chainDirs(s, vd, "LXT")
-    if (chain.size <= 1) return false
-    import org.apache.spark.sql.types._
-    val tfSchema = StructType(Seq(
-      StructField("th", StringType), StructField("term", StringType),
-      StructField("tf", LongType), StructField("tslot", LongType)))
-    // segments hold DISJOINT th sets (appends anti-join on th), so the
-    // merge is a plain union; the groupBy is defense in depth against a
-    // hand-edited segment, not a summing requirement as in the r8
-    // doc-keyed layout
-    val tf = chain.map(c => s.read.schema(tfSchema).parquet(s"$c/lex_tf"))
-      .reduce(_ unionByName _)
-      .groupBy("th", "term", "tslot").agg(sum("tf").cast("long").as("tf"))
-      .select("th", "term", "tf", "tslot")
-    val dl = chain.map(c => s.read.parquet(s"$c/lex_dl"))
-      .reduce(_ unionByName _)
-      .groupBy("th").agg(sum("dl").cast("long").as("dl"))
-    tf.write.partitionBy("tslot").mode("overwrite").parquet(s"$vd/lex_tf_c")
-    dl.write.mode("overwrite").parquet(s"$vd/lex_dl_c")
-    val f = fs(s, vd)
-    def swap(name: String): Unit = {
-      f.delete(new org.apache.hadoop.fs.Path(s"$vd/$name"), true)
-      if (!f.rename(new org.apache.hadoop.fs.Path(s"$vd/${name}_c"),
-          new org.apache.hadoop.fs.Path(s"$vd/$name")))
-        throw new IllegalStateException(s"compactLex: rename of $name failed")
-    }
-    // crash-safe swap (ADVICE r15; see compactSigs): marker off across
-    // the delete+rename window so a crash rebuilds instead of serving a
-    // marked version with missing artifacts
-    f.delete(new org.apache.hadoop.fs.Path(s"$vd/_GRAFT_OK_LXT"), false)
-    swap("lex_tf"); swap("lex_dl")
-    val (_, nFit, params) = readMeta(s, vd, "LXT").get
-    writeMeta(s, vd, "LXT", None, nFit, params) // self-contained: no base
-    touch(s, s"$vd/_GRAFT_OK_LXT")
-    // r13: the id-keyed member mappings chain across the SAME version
-    // dirs (documents-keyed THM) — collapse them in the same maintenance
-    // tick, or their chain keeps the LEX bases alive past the prune
-    compactIdHash(s, d, "THM", "documents.parquet", "thm_docs")
-    // r14: compaction IS the maintenance cadence, so the superseded-
-    // version GC runs here (strictly ⊆ what pruneSiblings would keep)
-    sweepAt(s, table, vd)
-    validatedVersions.remove(s"$vd#LXT") // next serve re-proves token mass
-    true
-  }
-
-  /** Collapse an id-hash family's append chain (THM/EHM — see
-    * [[idHashFamily]]) into one self-contained version: segments hold
-    * DISJOINT id sets (appends encode only appended files' rows), so the
-    * merge is a plain union rewrite — no hash pass. Row total conserved
-    * and re-proven on the next serve (the compactLex posture). Returns
-    * false (no-op) on an unchained artifact.
-    */
-  private[graft] def compactIdHash(s: SparkSession, d: String, fam: String,
-      tableName: String, art: String): Boolean = {
-    val table = s"$d/$tableName"
-    if (!exists(s, table)) return false
-    val cnt = tableCount(s, table) // r16: session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
-    val vd = versionDirFor(s, table, math.max(cnt, 1L), fp)
-    if (!exists(s, s"$vd/_GRAFT_OK_$fam")) return false
-    val chain = chainDirs(s, vd, fam)
-    if (chain.size <= 1) return false
-    boundFiles(
-        chain.map(c => s.read.parquet(s"$c/$art")).reduce(_ unionByName _), cnt)
-      .write.mode("overwrite").parquet(s"$vd/${art}_c")
-    val f = fs(s, vd)
-    // crash-safe swap (ADVICE r15; see compactSigs)
-    f.delete(new org.apache.hadoop.fs.Path(s"$vd/_GRAFT_OK_$fam"), false)
-    f.delete(new org.apache.hadoop.fs.Path(s"$vd/$art"), true)
-    if (!f.rename(new org.apache.hadoop.fs.Path(s"$vd/${art}_c"),
-        new org.apache.hadoop.fs.Path(s"$vd/$art")))
-      throw new IllegalStateException(s"compactIdHash: rename of $art failed")
-    val (_, nFit, params) = readMeta(s, vd, fam).get
-    writeMeta(s, vd, fam, None, nFit, params)
-    touch(s, s"$vd/_GRAFT_OK_$fam")
-    sweepAt(s, table, vd) // maintenance cadence — see compactLex
-    validatedVersions.remove(s"$vd#$fam")
-    // the session memo may hold a chain READER over the just-pruned
-    // segment files (same table fingerprint, different artifact layout —
-    // the one staleness the fingerprint check cannot see)
-    SessionMemo.evictDataset(d)
-    true
+        writeAll(pairsOf(sh, sh, cnts, ordered = true), cnts, dfAll)
+      })
+    val Array(nP, nC) = metaOf(s, v, NP2).ps.map(_.toLong)
+    validate(v.vd, "NP2", nP, load(s, v("np_pairs"), pairDdl).count())
+    validate(v.vd, "NP2C", nC, load(s, v("np_cnt"), cntDdl).count())
+    (load(s, v("np_pairs"), pairDdl), load(s, v("np_cnt"), cntDdl), nP, nC)
   }
 }

@@ -86,7 +86,7 @@ object Bpe {
     * against.
     */
   private[graft] def applyMerge(syms: Column, l: String, r: String): Column =
-    graft.expressions.TokenizerExpressions.bpeMerges(syms, Array(l), Array(r))
+    graft.expressions.TokenizerExpressions.bpeMerges(syms, Seq(l), Seq(r))
 
   /** The original HOF formulation of [[applyMerge]] — the executable
     * reference for the kernel-parity spec. CaseWhen branches evaluate
@@ -110,7 +110,7 @@ object Bpe {
   private[graft] def applyMerges(syms: Column, merges: Seq[Merge]): Column = {
     val sorted = merges.sortBy(_.rank)
     graft.expressions.TokenizerExpressions.bpeMerges(syms,
-      sorted.map(_.left).toArray, sorted.map(_.right).toArray)
+      sorted.map(_.left), sorted.map(_.right))
   }
 
   /** The original per-merge foldLeft of [[applyMerges]] — the executable

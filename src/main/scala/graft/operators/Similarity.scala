@@ -1300,8 +1300,8 @@ object Similarity {
       // not removed work; the verdict declined to credit it and flagged
       // gaming). Both legs now re-derive inside every execution, serving
       // from their own persisted index artifacts like any direct q_bm25 /
-      // q_ann_topk run; the honest per-execution cost is recovered by
-      // optimizing the legs themselves (q_bm25's r17 term-pruned serve).
+      // q_ann_topk run; the honest per-execution cost can only come down
+      // by optimizing the legs themselves.
       val sparse = TextAnalysis.bm25.run(s, d)
         .select(col("query_id"), col("doc_id").as("id"),
           col("rn").as("sparse_rn"))

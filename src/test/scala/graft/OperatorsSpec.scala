@@ -2149,14 +2149,15 @@ class OperatorsSpec extends SparkSpec {
         Unigram.segmentRef(col("w"), lp).as("r"),
         Unigram.segScore(col("w"), lp).as("ks"),
         Unigram.segScoreRef(col("w"), lp).as("rs"))
-      .where(col("k") =!= col("r") || col("ks") =!= col("rs"))
+      // null-safe: a null on one side only is a divergence, not a drop
+      .where(!(col("k") <=> col("r")) || !(col("ks") <=> col("rs")))
       .count()
     assert(segDiff == 0, "unigram kernel diverges from the HOF reference")
     val merges = Bpe.trainMerges(spark, sfDir, 16)
     val bpeDiff = words
       .select(Bpe.applyMerges(Bpe.chars(col("w")), merges).as("k"),
         Bpe.applyMergesRef(Bpe.chars(col("w")), merges).as("r"))
-      .where(col("k") =!= col("r"))
+      .where(!(col("k") <=> col("r")))
       .count()
     assert(bpeDiff == 0, "bpe merge kernel diverges from the HOF reference")
     // merged-token re-merge interaction: (a,a) then (aa,a) on runs of a's
@@ -2165,9 +2166,17 @@ class OperatorsSpec extends SparkSpec {
       .toDF("w")
       .select(Bpe.applyMerges(Bpe.chars(col("w")), runMerges).as("k"),
         Bpe.applyMergesRef(Bpe.chars(col("w")), runMerges).as("r"))
-      .where(col("k") =!= col("r"))
+      .where(!(col("k") <=> col("r")))
       .count()
     assert(runDiff == 0, "bpe kernel diverges on interacting merges")
+    // equal merge lists build equal kernels, so Catalyst can match them
+    val kernels = Seq("aaa").toDF("w")
+      .select(Bpe.applyMerges(Bpe.chars(col("w")), runMerges),
+        Bpe.applyMerges(Bpe.chars(col("w")), runMerges.reverse))
+      .queryExecution.analyzed.expressions
+      .map(_.collectFirst { case b: graft.expressions.BpeMerges => b }.get)
+    assert(kernels(0) == kernels(1) && kernels(0).semanticEquals(kernels(1)),
+      "BpeMerges over equal merge lists must be == and semanticEquals")
   }
 
   // ---- unigram LM tokenizer: independent local reference (mirrors the

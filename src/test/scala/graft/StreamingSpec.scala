@@ -828,4 +828,19 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch,
       s"stream/batch funnel mismatch: ${streamed -- batch} vs ${batch -- streamed}")
   }
+
+  test("checkpoint FileContext resolves local paths to the fork-free filesystem") {
+    import org.apache.hadoop.fs.{CreateFlag, FileContext, Path}
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = java.nio.file.Files.createTempDirectory("graftfc").toUri
+    val fc = FileContext.getFileContext(dir, conf)
+    assert(fc.getDefaultFileSystem.isInstanceOf[NoForkLocalFs],
+      s"file: resolved to ${fc.getDefaultFileSystem.getClass.getName}")
+    assert(FileContext.getFileContext(conf).getDefaultFileSystem.isInstanceOf[NoForkLocalFs])
+    // a create through the FileContext API (the checkpoint manager's path)
+    val p = new Path(new Path(dir), "offsets/0")
+    fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE),
+      org.apache.hadoop.fs.Options.CreateOpts.createParent()).close()
+    assert(fc.util().exists(p))
+  }
 }

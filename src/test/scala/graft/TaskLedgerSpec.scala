@@ -37,4 +37,17 @@ class TaskLedgerSpec extends SparkSpec {
     ledger.drain()
     assert(ledger.jobs.get() >= 1 && ledger.cpuNs.get() > 0L)
   }
+
+  test("Bench's last stdout line stays under its bound: 124 long-named failures print the totals-only form") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val names = (0 until 124).map(i => f"q_synthetic_operator_with_a_rather_long_name_$i%03d")
+    val shortQs = names.indices.map(i => "\"" + f"k$i%03d" + "\":1.25").mkString("{", ",", "}")
+    val clean = json.readTree(Bench.lastLine(117.4, 124, shortQs, Nil, 2, "/data/sf0.1"))
+    assert(clean.get("queries").size() == 124 && clean.get("failed").isArray)
+    val line = Bench.lastLine(117.4, 124, shortQs, names, 2, "/data/sf0.1")
+    assert(line.length <= Bench.lastLineMax, s"${line.length} chars")
+    val totals = json.readTree(line)
+    assert(!totals.has("queries"))
+    assert(totals.get("failed").asInt() == 124 && totals.get("value").asDouble() == 117.4)
+  }
 }
