@@ -84,12 +84,10 @@ object Bench {
     // during a query marks that pass "cold". The sum covers EVERY
     // persisted-artifact family's fit and append counters (one list,
     // AnnIndex.families — a hand-listed sum once missed the tp/ec
-    // counters and left a 48 s SP fit unflagged) plus tokenizer training
-    // and session memo builds.
+    // counters and left a 48 s SP fit unflagged) plus every SessionMemo
+    // build (tokenizer training included).
     def fitCount(): Long =
       graft.operators.AnnIndex.counters.map(_.get).sum +
-        graft.operators.Bpe.bpeTrains.get +
-        graft.operators.Unigram.unigramTrains.get +
         graft.operators.SessionMemo.totalBuilds()
     // cpuSec attribution window per timing: drain the listener bus, reset
     // the ledger, run, drain again (TaskLedger's waitUntilEmpty barrier —

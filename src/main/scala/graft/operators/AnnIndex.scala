@@ -26,7 +26,7 @@ import graft.functions.Vectors
   * its serve projection.
   *  1. '''resolve''' ([[resolve]]) — (row count, fingerprint) → version
   *     dir. The fingerprint folds path+length+mtime of every physical
-  *     file ([[Similarity.tableFingerprint]]), so a rewritten table
+  *     file ([[SessionMemo.tableFingerprint]]), so a rewritten table
   *     resolves to a DIFFERENT dir and refits: nothing keyed by the old
   *     content is ever served for the new.
   *  2. '''append-or-fit''' ([[ensure]]) — unless the marker is present,
@@ -45,7 +45,7 @@ import graft.functions.Vectors
   *     prune the sibling versions no family's chain reaches. A crash
   *     mid-write leaves no marker, so the next call redoes the step.
   *  4. '''serve/validate''' ([[chainRead]], [[validate]]) — the chain
-  *     union, checked once per session per version against the meta's
+  *     union, checked once per JVM per version against the meta's
   *     exact row/token total: a marker is a promise, not proof.
   *  5. '''compact''' ([[compact]]) — past its chain bound a chained
   *     family merges its segments into one self-contained version
@@ -294,7 +294,7 @@ object AnnIndex {
   }
 
   /** Physical file inventory of the table — the append detector's unit.
-    * Same (path, length, mtime) triples [[Similarity.tableFingerprint]]
+    * Same (path, length, mtime) triples [[SessionMemo.tableFingerprint]]
     * folds, kept unfolded so set-subset (pure append) is decidable.
     */
   private def physFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
@@ -493,61 +493,50 @@ object AnnIndex {
   private[graft] def sweepVersions(s: SparkSession, tablePath: String): Int =
     if (!exists(s, tablePath)) 0 else sweepAt(s, resolve(s, tablePath))
 
-  /** Once-per-session artifact sanity check before the first serve of a
-    * version (ADVICE r7): a marker is a promise, not proof — a /tmp
-    * cleaner (or, under a mis-scoped shared root, another tenant) can
-    * leave a complete-looking version whose corpus artifact is truncated
-    * or foreign. Schema mismatches already fail loud (explicit read
-    * schemas); row count is the silent failure mode, so compare the
-    * artifact's count against the meta's and refuse to serve on mismatch.
+  /** Artifact sanity check before the first serve of a version (ADVICE
+    * r7): a marker is a promise, not proof — a /tmp cleaner (or, under a
+    * mis-scoped shared root, another tenant) can leave a complete-looking
+    * version whose corpus artifact is truncated or foreign. Schema
+    * mismatches already fail loud (explicit read schemas); row count is
+    * the silent failure mode, so compare the artifact's count against the
+    * meta's and refuse to serve on mismatch. A pass is a per-JVM
+    * [[SessionMemo]] mark keyed by (dataset dir, `valid.<mark>`, index
+    * root) and validated by the version's fingerprint; compacting the
+    * family evicts exactly that mark.
     */
-  private val validatedVersions =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Spec hook: force re-validation (the "fresh session" for the cache). */
-  private[graft] def resetValidation(): Unit = validatedVersions.clear()
-
-  private def validate(vd: String, fam: String, expected: Long,
+  private def validate(s: SparkSession, v: Version, mark: String, expected: Long,
       actual: => Long): Unit =
-    if (!validatedVersions.contains(s"$vd#$fam")) {
+    SessionMemo.jvm(s, v.d, s"valid.$mark", root(s), Some(v.fp)) {
       val got = actual
       if (got != expected)
         throw new IllegalStateException(
-          s"$fam index at $vd is corrupt: artifact holds $got rows, " +
+          s"$mark index at ${v.vd} is corrupt: artifact holds $got rows, " +
             s"version key says $expected — refusing to serve (delete the " +
             "version dir to force a refit)")
-      validatedVersions.add(s"$vd#$fam")
     }
 
-  /** Session memo of source-table row counts, keyed by (path, physical
-    * fingerprint) — r16. Every artifact serve needs the table count to
+  /** Source-table row count, a per-JVM [[SessionMemo]] entry validated by
+    * the table's fingerprint (r16): every artifact serve needs it to
     * resolve its version dir, which cost one count JOB per family per
-    * query execution. Within a session the count can only change when the
-    * file inventory does, and the (path, length, mtime) fingerprint is
-    * exactly the staleness authority every other memo trusts: an
-    * in-session append or rewrite changes the fingerprint and re-counts.
+    * query execution.
     */
-  private val tableCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-
-  private[graft] def tableCount(s: SparkSession, path: String): Long =
-    tableCounts.computeIfAbsent(
-      (path, Similarity.tableFingerprint(s, path)),
-      _ => s.read.parquet(path).count()).longValue
+  private[graft] def tableCount(s: SparkSession, path: String, fp: Long): Long =
+    SessionMemo.jvm(s, path, "count", fp = Some(fp))(s.read.parquet(path).count())
 
   /** One resolved (table, content) state: source row count, fingerprint
     * and version dir. `v(art)` is an artifact path inside the version.
     */
   private final case class Version(table: String, cnt: Long, fp: Long, vd: String) {
     def n: Long = math.max(cnt, 1L)
+    def d: String = table.substring(0, table.lastIndexOf('/'))
     def apply(art: String): String = s"$vd/$art"
     def ok(fam: Family): String = s"$vd/_GRAFT_OK_${fam.marker}"
   }
 
-  /** Lifecycle step 1 — the count → fingerprint → version-dir preamble. */
+  /** Lifecycle step 1 — the fingerprint → count → version-dir preamble. */
   private def resolve(s: SparkSession, table: String): Version = {
-    val cnt = tableCount(s, table) // session-memoized (fp-keyed)
-    val fp = Similarity.tableFingerprint(s, table)
+    val fp = SessionMemo.tableFingerprint(s, table)
+    val cnt = tableCount(s, table, fp)
     Version(table, cnt, fp, versionDirFor(s, table, math.max(cnt, 1L), fp))
   }
 
@@ -599,12 +588,12 @@ object AnnIndex {
   }
 
   /** Lifecycle step 4 for row-total families: `art`'s chain union,
-    * validated once per session against the meta total.
+    * validated once per version against the meta total.
     */
   private def serve(s: SparkSession, fam: Family, v: Version, art: String,
       schema: String = ""): DataFrame = {
     val df = chainRead(s, v.vd, fam.marker, art, schema)
-    validate(v.vd, fam.marker, metaOf(s, v, fam).total, df.count())
+    validate(s, v, fam.marker, metaOf(s, v, fam).total, df.count())
     df
   }
 
@@ -615,13 +604,14 @@ object AnnIndex {
     * an unmarked version the next serve rebuilds, never a marked one
     * missing an artifact); the meta is re-published self-contained with
     * its totals conserved, marker back on; superseded versions are swept
-    * (compaction IS the maintenance cadence); the next serve re-proves
-    * the totals. A session memo may hold a chain READER over the swept
-    * segments (same fingerprint, different layout — the one staleness the
-    * fingerprint cannot see), so the dataset's memos are evicted. Returns
-    * false (no-op) on an incomplete or unchained artifact.
+    * (compaction IS the maintenance cadence). A session memo may hold a
+    * chain READER over the swept segments (same fingerprint, different
+    * layout — the one staleness the fingerprint cannot see), so the
+    * dataset's session memos are evicted, and with them this family's
+    * validation mark: its next serve re-proves the totals. Returns false
+    * (no-op) on an incomplete or unchained artifact.
     */
-  private def compact(s: SparkSession, d: String, fam: Family, v: Version,
+  private def compact(s: SparkSession, fam: Family, v: Version,
       arts: (String, (Seq[String], Meta) => DataFrameWriter[Row])*): Boolean = {
     val chain = if (exists(s, v.ok(fam))) chainDirs(s, v.vd, fam.marker) else Nil
     if (chain.size <= 1) return false
@@ -636,8 +626,7 @@ object AnnIndex {
     }
     publish(s, fam, v, None, meta.copy(base = None))
     sweepAt(s, v)
-    validatedVersions.remove(s"${v.vd}#${fam.marker}")
-    SessionMemo.evictDataset(d)
+    SessionMemo.evictDataset(v.d, s"valid.${fam.marker}", root(s))
     true
   }
 
@@ -645,9 +634,9 @@ object AnnIndex {
     * signature chains, THM): the merge is a plain union rewrite — no
     * re-encode, no corpus pass — sized by the meta's exact row total.
     */
-  private def compactUnion(s: SparkSession, d: String, fam: Family, v: Version,
+  private def compactUnion(s: SparkSession, fam: Family, v: Version,
       art: String): Boolean =
-    compact(s, d, fam, v, art -> ((chain, m) =>
+    compact(s, fam, v, art -> ((chain, m) =>
       boundFiles(unionOf(s, chain, art), math.max(1L, m.total)).write.mode("overwrite")))
 
   /** Compact past the family's chain bound. */
@@ -992,7 +981,7 @@ object AnnIndex {
     // truncation guard: the postings' exact token mass must equal the
     // meta total (a /tmp cleaner eating a slot partition is otherwise a
     // silent ranking corruption, not an error)
-    validate(v.vd, "LXT", metaOf(s, v, LXT).total,
+    validate(s, v, "LXT", metaOf(s, v, LXT).total,
       tf.agg(coalesce(sum("tf"), lit(0L))).head().getLong(0))
     (tf, dl, v.cnt)
   }
@@ -1013,7 +1002,7 @@ object AnnIndex {
   private[graft] def compactLex(s: SparkSession, d: String): Boolean = {
     val v = resolve(s, d, LXT)
     if (!exists(s, v.ok(LXT))) lex(s, d) // ensure the tip exists
-    compact(s, d, LXT, v,
+    compact(s, LXT, v,
       "lex_tf" -> ((chain, _) => unionOf(s, chain, "lex_tf", lexTfDdl)
         .groupBy("th", "term", "tslot").agg(sum("tf").cast("long").as("tf"))
         .select("th", "term", "tf", "tslot")
@@ -1021,7 +1010,7 @@ object AnnIndex {
       "lex_dl" -> ((chain, _) => unionOf(s, chain, "lex_dl")
         .groupBy("th").agg(sum("dl").cast("long").as("dl"))
         .write.mode("overwrite"))) && {
-      compactUnion(s, d, THM, resolve(s, d, THM), "thm_docs"); true
+      compactUnion(s, THM, resolve(s, d, THM), "thm_docs"); true
     }
   }
 
@@ -1064,7 +1053,7 @@ object AnnIndex {
             .unionByName(encode(b.delta)), v.cnt).toString)
       },
       fit = () => Meta(v.cnt, put(encode(Seq(v.table)), v.cnt).toString))
-    bound(s, fam, v)(compactUnion(s, d, fam, v, art))
+    bound(s, fam, v)(compactUnion(s, fam, v, art))
     serve(s, fam, v, art)
   }
 
@@ -1149,7 +1138,7 @@ object AnnIndex {
       },
       fit = () => Meta(v.cnt, saveCount(s,
         encode(distinctTexts(s.read.parquet(v.table).select("text"))), v(art)).toString))
-    bound(s, fam, v)(compactUnion(s, d, fam, v, art))
+    bound(s, fam, v)(compactUnion(s, fam, v, art))
     serve(s, fam, v, art)
   }
 
@@ -1184,7 +1173,7 @@ object AnnIndex {
       })
     val wf = s.read.parquet(v("bpe_wf"))
     val tot = metaOf(s, v, BPE).total
-    validate(v.vd, "BPE", tot, tokens(wf))
+    validate(s, v, "BPE", tot, tokens(wf))
     (wf, tot)
   }
 
@@ -1511,7 +1500,7 @@ object AnnIndex {
         epRefused.put(refuseKey, e.getMessage); throw e
     }
     val ps = metaOf(s, v, EP).ps
-    validate(v.vd, "EP", ps(3).toLong, load(s, v("ep_reps"), repDdl).count())
+    validate(s, v, "EP", ps(3).toLong, load(s, v("ep_reps"), repDdl).count())
     // r13: the pair row total rides the meta so expansion consumers can
     // size their broadcast guard without a per-serve count() job (an
     // artifact older than the 5th params element pays the count)
@@ -1532,7 +1521,7 @@ object AnnIndex {
     if (!exists(s, v.ok(EP))) None
     else {
       val reps = load(s, v("ep_reps"), repDdl)
-      validate(v.vd, "EP", metaOf(s, v, EP).ps(3).toLong, reps.count())
+      validate(s, v, "EP", metaOf(s, v, EP).ps(3).toLong, reps.count())
       Some(reps)
     }
   }
@@ -1832,7 +1821,7 @@ object AnnIndex {
         finish(mode, bits, bands, radius)
       })
     val pairs = load(s, v("kn_pairs"), pairDdl)
-    validate(v.vd, "KN", metaOf(s, v, KN).ps(5).toLong, pairs.count())
+    validate(s, v, "KN", metaOf(s, v, KN).ps(5).toLong, pairs.count())
     pairs
   }
 
@@ -2125,8 +2114,8 @@ object AnnIndex {
         writeAll(pairsOf(sh, sh, cnts, ordered = true), cnts, dfAll)
       })
     val Array(nP, nC) = metaOf(s, v, NP2).ps.map(_.toLong)
-    validate(v.vd, "NP2", nP, load(s, v("np_pairs"), pairDdl).count())
-    validate(v.vd, "NP2C", nC, load(s, v("np_cnt"), cntDdl).count())
+    validate(s, v, "NP2", nP, load(s, v("np_pairs"), pairDdl).count())
+    validate(s, v, "NP2C", nC, load(s, v("np_cnt"), cntDdl).count())
     (load(s, v("np_pairs"), pairDdl), load(s, v("np_cnt"), cntDdl), nP, nC)
   }
 }

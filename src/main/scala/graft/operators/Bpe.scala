@@ -168,40 +168,22 @@ object Bpe {
   private[graft] def thMembers(s: SparkSession, d: String): DataFrame =
     Members.th(s, d).select(col("doc_id"), col("th"))
 
-  /** In-session model memo: (dataset, m) → (content fingerprint, merges).
-    * The fingerprint VALIDATES the entry rather than keying it (the IVF
-    * memo discipline: an in-place rewrite of the corpus retrains instead
-    * of serving stale merges) — keyed on the fingerprint the map would
-    * grow one entry per content version for the life of the JVM (every
-    * micro-batch under a streaming sink adds a version); keyed on
-    * (dataset, m) it holds at most one live model per trained
-    * configuration, replaced on content change.
-    */
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[Merge])]()
-  private[graft] def resetMemo(): Unit = mergeCache.clear()
-
   /** Count of real merge-table trainings (memo misses) — Bench folds this
     * into its cold/warm fit attribution like the AnnIndex counters.
     */
-  private[graft] val bpeTrains = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val bpeTrains = SessionMemo.counter("bpe")
 
   /** Train m merges over the corpus at `d`: the word counts serve from
     * the PERSISTED vocabulary ([[AnnIndex.bpeVocab]] — corpus tokenized
     * once per table content, delta-only on pure appends), the rounds run
-    * on it, and the resulting merge table memoizes in-JVM per content
-    * fingerprint (the IVF discipline: an in-place rewrite retrains).
+    * on it, and the resulting merge table is a per-JVM [[SessionMemo]]
+    * entry per (corpus, m), validated by the corpus fingerprint: an
+    * in-place rewrite retrains.
     */
-  private[graft] def trainMerges(s: SparkSession, d: String, m: Int): Seq[Merge] = {
-    val fp = Similarity.tableFingerprint(s, s"$d/documents.parquet")
-    val key = s"$d#$m"
-    val hit = mergeCache.get(key)
-    if (hit != null && hit._1 == fp) return hit._2
-    bpeTrains.incrementAndGet()
-    val result = trainFromFreq(AnnIndex.bpeVocab(s, d)._1, m)
-    mergeCache.put(key, (fp, result))
-    result
-  }
+  private[graft] def trainMerges(s: SparkSession, d: String, m: Int): Seq[Merge] =
+    SessionMemo.jvm(s, s"$d/documents.parquet", "bpe", m.toString) {
+      trainFromFreq(AnnIndex.bpeVocab(s, d)._1, m)
+    }
 
   /** Cache cadence of the incremental round loop: between re-caches the
     * uncached rounds collapse (Catalyst projection collapse) into one

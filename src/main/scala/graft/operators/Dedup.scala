@@ -139,7 +139,7 @@ object Dedup {
     * filters pairs first (simhash hamming≤12, containment ≥0.8) the
     * estimate is over the UNFILTERED artifact pairs — an upper bound,
     * conservative refusal only. The Σ is distinct-content-sized work,
-    * memoized per (session, dataset, family) via [[SessionMemo.scalar]]
+    * memoized per (session, dataset, family) via [[SessionMemo.session]]
     * so serves price NO extra job after the first (cold-attributed in
     * Bench like every memo build).
     *
@@ -157,7 +157,7 @@ object Dedup {
       family: String, repPairs: DataFrame, sizes: DataFrame,
       tables: Seq[String], repTwin: String): Unit = {
     val budget = s.conf.get("graft.expand.maxRows", "100000000").toLong
-    val est = SessionMemo.scalar(s, d, s"xg$family", tables) {
+    val est = SessionMemo.session(s, d, s"xg$family", tables) {
       val cross = repPairs
         .join(sizes.select(col("rep").as("rep_a"), col("n").as("na")), "rep_a")
         .join(sizes.select(col("rep").as("rep_b"), col("n").as("nb")), "rep_b")
@@ -1550,13 +1550,6 @@ object Dedup {
             |ORDER BY ALL""".stripMargin)
   )
 
-  /** Session memo of built membership sketches, keyed by dir +
-    * physical-file fingerprint (the IVF memo device — a same-path
-    * rewrite of the corpus rebuilds instead of serving a stale sketch).
-    */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[Long])]()
-  private[graft] val bloomBuilds = new java.util.concurrent.atomic.AtomicLong(0)
   private val bloomK = 5
 
   /** Build (or serve from the memo) the corpus membership Bloom filter:
@@ -1568,14 +1561,13 @@ object Dedup {
     * guarded at a 64 MB broadcast budget (≈1.3e8 corpus keys) — past
     * that a production build keeps the sketch as a key-prefix-SHARDED
     * (word, bits) table and the test becomes a shard-local lookup; the
-    * dense-array broadcast is the small-regime optimization.
+    * dense-array broadcast is the small-regime optimization. The sketch
+    * is a per-JVM [[SessionMemo]] entry validated by the corpus
+    * fingerprint: a same-path rewrite rebuilds instead of serving stale.
     */
   private[graft] def bloomWords(s: SparkSession, d: String,
-      corpus: DataFrame): (Long, Array[Long]) = {
-    val fp = Similarity.tableFingerprint(s, s"$d/documents.parquet")
-    if (bloomCache.size() > 32) bloomCache.clear()
-    bloomCache.computeIfAbsent(s"$d#$fp", _ => {
-      bloomBuilds.incrementAndGet()
+      corpus: DataFrame): (Long, Array[Long]) =
+    SessionMemo.jvm(s, s"$d/documents.parquet", "bloom") {
       val nKeys = math.max(1L, corpus.count())
       val mBits = math.max(1024L,
         if (16L * nKeys <= 1024L) 1024L
@@ -1596,8 +1588,7 @@ object Dedup {
       val words = new Array[Long](nWords)
       rows.foreach(r => words(r.getLong(0).toInt) = r.getLong(1))
       (mBits, words)
-    })
-  }
+    }
 
   /** The membership test as a pure builtin-expression composition — no
     * UDF, whole-stage codegen: k xxhash64 probes, each a constant

@@ -416,14 +416,8 @@ object EltOps {
     * CacheBag-tracked — CacheBag releases per query and the point is
     * cross-query reuse; the frame is 5 narrow columns × |orders|,
     * MEMORY_AND_DISK so a tight executor spills instead of OOMing.
-    */
-  /** Count of provenance-frame builds (memo misses) — Bench folds this
-    * into its cold/warm attribution so the one pass that pays the build
-    * is flagged instead of reading as an unexplained outlier.
-    */
-  private[graft] val fotBuilds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** r12: routed through [[SessionMemo]], which fingerprint-VALIDATES the
+    *
+    * r12: routed through [[SessionMemo]], which fingerprint-VALIDATES the
     * entry against the physical listing of BOTH source tables — an
     * in-session append or in-place rewrite of orders/customer rebuilds
     * instead of serving stale provenance (ADVICE r11; the trainMerges /
@@ -433,7 +427,6 @@ object EltOps {
       : org.apache.spark.sql.DataFrame =
     SessionMemo.frames(s, d, "fot",
         Seq("orders.parquet", "customer.parquet")) {
-      fotBuilds.incrementAndGet()
       Seq(buildFoundOnTry(s, d))
     }.head
 

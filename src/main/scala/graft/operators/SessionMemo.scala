@@ -1,5 +1,8 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -7,73 +10,84 @@ import org.apache.spark.storage.StorageLevel
 import graft.T
 import graft.functions.Vectors
 
-/** Session-lifetime memo of derived frames, fingerprint-validated.
+/** The one cache for values that are a pure function of table content.
   *
-  * The r11 bench's largest remaining avoidable cost was the per-query
-  * re-derivation of the id↔content-hash member mappings: every
-  * signature-serving query (the dedup family, bm25/phrase retrieval,
-  * DSIR/winnow, the tokenizer-apply family, the embedding serves) opened
-  * the corpus, hashed every text/vector, and re-grouped — ~27 consumers
-  * × a full corpus scan each, ~118 s of the 615 s 100× run, for a value
-  * that is a pure function of the table content. This is the found-on-try
-  * memo device (EltOps r11) generalized: the reference pipeline lands
-  * such mappings ONCE per run as a table and every downstream model reads
-  * that table (dbt's materialized staging layer), so the engine mirrors
-  * that — one persisted materialization per (session, dataset, family),
-  * every consumer shares it.
+  * The reference pipeline lands each staging/intermediate model ONCE per
+  * run and every downstream model reads it (dbt's materialized staging
+  * layer). graft mirrors that with memos of derived values — member
+  * mappings, source-table row counts, artifact validation marks, trained
+  * tokenizers, ANN codebooks, membership sketches — and every one of them
+  * looks up, validates, counts and evicts through this object.
   *
-  * Validity: entries are keyed by (session identity, dataset dir, family)
-  * and carry the [[Similarity.tableFingerprint]] of every source table
-  * the build reads (path + length + mtime of each physical file — a pure
-  * namenode metadata listing, no data read). A lookup whose current
-  * fingerprint differs rebuilds and unpersists the stale frames, so an
-  * in-session append or in-place rewrite is served fresh — the same
-  * retrain-on-rewrite contract the Bpe/IVF memos pin (ADVICE r11 flagged
-  * the found-on-try memo for lacking exactly this check; it now routes
-  * through here).
+  * '''Key and value.''' An entry is keyed by (scope, dataset or table
+  * path, family + params) and holds (fingerprint, value).
+  *
+  * '''Scopes.''' A per-session entry ([[session]], [[frames]]) is keyed
+  * by a UUID minted once per live SparkSession (identityHashCode is not
+  * unique — two live sessions colliding on it would be served frames
+  * bound to the other's SparkContext); entries of stopped sessions are
+  * dropped on the next lookup. A per-JVM entry ([[jvm]]) is shared by
+  * every session: a count, a validation mark, a merge table, a piece
+  * table, a codebook or a sketch is a plain driver value that outlives
+  * the session that computed it.
+  *
+  * '''Fingerprint.''' [[tableFingerprint]] folds (path, length, mtime)
+  * of every physical file under a table — a metadata listing, no data
+  * read — and is its only definition (AnnIndex names its version dirs
+  * with it). A lookup lists once: a per-session entry folds the
+  * fingerprints of the dataset tables its build reads; a per-JVM entry
+  * lists its table path, unless the caller already holds a resolved
+  * fingerprint and passes it.
+  *
+  * '''One live entry per key.''' The fingerprint VALIDATES the entry, it
+  * does not key it: a lookup whose fingerprint matches serves; otherwise
+  * the stale value is released (frames unpersisted), the family's build
+  * counter is bumped, the value is built and stored. An in-session
+  * append or rewrite therefore rebuilds instead of serving stale data,
+  * and a table that changes every micro-batch still holds one entry.
+  *
+  * '''Re-entrancy.''' The object monitor is held across a build and is
+  * re-entrant, because builds nest (trainMerges → bpeVocab → resolve →
+  * the count entry; thGroups → th).
+  *
+  * '''Counters.''' One registry of per-family build counters
+  * ([[counter]], [[buildsOf]], [[totalBuilds]]) — Bench folds the total
+  * into its cold/warm attribution, specs prove build-once with it.
+  *
+  * '''Eviction.''' [[evictDataset]] is the maintenance hook for chain
+  * compaction, which changes an artifact's file layout without changing
+  * the source fingerprint: it drops the dataset dir's per-session entries
+  * (they may hold readers over the swept segments) and the one per-JVM
+  * validation mark of the compacted family; values of one table's
+  * content are keyed by the table path and survive it. [[reset]] drops
+  * everything: the "fresh JVM" for specs.
   *
   * Memory: frames persist MEMORY_AND_DISK (spill, never OOM) and are
   * deliberately NOT CacheBag-tracked — CacheBag releases per query and
-  * the whole point is cross-query reuse. Entries of stopped sessions are
-  * evicted on the next build; a live session's entries are bounded by
-  * (#datasets × #families) narrow frames, each O(corpus ids), not
-  * O(corpus text).
+  * the whole point is cross-query reuse.
   */
 object SessionMemo {
-  private final case class Entry(session: SparkSession, fp: Long,
-      frames: Seq[DataFrame])
-  private val cache = scala.collection.mutable.HashMap.empty[String, Entry]
+  private final case class Key(scope: String, dataset: String, family: String,
+      params: String)
+  private final case class Entry(session: Option[SparkSession], fp: Long,
+      value: Any, release: () => Unit)
+  private val entries = scala.collection.mutable.HashMap.empty[Key, Entry]
 
-  /** Per-family build (memo miss) counters — Bench folds the sum into its
-    * cold/warm attribution so the one pass paying a build is flagged, and
-    * specs prove one-derivation-per-session with them.
-    */
-  private val buildCounters =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  private val builds = new ConcurrentHashMap[String, AtomicLong]()
 
-  private[graft] def buildsOf(family: String): Long = {
-    val c = buildCounters.get(family); if (c == null) 0L else c.get()
-  }
+  /** The build counter of `family` (created on first use). */
+  private[graft] def counter(family: String): AtomicLong =
+    builds.computeIfAbsent(family, _ => new AtomicLong(0))
+
+  private[graft] def buildsOf(family: String): Long = counter(family).get()
 
   private[graft] def totalBuilds(): Long = {
     var t = 0L
-    buildCounters.forEach((_, v) => t += v.get())
+    builds.forEach((_, v) => t += v.get())
     t
   }
 
-  /** Fetch (building if absent or stale) the memoized frames for
-    * (session, dataset, family). `tables` are the dataset-relative source
-    * tables the build reads — their combined physical fingerprint gates
-    * staleness. The lock is held across the build: builds are
-    * driver-cheap (plan construction + persist marking — no job runs
-    * until a consumer acts), and re-entrant families (a memo built from
-    * another memo) rely on the monitor's re-entrancy.
-    */
-  /** Stable per-session key segment: a UUID minted once per live session
-    * (identityHashCode is NOT unique — two live sessions colliding on it
-    * would be served frames bound to the other's SparkContext; ADVICE
-    * r12). Keyed weakly so a collected session doesn't pin the map entry.
-    */
+  /** Weakly keyed so a collected session doesn't pin its UUID. */
   private val sessionIds =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, String]())
@@ -81,141 +95,115 @@ object SessionMemo {
   private def sessionKey(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
+  /** Fingerprint of a table's physical files (absolute URI path, length,
+    * mtime of every file under it). It changes whenever the table's
+    * content does, so a same-cardinality rewrite at the same path
+    * rebuilds. Caveat: a rewrite that lands identically-named,
+    * identically-sized files within the filesystem's mtime granularity
+    * (1 s on some object stores) is indistinguishable by metadata alone —
+    * Spark writers' UUID part-file names make that practically
+    * unreachable, and a byte-identical rename-into-place would serve the
+    * (then still correct) value.
+    */
+  private[graft] def tableFingerprint(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toUri.getPath, f.getLen, f.getModificationTime))
+    }
+    // order-independent listing (FS iteration order is unspecified)
+    files.sortBy(_._1).foldLeft(1125899906842597L) { case (h, (n, len, mt)) =>
+      ((h * 31 + n.hashCode) * 31 + len) * 31 + mt
+    }
+  }
+
+  /** The one lookup: serve on a fingerprint match, else release the
+    * stale value, count, build and store.
+    */
+  private def lookup[V](owner: Option[SparkSession], dataset: String,
+      family: String, params: String, fp: Long, release: V => Unit)(
+      build: => V): V = synchronized {
+    // stopped sessions' persisted blocks are already gone with the
+    // context; drop the dangling entries
+    entries.filterInPlace((_, e) => e.session.forall(!_.sparkContext.isStopped))
+    val key = Key(owner.fold("jvm")(sessionKey), dataset, family, params)
+    entries.get(key) match {
+      case Some(e) if e.fp == fp => e.value.asInstanceOf[V]
+      case old =>
+        old.foreach { e => entries.remove(key); e.release() }
+        counter(family).incrementAndGet()
+        val v = build
+        entries.update(key, Entry(owner, fp, v, () => release(v)))
+        v
+    }
+  }
+
+  private def datasetFingerprint(s: SparkSession, d: String,
+      tables: Seq[String]): Long =
+    tables.foldLeft(0L)((h, t) => h * 1000003L + tableFingerprint(s, s"$d/$t"))
+
+  /** A per-session value of dataset `d`: `tables` are the dataset-relative
+    * source tables the build reads.
+    */
+  private[graft] def session[V](s: SparkSession, d: String, family: String,
+      tables: Seq[String])(build: => V): V =
+    lookup[V](Some(s), d, family, "", datasetFingerprint(s, d, tables), _ => ())(build)
+
+  /** Per-session frames, persisted and materialized at build. Eager
+    * (one count job per build, once per session): left lazy, consumers
+    * that touch the frame only through BroadcastExchange collects and
+    * shuffle-exchange subtrees re-compute the cached plan on EVERY serve
+    * instead of populating the block store (measured r13: q_dedup_contain
+    * re-ran the thg groupBy ~7x per run). A frame the BUILDER already
+    * persisted is trusted as materialized (martTable must count before
+    * unpersisting its build-scoped input).
+    */
   private[graft] def frames(s: SparkSession, d: String, family: String,
-      tables: Seq[String])(build: => Seq[DataFrame]): Seq[DataFrame] = {
-    val key = s"${sessionKey(s)}#$d#$family"
-    val fp = tables.foldLeft(family.hashCode.toLong) { (h, t) =>
-      h * 1000003L + Similarity.tableFingerprint(s, s"$d/$t")
-    }
-    synchronized {
-      // stopped-session hygiene: their persisted blocks are already gone
-      // with the context; drop the dangling entries
-      cache.filterInPlace((_, e) => !e.session.sparkContext.isStopped)
-      cache.get(key) match {
-        // the UUID key makes a cross-session hit impossible; the `eq`
-        // check is belt-and-braces for the same-key-same-session claim
-        case Some(e) if e.fp == fp && (e.session eq s) => e.frames
-        case old =>
-          old.foreach(_.frames.foreach { f =>
-            try f.unpersist(blocking = false) catch { case _: Throwable => () }
-          })
-          buildCounters
-            .computeIfAbsent(family, _ => new java.util.concurrent.atomic.AtomicLong(0))
-            .incrementAndGet()
-          // Eagerly persist + materialize the cached blocks (one count
-          // job per build, once per session) — left lazy, consumers that
-          // touch the frame only through BroadcastExchange collects and
-          // shuffle-exchange subtrees re-compute the cached plan on
-          // EVERY serve instead of populating the block store (measured
-          // r13: q_dedup_contain re-ran the thg groupBy ~7x per run,
-          // ~55 task-sec of repeated work per pass, until some pass
-          // finally stored the blocks; with the eager count the first
-          // consumer reads warm InMemoryTableScan rows like every later
-          // one). The build is once per (session, dataset, family), so
-          // this prices no per-serve job — the expansion-guard contract.
-          // A frame the BUILDER already persisted is trusted as already
-          // materialized (martTable must count before unpersisting its
-          // build-scoped input) — re-persisting and re-counting it here
-          // ran one redundant count job per session and polluted Bench's
-          // cold-pass attribution (ADVICE r14).
-          val built = build.map { f =>
-            if (f.storageLevel == StorageLevel.NONE) {
-              val p = f.persist(StorageLevel.MEMORY_AND_DISK)
-              p.count(); p
-            } else f
-          }
-          cache.update(key, Entry(s, fp, built))
-          built
+      tables: Seq[String])(build: => Seq[DataFrame]): Seq[DataFrame] =
+    lookup[Seq[DataFrame]](Some(s), d, family, "", datasetFingerprint(s, d, tables),
+      _.foreach(f => try f.unpersist(blocking = false) catch { case _: Throwable => () })) {
+      build.map { f =>
+        if (f.storageLevel == StorageLevel.NONE) {
+          val p = f.persist(StorageLevel.MEMORY_AND_DISK)
+          p.count(); p
+        } else f
       }
     }
+
+  /** A per-JVM value keyed by `key` (a table path, or a dataset dir for
+    * values that vouch for its artifacts) and `params`; `fp` defaults to
+    * the fingerprint of the table at `key`.
+    */
+  private[graft] def jvm[V](s: SparkSession, key: String, family: String,
+      params: String = "", fp: Option[Long] = None)(build: => V): V =
+    lookup[V](None, key, family, params, fp.getOrElse(tableFingerprint(s, key)),
+      _ => ())(build)
+
+  /** Drop dataset dir `d`'s per-session entries and its per-JVM entry
+    * (`family`, `params`) — see the object doc.
+    */
+  private[graft] def evictDataset(d: String, family: String, params: String): Unit =
+    synchronized {
+      entries.filterInPlace { (k, e) =>
+        val drop = k.dataset == d &&
+          (k.scope != "jvm" || (k.family == family && k.params == params))
+        if (drop) e.release()
+        !drop
+      }
+    }
+
+  /** Live entries of `family` under `dataset`, all scopes (a spec hook). */
+  private[graft] def liveEntries(dataset: String, family: String): Int = synchronized {
+    entries.keysIterator.count(k => k.dataset == dataset && k.family == family)
   }
 
-  /** Drop every memoized entry (handles, frames, scalars) for `d` — the
-    * maintenance hook for operations that change an artifact's FILE
-    * layout without changing the source table's fingerprint (chain
-    * compaction, r13): a memoized chain reader would otherwise keep
-    * referencing pruned segment files for the rest of the session.
-    */
-  private[graft] def evictDataset(d: String): Unit = synchronized {
-    val tag = s"#$d#"
-    handles.filterInPlace((k, _) => !k.contains(tag))
-    scalars.filterInPlace((k, _) => !k.contains(tag))
-    cache.filterInPlace { (k, e) =>
-      val drop = k.contains(tag)
-      if (drop) e.frames.foreach { f =>
-        try f.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-      !drop
-    }
-  }
-
-  private final case class HandleEntry(session: SparkSession, fp: Long,
-      frame: DataFrame)
-  private val handles =
-    scala.collection.mutable.HashMap.empty[String, HandleEntry]
-
-  /** The unpersisted twin of [[frames]]: memoize a DataFrame HANDLE —
-    * typically a persisted-artifact chain reader — without occupying
-    * executor storage (r13, verdict r12 #5: the corpus-sized member
-    * mappings now live as fingerprint-keyed parquet families, so the
-    * memo's job shrinks to "resolve the artifact version once per
-    * session", a count + validation the first consumer pays; every later
-    * consumer reuses the resolved reader with only a metadata fingerprint
-    * check). Same staleness contract as [[frames]]; builds count into the
-    * same per-family counters.
-    */
-  private[graft] def handle(s: SparkSession, d: String, family: String,
-      tables: Seq[String])(build: => DataFrame): DataFrame = {
-    val key = s"${sessionKey(s)}#$d#$family"
-    val fp = tables.foldLeft(family.hashCode.toLong) { (h, t) =>
-      h * 1000003L + Similarity.tableFingerprint(s, s"$d/$t")
-    }
-    synchronized {
-      handles.filterInPlace((_, e) => !e.session.sparkContext.isStopped)
-      handles.get(key) match {
-        case Some(e) if e.fp == fp && (e.session eq s) => e.frame
-        case _ =>
-          buildCounters
-            .computeIfAbsent(family, _ => new java.util.concurrent.atomic.AtomicLong(0))
-            .incrementAndGet()
-          val f = build
-          handles.update(key, HandleEntry(s, fp, f))
-          f
-      }
-    }
-  }
-
-  private final case class ScalarEntry(session: SparkSession, fp: Long,
-      value: Long)
-  private val scalars =
-    scala.collection.mutable.HashMap.empty[String, ScalarEntry]
-
-  /** The scalar twin of [[frames]]: memoize one driver-side Long per
-    * (session, dataset, family), fingerprint-validated the same way.
-    * Used for pure-function-of-content aggregates a consumer needs per
-    * serve but must not price as a per-serve job (the expansion budget
-    * guard's Σ n_a·n_b — r13). Builds count into the same per-family
-    * counters, so Bench's cold attribution flags the one pass that paid.
-    */
-  private[graft] def scalar(s: SparkSession, d: String, family: String,
-      tables: Seq[String])(compute: => Long): Long = {
-    val key = s"${sessionKey(s)}#$d#$family"
-    val fp = tables.foldLeft(family.hashCode.toLong) { (h, t) =>
-      h * 1000003L + Similarity.tableFingerprint(s, s"$d/$t")
-    }
-    synchronized {
-      scalars.filterInPlace((_, e) => !e.session.sparkContext.isStopped)
-      scalars.get(key) match {
-        case Some(e) if e.fp == fp && (e.session eq s) => e.value
-        case _ =>
-          buildCounters
-            .computeIfAbsent(family, _ => new java.util.concurrent.atomic.AtomicLong(0))
-            .incrementAndGet()
-          val v = compute
-          scalars.update(key, ScalarEntry(s, fp, v))
-          v
-      }
-    }
+  /** Drop every entry of every scope. */
+  private[graft] def reset(): Unit = synchronized {
+    entries.values.foreach(_.release())
+    entries.clear()
   }
 }
 
@@ -240,7 +228,7 @@ object Members {
     // not a corpus md5 pass, and no corpus-sized frame occupies executor
     // storage for the session's life (verdict r12 #5). The memo keeps
     // only the resolved reader handle.
-    SessionMemo.handle(s, d, "thm", Seq("documents.parquet")) {
+    SessionMemo.session(s, d, "thm", Seq("documents.parquet")) {
       AnnIndex.docHashes(s, d)
     }
 
@@ -288,7 +276,7 @@ object Members {
     * already-materialized groups cache, memoized per session.
     */
   def thDistinct(s: SparkSession, d: String): Long =
-    SessionMemo.scalar(s, d, "thn", Seq("documents.parquet")) {
+    SessionMemo.session(s, d, "thn", Seq("documents.parquet")) {
       thGroups(s, d)._2.count()
     }
 
@@ -297,7 +285,7 @@ object Members {
     * over the already-materialized reps cache, memoized per session.
     */
   def ehDistinct(s: SparkSession, d: String): Long =
-    SessionMemo.scalar(s, d, "ehn", Seq("embeddings.parquet")) {
+    SessionMemo.session(s, d, "ehn", Seq("embeddings.parquet")) {
       eh(s, d)._2.count()
     }
 
@@ -319,7 +307,7 @@ object Members {
     // distinct vectors), which is scan work, not hash work. Group
     // structure (distinct-vector-sized) and the narrow member mapping
     // stay session persists as before.
-    val hashes = SessionMemo.handle(s, d, "ehm", Seq("embeddings.parquet")) {
+    val hashes = SessionMemo.session(s, d, "ehm", Seq("embeddings.parquet")) {
       AnnIndex.vecHashes(s, d)
     }
     val fs = SessionMemo.frames(s, d, "ehg", Seq("embeddings.parquet")) {

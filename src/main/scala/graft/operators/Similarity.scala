@@ -818,59 +818,26 @@ object Similarity {
     * embed the codebook as a local relation, so repeated invocations —
     * and every re-execution of a returned DataFrame — skip the Lloyd
     * training jobs entirely.
-    */
-  private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Long, Seq[Double], Double)]]()
-
-  /** Fingerprint of a table's physical files (absolute URI path, length,
-    * mtime of every file under it). Listing is a pure namenode metadata
-    * op — no data read — and it changes whenever the table's content
-    * does, so a same-cardinality rewrite at the same path retrains
-    * instead of serving stale centroids. Caveat: a rewrite that lands
-    * identically-named, identically-sized files within the filesystem's
-    * mtime granularity (1 s on some object stores) is indistinguishable
-    * by metadata alone — Spark writers' UUID part-file names make that
-    * practically unreachable, but a byte-identical rename-into-place
-    * would serve the (then still correct) memo.
-    */
-  private[graft] def tableFingerprint(s: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toUri.getPath, f.getLen, f.getModificationTime))
-    }
-    // order-independent listing (FS iteration order is unspecified)
-    files.sortBy(_._1).foldLeft(1125899906842597L) { case (h, (n, len, mt)) =>
-      ((h * 31 + n.hashCode) * 31 + len) * 31 + mt
-    }
-  }
-
-  /** Memoized driver-local codebook rows (c_id, centroid vector, norm) —
+    *
+    * Memoized driver-local codebook rows (c_id, centroid vector, norm) —
     * the serve-side artifact of the fit/serve split. Kept as a plain
     * array so the IVF assignment can embed it in a narrow codegen kernel
     * (no join) while specs/the query side can still lift it into a tiny
-    * DataFrame via [[codebookFor]].
+    * DataFrame via [[codebookFor]]. A per-JVM [[SessionMemo]] entry per
+    * embeddings table, validated by its fingerprint: any rewrite of the
+    * table (even same-cardinality, same-path) retrains instead of
+    * serving stale centroids.
     */
   private[graft] def codebookRows(s: SparkSession, d: String,
       e: DataFrame): Array[(Long, Seq[Double], Double)] = {
-    val n = math.max(AnnIndex.tableCount(s, s"$d/embeddings.parquet"), 1L) // r16: memoized
-    val fp = tableFingerprint(s, s"$d/embeddings.parquet")
-    codebookRowsAt(s, d, e, n, fp)
+    val t = s"$d/embeddings.parquet"
+    val fp = SessionMemo.tableFingerprint(s, t)
+    codebookRowsAt(s, d, e, math.max(AnnIndex.tableCount(s, t, fp), 1L), fp)
   }
 
   private[graft] def codebookRowsAt(s: SparkSession, d: String, e: DataFrame,
-      n: Long, fp: Long): Array[(Long, Seq[Double], Double)] = {
-    // cache key = path + row count + physical-file fingerprint: any
-    // rewrite of the table (even same-cardinality, same-path) changes
-    // the file listing and retrains instead of serving stale centroids.
-    // bounded memo: a long-lived session cycling many corpora keeps at
-    // most 32 codebooks (~0.5 MB each) — evict wholesale, it's a memo of
-    // recomputable values, not state
-    if (codebookCache.size() > 32) codebookCache.clear()
-    codebookCache.computeIfAbsent(s"$d#$n#$fp", _ =>
+      n: Long, fp: Long): Array[(Long, Seq[Double], Double)] =
+    SessionMemo.jvm(s, s"$d/embeddings.parquet", "ivf.codebook", fp = Some(fp)) {
       // L2: the persisted index (survives the JVM — see AnnIndex); only
       // on a disk miss does Lloyd actually run (counted, for the specs)
       AnnIndex.loadIvfCodebook(s, AnnIndex.versionDir(s, d, n, fp)).getOrElse {
@@ -885,13 +852,8 @@ object Similarity {
         kmeansCodebook(e, sampleStep = math.max(1L, n / sampleTarget), k = k, iters = 3)
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-      })
-  }
-
-  /** Drop the in-JVM fit memos — spec hook proving the persisted index
-    * serves across "session restarts" (a cleared memo is the restart).
-    */
-  private[graft] def clearMemos(): Unit = { codebookCache.clear(); pqCache.clear() }
+      }
+    }
 
   private[graft] def codebookFor(s: SparkSession, d: String, e: DataFrame): DataFrame =
     s.createDataFrame(codebookRows(s, d, e).toIndexedSeq).toDF("c_id", "cv", "cnrm")
@@ -1018,26 +980,15 @@ object Similarity {
     flat
   }
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Int)]()
-
-  /** Memoized flat PQ codebook + trained dim, keyed like the IVF memo
-    * (path + row count + physical-file fingerprint — a same-path rewrite
-    * retrains, see [[tableFingerprint]]). The training sample is the same
-    * deterministic modulo sample the IVF fit uses, collected once
-    * (≤~4096 rows — bounded regardless of corpus size).
+  /** Memoized flat PQ codebook + trained dim of the embeddings table at
+    * (n, fp), a [[SessionMemo]] entry like the IVF codebook (a same-path
+    * rewrite retrains). The training sample is the same deterministic
+    * modulo sample the IVF fit uses, collected once (≤~4096 rows —
+    * bounded regardless of corpus size).
     */
-  private[graft] def pqCodebook(s: SparkSession, d: String,
-      e: DataFrame): (Array[Double], Int) = {
-    val n = math.max(AnnIndex.tableCount(s, s"$d/embeddings.parquet"), 1L) // r16: memoized
-    val fp = tableFingerprint(s, s"$d/embeddings.parquet")
-    pqCodebookAt(s, d, e, n, fp)
-  }
-
   private[graft] def pqCodebookAt(s: SparkSession, d: String, e: DataFrame,
-      n: Long, fp: Long): (Array[Double], Int) = {
-    if (pqCache.size() > 32) pqCache.clear()
-    pqCache.computeIfAbsent(s"$d#$n#$fp", _ =>
+      n: Long, fp: Long): (Array[Double], Int) =
+    SessionMemo.jvm(s, s"$d/embeddings.parquet", "pq.codebook", fp = Some(fp)) {
       AnnIndex.loadPqCodebook(s, AnnIndex.versionDir(s, d, n, fp)).getOrElse {
         AnnIndex.pqFits.incrementAndGet()
         val step = math.max(1L, n / 4096L)
@@ -1047,8 +998,8 @@ object Similarity {
         val dim = sample.head.length
         require(dim % pqM == 0, s"PQ needs dim % $pqM == 0, got dim=$dim")
         (pqTrainedCodebook(sample, dim, pqM, pqKsub, iters = 8), dim)
-      })
-  }
+      }
+    }
 
   /** G. Product-quantization ANN with asymmetric distance (Jégou et al.
     * 2011) — the memory-bound 100 TB serve path the exact scan can't

@@ -173,28 +173,18 @@ object Unigram {
       best => element_at(best, -1))
   }
 
-  /** In-session model memo, validated by the corpus content fingerprint
-    * (the [[Bpe.trainMerges]] discipline: an in-place rewrite retrains;
-    * the map holds one live model per dataset, not per content version).
-    */
-  private val pieceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Seq[Piece])]()
-  private[graft] def resetMemo(): Unit = pieceCache.clear()
-
   /** Count of real EM trainings (memo misses) — Bench folds this into
     * its cold/warm fit attribution like the AnnIndex/Bpe counters.
     */
-  private[graft] val unigramTrains = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val unigramTrains = SessionMemo.counter("unigram")
 
-  private[graft] def trainPieces(s: SparkSession, d: String): Seq[Piece] = {
-    val fp = Similarity.tableFingerprint(s, s"$d/documents.parquet")
-    val hit = pieceCache.get(d)
-    if (hit != null && hit._1 == fp) return hit._2
-    unigramTrains.incrementAndGet()
-    val result = trainFromFreq(AnnIndex.bpeVocab(s, d)._1)
-    pieceCache.put(d, (fp, result))
-    result
-  }
+  /** The piece table, a per-JVM [[SessionMemo]] entry per corpus
+    * validated by its fingerprint (the [[Bpe.trainMerges]] discipline).
+    */
+  private[graft] def trainPieces(s: SparkSession, d: String): Seq[Piece] =
+    SessionMemo.jvm(s, s"$d/documents.parquet", "unigram") {
+      trainFromFreq(AnnIndex.bpeVocab(s, d)._1)
+    }
 
   /** The EM loop over a (w, freq) vocabulary table: seed, then
     * [[keepSchedule]].length Viterbi-EM rounds, each = ONE

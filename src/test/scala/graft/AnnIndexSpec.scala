@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{AnnIndex, Dedup, Similarity}
+import graft.operators.{AnnIndex, Dedup, SessionMemo, Similarity}
 
 /** The persisted fit/serve split (r7): the fitted ANN index (IVF codebook +
   * cell-partitioned corpus, PQ codebook + packed codes) is written as
@@ -63,7 +63,7 @@ class AnnIndexSpec extends SparkSpec {
       // "restart": drop the in-JVM memos; a second serve must LOAD, not
       // retrain, and produce the identical result (LSH has no memo — its
       // guard is the completion marker itself)
-      Similarity.clearMemos()
+      SessionMemo.reset()
       val ivfOut2 = Similarity.annIvf.run(spark, tmp).collect().map(_.toSeq).toSeq
       val pqOut2 = Similarity.annPq.run(spark, tmp).collect().map(_.toSeq).toSeq
       val lshOut2 = Similarity.annLsh.run(spark, tmp).collect().map(_.toSeq).toSeq
@@ -78,7 +78,7 @@ class AnnIndexSpec extends SparkSpec {
       // content): the fingerprint changes, both families refit, and the
       // stale index version is pruned
       writeVecs(tmp, 1)
-      Similarity.clearMemos()
+      SessionMemo.reset()
       val ivfOut3 = Similarity.annIvf.run(spark, tmp).collect().map(_.toSeq).toSeq
       val pqOut3 = Similarity.annPq.run(spark, tmp).collect().map(_.toSeq).toSeq
       Similarity.annLsh.run(spark, tmp).collect()
@@ -121,7 +121,7 @@ class AnnIndexSpec extends SparkSpec {
       // 64/320 = 0.2 ≤ refitFraction, so the index must APPEND — frozen
       // codebooks, delta-only encode — not refit.
       appendVecs(tmp, 256 until 320)
-      Similarity.clearMemos()
+      SessionMemo.reset()
       Similarity.annIvf.run(spark, tmp).collect()
       val lshOut = Similarity.annLsh.run(spark, tmp)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -161,7 +161,7 @@ class AnnIndexSpec extends SparkSpec {
           Array.tabulate(8)(j => (((i * 7 + j * 13) % 1031) - 515).toFloat)))
         .toDF("vec_id", "embedding")
         .repartition(1).write.mode("append").parquet(s"$tmp/embeddings.parquet")
-      Similarity.clearMemos()
+      SessionMemo.reset()
       Similarity.annIvf.run(spark, tmp).collect()
       Similarity.annPq.run(spark, tmp).collect()
       Similarity.annLsh.run(spark, tmp).collect()
@@ -178,7 +178,7 @@ class AnnIndexSpec extends SparkSpec {
       // final batch pushes cumulative appended mass past the drift
       // threshold: (480-256)/480 = 0.47 > 0.3 ⇒ full refit, chain collapses
       appendVecs(tmp, 344 until 480)
-      Similarity.clearMemos()
+      SessionMemo.reset()
       Similarity.annIvf.run(spark, tmp).collect()
       Similarity.annPq.run(spark, tmp).collect()
       Similarity.annLsh.run(spark, tmp).collect()
@@ -237,7 +237,7 @@ class AnnIndexSpec extends SparkSpec {
       val slotDir = new java.io.File(s"$freshTip/lex_tf").listFiles()
         .find(_.getName.startsWith("tslot=")).get
       rmTree(slotDir.toString)
-      AnnIndex.resetValidation()
+      SessionMemo.reset()
       intercept[IllegalStateException] {
         graft.operators.TextAnalysis.bm25.run(spark, tmp).collect()
       }
@@ -823,7 +823,7 @@ class AnnIndexSpec extends SparkSpec {
       // FIRST in the new version dir — its prune runs before IVF has any
       // presence there
       wv(256 until 288, "append")
-      Similarity.clearMemos()
+      SessionMemo.reset()
       Similarity.dedupEmbed.run(spark, tmp).collect()
       val tableDir = new java.io.File(idxRoot).listFiles().head
       assert(tableDir.listFiles().exists(v =>
@@ -945,7 +945,7 @@ class AnnIndexSpec extends SparkSpec {
       assert(spark.read.parquet(codesDir.toString).columns.toSet ==
         Set("eh", "code", "nrm", "cluster"), "code rows must not carry raw vectors")
       // restart: a second serve loads — bit-identical, no re-encode
-      Similarity.clearMemos()
+      SessionMemo.reset()
       val out2 = Similarity.annIvfPq.run(spark, tmp).collect().map(_.toSeq).toSeq
       assert(AnnIndex.ivfpqEncodes.get() == e0 + 1, "restart re-encoded instead of loading")
       assert(out2 == out1, "results diverged after serving from disk")
@@ -958,7 +958,7 @@ class AnnIndexSpec extends SparkSpec {
           Array.tabulate(8)(j => (((i * 7 + j * 13) % 1031) - 515).toFloat)))
         .toDF("vec_id", "embedding")
         .repartition(1).write.mode("append").parquet(s"$tmp/embeddings.parquet")
-      Similarity.clearMemos()
+      SessionMemo.reset()
       Similarity.annIvfPq.run(spark, tmp).collect()
       assert(AnnIndex.ivfpqEncodes.get() == e0 + 1, "append must not re-encode the corpus")
       assert(AnnIndex.ivfpqAppends.get() == a0 + 1, "append must take the append path")
@@ -991,8 +991,7 @@ class AnnIndexSpec extends SparkSpec {
       spark.createDataFrame(java.util.Arrays.asList(half: _*), schema)
         .write.mode("overwrite").parquet(s"$vd/pq2_codes")
       // fresh JVM-side state: memos and the validation cache both cleared
-      Similarity.clearMemos()
-      AnnIndex.resetValidation()
+      SessionMemo.reset()
       val err = intercept[Exception] {
         Similarity.annPq.run(spark, tmp).collect()
       }
@@ -1298,10 +1297,10 @@ class AnnIndexSpec extends SparkSpec {
       docsDf(base).repartition(1).write.mode("overwrite")
         .parquet(s"$tmp/documents.parquet")
       val (e0, a0) = (AnnIndex.vocabEncodes.get(), AnnIndex.vocabAppends.get())
-      Bpe.resetMemo()
+      SessionMemo.reset()
       val m1 = Bpe.trainMerges(spark, tmp, 8)
       assert(AnnIndex.vocabEncodes.get() == e0 + 1)
-      Bpe.resetMemo() // "session restart": the in-JVM merge memo is gone
+      SessionMemo.reset() // "session restart": the in-JVM merge memo is gone
       val m1b = Bpe.trainMerges(spark, tmp, 8)
       assert(AnnIndex.vocabEncodes.get() == e0 + 1 &&
         AnnIndex.vocabAppends.get() == a0,
@@ -1313,7 +1312,7 @@ class AnnIndexSpec extends SparkSpec {
         i -> s"low lower appended body extra$i common${i % 4}")
       docsDf(delta).repartition(1).write.mode("append")
         .parquet(s"$tmp/documents.parquet")
-      Bpe.resetMemo()
+      SessionMemo.reset()
       val m2 = Bpe.trainMerges(spark, tmp, 8)
       assert(AnnIndex.vocabAppends.get() == a0 + 1 &&
         AnnIndex.vocabEncodes.get() == e0 + 1,
@@ -1323,7 +1322,7 @@ class AnnIndexSpec extends SparkSpec {
       // exact mergeability: the appended vocabulary and the merge table
       // are bit-identical to a from-scratch build of the grown corpus
       spark.conf.set("graft.ann.indexRoot", freshRoot)
-      Bpe.resetMemo()
+      SessionMemo.reset()
       val m2fresh = Bpe.trainMerges(spark, tmp, 8)
       assert(AnnIndex.vocabEncodes.get() == e0 + 2)
       assert(m2 == m2fresh, "appended merge table diverges from fresh build")
@@ -1338,8 +1337,7 @@ class AnnIndexSpec extends SparkSpec {
         .find(d => new java.io.File(d, "_GRAFT_OK_BPE").exists()).get
       Seq(("zzz_bogus", 999L)).toDF("w", "freq")
         .write.mode("append").parquet(s"$tip/bpe_wf")
-      AnnIndex.resetValidation()
-      Bpe.resetMemo()
+      SessionMemo.reset()
       intercept[IllegalStateException] { Bpe.trainMerges(spark, tmp, 8) }
     } finally {
       spark.conf.unset("graft.ann.indexRoot")
@@ -1362,7 +1360,7 @@ class AnnIndexSpec extends SparkSpec {
       // (the lagging LSH2's keep-forever rule, the r11 orphaning fix) --
       // which is exactly the accumulation the sweep exists to close.
       writeVecs(tmp, 3, n = 64)
-      Similarity.clearMemos()
+      SessionMemo.reset()
       AnnIndex.vecHashes(spark, tmp).count()
       assert(tableDir.listFiles().length == 2,
         "build-time prune must keep the lagging family's dir")

@@ -67,7 +67,6 @@ class GuardsSpec extends SparkSpec {
       vecs.toDF("vec_id", "embedding")
         .repartition(1).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
       spark.conf.set("graft.expand.maxRows", "100")
-      Similarity.clearMemos()
       val e = intercept[IllegalStateException] {
         Similarity.dedupEmbed.run(spark, tmp).collect()
       }
@@ -94,7 +93,6 @@ class GuardsSpec extends SparkSpec {
       // raised budget: the fit completes and serves the full pair set
       // (all C(40,2) near-parallel pairs qualify at the dedup threshold)
       spark.conf.set("graft.expand.maxRows", "2000000000")
-      Similarity.clearMemos()
       assert(Similarity.dedupEmbed.run(spark, tmp).count() == 780L)
     } finally {
       spark.conf.unset("graft.expand.maxRows")
@@ -117,7 +115,6 @@ class GuardsSpec extends SparkSpec {
     try {
       vecs(0 until 40).repartition(1)
         .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-      Similarity.clearMemos()
       val (e0, a0) = (graft.operators.AnnIndex.epEncodes.get(),
         graft.operators.AnnIndex.epAppends.get())
       Similarity.dedupEmbed.run(spark, tmp).count() // full fit, default budget
@@ -125,7 +122,6 @@ class GuardsSpec extends SparkSpec {
       vecs(40 until 41).repartition(1)
         .write.mode("append").parquet(s"$tmp/embeddings.parquet")
       spark.conf.set("graft.expand.maxRows", "1000")
-      Similarity.clearMemos()
       val out = Similarity.dedupEmbed.run(spark, tmp).count()
       assert(graft.operators.AnnIndex.epAppends.get() == a0 + 1,
         "the delta-sized append must pass the new-endpoint guard")
@@ -153,7 +149,6 @@ class GuardsSpec extends SparkSpec {
       (fam(0, 0 until 20) ++ fam(4, 20 until 40)).toDF("vec_id", "embedding")
         .repartition(1).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
       spark.conf.set("graft.expand.maxRows", "100")
-      Similarity.clearMemos()
       // the ε families refuse by design on this budget…
       intercept[graft.QuadraticRefusal] {
         Similarity.dedupEmbed.run(spark, tmp).collect()

@@ -1673,12 +1673,12 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("bloom membership: build-once, no false negatives, bounded false positives") {
-    val before = Dedup.bloomBuilds.get()
+    val before = SessionMemo.buildsOf("bloom")
     val out = Dedup.bloomDedup.run(spark, sfDir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("in_corpus")).toMap
-    val mid = Dedup.bloomBuilds.get()
+    val mid = SessionMemo.buildsOf("bloom")
     Dedup.bloomDedup.run(spark, sfDir).count()
-    assert(Dedup.bloomBuilds.get() == mid, "second run must serve the memoized sketch")
+    assert(SessionMemo.buildsOf("bloom") == mid, "second run must serve the memoized sketch")
     assert(mid - before <= 1)
     // exactness: verdicts equal the registered incremental op's in_corpus
     // (same split, same prefix key, sketch-free semi-join plan)

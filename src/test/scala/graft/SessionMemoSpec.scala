@@ -78,15 +78,15 @@ class SessionMemoSpec extends SparkSpec {
       .repartition(1).write.mode("overwrite").parquet(s"$tmp/customer.parquet")
     writeOrders(20)
     assert(graft.operators.EltOps.foundOnTry.run(spark, tmp).count() == 20)
-    val fb = graft.operators.EltOps.fotBuilds.get()
+    val fb = SessionMemo.buildsOf("fot")
     // unchanged tables → the memo serves, no rebuild
     assert(graft.operators.EltOps.foundOnTry.run(spark, tmp).count() == 20)
-    assert(graft.operators.EltOps.fotBuilds.get() == fb)
+    assert(SessionMemo.buildsOf("fot") == fb)
     // in-place rewrite of orders → rebuild, provenance reflects new rows
     writeOrders(8)
     assert(graft.operators.EltOps.foundOnTry.run(spark, tmp).count() == 8,
       "a rewritten orders table must rebuild the provenance memo")
-    assert(graft.operators.EltOps.fotBuilds.get() == fb + 1)
+    assert(SessionMemo.buildsOf("fot") == fb + 1)
   }
 
   test("vec eh memo: one hash pass serves the whole ANN family; groups match a direct collapse") {
@@ -138,7 +138,6 @@ class SessionMemoSpec extends SparkSpec {
       // rewrite → fingerprint differs → every query-side memo rebuilds
       // (a stale probe assignment would silently serve the wrong cells)
       write(5)
-      Similarity.clearMemos()
       Similarity.annLsh.run(spark, tmp).collect()
       Similarity.annIvf.run(spark, tmp).collect()
       Similarity.annPq.run(spark, tmp).collect()
@@ -173,7 +172,7 @@ class SessionMemoSpec extends SparkSpec {
         .where(col("th") =!= col("th2") || col("lang") =!= col("l2")).count() == 0)
       // restart (validation cache cleared): a pure artifact load — no
       // corpus hash pass, the verdict-r12 #5 contract
-      AnnIndex.resetValidation()
+      SessionMemo.reset()
       assert(AnnIndex.docHashes(spark, tmp).count() == 20)
       assert(AnnIndex.thmEncodes.get() == e0 + 1 &&
         AnnIndex.thmAppends.get() == a0,
@@ -246,7 +245,7 @@ class SessionMemoSpec extends SparkSpec {
       assert(members.count() == 16)
       assert(reps.count() == 5, "one rep per distinct vector")
       assert(AnnIndex.ehmEncodes.get() == e0 + 1)
-      AnnIndex.resetValidation()
+      SessionMemo.reset()
       assert(AnnIndex.vecHashes(spark, tmp).count() == 16)
       assert(AnnIndex.ehmEncodes.get() == e0 + 1 &&
         AnnIndex.ehmAppends.get() == a0,

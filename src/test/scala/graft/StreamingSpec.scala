@@ -461,7 +461,7 @@ class StreamingSpec extends SparkSpec {
 
   test("continuous vocabulary: micro-batches delta-append; merges equal a fresh build") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.{AnnIndex, Bpe}
+    import graft.operators.{AnnIndex, Bpe, SessionMemo}
     val corpus = java.nio.file.Files.createTempDirectory("graftcv").toString
     val idxRoot = java.nio.file.Files.createTempDirectory("graftcvroot").toString
     val freshRoot = java.nio.file.Files.createTempDirectory("graftcvroot2").toString
@@ -486,10 +486,10 @@ class StreamingSpec extends SparkSpec {
         "each later micro-batch must delta-append, never re-tokenize")
       // the streamed vocabulary trains the same tokenizer as a
       // from-scratch build of the landed table
-      Bpe.resetMemo()
+      SessionMemo.reset()
       val streamed = Bpe.trainMerges(spark, corpus, 8)
       spark.conf.set("graft.ann.indexRoot", freshRoot)
-      Bpe.resetMemo()
+      SessionMemo.reset()
       val fresh = Bpe.trainMerges(spark, corpus, 8)
       assert(streamed == fresh, "streamed vocabulary diverges from fresh build")
     } finally {
