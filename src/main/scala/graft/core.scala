@@ -69,12 +69,28 @@ object GraftSession {
   }
 }
 
-/** Parquet table loaders. Schema-on-read; column pruning + predicate
-  * pushdown reach the scan because we never materialize intermediates.
+/** Parquet table loaders. Column pruning + predicate pushdown reach the
+  * scan because we never materialize intermediates. Every read goes
+  * through [[read]], which passes the table's schema explicitly: it is
+  * resolved once per session and table content (the `schema.<table>`
+  * family of [[graft.operators.SessionMemo]]), so only the first read of
+  * a table in a session runs Spark's footer-reading inference job, and
+  * an in-place rewrite or append infers again.
   */
 object T {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** A parquet read with the session-resolved schema. A path that is not
+    * there as written (missing, or a glob) is left to Spark's own
+    * inference and error reporting.
+    */
+  def read(s: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
+      s.read.schema(graft.operators.SessionMemo.schema(s, path)).parquet(path)
+    else s.read.parquet(path)
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")

@@ -294,24 +294,16 @@ object AnnIndex {
   }
 
   /** Physical file inventory of the table — the append detector's unit.
-    * Same (path, length, mtime) triples [[SessionMemo.tableFingerprint]]
-    * folds, kept unfolded so set-subset (pure append) is decidable.
+    * The data files of [[SessionMemo.tableFiles]], kept unfolded so
+    * set-subset (pure append) is decidable.
     */
-  private def physFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val p = new Path(path)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
+  private def physFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] =
+    SessionMemo.tableFiles(s, path).filter { case (p, _, _) =>
+      val name = p.substring(p.lastIndexOf('/') + 1)
       // data files only: an append rewrites _SUCCESS (fresh mtime), which
       // would make every append look like a modification of the base
-      if (!name.startsWith("_") && !name.startsWith("."))
-        out += ((st.getPath.toUri.getPath, st.getLen, st.getModificationTime))
+      !name.startsWith("_") && !name.startsWith(".")
     }
-    out.sortBy(_._1).toSeq
-  }
 
   private def writeFileList(s: SparkSession, vd: String,
       files: Seq[(String, Long, Long)]): Unit =

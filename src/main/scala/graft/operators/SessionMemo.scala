@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.T
@@ -15,18 +16,25 @@ import graft.functions.Vectors
   * The reference pipeline lands each staging/intermediate model ONCE per
   * run and every downstream model reads it (dbt's materialized staging
   * layer). graft mirrors that with memos of derived values — member
-  * mappings, source-table row counts, artifact validation marks, trained
-  * tokenizers, ANN codebooks, membership sketches — and every one of them
-  * looks up, validates, counts and evicts through this object.
+  * mappings, source-table schemas and row counts, artifact validation
+  * marks, trained tokenizers, ANN codebooks, membership sketches — and
+  * every one of them looks up, validates, counts and evicts through this
+  * object.
   *
   * '''Key and value.''' An entry is keyed by (scope, dataset or table
   * path, family + params) and holds (fingerprint, value).
   *
-  * '''Scopes.''' A per-session entry ([[session]], [[frames]]) is keyed
-  * by a UUID minted once per live SparkSession (identityHashCode is not
-  * unique — two live sessions colliding on it would be served frames
-  * bound to the other's SparkContext); entries of stopped sessions are
-  * dropped on the next lookup. A per-JVM entry ([[jvm]]) is shared by
+  * '''Scopes.''' A per-session entry ([[session]], [[frames]],
+  * [[schema]]) is keyed by a UUID minted once per live SparkSession
+  * (identityHashCode is not unique — two live sessions colliding on it
+  * would be served frames bound to the other's SparkContext); entries of
+  * stopped sessions are dropped on the next lookup. A source table's
+  * schema (`schema.<table>`, resolved by [[graft.T.read]]) is per
+  * session, not per JVM, for two reasons: parquet inference reads session
+  * conf (`spark.sql.legacy.parquet.nanosAsLong` decides whether
+  * `events.ts` reads as long or timestamp), and a fresh session's
+  * pipeline run stays honestly cold — like dbt, which resolves its
+  * sources once per run. A per-JVM entry ([[jvm]]) is shared by
   * every session: a count, a validation mark, a merge table, a piece
   * table, a codebook or a sketch is a plain driver value that outlives
   * the session that computed it.
@@ -52,7 +60,9 @@ import graft.functions.Vectors
   *
   * '''Counters.''' One registry of per-family build counters
   * ([[counter]], [[buildsOf]], [[totalBuilds]]) — Bench folds the total
-  * into its cold/warm attribution, specs prove build-once with it.
+  * into its cold/warm attribution (a timing that first reads a table in
+  * its session counts a `schema.<table>` build and is flagged cold),
+  * specs prove build-once with it.
   *
   * '''Eviction.''' [[evictDataset]] is the maintenance hook for chain
   * compaction, which changes an artifact's file layout without changing
@@ -95,30 +105,37 @@ object SessionMemo {
   private def sessionKey(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
-  /** Fingerprint of a table's physical files (absolute URI path, length,
-    * mtime of every file under it). It changes whenever the table's
-    * content does, so a same-cardinality rewrite at the same path
-    * rebuilds. Caveat: a rewrite that lands identically-named,
-    * identically-sized files within the filesystem's mtime granularity
-    * (1 s on some object stores) is indistinguishable by metadata alone —
-    * Spark writers' UUID part-file names make that practically
-    * unreachable, and a byte-identical rename-into-place would serve the
-    * (then still correct) value.
+  /** Every file under a table: (absolute URI path, length, mtime),
+    * sorted by path (FS iteration order is unspecified). Walks with
+    * `listStatus`, not `listFiles`: a `LocatedFileStatus` copies each
+    * file's permission and owner, which the local filesystem loads by
+    * forking `ls -ld` per file when the native Hadoop library is absent
+    * (~4 ms a file against ~0.1 ms, 22 local files on a 4-vCPU host;
+    * local I/O stays fork-free, see [[graft.NoForkRawLocalFileSystem]]).
     */
-  private[graft] def tableFingerprint(s: SparkSession, path: String): Long = {
+  private[graft] def tableFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toUri.getPath, f.getLen, f.getModificationTime))
-    }
-    // order-independent listing (FS iteration order is unspecified)
-    files.sortBy(_._1).foldLeft(1125899906842597L) { case (h, (n, len, mt)) =>
+    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk) else Seq(st)
+    walk(fs.getFileStatus(p))
+      .map(f => (f.getPath.toUri.getPath, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
+  }
+
+  /** Fingerprint of a table's physical files ([[tableFiles]]). It
+    * changes whenever the table's content does, so a same-cardinality
+    * rewrite at the same path rebuilds. Caveat: a rewrite that lands
+    * identically-named, identically-sized files within the filesystem's
+    * mtime granularity (1 s on some object stores) is indistinguishable
+    * by metadata alone — Spark writers' UUID part-file names make that
+    * practically unreachable, and a byte-identical rename-into-place
+    * would serve the (then still correct) value.
+    */
+  private[graft] def tableFingerprint(s: SparkSession, path: String): Long =
+    tableFiles(s, path).foldLeft(1125899906842597L) { case (h, (n, len, mt)) =>
       ((h * 31 + n.hashCode) * 31 + len) * 31 + mt
     }
-  }
 
   /** The one lookup: serve on a fingerprint match, else release the
     * stale value, count, build and store.
@@ -172,6 +189,15 @@ object SessionMemo {
         } else f
       }
     }
+
+  /** The schema of the parquet table at `path` (family `schema.<table>`),
+    * inferred by one footer-reading job per (session, table content) —
+    * see the object doc for why the scope is per session.
+    */
+  private[graft] def schema(s: SparkSession, path: String): StructType =
+    lookup[StructType](Some(s), path,
+      "schema." + new org.apache.hadoop.fs.Path(path).getName.stripSuffix(".parquet"),
+      "", tableFingerprint(s, path), _ => ())(s.read.parquet(path).schema)
 
   /** A per-JVM value keyed by `key` (a table path, or a dataset dir for
     * values that vouch for its artifacts) and `params`; `fp` defaults to

@@ -20,8 +20,11 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** Parquet is self-describing: its schema is resolved once per session
+    * and table content ([[graft.T.read]]), not inferred on every read.
+    */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.T.read(spark, path)
 
   def csv(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = true, delimiter: String = ","): DataFrame =

@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
-import graft.operators.{AnnIndex, Bpe, Dedup, SessionMemo, Similarity, Unigram}
+import graft.operators.{Analyses, AnnIndex, Bpe, Dedup, EltOps, SessionMemo,
+  Similarity, Unigram}
 
 /** The per-JVM families of the one session cache ([[SessionMemo]]), one
   * row each: build, serve again (the family's build counter is
   * unchanged), rewrite the source table IN PLACE, serve again (the
   * counter rises by exactly one), and the served value equals a build
   * after [[SessionMemo.reset]]. Plus the leak check: a table appended
-  * to again and again holds one live count entry, not one per version.
+  * to again and again holds one live count entry, not one per version,
+  * and the per-session source schemas ([[T.read]]): one inference job per
+  * session and table content, none for a read after it.
   */
 class SessionCacheSpec extends SparkSpec {
   import spark.implicits._
@@ -150,4 +153,96 @@ class SessionCacheSpec extends SparkSpec {
       rmTree(tmp); rmTree(idxRoot)
     }
   }
+
+  private lazy val ledger = new TaskLedger(spark.sparkContext)
+
+  /** `body`'s value and the Spark jobs it launched. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    ledger.drain(); ledger.reset()
+    val a = body
+    ledger.drain()
+    (a, ledger.jobs.get())
+  }
+
+  test("a source table's schema is resolved once per session and table content") {
+    val tmp = java.nio.file.Files.createTempDirectory("memo_schema").toString
+    def write(cols: String*): Unit =
+      (0 until 8).map(i => (i.toLong, s"o$i", i * 1.5)).toDF("o_orderkey", "o_status", "o_total")
+        .select(cols.map(col): _*)
+        .repartition(1).write.mode("overwrite").parquet(s"$tmp/orders.parquet")
+    def builds = SessionMemo.buildsOf("schema.orders")
+    try {
+      write("o_orderkey", "o_status")
+      val b0 = builds
+      T.orders(spark, tmp)
+      assert(builds == b0 + 1, "the first read in a session infers the schema")
+      // (a) a later read in the same session: no build, no job
+      val (again, jobs) = jobsOf(T.orders(spark, tmp))
+      assert(builds == b0 + 1, "a second read must serve the resolved schema")
+      assert(jobs == 0, s"a second read launched $jobs Spark jobs")
+      assert(again.count() == 8)
+      // (b) an in-place rewrite that adds a column mid-session
+      write("o_orderkey", "o_status", "o_total")
+      val grown = T.orders(spark, tmp)
+      assert(grown.columns.toSeq == Seq("o_orderkey", "o_status", "o_total"),
+        "a read after an in-place rewrite must see the new column")
+      assert(grown.agg(sum("o_total")).head().getDouble(0) == 42.0)
+      assert(builds == b0 + 2, "an in-place rewrite infers exactly once more")
+      // (c) a new session resolves its own entry; the old one still serves
+      val other = spark.newSession()
+      assert(T.orders(other, tmp).columns.length == 3)
+      assert(builds == b0 + 3, "a new session builds its own schema entry")
+      T.orders(spark, tmp); T.orders(other, tmp)
+      assert(builds == b0 + 3)
+      assert(SessionMemo.liveEntries(s"$tmp/orders.parquet", "schema.orders") == 2)
+    } finally rmTree(tmp)
+  }
+
+  test("Sources.parquet resolves through the same per-session schema") {
+    val tmp = java.nio.file.Files.createTempDirectory("memo_schema_src").toString
+    try {
+      (0 until 4).map(i => (i.toLong, s"d$i")).toDF("doc_id", "text")
+        .repartition(1).write.mode("overwrite").parquet(s"$tmp/docs")
+      val b0 = SessionMemo.buildsOf("schema.docs")
+      graft.sources.Sources.parquet(spark, s"$tmp/docs")
+      val (df, jobs) = jobsOf(graft.sources.Sources.parquet(spark, s"$tmp/docs"))
+      assert(SessionMemo.buildsOf("schema.docs") == b0 + 1)
+      assert(jobs == 0)
+      assert(df.columns.toSeq == Seq("doc_id", "text"))
+      // a glob is not a table path: Spark lists and infers it as before
+      assert(graft.sources.Sources.parquet(spark, s"$tmp/do*").count() == 4)
+    } finally rmTree(tmp)
+  }
+
+  test("tableFiles lists every non-checksum file under a partitioned table") {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("memo_files").toString
+    try {
+      (0 until 12).map(i => (i.toLong, i % 3)).toDF("vec_id", "part")
+        .write.partitionBy("part").parquet(s"$tmp/t.parquet")
+      val onDisk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$tmp/t.parquet"))
+        .iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filterNot(_.getFileName.toString.endsWith(".crc"))
+        .map(f => (f.toString, java.nio.file.Files.size(f), f.toFile.lastModified()))
+        .toSeq.sortBy(_._1)
+      assert(onDisk.size >= 4, "three partitions plus _SUCCESS")
+      assert(SessionMemo.tableFiles(spark, s"$tmp/t.parquet") == onDisk)
+    } finally rmTree(tmp)
+  }
+
+  test("with warm schema entries, q.run of every plan-only Analyses/EltOps op launches 0 jobs") {
+    // (d) warm this session's schema entries for every source table
+    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+      "region", "events", "documents", "embeddings").foreach(T(spark, sfDir, _))
+    val ops = (Analyses.all ++ EltOps.all).filterNot(q => EagerOps(q.name))
+    assert(ops.size == Analyses.all.size + EltOps.all.size - EagerOps.size)
+    val launched = ops.map(q => q.name -> jobsOf(q.run(spark, sfDir))._2).filter(_._2 != 0)
+    assert(launched.isEmpty, s"q.run launched jobs: $launched")
+  }
+
+  /** Ops whose build runs driver jobs of its own, schemas aside: the
+    * three readers of the session `fot` frames, which the first of them
+    * in a session materializes (one eager count).
+    */
+  private val EagerOps = Set("q_found_on_try", "q_found_by_stats", "q_found_on_try_stats")
 }
