@@ -1,22 +1,12 @@
 package graft
 
-object Bench {
-  /** JSON string escape for values interpolated into the hand-built
-    * artifact line (exception messages can carry quotes/backslashes/
-    * newlines — an unescaped one makes target/bench.json, the artifact
-    * of record, unparseable; ADVICE r12).
-    */
-  private def jesc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.SeqMap
+import scala.jdk.CollectionConverters._
 
+import Harness.{Timed, toJson}
+
+object Bench {
   /** Length bound of the last stdout line: a tail reader keeps ~2000
     * chars, so a longer line arrives cut and does not parse.
     */
@@ -29,34 +19,62 @@ object Bench {
     */
   private[graft] def lastLine(total: Double, nQueries: Int, shortQs: String,
       failed: Seq[String], retimed: Int, sfDir: String): String = {
-    def line(queries: String, failedJson: String): String =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":$nQueries,""" +
-        s"""$queries"failed":$failedJson,"retimed_n":$retimed,"sf":"${jesc(sfDir)}",""" +
-        """"keys":"target/bench_keys.json"}"""
-    val full = line(s""""queries":$shortQs,""",
-      failed.map(n => "\"" + jesc(n) + "\"").mkString("[", ",", "]"))
-    if (full.length <= lastLineMax) full else line("", failed.size.toString)
+    def line(queries: Option[AnyRef], failedJson: Any): String =
+      toJson(SeqMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+        "n_queries" -> nQueries) ++ queries.map("queries" -> _) ++
+        SeqMap("failed" -> failedJson, "retimed_n" -> retimed, "sf" -> sfDir,
+          "keys" -> "target/bench_keys.json"))
+    val full = line(Some(Harness.json.readTree(shortQs)), failed)
+    if (full.length <= lastLineMax) full else line(None, failed.size)
   }
 
-  /** One timed execution: wall (or the failure class), whether a
-    * fit/append/memo-build counter moved (cold), and the pass's summed
-    * executorCpuTime — the steal-proof work ledger (r15, verdict r14 #1:
-    * three untouched-code 100x drifts each cost an isolated re-time cycle
-    * to adjudicate because the artifact recorded only wall).
+  /** The prior file's four flat maps since r15: "queries" = the wall
+    * ratchet (element-wise historical min at this sf — can only fall),
+    * "last" = the PREVIOUS RUN's wall mins verbatim, and their cpuSec
+    * twins "cpu" / "cpu_last" — the steal-proof baselines the re-time
+    * triggers actually compare (verdict r14 #1).
     */
-  private final case class Timed(wall: Either[String, Double], cold: Boolean,
-      cpuSec: Double)
+  private val priorKeys = Seq("queries", "last", "cpu", "cpu_last")
+
+  /** The prior's maps, read with the one JSON reader: whitespace-tolerant
+    * (a seed written by another emitter, e.g. python's json.dump with
+    * `"sf": "...", "q": 1.2`, must parse — the r12-committed seed used
+    * `": "` and a strict pattern silently discarded the WHOLE prior), and
+    * a nested value is skipped without truncating its map (ADVICE r14).
+    * The prior is only a baseline at the SAME scale factor: a 100x smoke
+    * must not poison the sf0.1 comparison (or vice versa), so the file
+    * records its sf and a mismatch yields no baselines. A map that is
+    * present but unparseable `warn`s loudly instead of silently disabling
+    * its trigger; the other maps still serve.
+    */
+  private[graft] def readPrior(text: String, sfDir: String,
+      warn: String => Unit): Map[String, Map[String, Double]] = {
+    val root = try Harness.json.readTree(text) catch {
+      case e: Exception =>
+        warn(s"prior unparseable ($e) — every prior re-time trigger is disabled")
+        null
+    }
+    if (root == null || root.path("sf").asText != sfDir) Map.empty
+    else priorKeys.map { k =>
+      val node = root.path(k)
+      val m = node.properties().asScala.filter(_.getValue.isNumber)
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
+      if (!node.isMissingNode && (!node.isObject || m.isEmpty && node.size > 0))
+        warn(s"prior map '$k' present but unparseable — its re-time trigger " +
+          "is disabled for this run")
+      k -> m
+    }.toMap
+  }
 
   def main(args: Array[String]): Unit = {
     // normalized (absolute, no trailing separator): the per-sf prior file
     // and its in-file sf guard key on this exact string, so a trailing
     // slash / relative path / symlink spelling would silently fork a new
     // prior and disable the re-time ratchet for the run (ADVICE r13)
-    val sfDir = java.nio.file.Paths.get(
+    val sfDir = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
       .toAbsolutePath.normalize.toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession(s"local[$cpus]", shufflePartitions = cpus)
+    val spark = Harness.session()
     // deliberate expansion-budget raise for scale smokes that WANT the
     // quadratic member-pair outputs (the 100× MakeScale corpus is 100×-
     // duplicated by construction, past the 1e8 default refusal) — the
@@ -69,64 +87,27 @@ object Bench {
     // schema in this session (SessionMemo `schema.<table>`), so no timed
     // query pays a parquet footer-inference job unless its table changed.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    // noop write materializes every column of every row — unlike count(),
-    // which lets Spark prune the whole projection away. Two full passes
-    // with the min taken per query; each pass runs the registry in a
-    // DIFFERENT (seeded, deterministic) order, so a minutes-long
-    // host-contention window lands on different queries in each pass and
-    // can no longer inflate the same query's min twice (it did in r3:
-    // six adjacent queries reported 13-45x their isolated times because
-    // both in-order passes crossed the same noisy window). A query that
-    // throws must not masquerade as a fast one: its elapsed time is
-    // discarded and it is reported in a "failed" list instead.
-    // Fit/append activity per timing: a persisted artifact survives
-    // across runs, so a recorded min is usually a pure WARM serve — a
-    // fit-path regression would be invisible unless the artifact says
-    // which timings paid a fit/encode (ADVICE r7). Any counter movement
-    // during a query marks that pass "cold". The sum covers EVERY
-    // persisted-artifact family's fit and append counters (one list,
-    // AnnIndex.families — a hand-listed sum once missed the tp/ec
-    // counters and left a 48 s SP fit unflagged) plus every SessionMemo
-    // build (tokenizer training and source-schema inference included).
-    def fitCount(): Long =
-      graft.operators.AnnIndex.counters.map(_.get).sum +
-        graft.operators.SessionMemo.totalBuilds()
-    // cpuSec attribution window per timing: drain the listener bus, reset
-    // the ledger, run, drain again (TaskLedger's waitUntilEmpty barrier —
-    // ms-scale in local mode, so ~250 drains price nothing against a
-    // multi-minute run). In-flight events from a previous query can no
-    // longer bleed into this query's ledger.
-    def timeOne(q: Q): Timed = {
-      ledger.drain(); ledger.reset()
-      val t0 = System.nanoTime()
-      val f0 = fitCount()
-      try {
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        ledger.drain()
-        Timed(Right(wall), fitCount() != f0, ledger.cpuSec)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] ${q.name}: $e")
-          ledger.drain()
-          Timed(Left(e.getClass.getSimpleName), fitCount() != f0, ledger.cpuSec)
-      } finally CacheBag.release() // drop query-lifetime cache entries so
-      // storage doesn't accumulate across the 70+-query × 2-pass run
-    }
+    // Two full passes with the min taken per query; each pass runs the
+    // registry in a DIFFERENT (seeded, deterministic) order, so a
+    // minutes-long host-contention window lands on different queries in
+    // each pass and can no longer inflate the same query's min twice (it
+    // did in r3: six adjacent queries reported 13-45x their isolated
+    // times because both in-order passes crossed the same noisy window).
+    // Each timing is one Harness.time (noop write, drained ledger window,
+    // cold flag); a query that throws is reported in a "failed" list.
     // 1-min host load average, sampled around every pass — the r11 driver
     // artifact read 154 s where the same-code truth was 125 s (ambient
     // multi-tenant load), and NOTHING the driver parses said so; now the
     // artifact of record carries the contention evidence itself.
     def loadAvg(): Double =
-      try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
-        .split(" ")(0).toDouble
+      try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
-    val passLoads = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    val passLoads = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     def pass(name: String, qs: Seq[Q], seed: Int): Map[String, Timed] = {
       val l0 = loadAvg()
-      val r = new scala.util.Random(seed).shuffle(qs).map(q => q.name -> timeOne(q)).toMap
-      passLoads(name) = (l0, loadAvg())
+      val r = new scala.util.Random(seed).shuffle(qs)
+        .map(q => q.name -> Harness.time(spark, ledger, q, sfDir)).toMap
+      passLoads(name) = Seq(l0, loadAvg())
       r
     }
     val (p1, p2) = (pass("p1", SparkEntry.registry, 1), pass("p2", SparkEntry.registry, 2))
@@ -147,75 +128,16 @@ object Bench {
     // 100x smoke REPLACED the sf0.1 ratchet and the next sf0.1 run had no
     // baseline at all (exactly the poisoning the read-side guard exists to
     // stop). The default sf keeps the historical repo-tracked name.
-    val priorPath = java.nio.file.Paths.get(
+    val priorPath = Paths.get(
       if (sfDir == "/root/testdata/sf0.1") "bench_prior.json"
       else "bench_prior_" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_") + ".json")
-    // the prior file carries FOUR flat maps since r15: "queries" = the
-    // wall ratchet (element-wise historical min at this sf — can only
-    // fall), "last" = the PREVIOUS RUN's wall mins verbatim, and their
-    // cpuSec twins "cpu" / "cpu_last" — the steal-proof baselines the
-    // re-time triggers actually compare (verdict r14 #1). Each map is
-    // parsed scoped to its own object with BALANCED-brace extraction,
-    // anchored after the end of the previous map (ADVICE r14: the old
-    // scan-to-first-'}' truncated on any nested value, and indexOf found
-    // the key anywhere in the file) — and a present-but-unparseable map
-    // warns loudly instead of silently disabling the triggers.
-    def objOf(s: String, name: String, from: Int): (String, Int) = {
-      val i = s.indexOf("\"" + name + "\"", from)
-      if (i < 0) return ("", from)
-      val a = s.indexOf('{', i)
-      if (a < 0) return ("", from)
-      var depth = 0
-      var j = a
-      while (j < s.length) {
-        s.charAt(j) match {
-          case '{' => depth += 1
-          case '}' =>
-            depth -= 1
-            if (depth == 0) return (s.substring(a, j + 1), j + 1)
-          case _ => ()
-        }
-        j += 1
-      }
-      ("", from) // unbalanced — treated as absent, warned below
-    }
-    def qMap(s: String): Map[String, Double] =
-      """"(q[^"]*)"\s*:\s*([0-9.Ee+-]+)""".r.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    def parsePrior(s: String): Map[String, Map[String, Double]] = {
-      var pos = 0
-      Seq("queries", "last", "cpu", "cpu_last").map { k =>
-        val present = s.indexOf("\"" + k + "\"", pos) >= 0
-        val (obj, next) = objOf(s, k, pos)
-        pos = next
-        val m = qMap(obj)
-        if (present && m.isEmpty && obj != "{}")
-          System.err.println(s"[bench] WARNING: prior map '$k' present in " +
-            s"$priorPath but unparseable — its re-time trigger is disabled " +
-            "for this run")
-        k -> m
-      }.toMap
-    }
-    val priorMaps: Map[String, Map[String, Double]] =
-      if (java.nio.file.Files.exists(priorPath)) {
-        val s = new String(java.nio.file.Files.readAllBytes(priorPath), "UTF-8")
-        // the prior is only a baseline at the SAME scale factor: a 100x
-        // smoke must not poison the sf0.1 comparison (or vice versa), so
-        // the file records its sf and a mismatch disables the trigger
-        // rather than comparing apples to a 100x corpus
-        // whitespace-tolerant: a seed written by another JSON emitter
-        // (e.g. python's json.dump, `"sf": "...", "q": 1.2`) must parse —
-        // the r12-committed seed used `": "` and the strict pattern
-        // silently discarded the WHOLE prior, disabling the 1.5x retime
-        // trigger for the entire run
-        if (""""sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).exists(_.group(1) == sfDir))
-          parsePrior(s)
-        else Map.empty[String, Map[String, Double]].withDefaultValue(Map.empty)
-      } else Map.empty[String, Map[String, Double]].withDefaultValue(Map.empty)
-    val prior = priorMaps.getOrElse("queries", Map.empty)
-    val lastRun = priorMaps.getOrElse("last", Map.empty)
-    val cpuPrior = priorMaps.getOrElse("cpu", Map.empty)
-    val cpuLast = priorMaps.getOrElse("cpu_last", Map.empty)
+    val priorMaps =
+      if (!Files.exists(priorPath)) Map.empty[String, Map[String, Double]]
+      else readPrior(Files.readString(priorPath), sfDir,
+        w => System.err.println(s"[bench] WARNING: $w ($priorPath)"))
+    def priorOf(k: String): Map[String, Double] = priorMaps.getOrElse(k, Map.empty)
+    val (prior, lastRun) = (priorOf("queries"), priorOf("last"))
+    val (cpuPrior, cpuLast) = (priorOf("cpu"), priorOf("cpu_last"))
     // SPARK_GRAFT_FORCE_P3: comma-separated query names whose p3 re-time
     // runs unconditionally — makes the SUSTAINED-re-execution regime (the
     // one that OOM'd q_found_agg at 100× in r7 after both scored passes)
@@ -238,10 +160,8 @@ object Bench {
     // a cpu regression can't hide under a noisy wall prior). Wall is the
     // fallback for the first run after this change (no cpu maps in the
     // prior yet) and stays in the artifact for reporting.
-    def cpuMin(q: String): Option[Double] = {
-      val cs = Seq(p1(q), p2(q)).collect { case Timed(Right(_), _, c) => c }
-      if (cs.isEmpty) None else Some(cs.min)
-    }
+    def cpuMin(q: String): Option[Double] =
+      Seq(p1(q), p2(q)).filter(_.wall.isRight).map(_.cpuSec).minOption
     val suspectWhy = SparkEntry.registry.flatMap { q =>
       val why = (p1(q.name).wall, p2(q.name).wall) match {
         case (Right(a), Right(b)) =>
@@ -278,76 +198,57 @@ object Bench {
     val p3 = pass("p3", suspects, 3)
     def allTimed(q: String): Seq[Timed] =
       Seq(p1(q), p2(q)) ++ p3.get(q).toSeq
-    val results = SparkEntry.registry.flatMap { q =>
-      val timed = allTimed(q.name).collect { case Timed(Right(t), _, _) => t }
-      if (timed.isEmpty) None else Some(q.name -> timed.min)
+    // per-query wall and cpuSec of record: mins over SUCCESSFUL passes (a
+    // failed pass's partial cpu is not a work floor for the query)
+    def minOf(f: Timed => Double): Seq[(String, Double)] = SparkEntry.registry.flatMap { q =>
+      allTimed(q.name).filter(_.wall.isRight).map(f).minOption.map(q.name -> _)
     }
-    // per-query cpuSec of record: min over SUCCESSFUL passes (a failed
-    // pass's partial cpu is not a work floor for the query)
-    val cpuResults = SparkEntry.registry.flatMap { q =>
-      val cs = allTimed(q.name).collect { case Timed(Right(_), _, c) => c }
-      if (cs.isEmpty) None else Some(q.name -> cs.min)
-    }
+    val results = minOf(_.wall.getOrElse(0.0))
+    val cpuResults = minOf(_.cpuSec)
     val failed = SparkEntry.registry.map(_.name)
       .filter(n => p1(n).wall.isLeft && p2(n).wall.isLeft)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val cpuJson = cpuResults.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Raw per-pass times (p1, p2, and the targeted p3 where it ran):
-    // min≪max within a query's passes is self-evident host contention, so
-    // a noisy driver-side reading can be adjudicated from the artifact
-    // alone instead of costing a judge re-run (r5: BENCH_r05 read 99.3 s
-    // on provably-unchanged queries; a full re-run measured 80.6 s).
-    val passes = SparkEntry.registry.map { q =>
-      val ts = allTimed(q.name).map {
-        case Timed(Right(t), _, _) => t.toString
-        case Timed(Left(e), _, _) => "\"" + jesc(e) + "\""
-      }
-      "\"" + q.name + "\":" + ts.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // per-pass cpuSec aligned with "passes" — the in-artifact evidence
-    // that separates "wall drifted, cpu flat" (steal) from "cpu moved"
-    // (the engine did more work)
-    val cpuPasses = SparkEntry.registry.map { q =>
-      "\"" + q.name + "\":" +
-        allTimed(q.name).map(_.cpuSec).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // Which passes paid an index fit/append (vs a pure warm serve) — the
-    // warm-vs-cold attribution for every ANN timing in "passes"
-    val cold = SparkEntry.registry.flatMap { q =>
-      val cs = allTimed(q.name).map(_.cold)
-      if (cs.contains(true))
-        Some("\"" + q.name + "\":" + cs.mkString("[", ",", "]"))
-      else None
-    }.mkString("{", ",", "}")
-    val fs = failed.map(n => "\"" + jesc(n) + "\"").mkString("[", ",", "]")
+    def byQuery[V](f: String => Option[V]): SeqMap[String, V] =
+      SeqMap.from(SparkEntry.registry.flatMap(q => f(q.name).map(q.name -> _)))
     // self-adjudication block: which queries were re-timed, why, and what
     // the isolated p3 read (wall AND cpu) — plus per-pass host load. A
     // reader (or the judge) can tell "ambient contention, re-timed
     // in-band" from "real regression" without any out-of-artifact
     // evidence.
-    val retimed = suspects.map { q =>
-      val p3v = p3(q.name).wall match {
-        case Right(t) => t.toString
-        case Left(e) => "\"" + jesc(e) + "\""
+    val retimed = byQuery { q =>
+      suspectWhy.get(q).map { why =>
+        SeqMap[String, Any]("why" -> why, "p3" -> p3(q).wall.merge,
+          "p3_cpu" -> p3(q).cpuSec) ++ prior.get(q).map("prior" -> _) ++
+          lastRun.get(q).map("last" -> _) ++ cpuPrior.get(q).map("cpu_prior" -> _) ++
+          cpuLast.get(q).map("cpu_last" -> _)
       }
-      "\"" + q.name + "\":{\"why\":\"" + suspectWhy(q.name) + "\",\"p3\":" + p3v +
-        s""","p3_cpu":${p3(q.name).cpuSec}""" +
-        prior.get(q.name).map(p => s""","prior":$p""").getOrElse("") +
-        lastRun.get(q.name).map(p => s""","last":$p""").getOrElse("") +
-        cpuPrior.get(q.name).map(p => s""","cpu_prior":$p""").getOrElse("") +
-        cpuLast.get(q.name).map(p => s""","cpu_last":$p""").getOrElse("") + "}"
-    }.mkString("{", ",", "}")
-    val loads = passLoads.map { case (n, (a, b)) => s""""$n":[$a,$b]""" }
-      .mkString("{", ",", "}")
+    }
+    val loads = SeqMap.from(passLoads)
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpuJson,"passes":$passes,"cpu_passes":$cpuPasses,"cold":$cold,"retimed":$retimed,"load":$loads,"failed":$fs,"drain":"${ledger.drainMode}","drain_degraded":${ledger.degradedDrains.get},"sf":"$sfDir"}"""
+    val line = toJson(SeqMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> SeqMap.from(results), "cpu" -> SeqMap.from(cpuResults),
+      // Raw per-pass times (p1, p2, and the targeted p3 where it ran):
+      // min≪max within a query's passes is self-evident host contention,
+      // so a noisy driver-side reading can be adjudicated from the
+      // artifact alone instead of costing a full re-run (r5: BENCH_r05
+      // read 99.3 s on provably-unchanged queries; a full re-run measured
+      // 80.6 s). A failed pass reads as its failure class.
+      "passes" -> byQuery(q => Some(allTimed(q).map(_.wall.merge))),
+      // per-pass cpuSec aligned with "passes" — the in-artifact evidence
+      // that separates "wall drifted, cpu flat" (steal) from "cpu moved"
+      // (the engine did more work)
+      "cpu_passes" -> byQuery(q => Some(allTimed(q).map(_.cpuSec))),
+      // Which passes paid an index fit/append (vs a pure warm serve) — the
+      // warm-vs-cold attribution for every ANN timing in "passes"
+      "cold" -> byQuery(q => Some(allTimed(q).map(_.cold)).filter(_.contains(true))),
+      "retimed" -> retimed, "load" -> loads, "failed" -> failed,
+      "drain" -> ledger.drainMode, "drain_degraded" -> ledger.degradedDrains.get,
+      "sf" -> sfDir))
     // land the full line as a file, so per-query numbers are machine-
     // readable without scraping an sbt log tail (cwd-relative; create the
     // parent so a non-sbt launcher's cwd can't fail a finished run)
-    val benchOut = java.nio.file.Paths.get("target/bench.json")
-    java.nio.file.Files.createDirectories(benchOut.getParent)
-    java.nio.file.Files.write(benchOut, (line + "\n").getBytes("UTF-8"))
+    val benchOut = Paths.get("target/bench.json")
+    Files.createDirectories(benchOut.getParent)
+    Files.writeString(benchOut, line + "\n")
     // rewrite bench_prior.json (repo-tracked) as a RATCHET: element-wise
     // min of this run's mins and the same-sf prior (r13, verdict r12 #3 —
     // a plain overwrite let one noisy window raise the baseline, so a
@@ -357,25 +258,21 @@ object Bench {
     // slower than the best this code has ever measured at this sf).
     // Prior-only queries (retired from the registry this run) drop out.
     // r15: the cpuSec twins follow the same discipline — "cpu" ratchets,
-    // "cpu_last" is this run's mins verbatim.
-    def flat(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val ratchet = flat(results.map { case (k, v) =>
-      k -> prior.get(k).map(math.min(_, v)).getOrElse(v) })
-    val cpuRatchet = flat(cpuResults.map { case (k, v) =>
-      k -> cpuPrior.get(k).map(math.min(_, v)).getOrElse(v) })
-    // "last" = THIS run's mins verbatim (next run's round-over-round
-    // baseline for the 1.3x trigger) — unlike the ratchet it follows the
-    // current tree both up and down
-    java.nio.file.Files.write(priorPath,
-      (s"""{"sf":"$sfDir","queries":$ratchet,"last":${flat(results)},""" +
-        s""""cpu":$cpuRatchet,"cpu_last":${flat(cpuResults)}}""" + "\n")
-        .getBytes("UTF-8"))
+    // "cpu_last" is this run's mins verbatim ("last" is next run's
+    // round-over-round baseline for the 1.3x trigger — unlike the
+    // ratchet it follows the current tree both up and down).
+    def ratchet(mins: Seq[(String, Double)], base: Map[String, Double]) =
+      SeqMap.from(mins.map { case (k, v) => k -> base.get(k).fold(v)(math.min(_, v)) })
+    Files.writeString(priorPath, toJson(SeqMap("sf" -> sfDir,
+      "queries" -> ratchet(results, prior), "last" -> SeqMap.from(results),
+      "cpu" -> ratchet(cpuResults, cpuPrior), "cpu_last" -> SeqMap.from(cpuResults))) + "\n")
     println(line)
     // Compact totals line: full diagnostics (load, retimed_n) for a tail
     // reader; the full 124-query line above overflows the driver's
     // 2000-char stdout tail (BENCH_r06.json landed `parsed: null`).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$fs,"retimed_n":${suspects.size},"load":$loads,"sf":"$sfDir","detail":"target/bench.json"}""")
+    println(toJson(SeqMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "n_queries" -> results.size, "failed" -> failed, "retimed_n" -> suspects.size,
+      "load" -> loads, "sf" -> sfDir, "detail" -> "target/bench.json")))
     // r17 (verdict r16 next-round #2, "per-query bench contract"): the
     // driver parses the LAST stdout line from that ~2000-char tail, so
     // PERF rounds had per_query={} / geomean null since r15. The final
@@ -407,16 +304,14 @@ object Bench {
     // any name still colliding keeps its full name
     val stillDup = short.groupBy(_._2).filter(_._2.size > 1).keySet
     val key = names.map(n => n -> (if (stillDup(short(n))) n else short(n))).toMap
-    def fmtShort(v: Double): String = {
-      val scale = if (v >= 10) 1 else 2
-      BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
-        .underlying.stripTrailingZeros.toPlainString
-    }
-    val shortQs = results.map { case (k, v) => "\"" + key(k) + "\":" + fmtShort(v) }
-      .mkString("{", ",", "}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_keys.json"),
-      results.map { case (k, _) => "\"" + key(k) + "\":\"" + k + "\"" }
-        .mkString("{", ",", "}\n").getBytes("UTF-8"))
+    // plain decimal text (no exponent, no trailing zeros): the mapper
+    // writes BigDecimals as plain
+    def fmtShort(v: Double): java.math.BigDecimal =
+      BigDecimal(v).setScale(if (v >= 10) 1 else 2, BigDecimal.RoundingMode.HALF_UP)
+        .underlying.stripTrailingZeros
+    val shortQs = toJson(SeqMap.from(results.map { case (k, v) => key(k) -> fmtShort(v) }))
+    Files.writeString(Paths.get("target/bench_keys.json"),
+      toJson(SeqMap.from(results.map { case (k, _) => key(k) -> k })) + "\n")
     println(lastLine(total, results.size, shortQs, failed, suspects.size, sfDir))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -46,7 +46,7 @@ object MakeScale {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val mode   = args.lift(3).getOrElse("dup")
     require(mode == "dup" || mode == "renum", s"unknown mode '$mode'")
-    val spark  = GraftSession("local[32]", shufflePartitions = 32)
+    val spark  = Harness.session()
     try build(spark, src, out, factor, renumber = mode == "renum")
     finally spark.stop()
   }

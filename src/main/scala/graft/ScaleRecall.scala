@@ -33,8 +33,7 @@ object ScaleRecall {
     val d = args.lift(0).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
     val tag = args.lift(1).getOrElse("latest")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession(s"local[$cpus]", shufflePartitions = cpus)
+    val spark = Harness.session()
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.operators.{AnnIndex, Members, Similarity}
@@ -80,12 +79,10 @@ object ScaleRecall {
     val all = recalls :+ ("knn" -> knnRecall)
     val pass = all.forall(_._2 >= floor)
     val depth = Similarity.pqRescoreDepth(nDist)
-    val line = all.map { case (n, r) => s""""$n":$r""" }
-      .mkString("{", ",",
-        s""","floor":$floor,"pass":$pass,"n_exact":${brute.size},""" +
-          s""""knn_exact_pairs":${exact.size},"n_distinct":$nDist,""" +
-          s""""adc_depth":$depth,"k":${AnnIndex.knK},""" +
-          s""""kn_miss":${AnnIndex.knMiss},"sf":"$d"}""")
+    val line = Harness.toJson(scala.collection.immutable.SeqMap.from(all) ++
+      Seq("floor" -> floor, "pass" -> pass, "n_exact" -> brute.size,
+        "knn_exact_pairs" -> exact.size, "n_distinct" -> nDist, "adc_depth" -> depth,
+        "k" -> AnnIndex.knK, "kn_miss" -> AnnIndex.knMiss, "sf" -> d))
     println(line)
     // artifact of record (verdict r15 #4): mechanical round-over-round
     // recall diffs, like bench windows

@@ -1,6 +1,7 @@
 package graft
 
-/** Steal-proof work ledger shared by Bench and Explain: a SparkListener
+/** Steal-proof work ledger shared by the harness mains (Bench and
+  * Profile through [[Harness.time]], perfbench's trace): a SparkListener
   * accumulating scheduled job count, summed per-task wall time (taskSec)
   * and summed OS-thread CPU time (cpuSec, from executorCpuTime).
   *
@@ -21,7 +22,7 @@ package graft
   * LiveListenerBus.waitUntilEmpty(timeoutMillis) reflectively and falls
   * back to quiescence polling (re-read the counter triple until stable)
   * if the reflective path is unavailable or times out. This replaces the
-  * fixed 300 ms sleep Explain used through r14 (ADVICE r13/r14): the
+  * fixed 300 ms sleep the re-time tool used through r14 (ADVICE r13/r14): the
   * sleep was a race, not a barrier — events delayed past 300 ms on a
   * loaded host still bled into the next pass's ledger.
   */
@@ -30,7 +31,7 @@ final class TaskLedger(sc: org.apache.spark.SparkContext) {
   val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
   val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Optional per-stage hook (Explain's STAGE lines); default no-op. */
+  /** Optional per-stage hook (Profile's STAGE lines); default no-op. */
   @volatile var onStage
       : org.apache.spark.scheduler.SparkListenerStageCompleted => Unit =
     _ => ()

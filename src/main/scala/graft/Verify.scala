@@ -1,48 +1,46 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** The correctness gate's dump: each registered query's result → parquet
+  * under `<outDir>/<name>`, plus oracle_sql.json for the DuckDB hash
+  * compare and manifest.json (every registered name and the failed ones)
+  * for tools/check.py. Runs on the harness session, so the gate reads
+  * through the same fork-free local filesystem as every other main.
+  */
 object Verify {
+  /** Dump `q` to `<outDir>/<name>`; false if it threw. The previous
+    * run's dump is deleted first: a query that throws while `q.run` builds
+    * its plan never reaches the overwrite, and a stale dump left in place
+    * would be compared as if this run had produced it.
+    */
+  private[graft] def dump(spark: SparkSession, q: Q, sfDir: String, outDir: String): Boolean = {
+    val out = new org.apache.hadoop.fs.Path(s"$outDir/${q.name}")
+    out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+    try {
+      q.run(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.toString)
+      true
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        false
+    } finally CacheBag.release() // query-lifetime cache entries
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally CacheBag.release() // query-lifetime cache entries
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val spark = Harness.session()
+    Files.createDirectories(Paths.get(outDir))
+    val failed = SparkEntry.registry.filterNot(dump(spark, _, sfDir, outDir)).map(_.name)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Harness.toJson(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/manifest.json"), Harness.toJson(Map(
+      "queries" -> SparkEntry.registry.map(_.name), "failed" -> failed)))
     spark.stop()
+    println(s"[verify] failed: ${Harness.toJson(failed)}")
     // explicit success sentinel: the gate greps stdout for 'success', and
     // sbt's own "[success]" trailer is suppressed repo-wide (showSuccess
     // := false — it used to land AFTER Bench's compact JSON line and
     // break the driver's tail parse)
-    println(s"[verify] success: ${SparkEntry.queries.size} queries dumped to $outDir")
+    println(s"[verify] success: ${SparkEntry.registry.size} queries dumped to $outDir")
   }
 }

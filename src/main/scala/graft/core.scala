@@ -81,15 +81,21 @@ object T {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     read(spark, s"$dir/$name.parquet")
 
-  /** A parquet read with the session-resolved schema. A path that is not
-    * there as written (missing, or a glob) is left to Spark's own
+  /** A parquet read with the session-resolved schema. On a miss the
+    * inferring read is itself the frame returned (resolving the relation
+    * again with `.schema(...)` would list and plan it twice). A path that
+    * is not there as written (missing, or a glob) is left to Spark's own
     * inference and error reporting.
     */
   def read(s: SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
-    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-      s.read.schema(graft.operators.SessionMemo.schema(s, path)).parquet(path)
-    else s.read.parquet(path)
+    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) {
+      var inferred: Option[DataFrame] = None
+      val schema = graft.operators.SessionMemo.schema(s, path) {
+        inferred = Some(s.read.parquet(path)); inferred.get
+      }
+      inferred.getOrElse(s.read.schema(schema).parquet(path))
+    } else s.read.parquet(path)
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")

@@ -33,10 +33,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TokenizerKernels {
 
-  /** Log-prob floor for an unknown single character — must equal
-    * [[graft.operators.Unigram]]'s `unkMicro`. */
+  /** Log-prob floor for an unknown single character — must equal the
+    * HOF reference's `unkMicro` (test-scope `TokenizerRef`). */
   val unkMicro: Long = -25000000L
-  /** Inadmissible-split sentinel — must equal Unigram's `negMicro`. */
+  /** Inadmissible-split sentinel — must equal the HOF reference's
+    * `negMicro`. */
   val negMicro: Long = -(1L << 50)
   /** Max candidate piece length — must equal Unigram's `maxLen`. */
   val maxLen: Int = 6

@@ -81,28 +81,12 @@ object Bpe {
     * pair — the paper's replacement rule. r17 (guide §4): evaluation
     * moved from the `aggregate` HOF fold — interpreted lambda evaluation
     * per symbol per merge, never codegen'd — to the compiled
-    * [[graft.expressions.BpeMerges]] kernel; the HOF form stays below as
-    * [[applyMergeRef]], the executable spec the kernel-parity test pins
-    * against.
+    * [[graft.expressions.BpeMerges]] kernel; the HOF form is kept in test
+    * scope as `TokenizerRef.applyMergeRef`, the executable spec the
+    * kernel-parity test pins against.
     */
   private[graft] def applyMerge(syms: Column, l: String, r: String): Column =
     graft.expressions.TokenizerExpressions.bpeMerges(syms, Seq(l), Seq(r))
-
-  /** The original HOF formulation of [[applyMerge]] — the executable
-    * reference for the kernel-parity spec. CaseWhen branches evaluate
-    * lazily in order, so the element_at on the accumulator only runs
-    * once the array is known non-empty.
-    */
-  private[graft] def applyMergeRef(syms: Column, l: String, r: String): Column =
-    aggregate(
-      syms,
-      array().cast("array<string>"),
-      (acc, x) =>
-        when(size(acc) === 0, array(x))
-          .when(element_at(acc, size(acc)) === lit(l) && x === lit(r),
-            concat(slice(acc, lit(1), size(acc) - 1),
-              array(concat(element_at(acc, size(acc)), x))))
-          .otherwise(concat(acc, array(x))))
 
   /** All learned merges applied in rank order inside ONE compiled kernel
     * call (r17 — was a foldLeft of per-merge HOF folds).
@@ -112,12 +96,6 @@ object Bpe {
     graft.expressions.TokenizerExpressions.bpeMerges(syms,
       sorted.map(_.left), sorted.map(_.right))
   }
-
-  /** The original per-merge foldLeft of [[applyMerges]] — the executable
-    * reference for the kernel-parity spec.
-    */
-  private[graft] def applyMergesRef(syms: Column, merges: Seq[Merge]): Column =
-    merges.sortBy(_.rank).foldLeft(syms)((c, m) => applyMergeRef(c, m.left, m.right))
 
   /** Word frequencies of a text frame — the tokenize side of the ONE
     * corpus pass (also the delta encoder of the persisted vocabulary,

@@ -192,12 +192,13 @@ object SessionMemo {
 
   /** The schema of the parquet table at `path` (family `schema.<table>`),
     * inferred by one footer-reading job per (session, table content) —
-    * see the object doc for why the scope is per session.
+    * see the object doc for why the scope is per session. `infer` is the
+    * inferring read, evaluated only on a miss.
     */
-  private[graft] def schema(s: SparkSession, path: String): StructType =
+  private[graft] def schema(s: SparkSession, path: String)(infer: => DataFrame): StructType =
     lookup[StructType](Some(s), path,
       "schema." + new org.apache.hadoop.fs.Path(path).getName.stripSuffix(".parquet"),
-      "", tableFingerprint(s, path), _ => ())(s.read.parquet(path).schema)
+      "", tableFingerprint(s, path), _ => ())(infer.schema)
 
   /** A per-JVM value keyed by `key` (a table path, or a dataset dir for
     * values that vouch for its artifacts) and `params`; `fp` defaults to

@@ -54,22 +54,11 @@ object Unigram {
   final case class Piece(piece: String, cnt: Long, lpMicro: Long)
 
   /** Max candidate piece length (chars). */
-  private val maxLen = 6
+  private[operators] val maxLen = 6
   /** Multi-char candidates kept at seed time. */
   private val seedMulti = 48
   /** Multi-char survivors per EM round — Kudo's shrink schedule. */
   private val keepSchedule = Seq(32, 24, 16)
-  /** Log-prob floor for a single character absent from the piece table
-    * (the byte-fallback analog: ln p = −25). Training corpora never hit
-    * it — every corpus character is seeded and kept — but encode stays
-    * total on unseen input.
-    */
-  private val unkMicro = -25000000L
-  /** Sentinel for an inadmissible split (multi-char piece not in the
-    * vocabulary): far below any reachable path score, far above Long
-    * overflow when added to one.
-    */
-  private val negMicro = -(1L << 50)
 
   /** HALF_UP micro-log-prob of a piece count under +1 Laplace smoothing
     * over the kept vocabulary: round(1e6 · (ln(cnt+1) − ln(total+|V|))).
@@ -89,89 +78,20 @@ object Unigram {
     * moved from the nested `aggregate` HOF encoding — interpreted lambda
     * evaluation per character per split point, never codegen'd — to the
     * compiled [[graft.expressions.UnigramSegment]] kernel; the HOF form
-    * stays below as [[segmentRef]], the executable spec OperatorsSpec
-    * pins the kernel against bit-for-bit.
+    * is kept in test scope as `TokenizerRef.segmentRef`, the executable
+    * spec OperatorsSpec pins the kernel against bit-for-bit.
     */
   private[graft] def segment(w: Column, lp: Map[String, Long]): Column =
     graft.expressions.TokenizerExpressions.unigramSegment(w, lp)
-
-  /** The original HOF formulation of [[segment]] — kept as the
-    * executable reference the kernel-parity spec compares against.
-    */
-  private[graft] def segmentRef(w: Column, lp: Map[String, Long]): Column = {
-    val m = typedLit(lp)
-    val n = length(w)
-    val fwd = aggregate(
-      sequence(lit(1), n),
-      struct(array(lit(0L)).as("best"), array().cast("array<int>").as("bp")),
-      (acc, i) => {
-        val cand = aggregate(
-          sequence(greatest(i - maxLen, lit(0)), i - 1),
-          struct(lit(negMicro * 2).as("sc"), lit(-1).as("j")),
-          (a, j) => {
-            val piece = w.substr(j + 1, i - j)
-            val hit = element_at(m, piece)
-            val sc = element_at(acc.getField("best"), j + 1) +
-              when(hit.isNotNull, hit)
-                .when(i - j === 1, lit(unkMicro))
-                .otherwise(lit(negMicro))
-            when(sc > a.getField("sc"), struct(sc.as("sc"), j.as("j")))
-              .otherwise(a)
-          })
-        struct(
-          concat(acc.getField("best"), array(cand.getField("sc"))).as("best"),
-          concat(acc.getField("bp"), array(cand.getField("j"))).as("bp"))
-      })
-    // backpointer walk: at most n hops from position n back to 0,
-    // prepending the piece (bp(pos), pos] at each hop
-    aggregate(
-      sequence(lit(1), n),
-      struct(n.as("pos"), array().cast("array<string>").as("pieces"),
-        fwd.getField("bp").as("bp")),
-      (acc, _) => {
-        val pos = acc.getField("pos")
-        val j = element_at(acc.getField("bp"), pos)
-        when(pos > 0,
-          struct(j.as("pos"),
-            concat(array(w.substr(j + 1, pos - j)),
-              acc.getField("pieces")).as("pieces"),
-            acc.getField("bp").as("bp")))
-          .otherwise(acc)
-      },
-      acc => acc.getField("pieces"))
-  }
 
   /** The Viterbi path SCORE in micro-log-prob units (the word's NLL
     * under the piece model, negated) — same DP as [[segment]], score
     * only. Exact long; per-doc sums of it are partition-order-free.
     * r17: compiled kernel ([[graft.expressions.UnigramScore]]), HOF spec
-    * kept as [[segScoreRef]].
+    * kept in test scope as `TokenizerRef.segScoreRef`.
     */
   private[graft] def segScore(w: Column, lp: Map[String, Long]): Column =
     graft.expressions.TokenizerExpressions.unigramScore(w, lp)
-
-  /** The original HOF formulation of [[segScore]] — the executable
-    * reference for the kernel-parity spec.
-    */
-  private[graft] def segScoreRef(w: Column, lp: Map[String, Long]): Column = {
-    val m = typedLit(lp)
-    aggregate(
-      sequence(lit(1), length(w)),
-      array(lit(0L)),
-      (best, i) =>
-        concat(best, array(aggregate(
-          sequence(greatest(i - maxLen, lit(0)), i - 1),
-          lit(negMicro * 2),
-          (a, j) => {
-            val hit = element_at(m, w.substr(j + 1, i - j))
-            val sc = element_at(best, j + 1) +
-              when(hit.isNotNull, hit)
-                .when(i - j === 1, lit(unkMicro))
-                .otherwise(lit(negMicro))
-            when(sc > a, sc).otherwise(a)
-          }))),
-      best => element_at(best, -1))
-  }
 
   /** Count of real EM trainings (memo misses) — Bench folds this into
     * its cold/warm fit attribution like the AnnIndex/Bpe counters.

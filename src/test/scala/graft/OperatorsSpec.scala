@@ -2146,9 +2146,9 @@ class OperatorsSpec extends SparkSpec {
       .unionByName(adversarial.toDF("w"))
     val segDiff = words
       .select(Unigram.segment(col("w"), lp).as("k"),
-        Unigram.segmentRef(col("w"), lp).as("r"),
+        TokenizerRef.segmentRef(col("w"), lp).as("r"),
         Unigram.segScore(col("w"), lp).as("ks"),
-        Unigram.segScoreRef(col("w"), lp).as("rs"))
+        TokenizerRef.segScoreRef(col("w"), lp).as("rs"))
       // null-safe: a null on one side only is a divergence, not a drop
       .where(!(col("k") <=> col("r")) || !(col("ks") <=> col("rs")))
       .count()
@@ -2156,7 +2156,7 @@ class OperatorsSpec extends SparkSpec {
     val merges = Bpe.trainMerges(spark, sfDir, 16)
     val bpeDiff = words
       .select(Bpe.applyMerges(Bpe.chars(col("w")), merges).as("k"),
-        Bpe.applyMergesRef(Bpe.chars(col("w")), merges).as("r"))
+        TokenizerRef.applyMergesRef(Bpe.chars(col("w")), merges).as("r"))
       .where(!(col("k") <=> col("r")))
       .count()
     assert(bpeDiff == 0, "bpe merge kernel diverges from the HOF reference")
@@ -2165,7 +2165,7 @@ class OperatorsSpec extends SparkSpec {
     val runDiff = Seq("a", "aa", "aaa", "aaaa", "aaaaa", "baaab")
       .toDF("w")
       .select(Bpe.applyMerges(Bpe.chars(col("w")), runMerges).as("k"),
-        Bpe.applyMergesRef(Bpe.chars(col("w")), runMerges).as("r"))
+        TokenizerRef.applyMergesRef(Bpe.chars(col("w")), runMerges).as("r"))
       .where(!(col("k") <=> col("r")))
       .count()
     assert(runDiff == 0, "bpe kernel diverges on interacting merges")

@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The shared Bench/Explain work ledger (r15, verdict r14 #1): summed
-  * executorCpuTime / task wall / job count per attribution window, with
-  * a TRUE listener-bus drain (reflective waitUntilEmpty; quiescence-poll
-  * fallback) instead of the fixed 300 ms sleep Explain used through r14.
+/** The work ledger the harness mains share (r15, verdict r14 #1):
+  * summed executorCpuTime / task wall / job count per attribution window,
+  * with a TRUE listener-bus drain (reflective waitUntilEmpty;
+  * quiescence-poll fallback) instead of a fixed 300 ms sleep — and the
+  * shared harness path over it: the timed execution, Bench's prior
+  * reader and Verify's per-query dump.
   */
 class TaskLedgerSpec extends SparkSpec {
 
@@ -49,5 +51,83 @@ class TaskLedgerSpec extends SparkSpec {
     val totals = json.readTree(line)
     assert(!totals.has("queries"))
     assert(totals.get("failed").asInt() == 124 && totals.get("value").asDouble() == 117.4)
+  }
+
+  private def prior(text: String): (Map[String, Map[String, Double]], Seq[String]) = {
+    val warnings = Seq.newBuilder[String]
+    val maps = Bench.readPrior(text, "/data/sf0.1", warnings += _)
+    (maps, warnings.result())
+  }
+
+  test("Bench's prior reader accepts a python-spaced seed and keeps all four maps") {
+    val (maps, warnings) = prior(
+      """{"sf": "/data/sf0.1", "queries": {"q_a": 1.2, "q_b": 3},
+        | "last": {"q_a": 1.5}, "cpu": {"q_a": 0.4}, "cpu_last": {"q_a": 0.5}}""".stripMargin)
+    assert(warnings.isEmpty)
+    assert(maps("queries") == Map("q_a" -> 1.2, "q_b" -> 3.0))
+    assert(maps("last") == Map("q_a" -> 1.5))
+    assert(maps("cpu") == Map("q_a" -> 0.4) && maps("cpu_last") == Map("q_a" -> 0.5))
+  }
+
+  test("Bench's prior reader: a prior of a different sf yields no baselines") {
+    val (maps, warnings) = prior("""{"sf":"/data/sf100","queries":{"q_a":1.2},"cpu":{"q_a":0.4}}""")
+    assert(maps.values.forall(_.isEmpty) && warnings.isEmpty)
+  }
+
+  test("Bench's prior reader: a nested value does not truncate its map or the next") {
+    val (maps, warnings) = prior(
+      """{"sf":"/data/sf0.1","queries":{"q_a":1.0,"q_n":{"z":{"y":2}},"q_b":2.0},""" +
+        """"last":{"q_a":1.1,"q_b":2.1}}""")
+    assert(maps("queries") == Map("q_a" -> 1.0, "q_b" -> 2.0))
+    assert(maps("last") == Map("q_a" -> 1.1, "q_b" -> 2.1))
+    assert(warnings.isEmpty)
+  }
+
+  test("Bench's prior reader: an unparseable map disables only its own trigger, loudly") {
+    val (maps, warnings) = prior(
+      """{"sf":"/data/sf0.1","queries":"garbled","last":{"q_a":1.1},""" +
+        """"cpu":{"q_a":"x"},"cpu_last":{"q_a":0.5}}""")
+    assert(maps("queries").isEmpty && maps("cpu").isEmpty)
+    assert(maps("last") == Map("q_a" -> 1.1) && maps("cpu_last") == Map("q_a" -> 0.5))
+    assert(warnings.size == 2, warnings)
+    assert(warnings.exists(_.contains("'queries'")) && warnings.exists(_.contains("'cpu'")))
+    // a whole-file parse failure warns too instead of reading as "no prior"
+    assert(prior("""{"sf":"/data/sf0.1","queries":{"q_a":""")._2.nonEmpty)
+  }
+
+  test("the shared timed execution reports a throwing query by class, with its cpuSec, and empties CacheBag") {
+    val ledger = new TaskLedger(spark.sparkContext)
+    var tracked: org.apache.spark.sql.DataFrame = null
+    val boom = Q("q_throws", (s, _) => {
+      tracked = CacheBag.track(s.range(200000).toDF("id"))
+      tracked.count() // an eager job before the throw: work the window must keep
+      throw new IllegalStateException("planned failure")
+    }, None)
+    val t = Harness.time(spark, ledger, boom, sfDir)
+    assert(t.wall == Left("IllegalStateException"))
+    assert(t.jobs >= 1 && t.cpuSec > 0.0, s"jobs=${t.jobs} cpuSec=${t.cpuSec}")
+    assert(tracked.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the query's CacheBag entry must be released after a throw")
+    val ok = Harness.time(spark, ledger, Q("q_ok", (s, _) => s.range(10).toDF("id"), None), sfDir)
+    assert(ok.wall.isRight && ok.jobs >= 1)
+  }
+
+  test("Verify's dump deletes the previous run's output, so a query that throws leaves none") {
+    val out = java.nio.file.Files.createTempDirectory("verify_dump")
+    try {
+      val stale = out.resolve("q_throws")
+      java.nio.file.Files.createDirectories(stale)
+      java.nio.file.Files.writeString(stale.resolve("part-0.parquet"), "old run")
+      val boom = Q("q_throws", (_, _) => throw new IllegalStateException("plan failure"), None)
+      assert(!Verify.dump(spark, boom, sfDir, out.toString))
+      assert(!java.nio.file.Files.exists(stale), "a stale dump survived a failed query")
+      val ok = Q("q_ok", (s, _) => s.range(3).toDF("id"), None)
+      assert(Verify.dump(spark, ok, sfDir, out.toString))
+      assert(spark.read.parquet(out.resolve("q_ok").toString).count() == 3)
+    } finally {
+      val fs = new org.apache.hadoop.fs.Path(out.toString)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(out.toString), true)
+    }
   }
 }

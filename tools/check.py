@@ -61,6 +61,16 @@ for p in glob.glob(f'{SF}/*.parquet'):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f'{OUT}/oracle_sql.json'))
+# Verify's manifest: every registered query and the ones that threw. A
+# failed query is a gate failure even though Verify itself exits green,
+# and every registered query must have a dump from THIS run (Verify
+# deletes each query's old dump before running it), oracle-free ones
+# included — a missing dump is never "nothing to compare".
+try:
+    manifest = json.load(open(f'{OUT}/manifest.json'))
+except FileNotFoundError:
+    sys.exit(f'error: {OUT}/manifest.json missing — rerun without --no-verify')
+registered, verify_failed = manifest['queries'], set(manifest['failed'])
 
 # Lint: an oracle that rounds a transcendental onto a grid is
 # environment-dependent (libm last-bit differences flip HALF_UP at .5
@@ -87,21 +97,29 @@ for name, sql in sorted(oracle.items()):
         print(f'LINT {name}: round() over a transcendental in the oracle '
               f'(non-portable hash): round({h}…')
         lint_fails.append(name)
-# a requested name must be a real query: oracle-checked, or at least a
-# rows-only query with a spark dump — otherwise the filter silently
-# checks nothing and the gate lies green
+# a requested name must be a registered query — otherwise the filter
+# silently checks nothing and the gate lies green
 for q in ONLY:
-    if q not in oracle:
-        if glob.glob(f'{OUT}/{q}/*.parquet'):
-            print(f'note {q}: rows-only query (no oracle) — not hash-checked here')
-        else:
-            sys.exit(f'error: unknown query name {q!r}; known: {sorted(oracle)}')
+    if q not in registered:
+        sys.exit(f'error: unknown query name {q!r}; known: {sorted(registered)}')
+# oracle-free queries: not hash-checked here, but each must have dumped
+rows_only, dump_fails = 0, []
+for name in sorted(set(registered) - set(oracle)):
+    if ONLY and name not in ONLY:
+        continue
+    rows_only += 1
+    if name in verify_failed:
+        print(f'FAIL {name}: Verify reported the query failed'); dump_fails.append(name)
+    elif not glob.glob(f'{OUT}/{name}/*.parquet'):
+        print(f'FAIL {name}: no spark output'); dump_fails.append(name)
 fails, checked = [], 0
 for name, sql in sorted(oracle.items()):
     if ONLY and name not in ONLY:
         continue
     checked += 1
     spark_dir = f'{OUT}/{name}'
+    if name in verify_failed:
+        print(f'FAIL {name}: Verify reported the query failed'); fails.append(name); continue
     if not glob.glob(f'{spark_dir}/*.parquet'):
         print(f'FAIL {name}: no spark output'); fails.append(name); continue
     try:
@@ -141,9 +159,12 @@ for name, sql in sorted(oracle.items()):
 # portability lint must not read as a comparison failure (ADVICE r11),
 # though either kind still exits 1.
 summary = f'\n{checked - len(fails)}/{checked} matched'
+summary += f'; {rows_only - len(dump_fails)}/{rows_only} rows-only dumps present'
 if fails:
     summary += f'; FAILURES: {fails}'
+if dump_fails:
+    summary += f'; ROWS-ONLY FAILURES: {dump_fails}'
 if lint_fails:
     summary += f'; LINT FAILURES: {sorted(set(lint_fails))}'
 print(summary)
-sys.exit(1 if (fails or lint_fails) else 0)
+sys.exit(1 if (fails or dump_fails or lint_fails) else 0)
