@@ -102,12 +102,25 @@ object Bench {
     def loadAvg(): Double =
       try Files.readString(Paths.get("/proc/loadavg")).split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
+    // Beside it, the host's steal share over each pass (steal jiffies over
+    // all jiffies of /proc/stat's cpu line, -1 where unreadable): a re-time
+    // storm under a noisy neighbour then explains itself in the artifact.
+    def cpuTicks(): Option[(Long, Long)] =
+      try {
+        val f = Files.readString(Paths.get("/proc/stat")).linesIterator.next()
+          .trim.split("\\s+").slice(1, 9).map(_.toLong)
+        Some((f(7), f.sum))
+      } catch { case _: Throwable => None }
     val passLoads = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+    val passSteal = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def pass(name: String, qs: Seq[Q], seed: Int): Map[String, Timed] = {
-      val l0 = loadAvg()
+      val (l0, t0) = (loadAvg(), cpuTicks())
       val r = new scala.util.Random(seed).shuffle(qs)
         .map(q => q.name -> Harness.time(spark, ledger, q, sfDir)).toMap
       passLoads(name) = Seq(l0, loadAvg())
+      passSteal(name) = t0.zip(cpuTicks()).collect {
+        case ((s0, n0), (s1, n1)) if n1 > n0 => (s1 - s0).toDouble / (n1 - n0)
+      }.getOrElse(-1.0)
       r
     }
     val (p1, p2) = (pass("p1", SparkEntry.registry, 1), pass("p2", SparkEntry.registry, 2))
@@ -240,7 +253,8 @@ object Bench {
       // Which passes paid an index fit/append (vs a pure warm serve) — the
       // warm-vs-cold attribution for every ANN timing in "passes"
       "cold" -> byQuery(q => Some(allTimed(q).map(_.cold)).filter(_.contains(true))),
-      "retimed" -> retimed, "load" -> loads, "failed" -> failed,
+      "retimed" -> retimed, "load" -> loads, "steal" -> SeqMap.from(passSteal),
+      "failed" -> failed,
       "drain" -> ledger.drainMode, "drain_degraded" -> ledger.degradedDrains.get,
       "sf" -> sfDir))
     // land the full line as a file, so per-query numbers are machine-

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
   * ones you'd ship to a 1000-executor cluster: AQE on (runtime re-plan,
   * skew-join splitting, partition coalescing), UTC, and a shuffle
   * parallelism matched to the environment instead of the 200 default.
+  * Every session carries [[GraftExtensions]]: graft's SQL functions and
+  * the one-task sort of small results ([[SmallSortInOneTask]]).
   */
 object GraftSession {
   def apply(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
@@ -14,6 +16,7 @@ object GraftSession {
       .builder()
       .master(master)
       .appName("graft")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -132,10 +135,10 @@ object T {
     * single-row-group parquet, so every scan is ONE effective task and
     * all per-row compute that rides the scan stage — broadcast-join
     * probes, heavy projections, explode + map-side partial aggregation —
-    * runs on 1 of N cores; under the `Det.sortAll` contract the range
-    * sampling pass then re-executes that same single-task work a second
-    * time (r16 measured: q_star_join spent 2×2.1 s in back-to-back
-    * 1-effective-task stages at sf0.1 while 31 cores idled).
+    * runs on 1 of N cores (r16 measured: q_star_join spent 2×2.1 s in
+    * back-to-back 1-effective-task stages at sf0.1 while 31 cores idled;
+    * the second was the `Det.sortAll` range-sampling job re-running the
+    * same work, which a sort of that size no longer has — see [[Det]]).
     *
     * The repartition is CONDITIONAL on the scan actually planning fewer
     * splits than half the cores, so it is scale-adaptive rather than a
@@ -194,6 +197,18 @@ object Num {
   * comparator treats row order. Sorting by every output column
   * (left-to-right, = DuckDB's ORDER BY ALL) is total up to fully-identical
   * rows, which are permutation-invariant anyway.
+  *
+  * Where the sort runs: a global sort plans a range-partitioned shuffle,
+  * whose partitioner first runs a sampling job that executes the child a
+  * second time. When the sort stage's input is at most
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB),
+  * [[SmallSortInOneTask]] makes that shuffle a single-partition one and
+  * the whole order comes from one task: no sampling job, one run of the
+  * child. The bound is Spark's own size for one post-shuffle partition
+  * (the target of AQE's partition coalescing), so the one sort task reads
+  * no more than Spark is willing to hand a single reducer task.
+  * Larger inputs keep the parallel range sort. Only the physical
+  * exchange differs: this plan and the output order are the same.
   */
 object Det {
   def sortAll(df: DataFrame): DataFrame =

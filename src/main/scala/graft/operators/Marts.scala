@@ -50,10 +50,12 @@ object Marts {
     *
     * r16: the fact scan is `T.spread` — on the single-row-group local
     * tables every join probe plus the 14-column projection rode ONE scan
-    * task and was executed twice by the contract sort's range sampling
-    * (measured 2×2.1 s serial at sf0.1); the conditional spread makes
-    * that work 32-way while staying the identity on any multi-split
-    * production table.
+    * task (measured 2×2.1 s serial at sf0.1, the second run being the
+    * contract sort's range sampling); the conditional spread makes that
+    * work 32-way while staying the identity on any multi-split
+    * production table. Below the one-partition bound the contract sort
+    * now runs in one task with no sampling job, so the join runs once
+    * ([[graft.SmallSortInOneTask]]).
     */
   val starJoin: Q = Q(
     "q_star_join",

@@ -7,10 +7,7 @@ class ExtensionsAndDagSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_dot is callable from SQL after extension injection") {
-    // the shared session wasn't built with the extension; register the
-    // same function definition through the session's catalog path
-    val (id, info, builder) = GraftExtensions.dotFunction
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    // GraftSession builds every session with GraftExtensions
     val got = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .as[Double].head()
@@ -18,8 +15,6 @@ class ExtensionsAndDagSpec extends SparkSpec {
   }
 
   test("graft_hyperplane_sig is callable from SQL and matches the column API") {
-    val (id, info, builder) = GraftExtensions.hyperplaneSigFunction
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     val viaSql = spark.sql(
       "SELECT graft_hyperplane_sig(array(0.5d, -1.0d, 2.0d), 42, 4, 6) AS sig")
       .as[Seq[Long]].head()

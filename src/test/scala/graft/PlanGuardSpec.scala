@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
@@ -240,9 +240,19 @@ class PlanGuardSpec extends SparkSpec {
     val plan = q.run(spark, sfDir).queryExecution.sparkPlan
     val joins = plan.collect { case n if n.nodeName.toLowerCase.contains("join") => n }
     assert(joins.isEmpty, s"q_substring_score plans a join:\n$plan")
-    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-    assert(shuffles.forall(_.outputPartitioning.isInstanceOf[RangePartitioning]),
-      s"q_substring_score has a non-sort Exchange:\n$plan")
+    // the exchanges are inserted after sparkPlan, so read the final
+    // adaptive plan: every shuffle there must be the one the output sort
+    // reads — range-partitioned, or single-partition when the sort's
+    // input fits one task (SmallSortInOneTask)
+    val df = q.run(spark, sfDir)
+    df.collect()
+    val fin = df.queryExecution.executedPlan
+    val sortInputs = OneTaskSortSpec.sortInputs(fin)
+    assert(OneTaskSortSpec.exchanges(fin).forall(e => sortInputs.exists(_ eq e) &&
+      (e.outputPartitioning match {
+        case _: RangePartitioning | SinglePartition => true
+        case _ => false
+    })), s"q_substring_score has an Exchange other than the output sort's:\n$fin")
   }
 
   test("two-phase global ordering ops: the only data Exchange is the bucket hash (no global window)") {
