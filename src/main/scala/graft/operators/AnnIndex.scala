@@ -1250,7 +1250,7 @@ object AnnIndex {
     */
   private def epCandidateGuard(s: SparkSession, capped: DataFrame,
       fresh: Option[DataFrame], n: Long, tau: Double, bands: Int): Unit = {
-    val budget = s.conf.get("graft.expand.maxRows", "100000000").toLong
+    val budget = Dedup.expandMaxRows(s)
     val est = fresh match {
       case Some(fr) =>
         capped
@@ -1427,7 +1427,7 @@ object AnnIndex {
     */
   private[graft] def embedPairs(s: SparkSession, d: String): (DataFrame, Long) = {
     val v = resolve(s, d, EP)
-    val refuseKey = s"${v.vd}#${s.conf.get("graft.expand.maxRows", "100000000")}"
+    val refuseKey = s"${v.vd}#${Dedup.expandMaxRows(s)}"
     Option(epRefused.get(refuseKey))
       .foreach(msg => throw new graft.QuadraticRefusal(msg))
     def distinctReps(df: DataFrame): DataFrame =

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{CacheBag, Det, Q, T}
 
@@ -35,6 +34,59 @@ object Assembly {
     */
   private[graft] val seqLen = 128L
 
+  /** The per-doc span columns from the running token count `tok_end`
+    * (inclusive), after the leading `keys` columns.
+    */
+  private def packCols(keys: String*): Seq[String] = keys ++ Seq(
+    "n_tok", "tok_end - n_tok as tok_start",
+    s"(tok_end - n_tok) div $seqLen as seq_first",
+    s"(tok_end - 1) div $seqLen as seq_last",
+    s"(tok_end - n_tok) % $seqLen as seq_off",
+    s"(tok_end - 1) div $seqLen - (tok_end - n_tok) div $seqLen + 1 as n_seqs")
+
+  /** The packing dataflow, unsorted, plus the corpus-total token count
+    * (free on the driver from the phase-2 bucket totals) — shared by
+    * [[packSequences]] and [[packManifest]].
+    */
+  private def packedDocs(s: SparkSession, d: String): (DataFrame, Long) = {
+    val toks = T.documents(s, d)
+      .where(col("doc_id").isNotNull)
+      .select(col("doc_id"), nTok.as("n_tok"))
+    // one cheap stats pass over the pruned doc_id column (at scale:
+    // parquet footer / catalog stats) sizes the bucket width
+    val st = toks.agg(min("doc_id"), max("doc_id")).head()
+    val (mn, mx) = if (st.isNullAt(0)) (0L, 0L) else (st.getLong(0), st.getLong(1))
+    // cache(): the skinny (doc_id, n_tok, bucket) projection is
+    // ~24 B/doc (≈0.1% of corpus bytes) — caching it means the text
+    // column is scanned and tokenized ONCE (the totals job populates,
+    // the final plan reads), instead of once per phase. CacheBag-tracked:
+    // the entry must outlive this call (the returned plan reads it) but
+    // not the query — Bench/Verify release after each query's write.
+    val bucketed = CacheBag.track(toks.withColumn("bucket", GlobalRank.widthBucket(
+      "doc_id", mn, mx, math.max(1, s.sparkContext.defaultParallelism))))
+    val (df, total) = GlobalRank.running(s, bucketed, Seq("bucket"), 0,
+      Seq(col("doc_id")), col("n_tok"), "tok_end")
+    (df.selectExpr(packCols("doc_id"): _*), total)
+  }
+
+  /** The 256 md5-key buckets: a hex key's first 2 chars as a number,
+    * whose numeric order equals the key's string order, so bucket ranges
+    * tile the key order (at 1000-executor scale widen the prefix: 4 hex
+    * chars = 65k buckets; the offsets stay partition metadata).
+    */
+  private def hexPrefix(sk: Column): Column =
+    conv(substring(sk, 1, 2), 16, 10).cast("long")
+
+  /** Documents with a doc_id, keyed by the permutation key
+    * sk = md5(doc_id) and its [[hexPrefix]] bucket; CacheBag-cached so the
+    * corpus is scanned once across the two [[GlobalRank]] phases.
+    */
+  private def shuffleKeyed(s: SparkSession, d: String, cols: Column*): DataFrame =
+    CacheBag.track(T.documents(s, d)
+      .where(col("doc_id").isNotNull)
+      .select(col("doc_id") +: cols :+ md5(col("doc_id").cast("string")).as("sk"): _*)
+      .withColumn("bucket", hexPrefix(col("sk"))))
+
   /** G. Sequence packing — GPT-style concat-and-chunk: documents are
     * concatenated in doc_id order and the token stream is split into
     * fixed [[seqLen]]-token training sequences; each document reports the
@@ -44,103 +96,16 @@ object Assembly {
     * (attention-contamination checks), which straddle a boundary
     * (truncation accounting), how many total sequences a corpus yields.
     *
-    * The global running token count is a distributed two-phase prefix
-    * sum — NO single-reducer global window (the naive
-    * `Window.orderBy(doc_id)` with no partition key is one task holding
-    * the whole corpus):
-    *
-    *  1. bucket documents by a DETERMINISTIC arithmetic range of doc_id
-    *     (bucket = (doc_id − min) div width, width sized from one cheap
-    *     min/max stats agg so ~shuffle-parallelism buckets come out);
-    *     within each bucket a per-bucket window computes the local
-    *     running sum — the only corpus-sized Exchange, hash on bucket;
-    *  2. per-bucket totals (a groupBy collapsing to ≤ a few thousand
-    *     rows at any scale) come to the driver — partition METADATA, the
-    *     same driver-size class as range-partition boundary sampling —
-    *     and an exclusive scan turns them into per-bucket offsets,
-    *     broadcast-joined back.
-    *
-    * The bucket function is pure doc_id arithmetic, so the decomposition
-    * is identical on every (re-)execution — correctness does NOT depend
-    * on physical partition placement (a spark_partition_id()-keyed
-    * variant would silently corrupt offsets if the totals job re-sampled
-    * different range boundaries than the window job, which runs as a
-    * separate execution). The skinny tokenized projection is cached so
-    * the text column is scanned/tokenized once across the two phases.
-    * Dense-ish doc_ids keep buckets balanced (true here by construction;
-    * a sparse-id corpus would size buckets from quantile sketches
-    * instead — same two phases).
-    *
-    * All outputs are exact longs (floor div / mod of exact token
-    * counts) → hash-checked against the oracle's global-window
-    * formulation, which proves the two-phase decomposition equals the
-    * single-pass prefix sum.
+    * The global running token count is [[GlobalRank.running]] over
+    * `n_tok`, bucketed by a DETERMINISTIC arithmetic range of doc_id
+    * (width sized from one cheap min/max stats agg so ~shuffle-parallelism
+    * buckets come out). Dense-ish doc_ids keep buckets balanced (true
+    * here by construction; a sparse-id corpus would size buckets from
+    * quantile sketches instead — same device). All outputs are exact
+    * longs, hash-checked against the oracle's global-window formulation,
+    * which proves the two-phase decomposition equals the single-pass
+    * prefix sum.
     */
-  /** The two-phase distributed prefix sum over `n_tok`, generic in the
-    * concatenation ORDER: `bucketed` must carry a deterministic long
-    * `bucket` column whose numeric order equals the global order's bucket
-    * ranges, and `order` is the total order within a bucket. Phase 1 is
-    * the per-bucket running-sum window (the only corpus-sized Exchange,
-    * hash on bucket); phase 2 exclusive-scans the ≤buckets-sized totals
-    * on the driver and broadcasts the offsets back. Returns the frame
-    * with `tok_start` plus the corpus-total token count (free from the
-    * phase-2 totals). Shared by doc_id-order packing and shuffled-order
-    * packing — the decomposition is order-agnostic as long as bucket
-    * ranges tile the order.
-    */
-  private def prefixSum(s: SparkSession, bucketed: DataFrame,
-      order: Seq[String]): (DataFrame, Long) = {
-    val wLocal = Window.partitionBy("bucket").orderBy(order.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = bucketed.withColumn("run", sum("n_tok").over(wLocal))
-    // phase 2: exclusive scan over the ≤nBuckets bucket totals
-    val totals = bucketed.groupBy("bucket").agg(sum("n_tok").as("tot"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = totals
-      .scanLeft((Long.MinValue, 0L)) { case ((_, acc), (b, tot)) => (b, acc + tot) }
-      .sliding(2).collect { case Array((_, off), (b, _)) => (b, off) }.toSeq
-    val offDf = s.createDataFrame(offsets).toDF("bucket", "bucket_off")
-    val df = local.join(broadcast(offDf), "bucket")
-      .withColumn("tok_start", col("bucket_off") + col("run") - col("n_tok"))
-    (df, totals.map(_._2).sum)
-  }
-
-  /** tok_start → the per-doc sequence-span bookkeeping columns. */
-  private val seqCols = Seq(
-    s"tok_start div $seqLen as seq_first",
-    s"(tok_start + n_tok - 1) div $seqLen as seq_last",
-    s"tok_start % $seqLen as seq_off",
-    s"(tok_start + n_tok - 1) div $seqLen - tok_start div $seqLen + 1 as n_seqs")
-
-  /** The packing dataflow, unsorted, plus the corpus-total token count
-    * (free on the driver from the phase-2 bucket totals) — shared by
-    * [[packSequences]] and [[packManifest]].
-    */
-  private def packedDocs(s: SparkSession, d: String): (DataFrame, Long) = {
-      val toks = T.documents(s, d)
-        .where(col("doc_id").isNotNull)
-        .select(col("doc_id"), nTok.as("n_tok"))
-      // one cheap stats pass over the pruned doc_id column (at scale:
-      // parquet footer / catalog stats) sizes the bucket width
-      val stats = toks.agg(min("doc_id"), max("doc_id")).head()
-      val (mnId, mxId) =
-        if (stats.isNullAt(0)) (0L, 0L) else (stats.getLong(0), stats.getLong(1))
-      val nBuckets = math.max(1, s.sparkContext.defaultParallelism)
-      val width = math.max(1L, (mxId - mnId) / nBuckets + 1L)
-      // `div`, not Column./ (IEEE double division) — exact long floor
-      // division; monotone in doc_id, so bucket ranges stay contiguous.
-      // cache(): the skinny (doc_id, n_tok, bucket) projection is
-      // ~24 B/doc (≈0.1% of corpus bytes) — caching it means the text
-      // column is scanned and tokenized ONCE (the totals job populates,
-      // the final plan reads), instead of once per phase. CacheBag-tracked:
-      // the entry must outlive this call (the returned plan reads it) but
-      // not the query — Bench/Verify release after each query's write.
-      val bucketed = CacheBag.track(toks
-        .withColumn("bucket", expr(s"(doc_id - ${mnId}L) div ${width}L")))
-      val (df, total) = prefixSum(s, bucketed, Seq("doc_id"))
-      (df.selectExpr(Seq("doc_id", "n_tok", "tok_start") ++ seqCols: _*), total)
-  }
-
   val packSequences: Q = Q(
     "q_pack_sequences",
     (s, d) => packedDocs(s, d)._1.transform(Det.sortAll),
@@ -223,26 +188,19 @@ object Assembly {
     * composed with [[shuffleOrder]]: real trainers pack the shuffled
     * document stream, not doc_id order, so the token stream here is
     * concatenated in (sk = md5(doc_id), doc_id) permutation order and
-    * then split into [[seqLen]]-token sequences. Same two-phase prefix
-    * sum ([[prefixSum]]), different bucketing: the first 2 hex chars of
-    * sk form 256 deterministic buckets whose numeric order equals the
-    * key's lexicographic order (shuffleOrder's device), so bucket ranges
-    * tile the SHUFFLED order and the decomposition carries over
-    * unchanged — machinery shared, only the order swapped. The oracle
+    * then split into [[seqLen]]-token sequences. Same
+    * [[GlobalRank.running]] token sum, bucketed by [[hexPrefix]]
+    * (shuffleOrder's buckets), so bucket ranges tile the SHUFFLED order —
+    * machinery shared, only the order swapped. The oracle
     * windows over (sk, doc_id) globally; the hash match proves the
     * rank-range bucketing equals the sequential shuffled prefix sum.
     */
   val packShuffled: Q = Q(
     "q_pack_shuffled",
     (s, d) => {
-      val keyed = CacheBag.track(T.documents(s, d)
-        .where(col("doc_id").isNotNull)
-        .select(col("doc_id"), nTok.as("n_tok"),
-          md5(col("doc_id").cast("string")).as("sk"))
-        .withColumn("bucket",
-          conv(substring(col("sk"), 1, 2), 16, 10).cast("long")))
-      val (df, _) = prefixSum(s, keyed, Seq("sk", "doc_id"))
-      df.selectExpr(Seq("doc_id", "sk", "n_tok", "tok_start") ++ seqCols: _*)
+      GlobalRank.running(s, shuffleKeyed(s, d, nTok.as("n_tok")), Seq("bucket"), 0,
+          Seq(col("sk"), col("doc_id")), col("n_tok"), "tok_end")._1
+        .selectExpr(packCols("doc_id", "sk"): _*)
         .transform(Det.sortAll)
     },
     Some(s"""WITH t AS (
@@ -333,33 +291,17 @@ object Assembly {
     * epoch, same machinery. Reproducible end to end: re-running yields
     * the identical order (no rand(), no partition-dependent state).
     *
-    * Global ranking is the same single-reducer-free two-phase shape as
-    * [[packSequences]]: the first 2 hex chars of the key form 256
-    * DETERMINISTIC buckets whose numeric order equals the key's
-    * lexicographic order (hex prefix ⇒ bucket boundaries are contiguous
-    * key ranges); a per-bucket window ranks locally, bucket counts come
-    * to the driver for an exclusive scan, and the offsets broadcast
-    * back. At 1000-executor scale widen the prefix (4 hex chars = 65k
-    * buckets) — the offsets stay partition metadata. The oracle ranks
-    * with one global ROW_NUMBER, so the hash match proves the bucketed
-    * decomposition equals the sequential permutation rank.
+    * The global rank is [[GlobalRank.running]] with weight 1 over the
+    * [[hexPrefix]] buckets. The oracle ranks with one global ROW_NUMBER,
+    * so the hash match proves the bucketed decomposition equals the
+    * sequential permutation rank.
     */
   val shuffleOrder: Q = Q(
     "q_shuffle_order",
     (s, d) => {
-      val keyed = CacheBag.track(T.documents(s, d)
-        .where(col("doc_id").isNotNull)
-        .select(col("doc_id"), md5(col("doc_id").cast("string")).as("sk"))
-        .withColumn("bucket", conv(substring(col("sk"), 1, 2), 16, 10).cast("long")))
-      val wLocal = Window.partitionBy("bucket").orderBy("sk", "doc_id")
-      val offsets = keyed.groupBy("bucket").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-        .scanLeft((Long.MinValue, 0L)) { case ((_, acc), (b, n)) => (b, acc + n) }
-        .sliding(2).collect { case Array((_, off), (b, _)) => (b, off) }.toSeq
-      val offDf = s.createDataFrame(offsets).toDF("bucket", "bucket_off")
-      keyed.join(broadcast(offDf), "bucket")
-        .select(col("doc_id"), col("sk"),
-          (col("bucket_off") + row_number().over(wLocal)).cast("long").as("train_rank"))
+      GlobalRank.running(s, shuffleKeyed(s, d), Seq("bucket"), 0,
+          Seq(col("sk"), col("doc_id")), lit(1L), "train_rank")._1
+        .select("doc_id", "sk", "train_rank")
         .transform(Det.sortAll)
     },
     Some("""WITH t AS (
@@ -386,8 +328,9 @@ object Assembly {
     * comparison multiplies by 2^24 — a power of two, exact in IEEE — so
     * the keep decision is bit-deterministic on both engines). Each copy
     * gets its own shuffle key md5(doc:epoch:copy) and a per-epoch rank via
-    * the same hex-prefix two-phase device as [[shuffleOrder]] (buckets
-    * keyed (epoch, prefix); offsets = ≤2·256 rows of partition metadata).
+    * [[GlobalRank.running]] as in [[shuffleOrder]], bucketed (epoch,
+    * [[hexPrefix]]) with the scan restarting per epoch (offsets = ≤2·256
+    * rows of partition metadata).
     * The corpus is touched once, narrowly; the explode is bounded by
     * Σ⌈f⌉ ≈ |langs|-normalized corpus size.
     */
@@ -428,32 +371,11 @@ object Assembly {
             .otherwise(expr("cast(array() as array<bigint>)"))).as("copy"))
         .withColumn("sk",
           md5(concat_ws(":", col("doc_id"), col("epoch"), col("copy"))))
-        .withColumn("bucket",
-          conv(substring(col("sk"), 1, 2), 16, 10).cast("long")))
-      val wLocal = Window.partitionBy("epoch", "bucket")
-        .orderBy("sk", "doc_id", "copy")
-      val df = {
-        // phase 2: per-(epoch, bucket) counts to the driver (≤2·256 rows
-        // of partition metadata); the exclusive scan RESTARTS per epoch —
-        // ranks are per-epoch
-        val rows = keyed.groupBy("epoch", "bucket").agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-          .sortBy(t => (t._1, t._2))
-        var prevEpoch = Long.MinValue
-        var acc = 0L
-        val offs = rows.map { case (e, b, n) =>
-          if (e != prevEpoch) { prevEpoch = e; acc = 0L }
-          val off = acc
-          acc += n
-          (e, b, off)
-        }.toIndexedSeq
-        val offDf = s.createDataFrame(offs).toDF("epoch", "bucket", "bucket_off")
-        keyed.join(broadcast(offDf), Seq("epoch", "bucket"))
-          .select(col("epoch"), col("doc_id"), col("lang"), col("copy"), col("sk"),
-            (col("bucket_off") + row_number().over(wLocal)).cast("long")
-              .as("train_rank"))
-      }
-      df.transform(Det.sortAll)
+        .withColumn("bucket", hexPrefix(col("sk"))))
+      GlobalRank.running(s, keyed, Seq("epoch", "bucket"), 1,
+          Seq(col("sk"), col("doc_id"), col("copy")), lit(1L), "train_rank")._1
+        .select("epoch", "doc_id", "lang", "copy", "sk", "train_rank")
+        .transform(Det.sortAll)
     },
     Some("""WITH c AS (
             |  SELECT lang, CAST(count(*) AS BIGINT) AS n_docs FROM documents
@@ -501,9 +423,9 @@ object Assembly {
     * The straggler trap this avoids: ROW_NUMBER over PARTITION BY lang
     * directly is one task per language — a ~5-value key puts corpus/5
     * rows on each of 5 unsplittable tasks at 100 TB (the q_ccnet_bucket
-    * analysis). Device: the hex-prefix two-phase rank ([[epochSample]]'s
-    * restart-scan, keyed (lang, bucket)) PLUS a bucket-level pre-prune —
-    * a bucket whose exclusive offset is already ≥ n cannot contain a
+    * analysis). Device: [[GlobalRank.running]] keyed (lang, [[hexPrefix]])
+    * with the scan restarting per lang, PLUS its `limit` pre-prune — a
+    * bucket whose exclusive offset is already ≥ n cannot contain a
     * kept rank, so the offsets join (broadcast, inner) drops ~254/256 of
     * the corpus BEFORE the rank window ever shuffles; the window sees
     * ~(n + bucket) rows per language, not corpus/langs. Null lang
@@ -514,33 +436,11 @@ object Assembly {
     "q_grouped_sample",
     (s, d) => {
       val n = 200L
-      val keyed = CacheBag.track(T.documents(s, d)
-        .where(col("doc_id").isNotNull)
-        .select(col("doc_id"), coalesce(col("lang"), lit("")).as("lang"))
-        .withColumn("sk", md5(col("doc_id").cast("string")))
-        .withColumn("bucket", conv(substring(col("sk"), 1, 2), 16, 10).cast("long")))
-      val wLocal = Window.partitionBy("lang", "bucket").orderBy("sk", "doc_id")
-      // phase 2: per-(lang, bucket) counts (≤langs·256 rows of metadata);
-      // exclusive scan RESTARTS per lang
-      val rows = keyed.groupBy("lang", "bucket").agg(count(lit(1)).as("cnt"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy(t => (t._1, t._2))
-      var prev: Option[String] = None
-      var acc = 0L
-      val offs = rows.map { case (lg, b, cnt) =>
-        if (!prev.contains(lg)) { prev = Some(lg); acc = 0L }
-        val off = acc
-        acc += cnt
-        (lg, b, off)
-      }.toIndexedSeq
-      // the pre-prune: only buckets that can still contain a rank ≤ n
-      val offDf = s.createDataFrame(offs.filter(_._3 < n))
-        .toDF("lang", "bucket", "bucket_off")
-      keyed.join(broadcast(offDf), Seq("lang", "bucket"))
-        .select(col("doc_id"), col("lang"), col("sk"),
-          (col("bucket_off") + row_number().over(wLocal)).cast("long")
-            .as("sample_rank"))
+      GlobalRank.running(s, shuffleKeyed(s, d, coalesce(col("lang"), lit("")).as("lang")),
+          Seq("lang", "bucket"), 1, Seq(col("sk"), col("doc_id")), lit(1L),
+          "sample_rank", Some(n))._1
         .where(col("sample_rank") <= n)
+        .select("doc_id", "lang", "sk", "sample_rank")
         .transform(Det.sortAll)
     },
     Some("""WITH t AS (

@@ -125,6 +125,13 @@ object Dedup {
         greatest(col("da"), col("db")).as("doc_b") +: payload.map(col): _*)
   }
 
+  /** The quadratic-output budget, `graft.expand.maxRows` (default 10⁸
+    * rows) — read here only, so every guard and the EP refusal memo key
+    * agree on it.
+    */
+  private[operators] def expandMaxRows(s: SparkSession): Long =
+    s.conf.get("graft.expand.maxRows", "100000000").toLong
+
   /** Loud budget guard on the EXPANDED member-pair outputs (r13, verdict
     * r12 #2). The expanded contract is quadratic in the duplication
     * factor BY DESIGN — a 10⁵-duplicate page is ~10¹⁰ member pairs at
@@ -156,7 +163,7 @@ object Dedup {
   private[operators] def expansionGuard(s: SparkSession, d: String,
       family: String, repPairs: DataFrame, sizes: DataFrame,
       tables: Seq[String], repTwin: String): Unit = {
-    val budget = s.conf.get("graft.expand.maxRows", "100000000").toLong
+    val budget = expandMaxRows(s)
     val est = SessionMemo.session(s, d, s"xg$family", tables) {
       val cross = repPairs
         .join(sizes.select(col("rep").as("rep_a"), col("n").as("na")), "rep_a")

@@ -194,81 +194,39 @@ object Marts {
     perRow.unionByName(grouped)
   }
 
-  /** The deterministic two-phase global numbering device over a mart
-    * frame with columns (log_id, c_custkey, o_orderpriority, status_type,
-    * price_cents, cnt). `nB` sizes the bucket widths ONLY — the served
-    * ids are identical for every nB and every physical placement
-    * (GuardsSpec pins nB=1 vs nB=32, single-partition input, and
-    * exchange-reuse disabled against the global row_number).
+  /** The deterministic global numbering of a mart frame with columns
+    * (log_id, c_custkey, o_orderpriority, status_type, price_cents, cnt):
+    * the reference's row_number() over (order by priority, log_id|-1,
+    * custkey) (log_for_tableau.sql:97) as [[GlobalRank.running]] with
+    * weight 1. `nB` sizes the bucket widths ONLY — the served ids are
+    * identical for every nB and every physical placement (GuardsSpec
+    * pins nB=1 vs nB=32, single-partition input, and exchange-reuse
+    * disabled against the global row_number).
+    *
+    * The sort key is a unique total order: log_id = o_orderkey is unique
+    * among per-row rows, and grouped rows (log_id null → -1, sorting
+    * FIRST within a priority) are unique per (custkey, priority). Bucket
+    * = (priority, b2), where b2 width-buckets grouped rows by custkey
+    * into [0, nB) and per-row rows by log_id into [nB+1, 2·nB+1) —
+    * disjoint ranges, monotone-consistent with the sort order. One cheap
+    * stats pass over two pruned long columns sizes the widths.
     */
   private[graft] def numberMart(s: SparkSession, unioned: DataFrame,
       nB: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-      // Two-phase global numbering over a DETERMINISTIC key-arithmetic
-      // bucket (the Assembly.prefixSum device). A bare Window.orderBy
-      // would funnel the whole mart through one task (WindowExec: No
-      // Partition Defined); the reference's row_number() over (order by …)
-      // gets away with it only because BigQuery reshuffles internally
-      // (log_for_tableau.sql:97). The r12 variant bucketed by
-      // spark_partition_id() over a repartitionByRange exchange — ids
-      // desynchronize if the local-rank and totals subtrees ever plan
-      // SEPARATE range samplings, so its correctness leaned on the
-      // ReuseExchange rule (exactly the hazard q_pack_sequences' scaladoc
-      // bans). r13: the bucket is pure arithmetic on the sort key itself —
-      // identical on every (re-)execution, no placement dependence.
-      //
-      // Sort key (priority, log_id|-1, custkey) is a unique total order:
-      // log_id = o_orderkey is unique among per-row rows, and grouped
-      // rows (log_id null → -1, sorting FIRST within a priority) are
-      // unique per (custkey, priority). Bucket = (priority, b2) where b2
-      // range-partitions grouped rows by custkey and per-row rows by
-      // log_id into disjoint numeric ranges — monotone-consistent with
-      // the sort order, so global rank = rank within bucket + count of
-      // earlier buckets. One cheap stats pass over two pruned long
-      // columns sizes the widths; the totals are ≤ |priorities|·(2·nB+2)
-      // rows, exclusive-scanned on the driver and broadcast back.
-      val sortKeys = Seq(col("o_orderpriority"),
-        coalesce(col("log_id"), lit(-1L)), col("c_custkey"))
-      val st = unioned.agg(
-        min(coalesce(col("log_id"), lit(-1L))), max(coalesce(col("log_id"), lit(-1L))),
-        min(col("c_custkey")), max(col("c_custkey"))).head()
-      val (mnL, mxL, mnC, mxC) =
-        if (st.isNullAt(0)) (0L, 0L, 0L, 0L)
-        else (st.getLong(0), st.getLong(1), st.getLong(2), st.getLong(3))
-      val wL = math.max(1L, (mxL - mnL) / nB + 1L)
-      val wC = math.max(1L, (mxC - mnC) / nB + 1L)
-      // exact long floor division (`div`), monotone in its key; grouped
-      // rows land in [0, nB), per-row rows in [nB+1, 2·nB+1)
-      val bucketed = unioned.withColumn("b2", expr(
-        s"CASE WHEN log_id IS NULL THEN (c_custkey - ${mnC}L) div ${wC}L " +
-          s"ELSE ${nB + 1}L + (coalesce(log_id, -1L) - ${mnL}L) div ${wL}L END"))
-      val wLocal = Window.partitionBy("o_orderpriority", "b2")
-        .orderBy(sortKeys: _*)
-      val local = bucketed.withColumn("local_rn",
-        row_number().over(wLocal).cast("long"))
-      // phase 2: exclusive scan over the tiny (priority, b2) totals on
-      // the driver — priorities are ASCII, so the driver's string sort
-      // matches Spark's UTF8 binary ordering
-      val totals = bucketed.groupBy("o_orderpriority", "b2")
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .sortBy { case (p, b, _) => (p, b) }
-      val offsets = totals
-        .scanLeft((("", Long.MinValue), 0L)) {
-          case (((_, _), acc), (p, b, n)) => ((p, b), acc + n)
-        }
-        .sliding(2).collect {
-          case Array(((_, _), off), ((p, b), _)) => (p, b, off)
-        }.toSeq
-      val offDf = s.createDataFrame(offsets)
-        .toDF("o_orderpriority", "b2", "off")
-      local
-        .join(broadcast(offDf), Seq("o_orderpriority", "b2"))
-        .withColumn("id", (col("local_rn") + col("off")).cast("int"))
-        .withColumn("price_cents_fixed",
-          when(col("price_cents") === 0L, 1L).otherwise(col("price_cents")))
-        .select("id", "log_id", "c_custkey", "o_orderpriority", "status_type",
-          "price_cents", "price_cents_fixed", "cnt")
+    val lid = coalesce(col("log_id"), lit(-1L))
+    val st = unioned.agg(min(lid), max(lid), min("c_custkey"), max("c_custkey")).head()
+    val Seq(mnL, mxL, mnC, mxC) =
+      if (st.isNullAt(0)) Seq.fill(4)(0L) else (0 to 3).map(st.getLong)
+    val bucketed = unioned.withColumn("b2",
+      when(col("log_id").isNull, GlobalRank.widthBucket("c_custkey", mnC, mxC, nB))
+        .otherwise(lit(nB + 1L) + GlobalRank.widthBucket("log_id", mnL, mxL, nB)))
+    GlobalRank.running(s, bucketed, Seq("o_orderpriority", "b2"), 0,
+        Seq(col("o_orderpriority"), lid, col("c_custkey")), lit(1L), "id")._1
+      .withColumn("id", col("id").cast("int"))
+      .withColumn("price_cents_fixed",
+        when(col("price_cents") === 0L, 1L).otherwise(col("price_cents")))
+      .select("id", "log_id", "c_custkey", "o_orderpriority", "status_type",
+        "price_cents", "price_cents_fixed", "cnt")
   }
 
   /** The numbered mart, MATERIALIZED ONCE PER SESSION — the dbt move: the

@@ -233,26 +233,12 @@ object Similarity {
 
   private[graft] def embedPairsFrom(g: EmbedGraph): DataFrame = {
     val EmbedGraph(members, e, repPairs, pairBound) = g
-    // guarded broadcast of the distinct-content-bounded pair side — the
-    // expandPairs device (see Dedup.expandPairs r12/r13): stats-driven
-    // planning over the cached members frame can flip the quadratic
-    // member expansion to sort-merge. The served graph carries the EP
-    // meta's validated pair row total, so the guard prices no job; only
-    // the direct (spec-oracle) graph still pays a count.
-    val pp = pairBound match {
-      case Some(b) =>
-        if (b <= Dedup.broadcastPairCap) broadcast(repPairs)
-        else repPairs.hint("merge")
-      case None =>
-        val p = graft.CacheBag.track(repPairs)
-        if (p.count() <= Dedup.broadcastPairCap) broadcast(p)
-        else p.hint("merge")
-    }
-    val cross = pp
-      .join(members.select(col("rep").as("rep_a"), col("vec_id").as("ia")), "rep_a")
-      .join(members.select(col("rep").as("rep_b"), col("vec_id").as("ib")), "rep_b")
-      .select(least(col("ia"), col("ib")).as("vec_a"),
-        greatest(col("ia"), col("ib")).as("vec_b"), col("cosine"))
+    // the guarded member expansion (Dedup.expandPairs): the served graph
+    // carries the EP meta's validated pair row total, so the broadcast
+    // guard prices no job; only the direct (spec-oracle) graph pays a count
+    val cross = Dedup.expandPairs(repPairs,
+        members.select(col("rep"), col("vec_id").as("doc_id")), Seq("cosine"), pairBound)
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), col("cosine"))
     val within = members.as("x")
       .join(members.as("y"),
         col("x.rep") === col("y.rep") && col("x.vec_id") < col("y.vec_id"))

@@ -363,6 +363,62 @@ class GuardsSpec extends SparkSpec {
     }
   }
 
+  test("global rank: GlobalRank.running equals a local sort — restart prefix, global scan, zero weights, limit pre-prune, empty and sparse buckets, UTF-8 key order") {
+    import graft.operators.GlobalRank
+    import java.nio.charset.StandardCharsets.UTF_8
+    // rows: (g, bucket b, unique order key x, weight w)
+    def served(rows: Seq[(String, Long, Long, Long)], restart: Int, limit: Option[Long] = None): (Map[Long, Long], Long) = {
+      val (df, total) = GlobalRank.running(spark,
+        rows.toDF("g", "b", "x", "w").repartition(3), Seq("g", "b"), restart,
+        Seq(col("x")), col("w"), "run", limit)
+      (df.select("x", "run").as[(Long, Long)].collect().toMap, total)
+    }
+    // the reference: one local sort by (g in Spark's UTF-8 binary order,
+    // x), inclusive running sum of w, restarting per g when asked
+    val utf8: Ordering[String] = (a, b) =>
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    def expected(rows: Seq[(String, Long, Long, Long)], restart: Boolean): Map[Long, Long] =
+      (if (restart) rows.groupBy(_._1).values.toSeq else Seq(rows)).flatMap { grp =>
+        val sorted = grp.sortBy(r => (r._1, r._3))(Ordering.Tuple2(utf8, Ordering.Long))
+        sorted.map(_._3).zip(sorted.map(_._4).scanLeft(0L)(_ + _).tail)
+      }.toMap
+
+    val (empty, emptyTotal) = served(Seq.empty, 0)
+    assert(empty.isEmpty && emptyTotal == 0L)
+    // Java's String.compareTo orders U+1F600 (surrogate pair D83D DE00)
+    // before U+FFFD; Spark's UTF-8 binary order (EF BF BD < F0 9F 98 80)
+    // puts U+FFFD first — the driver must scan in Spark's order
+    val (fffd, smile) = ("\uFFFD", "\uD83D\uDE00")
+    assert(smile.compareTo(fffd) < 0)
+    assert(served(Seq((smile, 0L, 1L, 1L), (fffd, 0L, 2L, 1L)), 0)._1 ==
+      Map(2L -> 1L, 1L -> 2L), "bucket keys scanned out of Spark's order")
+    val rnd = new scala.util.Random(7)
+    for {
+      // one bucket / sparse buckets (most of the range empty) / dense
+      width <- Seq(1L << 40, 97L, 1L)
+      groups <- Seq(Seq(""), Seq("a", "b"), Seq(fffd, smile, "a"))
+    } {
+      val xs = rnd.shuffle((0L until 5000L).toList).take(20 + rnd.nextInt(150))
+      val rows = xs.map(x => (groups(rnd.nextInt(groups.size)), x / width, x,
+        rnd.nextInt(4).toLong)) // weights 0..3
+      val what = s"width $width, groups ${groups.size}"
+      val (perGroup, total) = served(rows, 1)
+      assert(perGroup == expected(rows, restart = true), s"restart scan: $what")
+      assert(total == rows.map(_._4).sum, s"grand total: $what")
+      assert(served(rows, 0)._1 == expected(rows, restart = false), s"global scan: $what")
+      // the rank-limit pre-prune: every rank ≤ limit is served exactly,
+      // and a served row's rank is exact even past the limit
+      val ranks = rows.map(_.copy(_4 = 1L))
+      val limit = 1L + rnd.nextInt(12)
+      val (pruned, _) = served(ranks, 1, Some(limit))
+      val exp = expected(ranks, restart = true)
+      assert(pruned.forall { case (x, r) => exp(x) == r }, s"pruned ranks: $what")
+      assert(pruned.filter(_._2 <= limit) == exp.filter(_._2 <= limit), s"limit: $what")
+      if (width == 1L && ranks.groupBy(_._1).values.exists(_.size > limit))
+        assert(pruned.size < ranks.size, s"nothing pruned: $what")
+    }
+  }
+
   test("mart table is session-materialized: one build serves repeated q_mart_union runs (verdict r13 #1)") {
     import graft.operators.SessionMemo
     // an earlier case in this suite may already have paid the build —

@@ -24,9 +24,7 @@ class PlanGuardSpec extends SparkSpec {
   // broadcast side is bounded by construction, not corpus-sized:
   // the ANN query sets (≤20 vectors) / the IVF query-side crossJoin with
   // the ≤1024-row codebook (corpus assignment itself is a narrow kernel,
-  // no join — pinned below), and q_mart_union's triangular prefix-sum
-  // self-join over the per-partition count table
-  // (≤ spark.sql.shuffle.partitions rows)
+  // no join — pinned below)
   // (q_ann_pq's NLJ broadcasts the 20 queries + their m·ksub-double ADC
   // tables — same bounded query-set shape as q_ann_topk)
   // (q_mix_weights broadcasts ONE global-aggregate row against the
@@ -43,7 +41,7 @@ class PlanGuardSpec extends SparkSpec {
   // the |sources|-sized totals frame — broadcast NLJ bounded by
   // C(|sources|, 2); the word-level work is an equi hash join)
   private val allowedNlj = Set("q_ann_topk", "q_ann_lsh", "q_ann_ivf",
-    "q_ann_pq", "q_ann_ivfpq", "q_mart_union", "q_mix_weights", "q_epoch_sample",
+    "q_ann_pq", "q_ann_ivfpq", "q_mix_weights", "q_epoch_sample",
     "q_rrf_hybrid", "q_schema_tests", "q_bm25", "q_source_divergence")
 
   test("no registered query plans a cartesian product or an unbounded NLJ") {
