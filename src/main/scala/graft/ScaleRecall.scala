@@ -64,8 +64,7 @@ object ScaleRecall {
     val exact = reps.select(col("eh").as("eh_n"), col("v"), col("nrm"))
       .join(sample, col("eh_n") =!= col("eh_q"))
       .select(col("eh_q"), col("eh_n"),
-        (graft.functions.Vectors.dot(col("qv"), col("v")) /
-          (col("qnrm") * col("nrm"))).as("cosine"))
+        Similarity.cosine("qv", "v", "qnrm", "nrm").as("cosine"))
       .where(col("cosine") >= Similarity.dedupTau)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") <= AnnIndex.knK)

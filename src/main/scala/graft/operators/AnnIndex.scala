@@ -1311,7 +1311,7 @@ object AnnIndex {
       .join(reps.select(col("eh").as("eh_b"), col("v").as("vb"),
         col("nrm").as("nb")), "eh_b")
       .select(col("eh_a"), col("eh_b"),
-        (Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+        Similarity.cosine("va", "vb", "na", "nb").as("cosine"))
       .where(col("cosine") >= Similarity.dedupTau)
 
   /** Fresh-build candidates: the split-ball self-join (see
@@ -1327,14 +1327,9 @@ object AnnIndex {
     * scale by construction.
     */
   private def splitBall(capped: DataFrame, bits: Int, radius: Int): DataFrame = {
-    def expand(df: DataFrame, masks: Array[Long]): DataFrame =
-      df.withColumn("mask", explode(lit(masks)))
-        .select(col("eh"), col("band_idx"),
-          col("code").bitwiseXOR(col("mask")).as("code"),
-          expr("bit_count(mask)").as("mbits"))
     val (lowMasks, highMasks) = Similarity.splitProbeMasks(bits, radius)
-    expand(capped, lowMasks).as("a").hint("merge")
-      .join(expand(capped, highMasks).as("b"),
+    Similarity.expandMasks(capped, "eh", lowMasks).as("a").hint("merge")
+      .join(Similarity.expandMasks(capped, "eh", highMasks).as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.code") === col("b.code") &&
           col("a.mbits") + col("b.mbits") <= radius &&
@@ -1528,8 +1523,9 @@ object AnnIndex {
     * the served cluster ids are exactly the direct propagation's labels.
     *
     * Append (r13, verdict r12 #6): EP appends only ADD pairs, so
-    * components only MERGE along new-pair bridges, never split — the text
-    * CC family's reduced-graph union-find (Dedup.ccTryDelta), ported. The
+    * components only MERGE along new-pair bridges, never split — the
+    * reduced-graph union-find the text CC family appends with too
+    * ([[Dedup.unionFindRelabel]]). The
     * base is the version EP's lineage pointer names; each `ep_delta`
     * endpoint maps to its base component key (fresh ehs key as
     * themselves), the REDUCED edge set (≤ delta-sized, driver-capped — a
@@ -1551,32 +1547,10 @@ object AnnIndex {
         .select(coalesce(col("ck_a"), col("eh_a")).as("ka"),
           coalesce(col("ck_b"), col("eh_b")).as("kb"))
         .where(col("ka") =!= col("kb")).distinct()
-      val reduced = keyed.limit(200001).collect()
-      if (reduced.length > 200000) return None
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      reduced.foreach { row =>
-        val (ra, rb) = (find(row.getString(0)), find(row.getString(1)))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val relabel = reduced.iterator
-        .flatMap(r => Seq(r.getString(0), r.getString(1))).toSet.toSeq
-        .map((k: String) => (k, find(k))).filter { case (k, r) => k != r }
       val base0 = load(s, v("ep_reps"), repDdl).select("eh")
         .join(baseLab, Seq("eh"), "left")
         .select(col("eh"), coalesce(col("ck"), col("eh")).as("key0"))
-      import s.implicits._
-      Some(
-        if (relabel.isEmpty) base0.select(col("eh"), col("key0").as("ck"))
-        else base0
-          .join(broadcast(relabel.toDF("key0", "ck2")), Seq("key0"), "left")
-          .select(col("eh"), coalesce(col("ck2"), col("key0")).as("ck")))
+      Dedup.unionFindRelabel(s, keyed, base0, "eh", "ck")
     }
     def put(lab: DataFrame): Meta =
       Meta(v.cnt, saveCount(s, lab, v("ec_labels"), labDdl).toString)
@@ -1731,8 +1705,7 @@ object AnnIndex {
           col("nrm").as("nnrm"), col("cluster")), Seq("cluster"))
         .where(col("eh_q") =!= col("eh_n"))
         .select(col("eh_q"), col("eh_n"),
-          (Vectors.dot(col("qv"), col("nv")) / (col("qnrm") * col("nnrm")))
-            .as("cosine"))
+          Similarity.cosine("qv", "nv", "qnrm", "nnrm").as("cosine"))
         .where(col("cosine") >= Similarity.dedupTau)
     def topK(cand: DataFrame): DataFrame = {
       val w = org.apache.spark.sql.expressions.Window.partitionBy("eh_q")

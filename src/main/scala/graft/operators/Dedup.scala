@@ -1016,12 +1016,27 @@ object Dedup {
       .select(coalesce(col("key_a"), col("nth_a")).as("ka"),
         coalesce(col("key_b"), col("nth_b")).as("kb"))
       .where(col("ka") =!= col("kb")).distinct()
-    // reduced-graph budget: same measured-guard posture as the
-    // incremental-dedup broadcast — a backfill-sized batch refits
+    val base = joined.select("nth").distinct().join(oldLabels, Seq("nth"), "left")
+      .select(col("nth"), coalesce(col("ckey"), col("nth")).as("key0"))
+    unionFindRelabel(s, keyed, base, "nth", "ckey")
+  }
+
+  /** Reduced-graph union-find — the append step of both persisted
+    * component-label families (text CC: [[ccTryDelta]]; embedding EC:
+    * AnnIndex.ecLabels). `keyed` is the batch's distinct edges (ka, kb)
+    * between component keys (an old node's persisted key, a new node
+    * itself); `base` is every node with its starting key (`node`, key0).
+    * The reduced edge set is driver-capped with the incremental-dedup
+    * broadcast's measured-guard posture: past 200,000 edges the batch is
+    * backfill-sized and None asks the caller to refit. Roots are the min
+    * key, so a merged component keeps its from-scratch min label (each
+    * old key already IS its component's min); base keys relabel with one
+    * broadcast join into column `out`.
+    */
+  private[operators] def unionFindRelabel(s: SparkSession, keyed: DataFrame,
+      base: DataFrame, node: String, out: String): Option[DataFrame] = {
     val reduced = keyed.limit(200001).collect()
     if (reduced.length > 200000) return None
-    // driver union-find, roots = min key (so the merged key equals the
-    // from-scratch min member nth)
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -1036,17 +1051,13 @@ object Dedup {
     }
     val relabel = reduced.iterator
       .flatMap(r => Seq(r.getString(0), r.getString(1))).toSet.toSeq
-      .map((k: String) => (k, find(k))).filter { case (k, v) => k != v }
-    val allNth = joined.select("nth").distinct()
-    val base = allNth.join(oldLabels, Seq("nth"), "left")
-      .select(col("nth"), coalesce(col("ckey"), col("nth")).as("key0"))
+      .map((k: String) => (k, find(k))).filter { case (k, r) => k != r }
     import s.implicits._
-    val out =
-      if (relabel.isEmpty) base.select(col("nth"), col("key0").as("ckey"))
+    Some(
+      if (relabel.isEmpty) base.select(col(node), col("key0").as(out))
       else base
         .join(broadcast(relabel.toDF("key0", "ck2")), Seq("key0"), "left")
-        .select(col("nth"), coalesce(col("ck2"), col("key0")).as("ckey"))
-    Some(out)
+        .select(col(node), coalesce(col("ck2"), col("key0")).as(out)))
   }
 
   val clusters: Q = Q(

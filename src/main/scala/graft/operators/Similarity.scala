@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{CacheBag, Det, Q, T}
@@ -41,8 +41,12 @@ object Similarity {
       // side's partitioning, so spread the corpus across the cluster first
       .repartition(s.sparkContext.defaultParallelism)
 
-  private val cos =
-    Vectors.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
+  /** The one exact cosine column: dot(a, b) / (na · nb) over stored
+    * norms, operands in the order given — every emitted cosine in the
+    * engine is this expression, so equal inputs give equal bits.
+    */
+  private[graft] def cosine(a: String, b: String, na: String, nb: String): Column =
+    Vectors.dot(col(a), col(b)) / (col(na) * col(nb))
 
   private[graft] val dedupTau = 0.35
 
@@ -116,7 +120,7 @@ object Similarity {
     * carries the mask's popcount for radius accounting across a
     * split-ball join.
     */
-  private def expandMasks(buckets: DataFrame, idCol: String,
+  private[graft] def expandMasks(buckets: DataFrame, idCol: String,
       masks: Array[Long]): DataFrame =
     buckets.withColumn("mask", explode(lit(masks)))
       .select(col(idCol), col("band_idx"),
@@ -168,7 +172,7 @@ object Similarity {
     broadcast(e.as("a"))
       .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        cos.as("cosine"))
+        cosine("a.v", "b.v", "a.nrm", "b.nrm").as("cosine"))
       .where(col("cosine") >= dedupTau)
   }
 
@@ -244,7 +248,7 @@ object Similarity {
         col("x.rep") === col("y.rep") && col("x.vec_id") < col("y.vec_id"))
       .join(e.as("g"), col("x.rep") === col("g.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        (Vectors.dot(col("g.v"), col("g.v")) / (col("g.nrm") * col("g.nrm"))).as("cosine"))
+        cosine("g.v", "g.v", "g.nrm", "g.nrm").as("cosine"))
       // parity with the direct plan, NaN included: Spark's double
       // ordering ranks NaN above every value, so a zero vector's NaN
       // cosine satisfies >= tau here exactly as it would in the
@@ -352,7 +356,7 @@ object Similarity {
         .join(e.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na")), "vec_a")
         .join(e.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb")), "vec_b")
         .select(col("vec_a").as("rep_a"), col("vec_b").as("rep_b"),
-          (Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
+          cosine("va", "vb", "na", "nb").as("cosine"))
         .where(col("cosine") >= dedupTau)
       EmbedGraph(members, e, repPairs)
   }
@@ -602,8 +606,7 @@ object Similarity {
           // member expansion is the shared [[topKExpand]] tail
           val scored = reps.crossJoin(broadcast(memberQueries(s, d)))
             .select(col("query_id"), col("eh_q"), col("eh"),
-              (Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm")))
-                .as("cosine"))
+              cosine("qv", "v", "qnrm", "nrm").as("cosine"))
           topKExpand(s, d, scored, 5)
         case None =>
           val e = vecs(s, d)
@@ -613,7 +616,7 @@ object Similarity {
           broadcast(queries).as("a")
             .join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
             .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-              cos.as("cosine"))
+              cosine("a.v", "b.v", "a.nrm", "b.nrm").as("cosine"))
             .withColumn("rn", row_number().over(w).cast("long"))
             .where(col("rn") <= 5)
       }
@@ -685,32 +688,40 @@ object Similarity {
           .join(broadcast(q.select(col("eh_q").as("eh"), col("query_id"))), "eh")
           .select("query_id", "band_idx", "code"))
       }.head
-      val qb = expandProbes(qsigs, "query_id", bits, radius)
-      val cand = capped.join(broadcast(qb), Seq("band_idx", "code"))
-        .select("query_id", "eh").distinct()
-      val scored = cand
-        .join(Members.eh(s, d)._2.select(col("eh"), col("v"), col("nrm")), "eh")
-        .join(broadcast(q.select("query_id", "eh_q", "qv", "qnrm")), "query_id")
-        .select(col("query_id"), col("eh_q"), col("eh"),
-          (Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cosine"))
-      topKExpand(s, d, scored, 5).transform(Det.sortAll)
+      lshProbeTopK(s, d, bits, radius, capped, qsigs, q, 5).transform(Det.sortAll)
     },
     None
   )
 
-  /** r8: the per-micro-batch kernel of the STREAMING ANN serve (the
-    * continuous-retrieval twin of q_ann_lsh, wrapped by
-    * graft.streaming.EventStream.annServeLshSink) — identical candidate /
-    * rescore / top-k dataflow as q_ann_lsh's serve, with the query side a
-    * caller-supplied batch of (query_id, embedding) rows instead of
-    * corpus members. Query vectors are encoded with the index's FROZEN
-    * geometry (the bits/bands/radius recorded at fit time — AnnIndex
-    * returns the persisted solve, so a stream serving across an append
-    * probes the same bucket space the stored signatures live in); the
-    * capped signature table and the corpus scan are the STATIC sides of
-    * a stream-static join. Everything here is stateless per batch — the
-    * scale axis is the persisted index, not stream state.
+  /** Exact rescore of rep-level candidates: (query_id, eh) rows join the
+    * distinct vectors of the [[Members.eh]] memo and the broadcast query
+    * side `q` (query_id, qv, qnrm), and score [[cosine]](qv, v) into
+    * [[topKExpand]]'s input. eh_q comes from whichever side carries it:
+    * the candidates after the ADC prefilter, `q` on the LSH ring.
     */
+  private def rescore(s: SparkSession, d: String, cand: DataFrame,
+      q: DataFrame): DataFrame =
+    cand
+      .join(Members.eh(s, d)._2.select(col("eh"), col("v"), col("nrm")), "eh")
+      .join(broadcast(q), "query_id")
+      .select(col("query_id"), col("eh_q"), col("eh"),
+        cosine("qv", "v", "qnrm", "nrm").as("cosine"))
+
+  /** The LSH probe ring, shared by q_ann_lsh and the streaming serve: each
+    * query signature row (query_id, band_idx, code) expands to its
+    * hamming-≤radius probe codes, the broadcast ring joins the capped
+    * signature table for distinct (query_id, eh) candidates, and those are
+    * rescored exactly against `q` (query_id, eh_q, qv, qnrm) into the
+    * top-k. The two serves differ only in where `qsigs` comes from.
+    */
+  private def lshProbeTopK(s: SparkSession, d: String, bits: Int, radius: Int,
+      capped: DataFrame, qsigs: DataFrame, q: DataFrame, k: Int): DataFrame = {
+    val qb = expandProbes(qsigs, "query_id", bits, radius)
+    val cand = capped.join(broadcast(qb), Seq("band_idx", "code"))
+      .select("query_id", "eh").distinct()
+    topKExpand(s, d, rescore(s, d, cand, q.select("query_id", "eh_q", "qv", "qnrm")), k)
+  }
+
   /** Bring the persisted LSH signature index current for `d` — fit on
     * first sight, FROZEN-geometry delta encode on a pure append, drift
     * refit past [[AnnIndex.refitFraction]] — the per-micro-batch
@@ -720,11 +731,23 @@ object Similarity {
     * batch; the trained-codebook families (IVF/PQ) refresh on their own
     * first-touch/append discipline at serve time.
     */
-  private[graft] def ensureAnnIndex(s: SparkSession, d: String): Unit = {
+  private[graft] def ensureAnnIndex(s: SparkSession, d: String): Unit =
     AnnIndex.lsh(s, d, vecs(s, d))
-    ()
-  }
 
+  /** r8: the per-micro-batch kernel of the STREAMING ANN serve (the
+    * continuous-retrieval twin of q_ann_lsh, wrapped by
+    * graft.streaming.EventStream.annServeLshSink) — the same
+    * [[lshProbeTopK]] candidate / rescore / top-k dataflow as q_ann_lsh's
+    * serve, with the query side a caller-supplied batch of
+    * (query_id, embedding) rows instead of corpus members. Query vectors
+    * are encoded with the index's FROZEN geometry (the bits/bands/radius
+    * recorded at fit time — AnnIndex returns the persisted solve, so a
+    * stream serving across an append probes the same bucket space the
+    * stored signatures live in); the capped signature table and the
+    * corpus scan are the STATIC sides of a stream-static join.
+    * Everything here is stateless per batch — the scale axis is the
+    * persisted index, not stream state.
+    */
   private[graft] def annServeLshBatch(s: SparkSession, d: String,
       queryBatch: DataFrame, k: Int = 5): DataFrame = {
     val (bits, bands, radius, capped) = AnnIndex.lsh(s, d, vecs(s, d))
@@ -738,15 +761,7 @@ object Similarity {
     val qsigs = q.select(col("query_id"),
       posexplode(Vectors.hyperplaneBands(col("qv"), annLshSeed, bands, bits))
         .as(Seq("band_idx", "code")))
-    val qb = expandProbes(qsigs, "query_id", bits, radius)
-    val cand = capped.join(broadcast(qb), Seq("band_idx", "code"))
-      .select("query_id", "eh").distinct()
-    val scored = cand
-      .join(Members.eh(s, d)._2.select(col("eh"), col("v"), col("nrm")), "eh")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("eh_q"), col("eh"),
-        (Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cosine"))
-    topKExpand(s, d, scored, k)
+    lshProbeTopK(s, d, bits, radius, capped, qsigs, q, k)
   }
 
   /** Distributed Lloyd's k-means over the embedding column, trained on a
@@ -844,6 +859,27 @@ object Similarity {
   private[graft] def codebookFor(s: SparkSession, d: String, e: DataFrame): DataFrame =
     s.createDataFrame(codebookRows(s, d, e).toIndexedSeq).toDF("c_id", "cv", "cnrm")
 
+  /** The nprobe=4 probed cells of each query vector `qv`, one `qcluster`
+    * row per probe — the NearestCentroids top-p kernel, one narrow
+    * projection, tie-identical to the r14 crossJoin + (ccos desc, c_id)
+    * window it replaced (kernel spec pins rank parity).
+    */
+  private def probeCells(cb: Array[(Long, Seq[Double], Double)]): Column =
+    explode(Vectors.nearestCentroids(col("qv"), cb.map(_._1),
+      cb.flatMap(_._2), cb.map(_._3), 4)).as("qcluster")
+
+  /** The IVF probed-cell prune shared by q_ann_ivf and q_ann_ivfpq: the
+    * probed cell ids are driver-known (nprobe·|queries| ≤ 80 values —
+    * partition METADATA, the offsets size class), so the cell-partitioned
+    * scan is statically PARTITION-PRUNED to ~nprobe/k of the corpus, then
+    * joined to the broadcast probe rows of `queries` on its cell.
+    */
+  private def probedCells(cells: DataFrame, queries: DataFrame): DataFrame = {
+    val probed = queries.select("qcluster").distinct().collect().map(_.getLong(0))
+    cells.where(col("cluster").isin(probed.toIndexedSeq: _*))
+      .join(broadcast(queries), col("qcluster") === col("cluster"))
+  }
+
   /** G. IVF-style ANN: coarse quantization to a k-means codebook, probe
     * the closest nprobe=4 cells per query, score only those candidates.
     * The codebook is trained by [[kmeansCodebook]] (Lloyd's on a bounded
@@ -871,28 +907,17 @@ object Similarity {
       // instead of re-running Lloyd and re-assigning the corpus — at
       // 100 TB, re-assignment is a full corpus pass)
       val (cb, cells) = AnnIndex.ivf(s, d, vecsRaw(s, d))
-      // query side: nprobe cells per query via the NearestCentroids
-      // top-p kernel — one narrow projection, tie-identical to the r14
-      // crossJoin + (ccos desc, c_id) window it replaces (kernel spec
-      // pins rank parity), with no join and no window in the serve DAG.
-      // r14: the probed-assignment frame is SESSION-MEMOIZED (a pure
-      // function of table content — the codebook is content-keyed).
+      // query side: nprobe cells per query ([[probeCells]]), no join and
+      // no window in the serve DAG. r14: the probed-assignment frame is
+      // SESSION-MEMOIZED (a pure function of table content — the
+      // codebook is content-keyed).
       val queries = SessionMemo.frames(s, d, "annqc", Seq("embeddings.parquet")) {
         Seq(memberQueries(s, d)
-          .select(col("query_id"), col("eh_q"), col("qv"), col("qnrm"),
-            explode(Vectors.nearestCentroids(col("qv"), cb.map(_._1),
-              cb.flatMap(_._2), cb.map(_._3), 4)).as("qcluster")))
+          .select(col("query_id"), col("eh_q"), col("qv"), col("qnrm"), probeCells(cb)))
       }.head
-      // the probed cell ids are driver-known (nprobe·|queries| ≤ 80 values
-      // — partition METADATA, the offsets size class), so the cells scan
-      // is statically PARTITION-PRUNED: the inverted-file read touches
-      // only the probed directories, ~nprobe/k of the corpus
-      val probed = queries.select("qcluster").distinct()
-        .collect().map(_.getLong(0))
-      val scored = cells.where(col("cluster").isin(probed.toIndexedSeq: _*))
-        .join(broadcast(queries), col("qcluster") === col("cluster"))
+      val scored = probedCells(cells, queries)
         .select(col("query_id"), col("eh_q"), col("eh"),
-          (Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cosine"))
+          cosine("qv", "v", "qnrm", "nrm").as("cosine"))
       topKExpand(s, d, scored, 5).transform(Det.sortAll)
     },
     None
@@ -929,6 +954,30 @@ object Similarity {
     */
   private[graft] def pqRescoreDepth(n: Long): Int =
     math.max(pqRescore.toLong, math.min(1024L, n / 256L)).toInt
+
+  /** The ADC prefilter + exact rescore shared by q_ann_pq and
+    * q_ann_ivfpq: `adc` pairs each candidate code row (eh, code, nrm)
+    * with a broadcast query row (query_id, eh_q, lut, qnrm). ADC ranks by
+    * cosine ≈ adc/(‖q‖·‖x‖) — within a query ‖q‖ is constant but keeping
+    * the exact stored norm in the denominator makes the score the actual
+    * cosine estimate. The window keeps [[pqRescoreDepth]]+1 reps: the
+    * query's own rep rides along at rep-level (the member filter happens
+    * after expansion), so the budget covers the same number of true
+    * candidates. Survivors rescore exactly against `q` into the top-5.
+    */
+  private def adcTopK(s: SparkSession, d: String, adc: DataFrame,
+      q: DataFrame): DataFrame = {
+    val depth = pqRescoreDepth(Members.ehDistinct(s, d))
+    val wa = Window.partitionBy("query_id")
+      .orderBy(col("adc_cos").desc, col("eh"))
+    val cand = adc.select(col("query_id"), col("eh_q"), col("eh"),
+        (Vectors.pqAdc(col("code"), col("lut"), pqM) /
+          (col("qnrm") * col("nrm"))).as("adc_cos"))
+      .withColumn("ar", row_number().over(wa))
+      .where(col("ar") <= depth + 1)
+      .select("query_id", "eh_q", "eh")
+    topKExpand(s, d, rescore(s, d, cand, q.select("query_id", "qv", "qnrm")), 5)
+  }
 
   /** Driver-local per-subspace Lloyd's over the collected sample (the
     * fit side of the PQ fit/serve split). One pass per iteration trains
@@ -1026,28 +1075,7 @@ object Similarity {
           Vectors.pqLut(col("qv"), cents, pqM, pqKsub).as("lut"),
           col("qnrm")))
       }.head
-      // ADC ranks by cosine ≈ adc/(‖q‖·‖x‖) — within a query ‖q‖ is
-      // constant but keeping the exact stored norm in the denominator
-      // makes the score the actual cosine estimate. The rescore window
-      // keeps pqRescore+1 reps: the query's own rep rides along at
-      // rep-level (the member filter happens after expansion), so the
-      // budget covers the same number of true candidates as before.
-      val depth = pqRescoreDepth(Members.ehDistinct(s, d))
-      val wa = Window.partitionBy("query_id")
-        .orderBy(col("adc_cos").desc, col("eh"))
-      val cand = corpus.crossJoin(broadcast(queries))
-        .select(col("query_id"), col("eh_q"), col("eh"),
-          (Vectors.pqAdc(col("code"), col("lut"), pqM) /
-            (col("qnrm") * col("nrm"))).as("adc_cos"))
-        .withColumn("ar", row_number().over(wa))
-        .where(col("ar") <= depth + 1)
-        .select("query_id", "eh_q", "eh")
-      val scored = cand
-        .join(Members.eh(s, d)._2.select(col("eh"), col("v"), col("nrm")), "eh")
-        .join(broadcast(q.select("query_id", "qv", "qnrm")), "query_id")
-        .select(col("query_id"), col("eh_q"), col("eh"),
-          (Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cosine"))
-      topKExpand(s, d, scored, 5).transform(Det.sortAll)
+      adcTopK(s, d, corpus.crossJoin(broadcast(queries)), q).transform(Det.sortAll)
     },
     None
   )
@@ -1077,46 +1105,19 @@ object Similarity {
     "q_ann_ivfpq",
     (s, d) => {
       val (cb, cents, codes) = AnnIndex.ivfpq(s, d, vecsRaw(s, d))
-      // query side: nprobe cells per query via the NearestCentroids
-      // top-p kernel (tie-identical to the crossJoin+window it replaces
-      // — kernel spec pins rank parity); each probe row carries the
-      // query's ADC table (m·ksub doubles — 20·nprobe rows of it,
-      // driver-pennies). r14: session-memoized like the PQ LUTs.
+      // query side: nprobe cells per query ([[probeCells]]); each probe
+      // row carries the query's ADC table (m·ksub doubles — 20·nprobe
+      // rows of it, driver-pennies). r14: session-memoized like the PQ
+      // LUTs.
       val q = memberQueries(s, d)
       val queries = SessionMemo.frames(s, d, "annqp", Seq("embeddings.parquet")) {
-        Seq(q
-          .select(col("query_id"), col("eh_q"),
-            explode(Vectors.nearestCentroids(col("qv"), cb.map(_._1),
-              cb.flatMap(_._2), cb.map(_._3), 4)).as("qcluster"),
-            Vectors.pqLut(col("qv"), cents, pqM, pqKsub).as("lut"),
-            col("qnrm")))
+        Seq(q.select(col("query_id"), col("eh_q"), probeCells(cb),
+          Vectors.pqLut(col("qv"), cents, pqM, pqKsub).as("lut"), col("qnrm")))
       }.head
-      val probed = queries.select("qcluster").distinct()
-        .collect().map(_.getLong(0))
-      // probed cells are driver-known ⇒ the codes scan is statically
-      // PARTITION-PRUNED; candidates score by ADC (m table-adds) against
-      // the broadcast per-query LUTs over one code row per DISTINCT
-      // vector (r12) — no raw vector is read until the rescore join
-      val depth = pqRescoreDepth(Members.ehDistinct(s, d))
-      val wa = Window.partitionBy("query_id")
-        .orderBy(col("adc_cos").desc, col("eh"))
-      val cand = codes.where(col("cluster").isin(probed.toIndexedSeq: _*))
-        .join(broadcast(queries), col("qcluster") === col("cluster"))
-        .select(col("query_id"), col("eh_q"), col("eh"),
-          (Vectors.pqAdc(col("code"), col("lut"), pqM) /
-            (col("qnrm") * col("nrm"))).as("adc_cos"))
-        .withColumn("ar", row_number().over(wa))
-        .where(col("ar") <= depth + 1)
-        .select("query_id", "eh_q", "eh")
-      // exact-cosine rescore of the ≤20·(pqRescore+1) surviving reps
-      // (point reads of distinct raw vectors via the memo), rep-trim,
-      // member expansion, top-5
-      val scored = cand
-        .join(Members.eh(s, d)._2.select(col("eh"), col("v"), col("nrm")), "eh")
-        .join(broadcast(q.select("query_id", "qv", "qnrm")), "query_id")
-        .select(col("query_id"), col("eh_q"), col("eh"),
-          (Vectors.dot(col("qv"), col("v")) / (col("qnrm") * col("nrm"))).as("cosine"))
-      topKExpand(s, d, scored, 5).transform(Det.sortAll)
+      // the partition-pruned code scan scores by ADC (m table-adds)
+      // against the broadcast per-query LUTs over one code row per
+      // DISTINCT vector (r12) — no raw vector is read until the rescore
+      adcTopK(s, d, probedCells(codes, queries), q).transform(Det.sortAll)
     },
     None
   )
@@ -1154,7 +1155,7 @@ object Similarity {
       val wq = Window.partitionBy("query_id").orderBy(col("rel").desc, col("cand_id"))
       val pool = queries.join(e.as("b"), col("query_id") =!= col("b.vec_id"))
         .select(col("query_id"), col("b.vec_id").as("cand_id"),
-          (Vectors.dot(col("qv"), col("b.v")) / (col("qnrm") * col("b.nrm"))).as("rel"),
+          cosine("qv", "b.v", "qnrm", "b.nrm").as("rel"),
           col("b.v").as("cv"), col("b.nrm").as("cnrm"))
         .withColumn("rn", row_number().over(wq))
         .where(col("rn") <= 20).drop("rn")
@@ -1163,8 +1164,7 @@ object Similarity {
         .where(col("x.cand_id") =!= col("y.cand_id"))
         .select(col("query_id"), col("x.cand_id").as("cand_id"),
           col("y.cand_id").as("other_id"),
-          (Vectors.dot(col("x.cv"), col("y.cv")) /
-            (col("x.cnrm") * col("y.cnrm"))).as("sim"))
+          cosine("x.cv", "y.cv", "x.cnrm", "y.cnrm").as("sim"))
         .localCheckpoint()
       var remaining = pool.select("query_id", "cand_id", "rel")
         .withColumn("maxsim", lit(0.0))

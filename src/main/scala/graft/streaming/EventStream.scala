@@ -132,6 +132,27 @@ object EventStream {
         writeBatchIdempotent(batch.toDF(), batchId, outDir); ()
       })
 
+  /** The body every index-maintenance sink below shares: each
+    * micro-batch of `rows` lands as a batch-scoped idempotent partition
+    * of the corpus table `corpusDir/table` ([[writeBatchIdempotent]]),
+    * then `maintain` brings the persisted artifacts current. Maintenance
+    * is one "query" per micro-batch: its CacheBag entries are released
+    * after it — a cached corpus-path frame would serve the PREVIOUS
+    * batch's file listing to the next one (the batch harness never
+    * mutates a table, streams do every batch).
+    */
+  private def maintenanceSink(rows: DataFrame, corpusDir: String, table: String,
+      checkpoint: String)(maintain: => Unit): DataStreamWriter[Row] =
+    rows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
+        writeBatchIdempotent(batch.toDF(), batchId, s"$corpusDir/$table")
+        try maintain
+        finally graft.CacheBag.release()
+        ()
+      })
+
   /** H. Continuous indexing (r8) — ingest and index maintenance as ONE
     * streaming sink, the production loop behind "search is fresh within
     * a micro-batch of the crawl": each micro-batch of documents lands in
@@ -154,20 +175,9 @@ object EventStream {
     */
   def lexIndexSink(s: SparkSession, corpusDir: String, docs: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
-        writeBatchIdempotent(batch.toDF(), batchId,
-          s"$corpusDir/documents.parquet")
-        // maintenance is one "query" per micro-batch: release its
-        // CacheBag entries — a cached corpus-path frame would serve the
-        // PREVIOUS batch's file listing to the next one (the batch
-        // harness never mutates a table, streams do every batch)
-        try graft.operators.AnnIndex.lex(s, corpusDir)
-        finally graft.CacheBag.release()
-        ()
-      })
+    maintenanceSink(docs, corpusDir, "documents.parquet", checkpoint) {
+      graft.operators.AnnIndex.lex(s, corpusDir)
+    }
 
   /** H. Continuous vocabulary maintenance — the tokenizer's view of the
     * [[lexIndexSink]] loop: each documents micro-batch lands as a
@@ -185,17 +195,9 @@ object EventStream {
     */
   def vocabIndexSink(s: SparkSession, corpusDir: String, docs: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
-        writeBatchIdempotent(batch.toDF(), batchId,
-          s"$corpusDir/documents.parquet")
-        // per-batch cache release — see lexIndexSink
-        try graft.operators.AnnIndex.bpeVocab(s, corpusDir)
-        finally graft.CacheBag.release()
-        ()
-      })
+    maintenanceSink(docs, corpusDir, "documents.parquet", checkpoint) {
+      graft.operators.AnnIndex.bpeVocab(s, corpusDir)
+    }
 
   /** H. Continuous near-dup clustering — the component-label view of the
     * [[lexIndexSink]] loop: each documents micro-batch lands as a
@@ -213,17 +215,9 @@ object EventStream {
     */
   def clusterIndexSink(s: SparkSession, corpusDir: String, docs: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
-        writeBatchIdempotent(batch.toDF(), batchId,
-          s"$corpusDir/documents.parquet")
-        // per-batch cache release — see lexIndexSink
-        try graft.operators.Dedup.clusterIndex(s, corpusDir)
-        finally graft.CacheBag.release()
-        ()
-      })
+    maintenanceSink(docs, corpusDir, "documents.parquet", checkpoint) {
+      graft.operators.Dedup.clusterIndex(s, corpusDir)
+    }
 
   /** H. Continuous text-pair-graph maintenance (r10) — the document-
     * ingest twin of [[embedPairsSink]], keeping the THREE persisted
@@ -241,46 +235,37 @@ object EventStream {
     */
   def textPairsSink(s: SparkSession, corpusDir: String, docs: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
-        writeBatchIdempotent(batch.toDF(), batchId,
-          s"$corpusDir/documents.parquet")
-        // per-batch cache release — see lexIndexSink
-        try {
-          // r13: the THM member mapping rides the tick first — the
-          // id-keyed delta append is exactly the batch's rows, and every
-          // family below (and any post-stream batch serve) reads doc↔th
-          // through it with no corpus hash pass
-          graft.operators.AnnIndex.docHashes(s, corpusDir)
-          graft.operators.AnnIndex.ngPairs(s, corpusDir)
-          graft.operators.AnnIndex.mhPairs(s, corpusDir)
-          graft.operators.AnnIndex.shPairs(s, corpusDir)
-          // r11: the token-level signature families ride the same
-          // maintenance tick — positional postings (LP, q_phrase_search's
-          // aligned-join index) and per-text word counts (WC, the
-          // tokenizer-encode serve) delta-append only the batch's novel
-          // texts, so a batch phrase/encode run right after the tick
-          // serves with zero corpus-pass work
-          graft.operators.AnnIndex.textSigs(s, corpusDir, "LP",
-            graft.operators.TextAnalysis.lpEncode)
-          graft.operators.AnnIndex.textSigs(s, corpusDir, "WC",
-            graft.operators.Bpe.wcEncode)
-          // r12: the three remaining signature families join the tick —
-          // DSIR bigram buckets, winnow fingerprints and binary simhash
-          // delta-append the batch's novel texts, so a post-stream
-          // q_dsir_select / q_winnow / q_dedup_binary serve is a pure
-          // load (no corpus-pass encode left outside maintenance)
-          graft.operators.AnnIndex.textSigs(s, corpusDir, "DS",
-            graft.operators.TextAnalysis.dsEncode)
-          graft.operators.AnnIndex.textSigs(s, corpusDir, "WN",
-            graft.operators.TextAnalysis.wnEncode)
-          graft.operators.AnnIndex.textSigs(s, corpusDir, "BIN",
-            graft.operators.Multimodal.binSigs)
-        } finally graft.CacheBag.release()
-        ()
-      })
+    maintenanceSink(docs, corpusDir, "documents.parquet", checkpoint) {
+      // r13: the THM member mapping rides the tick first — the
+      // id-keyed delta append is exactly the batch's rows, and every
+      // family below (and any post-stream batch serve) reads doc↔th
+      // through it with no corpus hash pass
+      graft.operators.AnnIndex.docHashes(s, corpusDir)
+      graft.operators.AnnIndex.ngPairs(s, corpusDir)
+      graft.operators.AnnIndex.mhPairs(s, corpusDir)
+      graft.operators.AnnIndex.shPairs(s, corpusDir)
+      // r11: the token-level signature families ride the same
+      // maintenance tick — positional postings (LP, q_phrase_search's
+      // aligned-join index) and per-text word counts (WC, the
+      // tokenizer-encode serve) delta-append only the batch's novel
+      // texts, so a batch phrase/encode run right after the tick
+      // serves with zero corpus-pass work
+      graft.operators.AnnIndex.textSigs(s, corpusDir, "LP",
+        graft.operators.TextAnalysis.lpEncode)
+      graft.operators.AnnIndex.textSigs(s, corpusDir, "WC",
+        graft.operators.Bpe.wcEncode)
+      // r12: the three remaining signature families join the tick —
+      // DSIR bigram buckets, winnow fingerprints and binary simhash
+      // delta-append the batch's novel texts, so a post-stream
+      // q_dsir_select / q_winnow / q_dedup_binary serve is a pure
+      // load (no corpus-pass encode left outside maintenance)
+      graft.operators.AnnIndex.textSigs(s, corpusDir, "DS",
+        graft.operators.TextAnalysis.dsEncode)
+      graft.operators.AnnIndex.textSigs(s, corpusDir, "WN",
+        graft.operators.TextAnalysis.wnEncode)
+      graft.operators.AnnIndex.textSigs(s, corpusDir, "BIN",
+        graft.operators.Multimodal.binSigs)
+    }
 
   /** H. Continuous ANN index maintenance — the vector-ingest twin of
     * [[lexIndexSink]], closing the loop that [[annServeLshSink]] reads
@@ -300,17 +285,9 @@ object EventStream {
     */
   def annIndexSink(s: SparkSession, corpusDir: String, vecs: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
-        writeBatchIdempotent(batch.toDF(), batchId,
-          s"$corpusDir/embeddings.parquet")
-        // per-batch cache release — see lexIndexSink
-        try graft.operators.Similarity.ensureAnnIndex(s, corpusDir)
-        finally graft.CacheBag.release()
-        ()
-      })
+    maintenanceSink(vecs, corpusDir, "embeddings.parquet", checkpoint) {
+      graft.operators.Similarity.ensureAnnIndex(s, corpusDir)
+    }
 
   /** H. Continuous embed-pair-graph maintenance (r10) — the vector-ingest
     * twin of [[clusterIndexSink]], closing the maintenance loop for the
@@ -329,20 +306,11 @@ object EventStream {
     */
   def embedPairsSink(s: SparkSession, corpusDir: String, vecs: DataFrame,
       checkpoint: String): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch((batch: Dataset[Row], batchId: Long) => {
-        writeBatchIdempotent(batch.toDF(), batchId,
-          s"$corpusDir/embeddings.parquet")
-        // per-batch cache release — see lexIndexSink
-        try {
-          // r13: the EHM (vec_id, eh) mapping rides the tick like THM
-          graft.operators.AnnIndex.vecHashes(s, corpusDir)
-          graft.operators.AnnIndex.embedPairs(s, corpusDir)
-        } finally graft.CacheBag.release()
-        ()
-      })
+    maintenanceSink(vecs, corpusDir, "embeddings.parquet", checkpoint) {
+      // r13: the EHM (vec_id, eh) mapping rides the tick like THM
+      graft.operators.AnnIndex.vecHashes(s, corpusDir)
+      graft.operators.AnnIndex.embedPairs(s, corpusDir)
+    }
 
   /** H. Streaming incremental ingest dedup — the streaming twin of
     * q_dedup_incremental (Dedup.incremental), i.e. the shape a crawl

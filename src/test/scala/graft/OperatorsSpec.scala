@@ -824,6 +824,49 @@ class OperatorsSpec extends SparkSpec {
     } finally pq.unpersist()
   }
 
+  test("ANN serves emit exact cosines, ranked (cosine desc, neighbor_id)") {
+    // every serve's cosine is the exact rescore dot/(‖q‖·‖x‖) — for PQ
+    // and IVF-PQ too, never the ADC estimate — recomputed here from the
+    // raw embeddings with the kernel's left-to-right sums, bit for bit
+    val dir = "/root/testdata/sf0.01"
+    val raw = T.embeddings(spark, dir).select("vec_id", "embedding")
+      .as[(Long, Seq[Float])].collect()
+      .map { case (id, v) => id -> v.map(_.toDouble).toArray }.toMap
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0
+      for (i <- a.indices) s += a(i) * b(i)
+      s
+    }
+    def cosine(q: Long, x: Long): Double =
+      dot(raw(q), raw(x)) / (math.sqrt(dot(raw(q), raw(q))) * math.sqrt(dot(raw(x), raw(x))))
+    val queries = T.embeddings(spark, dir).where(col("vec_id") < 20)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val serves = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "q_ann_lsh" -> (() => Similarity.annLsh.run(spark, dir)),
+      "q_ann_ivf" -> (() => Similarity.annIvf.run(spark, dir)),
+      "q_ann_pq" -> (() => Similarity.annPq.run(spark, dir)),
+      "q_ann_ivfpq" -> (() => Similarity.annIvfPq.run(spark, dir)),
+      "annServeLshBatch" -> (() => Similarity.annServeLshBatch(spark, dir, queries)))
+    for ((name, serve) <- serves) {
+      val rows = serve().select("query_id", "neighbor_id", "cosine", "rn")
+        .as[(Long, Long, Double, Long)].collect()
+      assert(rows.nonEmpty, s"$name served nothing")
+      for ((q, n, c, _) <- rows) {
+        val want = cosine(q, n)
+        assert(java.lang.Double.doubleToLongBits(c) == java.lang.Double.doubleToLongBits(want),
+          s"$name ($q, $n): served cosine $c, exact $want")
+      }
+      for ((q, rs) <- rows.groupBy(_._1)) {
+        val ranked = rs.sortWith { (a, b) =>
+          val c = java.lang.Double.compare(b._3, a._3)
+          if (c != 0) c < 0 else a._2 < b._2
+        }
+        assert(ranked.map(_._4).toSeq == (1L to rs.length.toLong),
+          s"$name query $q: rn is not 1..n in (cosine desc, neighbor_id) order")
+      }
+    }
+  }
+
   test("PII redaction finds and masks planted email / ip / phone") {
     val docs = Seq(
       (1L, "contact bob.smith+x@example.co.uk or call +1 (415) 555-0100 now"),
