@@ -250,6 +250,11 @@ object Bench {
       // that separates "wall drifted, cpu flat" (steal) from "cpu moved"
       // (the engine did more work)
       "cpu_passes" -> byQuery(q => Some(allTimed(q).map(_.cpuSec))),
+      // per-pass generated classes compiled and their compile seconds,
+      // aligned with "passes": a warm pass of an unchanged plan compiles
+      // 0, so a nonzero count is codegen-cache misses the wall paid for
+      "compiles" -> byQuery(q => Some(allTimed(q).map(_.compiles))),
+      "compile_sec" -> byQuery(q => Some(allTimed(q).map(_.compileSec))),
       // Which passes paid an index fit/append (vs a pure warm serve) — the
       // warm-vs-cold attribution for every ANN timing in "passes"
       "cold" -> byQuery(q => Some(allTimed(q).map(_.cold)).filter(_.contains(true))),

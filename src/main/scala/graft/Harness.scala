@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one measurement path of the harness mains (Bench, Profile, Verify,
   * ScaleRecall, MakeScale): how they build their session, time one
@@ -47,10 +49,19 @@ object Harness {
     * ADVICE r7), and the window's ledger — jobs, summed task wall and
     * summed executorCpuTime, the steal-proof work ledger (r15, verdict
     * r14 #1: three untouched-code 100x drifts each cost an isolated
-    * re-time cycle to adjudicate because the artifact recorded only wall).
+    * re-time cycle to adjudicate because the artifact recorded only wall),
+    * plus the classes Janino compiled in the window and their summed
+    * compile seconds (JVM-wide counters: a cache hit compiles nothing, so
+    * `compiles` is the window's codegen-cache misses).
     */
   final case class Timed(wall: Either[String, Double], cold: Boolean,
-      cpuSec: Double, jobs: Int, taskSec: Double)
+      cpuSec: Double, jobs: Int, taskSec: Double, compiles: Long, compileSec: Double)
+
+  /** Classes compiled so far in this JVM (one count per codegen-cache miss). */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Seconds spent compiling generated classes so far in this JVM. */
+  def compileSec(): Double = CodeGenerator.compileTime / 1e9
 
   /** Time `q` once: drain the listener bus, reset the ledger, build the
     * plan with `q.run` (iterative operators do real work there, so it is
@@ -66,7 +77,7 @@ object Harness {
   def time(spark: SparkSession, ledger: TaskLedger, q: Q, sfDir: String): Timed =
     try {
       ledger.drain(); ledger.reset()
-      val f0 = fitCount()
+      val (f0, c0, cs0) = (fitCount(), compiles(), compileSec())
       val t0 = System.nanoTime()
       val wall =
         try {
@@ -78,6 +89,7 @@ object Harness {
             Left(e.getClass.getSimpleName)
         }
       ledger.drain()
-      Timed(wall, fitCount() != f0, ledger.cpuSec, ledger.jobs.get(), ledger.taskSec)
+      Timed(wall, fitCount() != f0, ledger.cpuSec, ledger.jobs.get(), ledger.taskSec,
+        compiles() - c0, compileSec() - cs0)
     } finally CacheBag.release()
 }

@@ -11,10 +11,11 @@ import Harness.Timed
   * emit
   *  - the formatted final adaptive plan to `<planDir>/<query>_<suffix>.txt`
   *    (the checkable plan artifact; one untimed run after the passes), and
-  *  - per-pass ELAPSED lines (wall, jobs, taskSec, cpuSec — one
-  *    [[Harness.time]] each, Bench's accounting) plus, for the last pass,
-  *    STAGE lines for any stage over 1 s of task time — the stage-level
-  *    attribution guide §1 asks for before touching anything.
+  *  - per-pass ELAPSED lines (wall, jobs, taskSec, cpuSec, compiles,
+  *    compileSec — one [[Harness.time]] each, Bench's accounting) plus,
+  *    for the last pass, STAGE lines for any stage over 1 s of task time
+  *    — the stage-level attribution guide §1 asks for before touching
+  *    anything.
   *
   * On a noisy multi-tenant host wall time alone cannot separate "the
   * engine did more work" from "the host stole cycles": taskSec is the
@@ -65,11 +66,12 @@ object Profile {
       for (pass <- 1 to passes) {
         stageLines.setLength(0)
         Harness.time(spark, ledger, q, sfDir) match {
-          case Timed(Right(wall), _, cpuSec, jobs, taskSec) =>
+          case Timed(Right(wall), _, cpuSec, jobs, taskSec, compiles, compileSec) =>
             if (pass == passes) print(stageLines)
             println(f"ELAPSED ${q.name} pass $pass: $wall%.3f " +
-              f"jobs=$jobs taskSec=$taskSec%.1f cpuSec=$cpuSec%.1f")
-          case Timed(Left(e), _, _, _, _) =>
+              f"jobs=$jobs taskSec=$taskSec%.1f cpuSec=$cpuSec%.1f " +
+              f"compiles=$compiles compileSec=$compileSec%.2f")
+          case Timed(Left(e), _, _, _, _, _, _) =>
             println(s"FAILED ${q.name} pass $pass: $e")
         }
       }

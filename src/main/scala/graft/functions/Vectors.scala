@@ -22,11 +22,6 @@ object Vectors {
   /** ‖v‖₂ */
   def norm(v: Column): Column = sqrt(dot(v, v))
 
-  /** cos(a,b) = dot/(‖a‖·‖b‖) — the exact formula mirrored in oracles:
-    * dot / (sqrt(dot(a,a)) * sqrt(dot(b,b))).
-    */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Banded hyperplane-LSH band codes (native codegen kernel):
     * array of `bands` Longs, each packing `bits` sign bits.
     */

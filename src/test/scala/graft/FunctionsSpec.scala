@@ -139,12 +139,4 @@ class FunctionsSpec extends SparkSpec {
       .head()
     assert(bad.isNullAt(0))
   }
-
-  test("Vectors.cosine matches a hand computation") {
-    val df = Seq((Array(1.0, 0.0, 2.0), Array(2.0, 1.0, 4.0))).toDF("a", "b")
-      .select(Vectors.cosine(col("a"), col("b")).as("c"))
-    val got = df.as[Double].head()
-    val want = 10.0 / (math.sqrt(5.0) * math.sqrt(21.0))
-    assert(math.abs(got - want) < 1e-12)
-  }
 }
